@@ -80,24 +80,21 @@ def _pattern_matches(pattern: str, path: str) -> bool:
     if anchored:
         pattern = pattern[:-1]
     parts = pattern.split("*")
-    pos = 0
-    for i, part in enumerate(parts):
-        if i == 0:
-            if not path.startswith(part):
-                return False
-            pos = len(part)
-        else:
-            found = path.find(part, pos)
-            if found < 0:
-                return False
-            pos = found + len(part)
+    if not path.startswith(parts[0]):
+        return False
+    pos = len(parts[0])
+    if anchored and len(parts) == 1:
+        return pos == len(path)  # no '*': the literal IS the path
+    # leftmost match of each middle literal leaves the most room for
+    # the rest; an anchored last literal is not searched for but must
+    # END the path, to the right of everything matched before it
+    for part in parts[1:-1] if anchored else parts[1:]:
+        found = path.find(part, pos)
+        if found < 0:
+            return False
+        pos = found + len(part)
     if anchored:
-        # the last literal part must END the path; with a trailing
-        # '*' before '$' any tail matches (len(parts) > 1 ⇔ a real
-        # '*' preceded — a lone '$' still requires the exact end)
-        if len(parts) > 1 and parts[-1] == "":
-            return True
-        return pos == len(path)
+        return path.endswith(parts[-1]) and len(path) - len(parts[-1]) >= pos
     return True
 
 

@@ -943,18 +943,19 @@ def _hadoop_fs(spark: SparkSession, path_str: str):
     return jpath.getFileSystem(conf), jpath
 
 
-def _marker_stamp(spark: SparkSession, path_str: str) -> str:
-    """mtime:length of a marker file — the per-build nonce ADVICE r14
-    asked for: a same-content rebuild (delete + rebuild from the same
+def _marker_stamp(spark: SparkSession, path_str: str) -> str | None:
+    """mtime:length of a marker file — the per-build nonce: a
+    same-content rebuild (delete + rebuild from the same
     corpus/params) rewrites a byte-identical marker, so marker TEXT
     alone would let a memoized DataFrame handle keep pinning deleted
-    part files. The modification time changes on every rewrite."""
+    part files. The modification time changes on every rewrite. None
+    when the stat fails: without a nonce there is no safe memo key."""
     try:
         fs, jpath = _hadoop_fs(spark, path_str)
         st = fs.getFileStatus(jpath)
         return f"{st.getModificationTime()}:{st.getLen()}"
-    except Exception:  # noqa: BLE001 — stat is a nonce, not a gate
-        return "?"
+    except Exception:  # noqa: BLE001 — the caller skips the memo
+        return None
 
 
 def _files_stamp(files: list[str]) -> str:
@@ -1376,15 +1377,16 @@ def _read_index_parquet(
     and invalidates the memo — including a SAME-CONTENT rebuild, via
     the marker-mtime nonce in the key (ADVICE r14: marker text alone
     would keep a handle whose InMemoryFileIndex pins deleted part
-    files); an unmarked index never memoizes."""
+    files); an unmarked index, or one whose marker cannot be stat'ed,
+    never memoizes."""
     marker_path = index_path.rstrip("/") + "/" + marker_name
     marker = _hadoop_read_text(spark, marker_path) or ""
     path = f"{index_path.rstrip('/')}/{sub}"
-    if not marker:
+    stamp = _marker_stamp(spark, marker_path) if marker else None
+    if stamp is None:
         return spark.read.parquet(path)
     return _memo_artifact(
-        spark, f"read:{sub}", index_path,
-        f"{_marker_stamp(spark, marker_path)}|{marker}",
+        spark, f"read:{sub}", index_path, f"{stamp}|{marker}",
         lambda: spark.read.parquet(path),
     )
 

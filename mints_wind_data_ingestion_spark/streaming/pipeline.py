@@ -13,6 +13,27 @@ Here the same semantics are declared:
   reference's separate DELETE/INSERT commits could interleave;
 - `withWatermark` bounds state for windowed aggs (T4 ≙ 7-day
   retention).
+
+Epoch contract. Every `run_*` stream is one skeleton: a checkpointed
+file source (`_landing`), one `foreachBatch` epoch function, one
+availableNow run (`_start`). The checkpoint replays a crashed epoch
+with the same `epoch_id` and the same input files, and three rules
+make that replay a no-op:
+
+- writes are `epoch=N` overwrites (`_write_epoch`): a replayed epoch
+  rewrites its own subdirectory and no other, so readers of the
+  union of subdirectories never see a partial or doubled epoch;
+- cross-epoch reads see only strictly-older epochs (`_older_epochs`):
+  a replay must not see its own earlier output, or it would anti-join
+  its documents away and write an empty subdirectory;
+- an unreadable stored table fails the epoch (`_read_if_exists`) and
+  the checkpoint retries it. Only a missing table (or one with no
+  committed parquet footer) reads as "no table yet"; anything else
+  would silently skip cross-epoch dedup and re-admit duplicates.
+
+The wind table and the rollup publish a whole new table per epoch
+instead (temp write + rename swap, `_swap_in`): the latest-wins merge
+is idempotent by itself, the additive rollup by its epoch fence.
 """
 
 from __future__ import annotations
@@ -47,6 +68,12 @@ __all__ = [
     "build_gram_index",
 ]
 
+#: streaming file sources require an explicit schema; binaryFile's is
+#: fixed by the format
+_BINARY_FILE_SCHEMA = (
+    "path string, modificationTime timestamp, length long, content binary"
+)
+
 
 def _hadoop_fs(spark: SparkSession, path: str):
     jvm = spark._jvm
@@ -74,8 +101,7 @@ def _read_if_exists(spark: SparkSession, path: str):
     provably equivalent to "no committed data". ANY OTHER read failure
     propagates and FAILS THE EPOCH so the checkpoint retries it —
     treating a transiently-unreadable or corrupt corpus as "no corpus
-    yet" would silently skip cross-batch dedup and append duplicates
-    (VERDICT r2 "What's wrong" #1)."""
+    yet" would silently skip cross-batch dedup and append duplicates."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
     fs, jvm = _hadoop_fs(spark, path)
@@ -87,6 +113,113 @@ def _read_if_exists(spark: SparkSession, path: str):
         if "UNABLE_TO_INFER_SCHEMA" in str(e):
             return None  # dir exists, zero parquet footers → empty
         raise
+
+
+def _older_epochs(spark: SparkSession, path: str, epoch_id: int):
+    """The rows of the epoch-partitioned table at `path` written by
+    epochs strictly older than `epoch_id` (partition pruning on the
+    `epoch` directory column), or None before the first write."""
+    stored = _read_if_exists(spark, path)
+    return None if stored is None else stored.filter(F.col("epoch") < epoch_id)
+
+
+def _write_epoch(df: DataFrame, path: str | None, epoch_id: int) -> None:
+    """Overwrite epoch `epoch_id`'s own subdirectory of `path`; a None
+    path (an optional quarantine/audit output) writes nothing."""
+    if path is not None:
+        df.write.mode("overwrite").parquet(f"{path}/epoch={epoch_id}")
+
+
+def _landing(
+    spark: SparkSession, landing_dir: str, schema, fmt: str = "parquet"
+) -> DataFrame:
+    """File source over a landing dir, one file per micro-batch: each
+    landed chunk is its own epoch (availableNow still drains the whole
+    backlog in one run)."""
+    return (
+        spark.readStream.format(fmt)
+        .schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .load(landing_dir)
+    )
+
+
+def _start(source: DataFrame, checkpoint_dir: str, epoch) -> StreamingQuery:
+    """Run `epoch(batch, epoch_id)` over `source` as one checkpointed
+    availableNow run — the one stream skeleton of this module. The
+    plans feeding it are stateless, and for those append and update
+    mode emit the same rows."""
+    return (
+        source.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(epoch)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _run_gate(
+    source: DataFrame,
+    checkpoint_dir: str,
+    corpus_path: str,
+    reject_path: str | None,
+    score,
+    kept,
+    rejects,
+) -> StreamingQuery:
+    """The score-and-split gate: per epoch, `score(batch)` runs once and
+    is persisted — it feeds both writes, and without the persist its
+    heavy plan would run twice — then `kept(batch, scored)` is written
+    to the corpus and `rejects(scored)` (the rows WITH their evidence,
+    so curation review sees why each one was dropped) to
+    `reject_path`, both under the epoch contract."""
+
+    def epoch(batch: DataFrame, epoch_id: int) -> None:
+        scored = score(batch).persist()
+        try:
+            _write_epoch(kept(batch, scored), corpus_path, epoch_id)
+            _write_epoch(rejects(scored), reject_path, epoch_id)
+        finally:
+            scored.unpersist()
+
+    return _start(source, checkpoint_dir, epoch)
+
+
+def _verdict(id_col: str, passed):
+    """`(kept, rejects)` for `_run_gate` when the scorer emits one
+    `doc_id` row per document and `passed` is its verdict: the batch
+    rows that pass, and the score rows that fail. The scorers
+    normalize the id to doc_id — it is aliased back so caller-named
+    id columns join correctly."""
+    return (
+        lambda batch, scored: batch.join(
+            scored.filter(passed).select(F.col("doc_id").alias(id_col)), id_col
+        ),
+        lambda scored: scored.filter(~passed),
+    )
+
+
+def _best(
+    pairs: DataFrame,
+    id_col: str,
+    dup_id: str,
+    match_id: str,
+    metric: str,
+    descending: bool = False,
+) -> DataFrame:
+    """One evidence row per dropped item: its strongest match by
+    `metric` (the smallest, or the largest when `descending`), ties to
+    the lowest match id — a struct min gives both."""
+    key = -F.col(metric) if descending else F.col(metric)
+    best = F.col("__m.__k")
+    return pairs.groupBy(F.col(dup_id).alias(id_col)).agg(
+        F.min(F.struct(key.alias("__k"), F.col(match_id).alias("__id")))
+        .alias("__m")
+    ).select(
+        id_col,
+        F.col("__m.__id").alias("best_match"),
+        (-best if descending else best).alias(metric),
+    )
 
 
 def _swap_in(spark: SparkSession, tmp_path: str, table_path: str) -> None:
@@ -111,7 +244,6 @@ def run_ingest_stream(
     landing_dir: str,
     table_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Ingest decoded wind-record JSON files from `landing_dir` into the
     wind table at `table_path` with latest-wins merge per
@@ -127,18 +259,10 @@ def run_ingest_stream(
         .option("multiLine", "true")
         .json(landing_dir)
     )
-    records = to_wind_table(raw)
-
-    writer = (
-        records.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda batch, epoch_id: _merge_publish_epoch(batch, table_path, epoch_id)
-        )
+    return _start(
+        to_wind_table(raw), checkpoint_dir,
+        lambda batch, epoch_id: _merge_publish_epoch(batch, table_path, epoch_id),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _merge_publish_epoch(batch: DataFrame, table_path: str, epoch_id: int) -> None:
@@ -185,15 +309,11 @@ def run_grib_ingest_stream(
     the same crash-safe latest-wins merge the JSON path uses. Closes
     the S2→T1-T6 loop with no JSON intermediary: a new forecast run
     landing as a .grib2 file supersedes older runs for the same
-    observation hour exactly like converter.py:96-104."""
-    # streaming file sources require an explicit schema; binaryFile's
-    # is fixed by the format
-    binary_schema = (
-        "path string, modificationTime timestamp, length long, content binary"
-    )
+    observation hour exactly like converter.py:96-104. Every landed
+    file of a tick is one epoch, so a backlog decodes in parallel."""
     raw = (
         spark.readStream.format("binaryFile")
-        .schema(binary_schema)
+        .schema(_BINARY_FILE_SCHEMA)
         .load(landing_dir)
     )
     decoded = decode_binary_df(raw, decoder)
@@ -210,14 +330,9 @@ def run_grib_ingest_stream(
         F.col("ref_time")
         + F.make_interval(hours=F.col("forecast_hours")),
     )
-    return (
-        records.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda batch, epoch_id: _merge_publish_epoch(batch, table_path, epoch_id)
-        )
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        records, checkpoint_dir,
+        lambda batch, epoch_id: _merge_publish_epoch(batch, table_path, epoch_id),
     )
 
 
@@ -228,49 +343,22 @@ def run_wet_ingest_stream(
     checkpoint_dir: str,
     quarantine_path: str | None = None,
 ) -> StreamingQuery:
-    """Streaming WARC/WET container ingest (r14, VERDICT r13 "What's
-    missing" #1): `.wet.gz`/`.warc.gz` files landing in a crawl
-    drop-dir stream through the binaryFile source → the same
-    `sources.warc.scan_wet_df` member walk + record parse the batch
-    query uses (stream == batch by construction — ONE scan
+    """Streaming WARC/WET container ingest: `.wet.gz`/`.warc.gz` files
+    landing in a crawl drop-dir stream through the binaryFile source →
+    the same `sources.warc.scan_wet_df` member walk + record parse the
+    batch query uses (stream == batch by construction — ONE scan
     implementation) → conversion-record texts append to the corpus,
     and corrupt members/framing land in `quarantine_path` WITH their
-    typed error and file/offset evidence (per-epoch subdirs, the
-    evidence-carrying quarantine convention of the other nine
-    modality gates). Exactly-once: epoch-keyed overwrite + the
-    checkpointed file source — a replayed epoch rewrites its own
-    subdir bit-identically."""
+    typed error and file/offset evidence. A score-and-split gate
+    (`_run_gate`) under the module's epoch contract."""
     from ..sources.warc import scan_wet_df, wet_conversion_texts
 
-    binary_schema = (
-        "path string, modificationTime timestamp, length long, content binary"
-    )
-    raw = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(landing_dir)
-    )
-
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
-        scanned = scan_wet_df(batch).persist()
-        try:
-            wet_conversion_texts(scanned).write.mode("overwrite").parquet(
-                f"{corpus_path}/epoch={epoch_id}"
-            )
-            if quarantine_path is not None:
-                scanned.filter("error IS NOT NULL").write.mode(
-                    "overwrite"
-                ).parquet(f"{quarantine_path}/epoch={epoch_id}")
-        finally:
-            scanned.unpersist()
-
-    return (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
+    return _run_gate(
+        _landing(spark, landing_dir, _BINARY_FILE_SCHEMA, "binaryFile"),
+        checkpoint_dir, corpus_path, quarantine_path,
+        score=scan_wet_df,
+        kept=lambda batch, scanned: wet_conversion_texts(scanned),
+        rejects=lambda scanned: scanned.filter("error IS NOT NULL"),
     )
 
 
@@ -379,18 +467,12 @@ def run_continuous_rollup(
     fencing: every stored row carries `src_epoch` = the last epoch
     that touched it; a batch whose epoch_id is ≤ the stored maximum is
     a checkpoint replay and is skipped whole. Publish is the same
-    crash-safe temp-write + rename swap as the ingest merge.
+    crash-safe temp-write + rename swap as the ingest merge, and an
+    unreadable stored rollup fails the epoch (module epoch contract).
 
     Sums accumulate in DECIMAL so the stored value is identical no
     matter how the stream was partitioned into micro-batches.
     """
-    # one file per micro-batch: each landed chunk is its own epoch
-    # (availableNow still drains the whole backlog in one run)
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
 
     def merge_rollup(events: DataFrame, epoch_id: int) -> None:
         # Partial aggregation happens HERE, on the raw micro-batch — a
@@ -413,17 +495,13 @@ def run_continuous_rollup(
         )
         s = batch.sparkSession
         _recover_table(s, table_path)
-        try:
-            stored = s.read.parquet(table_path)
-        except Exception:
-            stored = None
+        stored = _read_if_exists(s, table_path)
+        inc = batch.withColumn("src_epoch", F.lit(epoch_id).cast("long"))
         if stored is not None:
             # epoch fence: a replayed epoch must not double-count
             last = stored.agg(F.max("src_epoch")).first()[0]
             if last is not None and epoch_id <= last:
                 return
-        inc = batch.withColumn("src_epoch", F.lit(epoch_id).cast("long"))
-        if stored is not None:
             merged = (
                 stored.unionByName(inc)
                 .groupBy("bucket_start", "event_type")
@@ -439,13 +517,7 @@ def run_continuous_rollup(
         merged.write.mode("overwrite").parquet(tmp_path)
         _swap_in(s, tmp_path, table_path)
 
-    return (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(merge_rollup)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(_landing(spark, landing_dir, schema), checkpoint_dir, merge_rollup)
 
 
 def run_dedup_ingest(
@@ -465,21 +537,13 @@ def run_dedup_ingest(
     `operators.dedup.exact_dedup`: the corpus only ever grows by new
     content, no epoch rewrites it.
 
-    Exactly-once: appends are not naturally idempotent, so each epoch
-    writes to its own subdirectory (`epoch=N`) — a replayed epoch
-    OVERWRITES its own subdir (idempotent) and no other. Readers see
-    the union of epoch subdirs; dedup correctness does not depend on
-    replay timing because a replay re-derives the same anti-join
-    against strictly-older epochs.
+    Exactly-once by the module's epoch contract: readers see the union
+    of epoch subdirs, and dedup correctness does not depend on replay
+    timing because a replay re-derives the same anti-join against
+    strictly-older epochs.
     """
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
 
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
-        s = batch.sparkSession
+    def epoch(batch: DataFrame, epoch_id: int) -> None:
         fresh = (
             batch.withColumn("__h", F.sha2(F.col(text_col), 256))
             .groupBy("__h")
@@ -490,29 +554,13 @@ def run_dedup_ingest(
             )
             .select("__h", "__doc.*")
         )
-        # anti-join against STRICTLY OLDER epochs only (partition
-        # pruning on the epoch directory column): a replayed epoch
-        # must not see its own previous output, or it would write
-        # an empty subdir and lose its documents. A corrupt/unreadable
-        # corpus FAILS the epoch (checkpoint retries) instead of
-        # silently re-admitting duplicates — _read_if_exists.
-        corpus = _read_if_exists(s, corpus_path)
-        if corpus is not None:
-            stored = corpus.filter(F.col("epoch") < epoch_id).select(
-                F.sha2(F.col(text_col), 256).alias("__h")
-            )
+        older = _older_epochs(batch.sparkSession, corpus_path, epoch_id)
+        if older is not None:
+            stored = older.select(F.sha2(F.col(text_col), 256).alias("__h"))
             fresh = fresh.join(stored, "__h", "left_anti")
-        fresh.drop("__h").write.mode("overwrite").parquet(
-            f"{corpus_path}/epoch={epoch_id}"
-        )
+        _write_epoch(fresh.drop("__h"), corpus_path, epoch_id)
 
-    return (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(_landing(spark, landing_dir, schema), checkpoint_dir, epoch)
 
 
 def run_neardup_ingest(
@@ -544,25 +592,29 @@ def run_neardup_ingest(
     batch path (`operators.dedup.minhash_dedup_pairs`) does exact
     verification when pair precision matters.
 
-    Exactly-once: per-epoch subdirectories exactly as
-    `run_dedup_ingest` (replay overwrites its own subdir after
-    re-deriving the same anti-join against strictly-older epochs).
+    Exactly-once by the module's epoch contract, as `run_dedup_ingest`.
     """
     from ..functions.text import shingle_docs_pandas
     from ..operators.dedup import lsh_candidate_pairs, minhash_signatures
-
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
 
     def est_sim(a, b):
         matches = F.zip_with(a, b, lambda x, y: (x == y).cast("int"))
         return F.aggregate(matches, F.lit(0), lambda acc, v: acc + v) / F.size(a)
 
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
-        s = batch.sparkSession
+    def bands_of(df: DataFrame, idc: str) -> DataFrame:
+        return df.select(
+            F.col(idc),
+            F.posexplode(
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(bands - 1)),
+                    lambda j: F.xxhash64(
+                        F.slice(F.col("signature"), j * rows_per_band + 1, rows_per_band), j
+                    ),
+                )
+            ).alias("band", "band_hash"),
+        )
+
+    def epoch(batch: DataFrame, epoch_id: int) -> None:
         with_sh = shingle_docs_pandas(batch, id_col, text_col, 3, out="__sh")
         sigs = minhash_signatures(with_sh, id_col, "__sh", num_hashes)
         docs = batch.join(sigs, id_col).localCheckpoint()
@@ -586,31 +638,13 @@ def run_neardup_ingest(
         )
         fresh = docs.join(dup_b, id_col, "left_anti")
 
-        # cross-epoch: drop batch docs matching any STRICTLY OLDER doc.
-        # Unreadable corpus → epoch fails and retries (_read_if_exists),
-        # never a silent skip that re-admits near-duplicates.
-        corpus = _read_if_exists(s, corpus_path)
-        if corpus is not None:
-            stored = corpus.filter(F.col("epoch") < epoch_id).select(
-                F.col(id_col).alias("__oid"), "signature"
-            )
-            bands_of = lambda df, idc, sc: df.select(  # noqa: E731
-                F.col(idc),
-                F.posexplode(
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(bands - 1)),
-                        lambda j: F.xxhash64(
-                            F.slice(F.col(sc), j * rows_per_band + 1, rows_per_band), j
-                        ),
-                    )
-                ).alias("band", "band_hash"),
-            )
+        # cross-epoch: drop batch docs matching any strictly-older doc
+        older = _older_epochs(batch.sparkSession, corpus_path, epoch_id)
+        if older is not None:
+            stored = older.select(F.col(id_col).alias("__oid"), "signature")
             hits = (
-                bands_of(fresh, id_col, "signature")
-                .join(
-                    bands_of(stored, "__oid", "signature"),
-                    ["band", "band_hash"],
-                )
+                bands_of(fresh, id_col)
+                .join(bands_of(stored, "__oid"), ["band", "band_hash"])
                 .select(id_col, "__oid")
                 .distinct()
                 .join(fresh.select(id_col, F.col("signature").alias("__sig_n")), id_col)
@@ -620,15 +654,9 @@ def run_neardup_ingest(
                 .distinct()
             )
             fresh = fresh.join(hits, id_col, "left_anti")
-        fresh.write.mode("overwrite").parquet(f"{corpus_path}/epoch={epoch_id}")
+        _write_epoch(fresh, corpus_path, epoch_id)
 
-    return (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(_landing(spark, landing_dir, schema), checkpoint_dir, epoch)
 
 
 def run_image_dedup_ingest(
@@ -643,18 +671,17 @@ def run_image_dedup_ingest(
     bands: int = 8,
     quarantine_path: str | None = None,
 ) -> StreamingQuery:
-    """Streaming IMAGE near-dup gate (r11, VERDICT r10 #2) — the
-    ingest-time twin of the batch `x_image_dedup` pipeline, mirroring
-    `run_neardup_ingest`'s persisted-index shape for binary image
-    payloads: each micro-batch dHashes its images ONCE
-    (`sources.multimodal.image_dhash_df`), drops in-batch near-dups
-    (banded Hamming self-join, lower id kept), drops batch images
-    near-duplicate to ANY stored image (two-sided banded equi-join
-    against the stored dhash column — never a batch×corpus cross
-    join), and appends survivors WITH their dhash. The corpus only
-    ever grows by novel images and the perceptual-hash index rides
-    along for free — no re-hashing of history, cost per epoch is
-    O(batch + collisions).
+    """Streaming IMAGE near-dup gate — the ingest-time twin of the batch
+    `x_image_dedup` pipeline, mirroring `run_neardup_ingest`'s
+    persisted-index shape for binary image payloads: each micro-batch
+    dHashes its images ONCE (`sources.multimodal.image_dhash_df`),
+    drops in-batch near-dups (banded Hamming self-join, lower id
+    kept), drops batch images near-duplicate to ANY stored image
+    (two-sided banded equi-join against the stored dhash column —
+    never a batch×corpus cross join), and appends survivors WITH their
+    dhash. The corpus only ever grows by novel images and the
+    perceptual-hash index rides along for free — no re-hashing of
+    history, cost per epoch is O(batch + collisions).
 
     Rejects land in `quarantine_path` WITH the evidence — the best
     (lowest-Hamming, ties lowest id) match and its distance, plus a
@@ -662,41 +689,25 @@ def run_image_dedup_ingest(
     payloads carry NULL match — they cannot be admitted because they
     cannot be deduplicated against).
 
-    Exactly-once: per-epoch subdirectories exactly as
-    `run_dedup_ingest` (a replayed epoch re-derives the same
-    anti-join against strictly-older epochs, then overwrites only its
-    own subdir)."""
+    Exactly-once by the module's epoch contract, as `run_dedup_ingest`."""
     from ..sources.multimodal import (
         image_dhash_df,
         image_neardup_join,
         image_neardup_pairs,
     )
 
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
-
-    def _best(pairs: DataFrame, dup_id: str, match_id: str) -> DataFrame:
-        # one row per dropped image: the strongest evidence (min
-        # hamming, ties lowest match id) — struct min gives both
-        return pairs.groupBy(F.col(dup_id).alias(id_col)).agg(
-            F.min(F.struct("hamming", match_id)).alias("__m")
-        ).select(
-            id_col,
-            F.col(f"__m.{match_id}").alias("best_match"),
-            F.col("__m.hamming").alias("hamming"),
+    def rejected(dups: DataFrame, reason: str) -> DataFrame:
+        return dups.select(
+            id_col, F.lit(reason).alias("reason"),
+            F.col("best_match").cast("long"), "hamming",
         )
 
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
-        s = batch.sparkSession
+    def epoch(batch: DataFrame, epoch_id: int) -> None:
         # hash ONCE: the dhash plan (Arrow decode pass) feeds the
         # self-join's two sides, the cross-epoch join and the final
         # write — without the checkpoint the decode would run 4×
         hashes = image_dhash_df(batch, id_col, payload_col).localCheckpoint()
-        bad = hashes.filter(F.col("dhash").isNull()).select(id_col)
-        quarantined = bad.select(
+        quarantined = hashes.filter(F.col("dhash").isNull()).select(
             id_col,
             F.lit("undecodable").alias("reason"),
             F.lit(None).cast("long").alias("best_match"),
@@ -710,60 +721,37 @@ def run_image_dedup_ingest(
         pairs = image_neardup_pairs(
             hashes, id_col, max_hamming=max_hamming, bands=bands, cache=False
         )
-        batch_dups = _best(pairs, "id_b", "id_a")
+        batch_dups = _best(pairs, id_col, "id_b", "id_a", "hamming")
         fresh = (
             hashes.filter(F.col("dhash").isNotNull())
             .join(batch_dups.select(id_col), id_col, "left_anti")
         )
-        quarantined = quarantined.unionByName(
-            batch_dups.select(
-                id_col, F.lit("batch_dup").alias("reason"),
-                F.col("best_match").cast("long"), "hamming",
-            )
-        )
+        quarantined = quarantined.unionByName(rejected(batch_dups, "batch_dup"))
 
         # cross-epoch: drop batch images within max_hamming of any
-        # STRICTLY OLDER stored image. Unreadable corpus → the epoch
-        # fails and retries (_read_if_exists), never a silent skip
-        # that re-admits near-duplicates.
-        corpus = _read_if_exists(s, corpus_path)
-        if corpus is not None:
-            stored = corpus.filter(F.col("epoch") < epoch_id).select(
-                F.col(id_col).alias("__oid"), "dhash"
-            )
+        # strictly-older stored image
+        older = _older_epochs(batch.sparkSession, corpus_path, epoch_id)
+        if older is not None:
             hits = image_neardup_join(
-                fresh.select(id_col, "dhash"), stored,
+                fresh.select(id_col, "dhash"),
+                older.select(F.col(id_col).alias("__oid"), "dhash"),
                 id_new=id_col, id_stored="__oid",
                 max_hamming=max_hamming, bands=bands,
             )
-            corpus_dups = _best(hits, id_col, "__oid")
-            fresh = fresh.join(
-                corpus_dups.select(id_col), id_col, "left_anti"
-            )
+            corpus_dups = _best(hits, id_col, id_col, "__oid", "hamming")
+            fresh = fresh.join(corpus_dups.select(id_col), id_col, "left_anti")
             quarantined = quarantined.unionByName(
-                corpus_dups.select(
-                    id_col, F.lit("corpus_dup").alias("reason"),
-                    F.col("best_match").cast("long"), "hamming",
-                )
+                rejected(corpus_dups, "corpus_dup")
             )
 
         # survivors keep their payload AND their dhash (the persisted
         # index future epochs join against)
-        batch.join(
-            fresh.select(id_col, "dhash"), id_col
-        ).write.mode("overwrite").parquet(f"{corpus_path}/epoch={epoch_id}")
-        if quarantine_path is not None:
-            quarantined.write.mode("overwrite").parquet(
-                f"{quarantine_path}/epoch={epoch_id}"
-            )
+        _write_epoch(
+            batch.join(fresh.select(id_col, "dhash"), id_col), corpus_path, epoch_id
+        )
+        _write_epoch(quarantined, quarantine_path, epoch_id)
 
-    return (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(_landing(spark, landing_dir, schema), checkpoint_dir, epoch)
 
 
 def run_decontam_ingest(
@@ -789,19 +777,12 @@ def run_decontam_ingest(
 
     Shape: per epoch, explode the batch's distinct n-grams (batch-
     sized), left-anti join the 8-byte gram index on its hash (never a
-    doc×doc compare), and append survivors to per-epoch subdirs with
-    the same exactly-once/replay contract as `run_dedup_ingest`."""
+    doc×doc compare), and append survivors under the module's epoch
+    contract."""
     from ..functions.text import shingle_docs_pandas
 
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
-
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
-        s = batch.sparkSession
-        grams = s.read.parquet(train_gram_path)  # static index; must exist
+    def epoch(batch: DataFrame, epoch_id: int) -> None:
+        grams = batch.sparkSession.read.parquet(train_gram_path)  # must exist
         with_sh = shingle_docs_pandas(batch, id_col, text_col, n, out="__sh")
         posting = with_sh.select(
             id_col, F.explode(F.array_distinct("__sh")).alias("__g")
@@ -812,16 +793,11 @@ def run_decontam_ingest(
             .alias("h"),
         )
         contaminated = posting.join(grams, "h").select(id_col).distinct()
-        fresh = batch.join(contaminated, id_col, "left_anti")
-        fresh.write.mode("overwrite").parquet(f"{corpus_path}/epoch={epoch_id}")
+        _write_epoch(
+            batch.join(contaminated, id_col, "left_anti"), corpus_path, epoch_id
+        )
 
-    return (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(_landing(spark, landing_dir, schema), checkpoint_dir, epoch)
 
 
 def run_quality_gate_ingest(
@@ -840,52 +816,19 @@ def run_quality_gate_ingest(
     the streaming complement of the batch `x_quality_repetition`
     query, enforcing the quality boundary at ingest time the way
     `run_decontam_ingest` enforces the eval boundary. Rejects land in
-    `quarantine_path` WITH their failing metrics (per-epoch subdirs),
-    so curation review sees why each document was dropped rather than
-    just that it vanished.
+    `quarantine_path` WITH their failing metrics.
 
     Shape per epoch: one explode + two map-side-combinable aggs over
-    the BATCH (never the accumulated corpus), a broadcast-sized join
-    back on the id, and the same exactly-once/replay contract as
-    `run_dedup_ingest` (epoch-keyed overwrite)."""
+    the BATCH (never the accumulated corpus) and a broadcast-sized
+    join back on the id — a score-and-split gate (`_run_gate`) under
+    the module's epoch contract."""
     from ..operators.quality import repetition_features
 
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
-
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
-        # persist: the features plan (explode + two shuffles) feeds BOTH
-        # the corpus join and the quarantine write — without it the
-        # heavy work runs twice per epoch
-        feats = repetition_features(batch, id_col, text_col).persist()
-        try:
-            # repetition_features normalizes its id to doc_id — alias it
-            # back so caller-named id columns join correctly
-            verdict = feats.select(
-                F.col("doc_id").alias(id_col), "gopher_pass"
-            )
-            kept = batch.join(verdict.filter("gopher_pass"), id_col).drop(
-                "gopher_pass"
-            )
-            kept.write.mode("overwrite").parquet(
-                f"{corpus_path}/epoch={epoch_id}"
-            )
-            if quarantine_path is not None:
-                feats.filter(~F.col("gopher_pass")).write.mode(
-                    "overwrite"
-                ).parquet(f"{quarantine_path}/epoch={epoch_id}")
-        finally:
-            feats.unpersist()
-
-    return (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
+    return _run_gate(
+        _landing(spark, landing_dir, schema),
+        checkpoint_dir, corpus_path, quarantine_path,
+        lambda batch: repetition_features(batch, id_col, text_col),
+        *_verdict(id_col, F.col("gopher_pass")),
     )
 
 
@@ -902,63 +845,33 @@ def run_lm_gate_ingest(
     add_k: float = 0.1,
     gate_nll_e4: int = 80_000,
 ) -> StreamingQuery:
-    """Streaming CCNet LM-perplexity gate (r8, VERDICT r7 #7): the
-    batch `x_lm_perplexity` filter enforced at ingest time, the way
-    `run_quality_gate_ingest` enforces the Gopher repetition gate —
-    documents landing as files are scored per epoch against the
-    PERSISTED bigram count table (`operators.lm.persist_bigram_model`
-    at `model_path`), and only `lm_pass` (avg-nll ≤ gate) documents
-    reach the corpus. Rejects land in `quarantine_path` WITH their
-    scores (n_bigrams, avg_nll_e4), so curation review sees how far
-    past the cutoff each document fell.
+    """Streaming CCNet LM-perplexity gate: the batch `x_lm_perplexity`
+    filter enforced at ingest time, the way `run_quality_gate_ingest`
+    enforces the Gopher repetition gate — documents landing as files
+    are scored per epoch against the PERSISTED bigram count table
+    (`operators.lm.persist_bigram_model` at `model_path`), and only
+    `lm_pass` (avg-nll ≤ gate) documents reach the corpus. Rejects
+    land in `quarantine_path` WITH their scores (n_bigrams,
+    avg_nll_e4), so curation review sees how far past the cutoff each
+    document fell.
 
     Scale shape per epoch: the model is three parquet reads done ONCE
     at stream start (not per batch) — scoring is the batch's bigram
-    explode plus two left joins against the stored counts and the
-    same exactly-once/replay contract as the other ingest gates
-    (epoch-keyed overwrite). Nothing retrains in the hot path; the
-    reference corpus is tokenized exactly once, at persist time."""
+    explode plus two left joins against the stored counts, in a
+    score-and-split gate (`_run_gate`) under the module's epoch
+    contract. Nothing retrains in the hot path; the reference corpus
+    is tokenized exactly once, at persist time."""
     from ..operators.lm import load_bigram_model, score_perplexity
 
     big, pre, vocab = load_bigram_model(spark, model_path)
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
-
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
-        # persist: the scoring plan (explode + model joins + agg)
-        # feeds BOTH the corpus join and the quarantine write
-        scores = score_perplexity(
+    return _run_gate(
+        _landing(spark, landing_dir, schema),
+        checkpoint_dir, corpus_path, quarantine_path,
+        lambda batch: score_perplexity(
             batch, big, pre, vocab, id_col=id_col, text_col=text_col,
             add_k=add_k, gate_nll_e4=gate_nll_e4,
-        ).persist()
-        try:
-            # score_perplexity normalizes its id to doc_id — alias it
-            # back so caller-named id columns join correctly
-            verdict = scores.select(
-                F.col("doc_id").alias(id_col), "lm_pass"
-            )
-            kept = batch.join(verdict.filter("lm_pass"), id_col).drop(
-                "lm_pass"
-            )
-            kept.write.mode("overwrite").parquet(
-                f"{corpus_path}/epoch={epoch_id}"
-            )
-            if quarantine_path is not None:
-                scores.filter(~F.col("lm_pass")).write.mode(
-                    "overwrite"
-                ).parquet(f"{quarantine_path}/epoch={epoch_id}")
-        finally:
-            scores.unpersist()
-
-    return (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        *_verdict(id_col, F.col("lm_pass")),
     )
 
 
@@ -975,7 +888,7 @@ def run_dsir_gate_ingest(
     min_logw_e6: int = 0,
     hash_fn=None,
 ) -> StreamingQuery:
-    """Streaming DSIR selection gate (r10): the batch `x_dsir_buckets`
+    """Streaming DSIR selection gate: the batch `x_dsir_buckets`
     importance weighting enforced at ingest time — documents landing
     as files are scored per epoch against the PERSISTED hashed-bucket
     model (`operators.lm.persist_dsir_bucket_model` at `model_path`),
@@ -991,53 +904,22 @@ def run_dsir_gate_ingest(
     done ONCE at stream start plus its 1-row meta (the only driver
     pull, bounded); scoring is the batch's Arrow gram pass + one
     BROADCAST join + one groupBy — no shuffle against anything
-    corpus-sized, the lightest of the ingest gates. Same
-    exactly-once/replay contract as the others (epoch-keyed
-    overwrite)."""
+    corpus-sized, the lightest of the ingest gates. A score-and-split
+    gate (`_run_gate`) under the module's epoch contract."""
     from ..operators.lm import load_dsir_bucket_model, score_dsir_buckets
 
     delta, meta = load_dsir_bucket_model(spark, model_path)
     # bounded 1-row pull at stream start (the load_bigram_model class):
     # the bucket modulus must be a plan literal
     hash_buckets = int(meta.first()["hash_buckets"])
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
-
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
-        # persist: the scoring plan feeds BOTH the corpus join and the
-        # quarantine write
-        scores = score_dsir_buckets(
+    return _run_gate(
+        _landing(spark, landing_dir, schema),
+        checkpoint_dir, corpus_path, quarantine_path,
+        lambda batch: score_dsir_buckets(
             batch, delta, meta, id_col=id_col, text_col=text_col,
             hash_buckets=hash_buckets, hash_fn=hash_fn,
-        ).persist()
-        try:
-            passed = scores.filter(
-                F.col("logw_e6") >= F.lit(int(min_logw_e6))
-            )
-            kept = batch.join(
-                passed.select(F.col("doc_id").alias(id_col)), id_col
-            )
-            kept.write.mode("overwrite").parquet(
-                f"{corpus_path}/epoch={epoch_id}"
-            )
-            if quarantine_path is not None:
-                scores.filter(
-                    F.col("logw_e6") < F.lit(int(min_logw_e6))
-                ).write.mode("overwrite").parquet(
-                    f"{quarantine_path}/epoch={epoch_id}"
-                )
-        finally:
-            scores.unpersist()
-
-    return (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        *_verdict(id_col, F.col("logw_e6") >= F.lit(int(min_logw_e6))),
     )
 
 
@@ -1055,7 +937,7 @@ def run_semdedup_ingest(
     dim: int | None = None,
     quarantine_path: str | None = None,
 ) -> StreamingQuery:
-    """Streaming SemDeDup gate (r10): semantic near-duplicate filtering
+    """Streaming SemDeDup gate: semantic near-duplicate filtering
     at ingest time against a PERSISTED IVF index
     (`operators.similarity.build_ivf_index` over the protected/stored
     corpus at `index_path`). Per epoch, each incoming embedding is
@@ -1065,7 +947,8 @@ def run_semdedup_ingest(
     vector in its `nprobe` nearest cells clears `threshold` cosine.
     Rejects land in `quarantine_path` with the evidence (reason
     'batch' with the neighborhood size, or reason 'corpus' with the
-    best-matching stored id + cosine).
+    best-matching stored id + cosine), under the module's epoch
+    contract.
 
     Scale shape per epoch: centroids are one tiny parquet read at
     stream start; the stored side is read PARTITION-PRUNED to the
@@ -1089,13 +972,11 @@ def run_semdedup_ingest(
         F.col(vec_col).alias("__sv"),
         "cell",
     ).withColumn("__sn", _norm_col("__sv", dim))
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
+    # match_id keeps the index's NATIVE id type (a long cast would
+    # silently NULL string ids)
+    id_type = stored.schema["__sid"].dataType
 
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
+    def epoch(batch: DataFrame, epoch_id: int) -> None:
         sd = semantic_dedup(
             batch.select(id_col, vec_col), centroids,
             id_col=id_col, vec_col=vec_col, threshold=threshold,
@@ -1133,42 +1014,30 @@ def run_semdedup_ingest(
                     hits.select(F.col("__qid").alias(id_col)),
                     id_col, "left_anti",
                 )
-                kept.write.mode("overwrite").parquet(
-                    f"{corpus_path}/epoch={epoch_id}"
+                _write_epoch(kept, corpus_path, epoch_id)
+                q_batch = sd.filter(~F.col("keep")).select(
+                    F.col(id_col),
+                    F.lit("batch").alias("reason"),
+                    F.lit(None).cast(id_type).alias("match_id"),
+                    F.lit(None).cast("double").alias("cosine_sim"),
+                    F.col("n_dups"),
                 )
-                if quarantine_path is not None:
-                    # match_id keeps the index's NATIVE id type (a
-                    # long cast would silently NULL string ids)
-                    id_type = stored.schema["__sid"].dataType
-                    q_batch = sd.filter(~F.col("keep")).select(
-                        F.col(id_col),
-                        F.lit("batch").alias("reason"),
-                        F.lit(None).cast(id_type).alias("match_id"),
-                        F.lit(None).cast("double").alias("cosine_sim"),
-                        F.col("n_dups"),
-                    )
-                    q_corpus = hits.select(
-                        F.col("__qid").alias(id_col),
-                        F.lit("corpus").alias("reason"),
-                        F.col("__sid").alias("match_id"),
-                        F.col("__cos").alias("cosine_sim"),
-                        F.lit(None).cast("long").alias("n_dups"),
-                    )
-                    q_batch.unionByName(q_corpus).write.mode(
-                        "overwrite"
-                    ).parquet(f"{quarantine_path}/epoch={epoch_id}")
+                q_corpus = hits.select(
+                    F.col("__qid").alias(id_col),
+                    F.lit("corpus").alias("reason"),
+                    F.col("__sid").alias("match_id"),
+                    F.col("__cos").alias("cosine_sim"),
+                    F.lit(None).cast("long").alias("n_dups"),
+                )
+                _write_epoch(
+                    q_batch.unionByName(q_corpus), quarantine_path, epoch_id
+                )
             finally:
                 hits.unpersist()
         finally:
             sd.unpersist()
 
-    return (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(_landing(spark, landing_dir, schema), checkpoint_dir, epoch)
 
 
 def run_excise_ingest(
@@ -1183,7 +1052,7 @@ def run_excise_ingest(
     min_len: int = 60,
     audit_path: str | None = None,
 ) -> StreamingQuery:
-    """Streaming excision-style decontamination (r8): documents
+    """Streaming excision-style decontamination: documents
     landing as files have every region covered by a length-`min_len`
     substring of the PROTECTED corpus (a persisted
     `operators.dedup.build_window_index` parquet at `index_path`) CUT
@@ -1200,46 +1069,22 @@ def run_excise_ingest(
     start; scoring is the batch's window explode + two stored-table
     joins (hash prune, exact substring verify from the index — no
     protected text needed at scoring time), then the shared
-    island/cut algebra. Same exactly-once/replay contract as the
-    other ingest gates (epoch-keyed overwrite)."""
+    island/cut algebra — a score-and-split gate (`_run_gate`) under
+    the module's epoch contract."""
     from ..operators.dedup import substring_excise_against_index
 
     index = spark.read.parquet(index_path)
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
-
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
-        out = substring_excise_against_index(
+    return _run_gate(
+        _landing(spark, landing_dir, schema),
+        checkpoint_dir, corpus_path, audit_path,
+        lambda batch: substring_excise_against_index(
             batch, index, id_col, text_col, min_len=min_len
-        ).persist()  # feeds the corpus rewrite AND the audit write
-        try:
-            # splice the cut text back into the batch's full row shape
-            kept = (
-                batch.drop(text_col)
-                .join(out.select(id_col, "kept_text"), id_col)
-                .withColumnRenamed("kept_text", text_col)
-            )
-            kept.write.mode("overwrite").parquet(
-                f"{corpus_path}/epoch={epoch_id}"
-            )
-            if audit_path is not None:
-                out.filter(F.col("dup_windows") > 0).drop(
-                    "kept_text"
-                ).write.mode("overwrite").parquet(
-                    f"{audit_path}/epoch={epoch_id}"
-                )
-        finally:
-            out.unpersist()
-
-    return (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        # splice the cut text back into the batch's full row shape
+        lambda batch, out: batch.drop(text_col)
+        .join(out.select(id_col, "kept_text"), id_col)
+        .withColumnRenamed("kept_text", text_col),
+        lambda out: out.filter(F.col("dup_windows") > 0).drop("kept_text"),
     )
 
 
@@ -1285,44 +1130,29 @@ def _run_sig_dedup_ingest(
     audio twins): `hash_fn(batch) -> (id, frame_idx, fhash)` is the
     modality-specific Arrow pass; everything downstream — in-batch
     set-Jaccard drop, cross-epoch drop against the persisted
-    signature column, epoch-keyed exactly-once writes, evidence-
-    carrying quarantine — is modality-agnostic."""
+    signature column, evidence-carrying quarantine under the module's
+    epoch contract — is modality-agnostic."""
     from ..sources.multimodal import (
         video_neardup_join,
         video_neardup_pairs,
     )
 
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
-
-    def _best(pairs: DataFrame, dup_id: str, match_id: str) -> DataFrame:
-        # strongest evidence per dropped video: max jaccard, ties
-        # lowest match id (min over (-jaccard, id) gives both)
-        return pairs.groupBy(F.col(dup_id).alias(id_col)).agg(
-            F.min(F.struct((-F.col("jaccard")).alias("__nj"), match_id))
-            .alias("__m")
-        ).select(
-            id_col,
-            F.col(f"__m.{match_id}").alias("best_match"),
-            (-F.col("__m.__nj")).alias("jaccard"),
+    def rejected(dups: DataFrame, reason: str) -> DataFrame:
+        return dups.select(
+            id_col, F.lit(reason).alias("reason"),
+            F.col("best_match").cast("long"), "jaccard",
         )
 
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
-        s = batch.sparkSession
+    def epoch(batch: DataFrame, epoch_id: int) -> None:
         # hash ONCE: the frame-hash plan feeds the self-join, the
         # cross-epoch join and the final write
         frames = hash_fn(batch).localCheckpoint()
-        bad = frames.filter(F.col("fhash").isNull()).select(id_col)
-        quarantined = bad.select(
+        quarantined = frames.filter(F.col("fhash").isNull()).select(
             id_col,
             F.lit("undecodable").alias("reason"),
             F.lit(None).cast("long").alias("best_match"),
             F.lit(None).cast("double").alias("jaccard"),
         )
-
         sigs = (
             frames.filter(F.col("fhash").isNotNull())
             .groupBy(id_col)
@@ -1336,56 +1166,34 @@ def _run_sig_dedup_ingest(
         pairs = video_neardup_pairs(
             frames, id_col, threshold=threshold, cache=False
         )
-        batch_dups = _best(pairs, "id_b", "id_a")
+        batch_dups = _best(pairs, id_col, "id_b", "id_a", "jaccard", True)
         fresh = sigs.join(batch_dups.select(id_col), id_col, "left_anti")
-        quarantined = quarantined.unionByName(
-            batch_dups.select(
-                id_col, F.lit("batch_dup").alias("reason"),
-                F.col("best_match").cast("long"), "jaccard",
-            )
-        )
+        quarantined = quarantined.unionByName(rejected(batch_dups, "batch_dup"))
 
         # cross-epoch: drop batch videos whose frame sets overlap any
-        # STRICTLY OLDER stored video at ≥ threshold. Unreadable
-        # corpus → the epoch fails and retries (_read_if_exists),
-        # never a silent skip that re-admits near-duplicates.
-        corpus = _read_if_exists(s, corpus_path)
-        if corpus is not None:
-            stored = corpus.filter(F.col("epoch") < epoch_id).select(
-                F.col(id_col).alias("__oid"), F.col("fhashes").alias("__fh")
-            )
+        # strictly-older stored video at ≥ threshold
+        older = _older_epochs(batch.sparkSession, corpus_path, epoch_id)
+        if older is not None:
             hits = video_neardup_join(
-                fresh, stored, id_new=id_col, id_stored="__oid",
-                threshold=threshold,
+                fresh,
+                older.select(F.col(id_col).alias("__oid"), F.col("fhashes").alias("__fh")),
+                id_new=id_col, id_stored="__oid", threshold=threshold,
             )
-            corpus_dups = _best(hits, id_col, "__oid")
-            fresh = fresh.join(
-                corpus_dups.select(id_col), id_col, "left_anti"
-            )
+            corpus_dups = _best(hits, id_col, id_col, "__oid", "jaccard", True)
+            fresh = fresh.join(corpus_dups.select(id_col), id_col, "left_anti")
             quarantined = quarantined.unionByName(
-                corpus_dups.select(
-                    id_col, F.lit("corpus_dup").alias("reason"),
-                    F.col("best_match").cast("long"), "jaccard",
-                )
+                rejected(corpus_dups, "corpus_dup")
             )
 
         # survivors keep their payload AND their signature (the
         # persisted index future epochs join against)
-        batch.join(
-            fresh.select(id_col, F.col("__fh").alias("fhashes")), id_col
-        ).write.mode("overwrite").parquet(f"{corpus_path}/epoch={epoch_id}")
-        if quarantine_path is not None:
-            quarantined.write.mode("overwrite").parquet(
-                f"{quarantine_path}/epoch={epoch_id}"
-            )
+        _write_epoch(
+            batch.join(fresh.select(id_col, F.col("__fh").alias("fhashes")), id_col),
+            corpus_path, epoch_id,
+        )
+        _write_epoch(quarantined, quarantine_path, epoch_id)
 
-    return (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(_landing(spark, landing_dir, schema), checkpoint_dir, epoch)
 
 
 def run_video_dedup_ingest(
@@ -1400,7 +1208,7 @@ def run_video_dedup_ingest(
     every_n: int = 1,
     quarantine_path: str | None = None,
 ) -> StreamingQuery:
-    """Streaming VIDEO near-dup gate (late r11) — the third modality's
+    """Streaming VIDEO near-dup gate — the third modality's
     ingest-time twin (text `run_neardup_ingest`, image
     `run_image_dedup_ingest`): each micro-batch frame-hashes its
     videos ONCE (`sources.multimodal.video_dhash_df` — arithmetic
@@ -1417,10 +1225,7 @@ def run_video_dedup_ingest(
     (highest-Jaccard, ties lowest id) match and its similarity, plus a
     reason: 'batch_dup' / 'corpus_dup' / 'undecodable'.
 
-    Exactly-once: per-epoch subdirectories exactly as
-    `run_dedup_ingest` (a replayed epoch re-derives the same anti-join
-    against strictly-older epochs, then overwrites only its own
-    subdir)."""
+    Exactly-once by the module's epoch contract, as `run_dedup_ingest`."""
     from ..sources.multimodal import video_dhash_df
 
     return _run_sig_dedup_ingest(
@@ -1441,7 +1246,7 @@ def run_audio_dedup_ingest(
     threshold: float = 0.5,
     quarantine_path: str | None = None,
 ) -> StreamingQuery:
-    """Streaming AUDIO near-dup gate (late r11) — the fourth
+    """Streaming AUDIO near-dup gate — the fourth
     modality's twin: identical contract to `run_video_dedup_ingest`
     with the per-frame spectral fingerprint
     (`sources.multimodal.audio_fingerprint_df`) as the signature

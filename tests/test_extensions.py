@@ -200,6 +200,51 @@ def test_ivf_index_persists_and_prunes(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expect.collect()))
 
 
+def test_index_read_skips_memo_when_marker_stat_fails(spark, tmp_path, monkeypatch):
+    """The index-read memo is keyed on the marker's mtime nonce. When
+    the marker can be read but not stat'ed there is no nonce, so the
+    read must go uncached rather than memoize under a constant key
+    that a same-content rebuild could never invalidate."""
+    from mints_wind_data_ingestion_spark.operators import similarity as sim
+
+    def memo_keys(path):
+        return [k for k in sim._ARTIFACT_MEMO if k[2] == path]
+
+    def index_at(name):
+        path = str(tmp_path / name)
+        spark.range(3).write.parquet(f"{path}/cells")
+        with open(f"{path}/_INDEX_META.json", "w") as fh:
+            fh.write('{"n_cells": 1}')
+        return path
+
+    # control: a marked, stat-able index memoizes its read handle
+    ok = index_at("ok")
+    assert sim._read_index_parquet(spark, ok, "cells").count() == 3
+    assert len(memo_keys(ok)) == 1
+
+    real_fs = sim._hadoop_fs
+
+    class StatFails:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def getFileStatus(self, path):
+            raise OSError("stat failed")
+
+    def fs_without_stat(spark_, path_str):
+        fs, jpath = real_fs(spark_, path_str)
+        return StatFails(fs), jpath
+
+    monkeypatch.setattr(sim, "_hadoop_fs", fs_without_stat)
+    bad = index_at("bad")
+    assert sim._marker_stamp(spark, f"{bad}/_INDEX_META.json") is None
+    assert sim._read_index_parquet(spark, bad, "cells").count() == 3
+    assert memo_keys(bad) == []
+
+
 def test_multiprobe_lsh_beats_single_probe_with_fewer_tables(spark, sf_dir):
     """Multi-probe economy: 1-flip probing over a 3-table index must
     reach at least the recall of single-probe over the same 3 tables

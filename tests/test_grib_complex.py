@@ -6,7 +6,9 @@ pure-numpy codec's decode+encode for the same template family.
 
 Round-trip tests use the encoder to build REAL binary complex-packed
 messages (no network in the sandbox), the golden test replays the
-reference's own 65k-point GFS field through template 5.3, and the
+reference's own 65k-point GFS field through templates 5.0 and 5.3
+(skipped without the reference checkout; a synthetic 360×181 field
+keeps its header and shape checks running), and the
 e2e test in test_grib_e2e.py feeds a mixed-packing corpus through the
 binaryFile + mapInPandas source.
 """
@@ -14,6 +16,7 @@ binaryFile + mapInPandas source.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import numpy as np
 import pytest
@@ -23,6 +26,7 @@ from mints_wind_data_ingestion_spark.sources.grib2codec import (
     encode_grib2_file,
     encode_grib2_message,
 )
+from tests.test_golden_fixture import FIXTURE
 
 RT = dt.datetime(2020, 8, 12, 6, tzinfo=dt.timezone.utc)
 
@@ -101,27 +105,66 @@ def test_mixed_packing_multi_message_file():
     assert np.abs(np.asarray(recs[1]["data"]) - f2).max() <= 0.5e-2 + 1e-9
 
 
-def test_golden_field_roundtrip_complex_diff():
-    """The reference's own 65,160-point GFS U field through template
-    5.3 at decimal scale 6: values match grib2json's decode within
-    half a quantization step; headers decode identically."""
+GOLDEN = os.path.join(os.path.dirname(FIXTURE), "u_comp.json")
+
+
+@pytest.mark.skipif(
+    not os.path.exists(GOLDEN), reason="reference fixture not available"
+)
+@pytest.mark.parametrize("packing", ["simple", "complex_diff"])
+def test_golden_field_roundtrip(packing):
+    """The reference's own 65,160-point GFS U field (data/u_comp.json)
+    re-encoded at decimal scale 6 through simple (5.0) and complex
+    spatial-differencing (5.3) packing: values match grib2json's decode
+    within half a quantization step, and every header key grib2json
+    emitted decodes identically (gribLength aside — we re-packed at a
+    different precision than NCEP's original file)."""
     import json
 
-    g = json.load(open("/root/reference/data/u_comp.json"))[0]
+    g = json.load(open(GOLDEN))[0]
     h, data = g["header"], np.asarray(g["data"], dtype=np.float64)
     msg = encode_grib2_message(
         data,
         parameter_number=h["parameterNumber"],
-        ref_time=dt.datetime(2020, 8, 12, 6, tzinfo=dt.timezone.utc),
+        ref_time=RT,
         forecast_hours=h["forecastTime"],
         nx=h["nx"], ny=h["ny"], la1=h["la1"], lo1=h["lo1"],
         dx=h["dx"], dy=h["dy"], decimal_scale=6,
-        packing="complex_diff",
+        packing=packing,
     )
     rec = decode_grib2_bytes(msg)[0]
     assert np.abs(np.asarray(rec["data"]) - data).max() <= 1e-6
     diffs = {k: v for k, v in h.items() if rec["header"].get(k) != v}
     assert set(diffs) == {"gribLength"}
+
+
+@pytest.mark.parametrize("packing", ["simple", "complex_diff"])
+def test_gfs_global_grid_header_and_shape(packing):
+    """The golden field's shape without the reference checkout: an
+    engine-encoded 360×181 global 10 m U field decodes to the header
+    the reference's grib2json output documents (SURVEY.md §1.2) and
+    to 65,160 values within half a quantization step."""
+    field = _smooth_field(360, 181)
+    msg = encode_grib2_message(
+        field, parameter_number=2, ref_time=RT, forecast_hours=6,
+        nx=360, ny=181, la1=90.0, lo1=0.0, dx=1.0, dy=1.0,
+        decimal_scale=2, packing=packing,
+    )
+    rec = decode_grib2_bytes(msg)[0]
+    assert len(rec["data"]) == 65160
+    # half a quantization step plus float32-reference slack
+    assert np.abs(np.asarray(rec["data"]) - field).max() <= 0.5e-2 + 1e-6
+    want = {
+        "discipline": 0, "center": 7, "refTime": "2020-08-12T06:00:00.000Z",
+        "forecastTime": 6, "parameterCategory": 2, "parameterNumber": 2,
+        "parameterNumberName": "U-component_of_wind",
+        "parameterUnit": "m.s-1", "surface1Type": 103,
+        "surface1Value": 10.0, "gridDefinitionTemplate": 0,
+        "numberPoints": 65160, "nx": 360, "ny": 181, "la1": 90.0,
+        "lo1": 0.0, "la2": -90.0, "lo2": 359.0, "dx": 1.0, "dy": 1.0,
+        "scanMode": 0,
+    }
+    assert {k: rec["header"][k] for k in want} == want
 
 
 def test_hand_built_general_group_layout_decodes():

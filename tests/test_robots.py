@@ -91,7 +91,7 @@ def test_hypothesis_matcher_vs_regex_reference():
     regex-translated reference on random pattern/path pairs."""
     import re
 
-    from hypothesis import given, settings
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
     from mints_wind_data_ingestion_spark.functions.robots import (
@@ -114,6 +114,10 @@ def test_hypothesis_matcher_vs_regex_reference():
         pattern=st.text(alphabet, max_size=12),
         path=st.text("ab/.%", max_size=16),
     )
+    # a '$'-anchored last literal that also occurs earlier in the path
+    @example(pattern="/a*b$", path="/ab/b")
+    @example(pattern="*/$", path="//")
+    @example(pattern="/*.php$", path="/x.php/y.php")
     def prop(pattern, path):
         # '$' only terminal in robots patterns; interior '$' is
         # literal for BOTH implementations, so compare raw
