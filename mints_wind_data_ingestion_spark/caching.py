@@ -1,61 +1,137 @@
-"""Bounded mid-plan cache registry (r12, VERDICT r11 #5).
+"""Session memos and bounded mid-plan caches — the package's one store
+for work reused inside a Spark application.
 
-Several operators register mid-plan `.cache()` points — a posting
-list consumed by both sides of a self-join, a signature table feeding
-its own part AND a derived pair query. Those caches are load-bearing
-(without the materialization point an expensive Arrow pass executes
-once per consumer) but a plain `.cache()` is never released: in a
-long-lived session that re-builds the same query (bench iterations, a
-notebook, a service) every build stacks one more CacheManager entry.
+A long-lived application (bench sweeps, notebook re-runs, a service
+re-building the same query) reuses routing decisions, persisted-index
+artifacts, parsed expressions and mid-plan caches across builds. All of
+them live in ONE dict keyed
 
-`managed_cache` bounds that: each cache point registers under a key —
-by default the plan's own semantic hash, so identical re-builds map to
-the same key — and REPLACES (unpersists) the previous holder of that
-key. Live entries are therefore bounded by the number of DISTINCT
-plans cached, not the number of builds. Replacement is lazy-safe: a
-consumer still holding the old DataFrame merely recomputes its
-subtree; correctness never depends on a cache.
+    (applicationId, kind, *key)
 
-One-shot processes (the external driver's verify pass, pytest
-sessions that build each query once) see identical behavior to plain
-`.cache()`.
+Key rule: an entry is reused only while every part of its key still
+holds, and a part that cannot be known is `None`, which means "do not
+memoize".
+
+- The application id scopes every entry to its SparkContext. Entries of
+  any other application belong to a stopped session (one live context
+  per process) and are swept on every insert.
+- Plan parts are `plan_hash(df)`, the analyzed plan's semantic hash. An
+  in-memory source's rows are part of its plan.
+- Data parts are `data_version(df)`, a digest of the input file listing
+  with name, size and mtime per local file (name only for remote files;
+  Spark writes unique part names, so overwrites and appends change the
+  listing). It is `""` for a source with no input files, where the plan
+  hash already carries the rows.
+- Any other part (a path, a marker text, parameters) is named by the
+  caller.
+
+`memo(spark, kind, key, load)` returns the stored value on a hit, and
+calls `load()` and stores its result on a miss. A key with a `None` part
+calls `load()`, stores nothing and counts a bypass. `memo_counts()`
+snapshots the per-kind hit/miss/bypass counters.
+
+`managed_cache` bounds mid-plan `.cache()` points on the same store.
+Several operators cache a plan that more than one consumer reads (a
+posting list on both sides of a self-join); a plain `.cache()` is never
+released, so every re-build would stack one more CacheManager entry.
+Each cache point registers under (owner, slot) — by default the plan's
+semantic hash, so identical re-builds share a key — and REPLACES
+(unpersists) the previous holder. Live caches are then bounded by the
+number of distinct plans, not builds. A consumer still holding the old
+DataFrame merely recomputes its subtree; correctness never depends on
+a cache. One-shot processes see plain `.cache()` behaviour.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import hashlib
+import os
+from collections import Counter, defaultdict
+from collections.abc import Callable
+from typing import Any
+from urllib.parse import unquote, urlparse
 
-__all__ = ["managed_cache"]
+from pyspark.sql import DataFrame, SparkSession
 
-#: (applicationId, owner, slot) → the live cached DataFrame
-_managed: dict[tuple[str, str, str], DataFrame] = {}
+__all__ = [
+    "data_version", "managed_cache", "memo", "memo_counts", "plan_hash",
+]
+
+#: (applicationId, kind, *key) → memoized value or live cached DataFrame
+_store: dict[tuple, Any] = {}
+#: kind → {"hit" | "miss" | "bypass": count}
+_counts: defaultdict[str, Counter] = defaultdict(Counter)
+
+
+def _put(app_id: str, key: tuple, value: Any) -> None:
+    for dead in [k for k in _store if k[0] != app_id]:
+        del _store[dead]
+    _store[key] = value
+
+
+def memo(
+    spark: SparkSession, kind: str, key: tuple, load: Callable[[], Any]
+) -> Any:
+    """`load()`'s value under (applicationId, kind, *key), computed once
+    per application; a `None` key part bypasses the store."""
+    if any(part is None for part in key):
+        _counts[kind]["bypass"] += 1
+        return load()
+    app_id = spark.sparkContext.applicationId
+    full = (app_id, kind, *key)
+    if full in _store:
+        _counts[kind]["hit"] += 1
+        return _store[full]
+    _counts[kind]["miss"] += 1
+    value = load()
+    _put(app_id, full, value)
+    return value
+
+
+def memo_counts() -> dict[str, dict[str, int]]:
+    """Snapshot of the hit/miss/bypass counters, per kind."""
+    return {kind: dict(c) for kind, c in _counts.items()}
+
+
+def plan_hash(df: DataFrame) -> int:
+    """The analyzed plan's semantic hash (cosmetic differences such as
+    aliases' expression ids do not change it)."""
+    return df.semanticHash()
+
+
+def data_version(df: DataFrame) -> str:
+    """`count:md5` over the sorted input files, each as name + size +
+    mtime where the store is local (one os.stat, no Spark job) and name
+    only otherwise. `""` when the source has no input files."""
+    files = df.inputFiles()
+    if not files:
+        return ""
+    parts = []
+    for f in sorted(files):
+        u = urlparse(f)
+        if u.scheme in ("file", ""):
+            try:
+                st = os.stat(unquote(u.path))
+                parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
+                continue
+            except OSError:
+                pass
+        parts.append(f)
+    digest = hashlib.md5("\n".join(parts).encode()).hexdigest()
+    return f"{len(files)}:{digest}"
 
 
 def managed_cache(
     df: DataFrame, owner: str | None = None, slot: str = ""
 ) -> DataFrame:
     """Cache `df`, releasing whatever a prior call cached under the
-    same (owner, slot). `owner=None` self-keys on the analyzed plan's
-    semantic hash — identical re-builds replace, distinct plans
-    coexist. Returns the cached DataFrame."""
-    if owner is None:
-        try:
-            owner = str(df._jdf.queryExecution().analyzed().semanticHash())
-        except Exception:  # noqa: BLE001 — fingerprint is best-effort
-            return df.cache()
+    same (owner, slot). `owner=None` self-keys on `plan_hash(df)` —
+    identical re-builds replace, distinct plans coexist. Returns the
+    cached DataFrame."""
     app_id = df.sparkSession.sparkContext.applicationId
-    # sweep entries from OTHER applications on insert: their sessions
-    # are stopped (one live SparkContext per process), so the keys
-    # only pin dead DataFrame/JVM handles in a long-lived process
-    # cycling many sessions
-    for dead in [k for k in _managed if k[0] != app_id]:
-        del _managed[dead]
-    key = (app_id, owner, slot)
-    old = _managed.get(key)
+    key = (app_id, "cache", plan_hash(df) if owner is None else owner, slot)
+    old = _store.get(key)
     if old is not None and old is not df:
-        try:
-            old.unpersist()
-        except Exception:  # noqa: BLE001 — e.g. a stopped session
-            pass
-    _managed[key] = df
+        old.unpersist()
+    _put(app_id, key, df)
     return df.cache()

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caching import managed_cache
+from ..caching import data_version, managed_cache, memo, plan_hash
 from ..functions.text import char_shingles, word_shingles  # noqa: F401
 
 __all__ = [
@@ -329,40 +329,27 @@ _JACCARD_VOL_FLOOR = 50_000_000
 #: m²/2 pairs inside a single row.
 _MINHASH_COLLAPSE_MIN = 16
 
-#: (applicationId, plan semantic hash, data fingerprint, …) →
-#: memoized physical-plan choice. The routing decision is a function
-#: of the INPUT, so rebuilds of the same query over the same data in
-#: a session (bench sweeps, notebook re-runs, a service) skip the
-#: stats job. The DATA fingerprint (VERDICT r13 "What's wrong" #3 /
-#: ADVICE r13) closes the staleness hole the plan hash alone left
-#: open: an in-place overwrite or a growing table re-read keeps the
-#: plan hash while the skew profile changes — the route must
-#: recompute then. For non-file sources (`inputFiles()` empty) the
-#: plan hash already embeds the data (LocalRelation rows are part of
-#: the plan), so the plan key alone stays sound there. Dead-
-#: application keys are swept on insert (the managed_cache
-#: convention). Both route choices are always CORRECT — identical
-#: rows, pinned by tests — the memo only pins performance.
-_ADAPTIVE_ROUTES: dict = {}
+def _route(source: DataFrame, plan: DataFrame, decide, *params):
+    """Session-memoized physical-plan choice: `decide()` runs its stats
+    job once per (plan, data version of `source`, params). The decision
+    is a function of the input, so rebuilds over the same data skip the
+    job, while an in-place overwrite or a grown table (same plan, new
+    skew profile) recomputes it. Both routes of every caller return
+    identical rows — the memo only pins performance."""
+    key = (plan_hash(plan), data_version(source), *params)
+    return memo(source.sparkSession, "route", key, decide)
 
 
-def _data_fingerprint(df: DataFrame) -> str:
-    """Cheap data-version signal for `_ADAPTIVE_ROUTES` keys: count +
-    hash of the input file listing. Spark writes unique part-file
-    names, so both in-place overwrites and appends change the listing.
-    Driver-side listing only — no job runs. Empty/unavailable listings
-    return a constant (in-memory sources: the plan hash carries the
-    data; see `_ADAPTIVE_ROUTES`)."""
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 — best-effort, like the plan hash
-        return "nofiles"
-    if not files:
-        return "nofiles"
-    import hashlib
-
-    digest = hashlib.md5("\n".join(sorted(files)).encode()).hexdigest()
-    return f"{len(files)}:{digest}"
+def _has_hot_cluster(members: DataFrame, key_col: str) -> bool:
+    """True when some `key_col` value has more than
+    `_MINHASH_COLLAPSE_MIN` rows — one bounded scalar job."""
+    max_m = (
+        members.groupBy(key_col)
+        .agg(F.count(F.lit(1)).alias("m"))
+        .agg(F.max("m").alias("mm"))
+        .collect()[0]["mm"]
+    ) or 0
+    return max_m > _MINHASH_COLLAPSE_MIN
 
 
 def jaccard_join_adaptive(
@@ -421,18 +408,8 @@ def jaccard_join_adaptive(
     posting = _jaccard_posting(docs, id_col, shingle_col)
     if cache:
         posting = managed_cache(posting)
-    app_id = docs.sparkSession.sparkContext.applicationId
-    try:
-        plan_fp = str(
-            posting._jdf.queryExecution().analyzed().semanticHash()
-        )
-    except Exception:  # noqa: BLE001 — fingerprint is best-effort
-        plan_fp = None
-    route_key = (
-        app_id, plan_fp, _data_fingerprint(docs), blowup_cap, vol_floor,
-    )
-    method = _ADAPTIVE_ROUTES.get(route_key) if plan_fp else None
-    if method is None:
+
+    def route() -> str:
         stats = (
             posting.groupBy("__s")
             .agg(F.count(F.lit(1)).alias("__df"))
@@ -444,15 +421,11 @@ def jaccard_join_adaptive(
         )
         vol = stats["vol"] or 0
         n_postings = stats["n_postings"] or 0
-        method = (
-            "uniform"
-            if vol <= blowup_cap * max(n_postings, 1) or vol <= vol_floor
-            else "prefix"
-        )
-        if plan_fp:
-            for dead in [k for k in _ADAPTIVE_ROUTES if k[0] != app_id]:
-                del _ADAPTIVE_ROUTES[dead]
-            _ADAPTIVE_ROUTES[route_key] = method
+        if vol <= blowup_cap * max(n_postings, 1) or vol <= vol_floor:
+            return "uniform"
+        return "prefix"
+
+    method = _route(docs, posting, route, blowup_cap, vol_floor)
     if method == "uniform":
         out = _jaccard_count_join(posting, threshold)
         out.windflow_jaccard_method = "uniform"
@@ -787,7 +760,7 @@ def minhash_dedup_pairs(
     (count + two salted XOR folds of the shingle hashes — a
     collect_list/sort fingerprint measured 3.6× ledger on the sf0.1
     corpus and was replaced same-day); the routing statistic is the
-    LARGEST cluster size, memoized per (application, plan) like the
+    LARGEST cluster size, memoized per (plan, data version) like the
     adaptive Jaccard route, and corpora whose clusters stay ≤
     `_MINHASH_COLLAPSE_MIN` keep the exact prior plan — small dup
     clusters are harmless in-bucket and the expansion joins aren't
@@ -813,27 +786,10 @@ def minhash_dedup_pairs(
             F.count(F.lit(1)),
         ).alias("__sfp")
     )
-    app_id = docs.sparkSession.sparkContext.applicationId
-    try:
-        plan_fp = str(
-            posting._jdf.queryExecution().analyzed().semanticHash()
-        )
-    except Exception:  # noqa: BLE001
-        plan_fp = None
-    route_key = (app_id, plan_fp, _data_fingerprint(docs), "minhash_collapse")
-    has_hot = _ADAPTIVE_ROUTES.get(route_key) if plan_fp else None
-    if has_hot is None:
-        max_m = (
-            setfp.groupBy("__sfp")
-            .agg(F.count(F.lit(1)).alias("m"))
-            .agg(F.max("m").alias("mm"))
-            .collect()[0]["mm"]
-        ) or 0
-        has_hot = max_m > _MINHASH_COLLAPSE_MIN
-        if plan_fp:
-            for dead in [k for k in _ADAPTIVE_ROUTES if k[0] != app_id]:
-                del _ADAPTIVE_ROUTES[dead]
-            _ADAPTIVE_ROUTES[route_key] = has_hot
+    has_hot = _route(
+        docs, posting, lambda: _has_hot_cluster(setfp, "__sfp"),
+        "minhash_collapse",
+    )
     if not has_hot:
         buckets = _minhash_buckets_from_posting(
             posting, num_hashes, bands, rows_per_band
@@ -1257,32 +1213,15 @@ def banded_hamming_pairs(
     collapse (measured r13: x_dedup_pairs_suite 1.6× ledger with the
     unconditional collapse on the near-dup-free synthetic corpus).
     The routing statistic is one narrow aggregate over the
-    fingerprint table, memoized per (application, plan) like the
+    fingerprint table, memoized per (plan, data version) like the
     adaptive Jaccard route."""
     members = fps.filter(F.col(fp_col).isNotNull()).select(
         F.col(fp_col).alias("__fp"), F.col(id_col).alias("__mid")
     )
-    app_id = fps.sparkSession.sparkContext.applicationId
-    try:
-        plan_fp = str(
-            members._jdf.queryExecution().analyzed().semanticHash()
-        )
-    except Exception:  # noqa: BLE001
-        plan_fp = None
-    route_key = (app_id, plan_fp, _data_fingerprint(fps), "hamming_collapse")
-    has_hot = _ADAPTIVE_ROUTES.get(route_key) if plan_fp else None
-    if has_hot is None:
-        max_m = (
-            members.groupBy("__fp")
-            .agg(F.count(F.lit(1)).alias("m"))
-            .agg(F.max("m").alias("mm"))
-            .collect()[0]["mm"]
-        ) or 0
-        has_hot = max_m > _MINHASH_COLLAPSE_MIN
-        if plan_fp:
-            for dead in [k for k in _ADAPTIVE_ROUTES if k[0] != app_id]:
-                del _ADAPTIVE_ROUTES[dead]
-            _ADAPTIVE_ROUTES[route_key] = has_hot
+    has_hot = _route(
+        fps, members, lambda: _has_hot_cluster(members, "__fp"),
+        "hamming_collapse",
+    )
     if not has_hot:
         return _banded_hamming_pairs_direct(
             members, nbits, bands, max_hamming

@@ -180,7 +180,9 @@ def score_perplexity(
     quantization, so the result is bit-stable under any partitioning.
     Documents with no bigrams (empty/one token) score 0 and pass —
     length gates are a different filter's job (x_text_suite).
-    `gate_nll_e4` is the CCNet-style cutoff: nll 8.0 ≈ ppl 3000."""
+    `gate_nll_e4` is the CCNet-style cutoff: nll 8.0 ≈ ppl 3000.
+    Document ids must be unique: the output has one row per DISTINCT
+    doc_id, so documents sharing an id score as one document."""
     from ..functions.text import shingle_docs_pandas
 
     add_k = float(add_k)
@@ -343,7 +345,9 @@ def score_stupid_backoff(
     totals — no driver model object, shuffle-native at any scale.
     Per-position -ln S quantizes to e6 BEFORE the document mean
     (registry bit-stability rules); documents with < 3 tokens score 0
-    and pass, as in `score_perplexity`."""
+    and pass, as in `score_perplexity`. Document ids must be unique:
+    the output has one row per DISTINCT doc_id, so documents sharing an
+    id score as one document."""
     import pandas as pd
 
     alpha = float(alpha)
@@ -428,8 +432,6 @@ def score_stupid_backoff(
     )
     # every doc_id reaches the aggregate (sentinel rows included), so
     # the per-doc groupBy IS the output — one exchange, one docs scan.
-    # Note: like score_perplexity, this emits one row per DISTINCT
-    # doc_id; the operator contract assumes unique ids.
     out = scored.groupBy("doc_id").agg(
         F.count("nll_e6").alias("n_trigrams"),
         F.round(

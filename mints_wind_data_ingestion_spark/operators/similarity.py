@@ -30,9 +30,11 @@ Scale design (local[32] tests, 1000-executor posture):
 from __future__ import annotations
 
 import pandas as pd  # module-level: pandas_udf type hints must resolve
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..caching import data_version, memo, plan_hash
 
 __all__ = [
     "dot",
@@ -491,16 +493,6 @@ def _hyperplanes(dim: int, bits: int, table: int, seed: int) -> list[list[float]
     return planes
 
 
-#: per-session memo of parsed plane Columns. Keyed on the session
-#: OBJECT via weakref — keying on id(sess) would let a new session
-#: reuse a dead session's id() and receive a Column bound to the old
-#: JVM gateway; the weak key dies (and evicts its entries) with the
-#: session instead.
-import weakref
-
-_plane_cache: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
 def hyperplane_buckets(
     vec: str, dim: int, bits: int = 12, tables: int = 8, seed: int = 7
 ) -> Column:
@@ -528,39 +520,36 @@ def hyperplane_buckets(
             "expression is generated as SQL text); pass the name"
         )
     vname = vec
-    # memoize the PARSED Column per session: the planes are a pure
+
+    def parse() -> Column:
+        table_exprs = []
+        for t in range(tables):
+            bits_sql = []
+            for j, w in enumerate(_hyperplanes(dim, bits, t, seed)):
+                arr = ", ".join(f"{x!r}D" for x in w)
+                d = (
+                    f"aggregate(zip_with(`{vname}`, array({arr}), "
+                    "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+                    "0.0D, (acc, v) -> acc + v)"
+                )
+                bits_sql.append(
+                    f"shiftleft(IF({d} >= 0D, CAST(1 AS BIGINT), "
+                    f"CAST(0 AS BIGINT)), {j})"
+                )
+            table_exprs.append(
+                " | ".join(["CAST(0 AS BIGINT)", *bits_sql])
+            )
+        return F.expr("array(" + ", ".join(table_exprs) + ")")
+
+    # memoize the PARSED Column per application: the planes are a pure
     # function of (dim, bits, tables, seed), and the JVM parse of the
     # ~6k-literal tree is ~0.7 s — repeated on every query build
-    # otherwise. Keyed on the active session so a stale JVM reference
-    # can never leak across sessions.
-    from pyspark.sql import SparkSession
-
+    # otherwise. The application key keeps a Column bound to a stopped
+    # context's JVM from leaking into a new session.
     sess = SparkSession.getActiveSession()
-    key = (vname, dim, bits, tables, seed)
-    if sess is not None:
-        per_sess = _plane_cache.get(sess)
-        if per_sess is not None and key in per_sess:
-            return per_sess[key]
-    table_exprs = []
-    for t in range(tables):
-        planes = _hyperplanes(dim, bits, t, seed)
-        bits_sql = []
-        for j, w in enumerate(planes):
-            arr = ", ".join(f"{x!r}D" for x in w)
-            d = (
-                f"aggregate(zip_with(`{vname}`, array({arr}), "
-                "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                "0.0D, (acc, v) -> acc + v)"
-            )
-            bits_sql.append(
-                f"shiftleft(IF({d} >= 0D, CAST(1 AS BIGINT), "
-                f"CAST(0 AS BIGINT)), {j})"
-            )
-        table_exprs.append(" | ".join(["CAST(0 AS BIGINT)", *bits_sql]))
-    col = F.expr("array(" + ", ".join(table_exprs) + ")")
-    if sess is not None:
-        _plane_cache.setdefault(sess, {})[key] = col
-    return col
+    if sess is None:
+        return parse()
+    return memo(sess, "planes", (vname, dim, bits, tables, seed), parse)
 
 
 def hyperplane_buckets_kernel(
@@ -577,9 +566,13 @@ def hyperplane_buckets_kernel(
     reassociation, so every intermediate equals the fold's and the sign
     (hence every bucket bit) can never differ. A plain matmul would be
     faster still but reassociates the sum, flipping near-zero signs vs
-    the oracle's replay. Null / wrong-length vectors bucket to 0 per
-    table, matching the SQL form (null-padded zip_with → null dot →
-    ``IF(null >= 0)`` → 0 bit).
+    the oracle's replay. Null / wrong-length vectors and vectors with a
+    null ELEMENT bucket to 0 per table, matching the SQL form (null
+    product or null-padded zip_with → null dot → ``IF(null >= 0)`` → 0
+    bit). A NaN dot sets its bit: Spark orders NaN above every double,
+    so ``NaN >= 0D`` is true, while numpy's comparison is false. Arrow
+    hands pandas a null element as NaN, so null elements are flagged
+    by a second (codegen'd, non-HOF) column.
 
     Why not the literal tree: its plan text is ~185 KB (driver
     parse/analysis per uncached build), the HOF fold is interpreted
@@ -595,14 +588,14 @@ def hyperplane_buckets_kernel(
     bitw = np.int64(1) << np.arange(bits, dtype=np.int64)
 
     @F.pandas_udf("array<bigint>")
-    def _buckets(vs: pd.Series) -> pd.Series:
+    def _buckets(vs: pd.Series, has_null: pd.Series) -> pd.Series:
         vals = vs.tolist()
         n = len(vals)
         if n == 0:
             return pd.Series([], dtype=object)
         good = [
-            i for i, v in enumerate(vals)
-            if v is not None and len(v) == dim
+            i for i, (v, hn) in enumerate(zip(vals, has_null.tolist()))
+            if v is not None and len(v) == dim and not hn
         ]
         out: list = [[0] * tables] * n
         if good:
@@ -616,13 +609,16 @@ def hyperplane_buckets_kernel(
                 acc = np.zeros((xc.shape[0], tables * bits))
                 for j in range(dim):
                     acc += xc[:, j:j + 1] * planes[:, j]
-                sb = (acc >= 0.0).reshape(-1, tables, bits)
+                sb = ((acc >= 0.0) | np.isnan(acc)).reshape(
+                    -1, tables, bits
+                )
                 ids[lo:lo + 1024] = (sb * bitw).sum(axis=2)
             for row, i in zip(ids.tolist(), good):
                 out[i] = row
         return pd.Series(out)
 
-    return _buckets(F.col(vec))
+    v = F.col(vec)
+    return _buckets(v, F.size(F.array_compact(v)) < F.size(v))
 
 
 def topk_lsh(
@@ -790,52 +786,18 @@ def dequant_sq_error(vec: Column, q: Column, scale: Column) -> Column:
     return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
 
 
-#: (applicationId, kind, path, marker_text) → driver-side index
-#: artifacts (centroid / codebook ndarrays) read back from a PERSISTED
-#: index. A serving process keeps its index resident — re-reading the
-#: same tiny parquet every probe batch is a job per batch for bytes
-#: that cannot have changed while the content marker is unchanged
-#: (r14 opt: the x_sim_ivf_suite build paid 3-4 such read-back jobs
-#: per run). Keyed on the MARKER TEXT, so any rebuild (which rewrites
-#: the marker last) invalidates the memo; dead-application keys are
-#: swept on insert (the managed_cache convention). This memoizes
-#: INPUT artifacts of a persisted index, never query results.
-_ARTIFACT_MEMO: dict = {}
-
-
-def _memo_artifact(spark: SparkSession, kind: str, path: str,
-                   marker_text: str, load):
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, kind, path, marker_text)
-    hit = _ARTIFACT_MEMO.get(key)
-    if hit is not None:
-        return hit
-    value = load()
-    for dead in [k for k in _ARTIFACT_MEMO if k[0] != app_id]:
-        del _ARTIFACT_MEMO[dead]
-    _ARTIFACT_MEMO[key] = value
-    return value
-
-
 def _corpus_fingerprint(df: DataFrame, id_col: str, vec_col: str) -> dict:
     """Data-version fields for an index marker (reuse-or-rebuild
-    check). File-backed sources fingerprint the input FILE LISTING —
-    driver-side metadata only, no Spark job; Spark writes unique part
-    names, so any overwrite/append changes it (the
-    `_ADAPTIVE_ROUTES` data-version convention). In-memory sources
-    (no input files) keep the one-pass count + xxhash64-over-values
-    aggregation: there the values are only reachable by a job, and
-    the value fold is what catches re-embedding with unchanged ids
+    check). File-backed sources use `data_version` — driver-side
+    metadata only, no Spark job; it changes on any overwrite or append,
+    including a same-name in-place rewrite. In-memory sources (no input
+    files) keep the one-pass count + xxhash64-over-values aggregation:
+    there the values are only reachable by a job, and the value fold is
+    what catches re-embedding with unchanged ids
     (tests/test_round5.py)."""
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 — fall through to the agg
-        files = []
-    if files:
-        import hashlib
-
-        digest = hashlib.md5("\n".join(sorted(files)).encode()).hexdigest()
-        return {"data": f"{len(files)}:{digest}"}
+    version = data_version(df)
+    if version:
+        return {"data": version}
     fp = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.expr(
@@ -847,23 +809,22 @@ def _corpus_fingerprint(df: DataFrame, id_col: str, vec_col: str) -> dict:
 
 def load_ivf_centroids(spark: SparkSession, index_path: str):
     """The persisted index's centroid table as a cell-ascending
-    float64 ndarray — session-memoized on the index marker, so
-    repeated probe batches against an unchanged index skip the
-    read-back job (`_ARTIFACT_MEMO`)."""
+    float64 ndarray — session-memoized on the index marker text (a
+    rebuild rewrites the marker last), so repeated probe batches
+    against an unchanged index skip the read-back job. An unmarked or
+    partial index never memoizes."""
     import numpy as np
 
     marker = _hadoop_read_text(
         spark, index_path.rstrip("/") + "/_INDEX_META.json"
-    ) or ""
+    ) or None
 
     def load():
         cpdf = spark.read.parquet(f"{index_path}/centroids").toPandas()
         cpdf = cpdf.sort_values("cell")
         return np.array(cpdf["centroid"].tolist(), dtype=np.float64)
 
-    if not marker:
-        return load()  # unmarked/partial index: never memoize
-    return _memo_artifact(spark, "ivf_centroids", index_path, marker, load)
+    return memo(spark, "ivf_centroids", (index_path, marker), load)
 
 
 def build_ivf_index(
@@ -956,30 +917,6 @@ def _marker_stamp(spark: SparkSession, path_str: str) -> str | None:
         return f"{st.getModificationTime()}:{st.getLen()}"
     except Exception:  # noqa: BLE001 — the caller skips the memo
         return None
-
-
-def _files_stamp(files: list[str]) -> str:
-    """Digest input for a file-backed source's data version: name +
-    size + mtime per file where the store exposes them (local paths;
-    one os.stat each, no Spark job), name-only otherwise. Catches the
-    in-place same-name overwrite that a pure listing digest misses
-    (ADVICE r14); Spark-written sources are already covered by unique
-    part names."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    parts = []
-    for f in sorted(files):
-        u = urlparse(f)
-        if u.scheme in ("file", ""):
-            try:
-                st = os.stat(unquote(u.path))
-                parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-                continue
-            except OSError:
-                pass
-        parts.append(f)
-    return "\n".join(parts)
 
 
 def _hadoop_read_text(spark: SparkSession, path_str: str) -> str | None:
@@ -1380,13 +1317,11 @@ def _read_index_parquet(
     files); an unmarked index, or one whose marker cannot be stat'ed,
     never memoizes."""
     marker_path = index_path.rstrip("/") + "/" + marker_name
-    marker = _hadoop_read_text(spark, marker_path) or ""
+    marker = _hadoop_read_text(spark, marker_path) or None
     path = f"{index_path.rstrip('/')}/{sub}"
     stamp = _marker_stamp(spark, marker_path) if marker else None
-    if stamp is None:
-        return spark.read.parquet(path)
-    return _memo_artifact(
-        spark, f"read:{sub}", index_path, f"{stamp}|{marker}",
+    return memo(
+        spark, f"read:{sub}", (index_path, stamp, marker),
         lambda: spark.read.parquet(path),
     )
 
@@ -1398,19 +1333,15 @@ def _pull_probes_memo(
     vec_col: str,
     index_path: str,
 ):
-    """Bounded probe pull memoized per session (the `_ARTIFACT_MEMO`
-    convention): repeated plan builds against an unchanged index
-    re-pull the same bounded probe set on every build, and that eager
-    job is what keeps the composite out of the prepared-plan cache.
-    Key = index marker text (data version of the corpus the probes
-    are answered against) + the probe plan's semantic hash + the
-    probe table's input file listing with per-file size/mtime (ADVICE
-    r14: a same-name in-place overwrite changes the stat even when the
-    listing is identical) — a rebuilt index, a different probe query,
-    or an overwritten probe source each re-pull. Probes with no
-    file-backed lineage (in-memory frames), or any Spark API where the
-    private semantic-hash chain is unavailable (ADVICE r14: e.g.
-    Connect), never memoize: fall back to the plain bounded pull.
+    """Bounded probe pull memoized per session: repeated plan builds
+    against an unchanged index re-pull the same bounded probe set on
+    every build, and that eager job is what keeps the composite out of
+    the prepared-plan cache. Key = index marker text (data version of
+    the corpus the probes are answered against) + the probe plan's
+    semantic hash + the probe table's `data_version` — a rebuilt index,
+    a different probe query, or an overwritten probe source each
+    re-pull. Probes with no file-backed lineage (in-memory frames) or
+    an unmarked index never memoize: the plain bounded pull runs.
 
     The returned frame is a SHALLOW COPY of the memoized one (ADVICE
     r14): callers share the underlying ndarrays (near-zero cost) but a
@@ -1418,23 +1349,13 @@ def _pull_probes_memo(
     later memoized consumer."""
     marker = _hadoop_read_text(
         spark, index_path.rstrip("/") + "/_INDEX_META.json"
-    ) or ""
-    try:
-        files = probes.inputFiles()
-        sem = (
-            probes.select(id_col, vec_col)
-            ._jdf.queryExecution().analyzed().semanticHash()
-        )
-    except Exception:  # noqa: BLE001 — lineage/semantic probe only
-        files, sem = [], None
-    if not marker or not files or sem is None:
-        return _pull_probes_bounded(probes, id_col, vec_col)
-    import hashlib
-
-    digest = hashlib.md5(_files_stamp(files).encode()).hexdigest()
-    return _memo_artifact(
-        spark, "probe_pull", index_path,
-        f"{marker}|{sem}|{len(files)}:{digest}",
+    ) or None
+    key = (
+        index_path, marker, plan_hash(probes.select(id_col, vec_col)),
+        data_version(probes) or None,
+    )
+    return memo(
+        spark, "probe_pull", key,
         lambda: _pull_probes_bounded(probes, id_col, vec_col),
     ).copy(deep=False)
 
@@ -1801,9 +1722,7 @@ def build_pq_books(
                         pdf["centroid"].tolist(), dtype=np.float64
                     ).reshape(m, ks, dsub)
 
-                return _memo_artifact(
-                    spark, "pq_books", path, prior, load
-                )
+                return memo(spark, "pq_books", (path, prior), load)
         except ValueError:
             pass
     books = train_pq_codebooks(df, id_col, vec_col, m, ks, iters, sample)

@@ -22,7 +22,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..caching import managed_cache  # noqa: F401 — re-export
+from ..caching import managed_cache, memo  # noqa: F401 — re-export
 from ..sources.tables import load_tables
 
 __all__ = [
@@ -73,15 +73,10 @@ def driver_registry() -> dict[str, Query]:
     here, so driver verification still covers every registered query."""
     return {k: q for k, q in REGISTRY.items() if q.driver}
 
-_table_cache: dict[tuple[int, str], dict[str, DataFrame]] = {}
-
-
 def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Memoized testdata loading (parquet footers read once per session+dir)."""
-    key = (id(spark), sf_dir)
-    if key not in _table_cache:
-        _table_cache[key] = load_tables(spark, sf_dir)
-    return _table_cache[key]
+    """Memoized testdata loading (parquet footers read once per
+    application+dir)."""
+    return memo(spark, "tables", (sf_dir,), lambda: load_tables(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

@@ -205,10 +205,11 @@ def test_index_read_skips_memo_when_marker_stat_fails(spark, tmp_path, monkeypat
     the marker can be read but not stat'ed there is no nonce, so the
     read must go uncached rather than memoize under a constant key
     that a same-content rebuild could never invalidate."""
+    from mints_wind_data_ingestion_spark import caching
     from mints_wind_data_ingestion_spark.operators import similarity as sim
 
     def memo_keys(path):
-        return [k for k in sim._ARTIFACT_MEMO if k[2] == path]
+        return [k for k in caching._store if k[2] == path]
 
     def index_at(name):
         path = str(tmp_path / name)

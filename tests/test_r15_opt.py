@@ -26,8 +26,9 @@ from pyspark.sql import functions as F
 def test_hyperplane_kernel_bit_identical(spark, dim, bits, tables, seed):
     """The Arrow kernel's sequential per-dimension accumulation must
     reproduce the SQL fold's bucket ids EXACTLY — including sign
-    decisions on tiny magnitudes, zero vectors, and the null /
-    wrong-length null-fold semantics (bucket 0 per table)."""
+    decisions on tiny magnitudes, zero vectors, NaN and infinite
+    elements, and the null / wrong-length / null-element null-fold
+    semantics (bucket 0 per table)."""
     from mints_wind_data_ingestion_spark.operators.similarity import (
         hyperplane_buckets,
         hyperplane_buckets_kernel,
@@ -40,6 +41,15 @@ def test_hyperplane_kernel_bit_identical(spark, dim, bits, tables, seed):
         for i in range(400)
     ]
     rows += [(400, [0.0] * dim), (401, None), (402, [1.0] * (dim // 2))]
+    # SQL evaluates `NaN >= 0D` as true (all bits set), and a null
+    # element nulls the fold (bucket 0)
+    nan = float("nan")
+    rows += [
+        (403, [nan] + [1.0] * (dim - 1)),
+        (404, [1.0] * (dim - 1) + [None]),
+        (405, [float("inf"), float("-inf")] + [0.5] * (dim - 2)),
+        (406, [nan, None] + [1.0] * (dim - 2)),
+    ]
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<double>"
     ).repartition(4)

@@ -327,15 +327,15 @@ def test_managed_cache_sweeps_dead_application_keys(spark):
     from mints_wind_data_ingestion_spark import caching
 
     df = spark.range(3)
-    caching._managed[("app-dead-123", "x", "")] = df
+    caching._store[("app-dead-123", "cache", "x", "")] = df
     out = caching.managed_cache(spark.range(5), owner="r13-sweep")
     try:
         live_app = spark.sparkContext.applicationId
-        assert ("app-dead-123", "x", "") not in caching._managed
-        assert (live_app, "r13-sweep", "") in caching._managed
+        assert ("app-dead-123", "cache", "x", "") not in caching._store
+        assert (live_app, "cache", "r13-sweep", "") in caching._store
     finally:
         out.unpersist()
-        caching._managed.pop((spark.sparkContext.applicationId, "r13-sweep", ""), None)
+        caching._store.pop((spark.sparkContext.applicationId, "cache", "r13-sweep", ""), None)
 
 
 def test_pq_probe_pull_cap_fails_loud(spark, monkeypatch):
@@ -414,6 +414,7 @@ def test_minhash_collapse_route_memoized(spark):
     from mints_wind_data_ingestion_spark.functions.text import (
         shingle_docs_pandas,
     )
+    from mints_wind_data_ingestion_spark import caching
     from mints_wind_data_ingestion_spark.operators import dedup
 
     docs = _minhash_corpus(spark, n_dups=40)
@@ -422,7 +423,7 @@ def test_minhash_collapse_route_memoized(spark):
     app = spark.sparkContext.applicationId
     assert any(
         k[0] == app and k[-1] == "minhash_collapse" and v is True
-        for k, v in dedup._ADAPTIVE_ROUTES.items()
+        for k, v in caching._store.items()
     )
 
 
@@ -430,6 +431,7 @@ def test_minhash_no_dups_keeps_prior_plan(spark):
     from mints_wind_data_ingestion_spark.functions.text import (
         shingle_docs_pandas,
     )
+    from mints_wind_data_ingestion_spark import caching
     from mints_wind_data_ingestion_spark.operators import dedup
 
     docs = spark.createDataFrame(
@@ -445,5 +447,5 @@ def test_minhash_no_dups_keeps_prior_plan(spark):
     app = spark.sparkContext.applicationId
     assert any(
         k[0] == app and k[-1] == "minhash_collapse" and v is False
-        for k, v in dedup._ADAPTIVE_ROUTES.items()
+        for k, v in caching._store.items()
     )

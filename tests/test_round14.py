@@ -3,23 +3,23 @@
 the duplicate-(id, fingerprint) input contract on the banded Hamming
 collapse paths (ADVICE r13).
 
-The staleness hole these tests close: `_ADAPTIVE_ROUTES` memoized on
-(applicationId, plan semanticHash) alone, assuming same plan ⇒ same
+The staleness hole these tests close: the adaptive-route memo once keyed
+on (applicationId, plan semanticHash) alone, assuming same plan ⇒ same
 data. An in-place overwrite of the same parquet path keeps the plan
 hash while the skew profile flips — the memo would pin the count plan
 on a now-Zipf corpus, re-introducing the quadratic blowup the feature
-exists to avoid. The fix folds the input file listing (count + md5)
-into the key; Spark writes unique part-file names, so overwrites and
-appends both change it.
+exists to avoid. The fix folds the input files' data version
+(`caching.data_version`: count + md5 of names, sizes and mtimes) into
+the key, so overwrites and appends both change it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from mints_wind_data_ingestion_spark.caching import data_version
 from mints_wind_data_ingestion_spark.operators import dedup
 from mints_wind_data_ingestion_spark.operators.dedup import (
-    _data_fingerprint,
     banded_hamming_join_rs,
     banded_hamming_pairs,
     jaccard_join_adaptive,
@@ -42,6 +42,12 @@ def _boiler_shingled(spark, n=60):
             tail = [f"w1x{j}" for j in range(9)] + ["tail2"]
         rows.append((i, [f"boiler{k}" for k in range(10)] + tail))
     return spark.createDataFrame(rows, "doc_id long, sh array<string>")
+
+
+def _data_fingerprint(df):
+    """The route key's data part, with an in-memory source's `""` read
+    as the "nofiles" sentinel the assertions below were written for."""
+    return data_version(df) or "nofiles"
 
 
 def test_data_fingerprint_file_vs_memory(spark, tmp_path):

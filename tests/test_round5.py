@@ -332,6 +332,49 @@ def test_ivf_index_invalidated_by_value_change(spark, tmp_path):
     assert c1 != c2
 
 
+def test_ivf_index_invalidated_by_inplace_file_rewrite(spark, tmp_path):
+    """A file-backed corpus rewritten IN PLACE (same file name, new
+    vectors — e.g. by pyarrow) must rebuild the index: its data version
+    folds each file's size and mtime, not only the listing."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mints_wind_data_ingestion_spark.operators.similarity import (
+        build_ivf_index,
+    )
+
+    corpus = str(tmp_path / "corpus.parquet")
+    path = str(tmp_path / "ivf")
+
+    def write(shift: float):
+        pq.write_table(pa.table({
+            "vec_id": pa.array(range(16), pa.int64()),
+            "embedding": [
+                [float((i * 3 + j) % 7) + (shift if i < 8 else 0.0)
+                 for j in range(4)]
+                for i in range(16)
+            ],
+        }), corpus)
+
+    def centroids():
+        return sorted(
+            (r.cell, tuple(r.centroid))
+            for r in spark.read.parquet(f"{path}/centroids").collect()
+        )
+
+    write(0.0)
+    build_ivf_index(spark.read.parquet(corpus), path, n_cells=2, iters=2)
+    c1 = centroids()
+    write(5.0)
+    # a later rewrite, even on a filesystem with coarse mtimes
+    st = os.stat(corpus)
+    os.utime(corpus, ns=(st.st_atime_ns, st.st_mtime_ns + 2_000_000_000))
+    build_ivf_index(spark.read.parquet(corpus), path, n_cells=2, iters=2)
+    assert c1 != centroids()
+
+
 def _patch_pdt(msg: bytes, new_pdt: int) -> bytes:
     """Byte-patch a message's section-4 product-definition template
     number (no checksums in GRIB2, so the frame stays valid)."""
