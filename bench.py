@@ -1,12 +1,28 @@
-"""Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": N}.
+"""Query-sweep benchmark: times the driver-facing queries at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and prints ONE JSON
+line on stdout:
 
-Execution is measured with the `noop` sink — full plan execution on the
-cluster side, no driver-side materialization cost in the number. Each
-query gets one untimed warm-up-free run; the flagship runs first once to
-absorb JVM/codegen warmup so per-query numbers reflect steady state.
+    {"metric": "total_query_sec", "value": total_sec, "unit": "sec",
+     "queries": {name: sec}, "passes": PASSES, "cpus": C,
+     "memo": {"hit": h, "miss": m, "bypass": b}, "sf": S, "n_queries": N}
+
+A run is `build()` plus a `noop`-sink write: plan construction and full
+execution are inside the timer, with no driver-side materialization.
+The flagship and one tiny `mapInPandas` run first, untimed, to absorb
+JVM/codegen warm-up and the Python worker spawn. Then PASSES full
+passes run in pass-major order (every query once, then every query
+again), so one query's samples land minutes apart and a host burst
+rarely covers all of them. `value` is the sum over queries of each
+query's minimum.
+
+The timed surface is the driver registry minus PROMOTED_SLOTS (each
+promoted row's plan is built and timed inside its composite), or the
+comma-separated names in SPARK_GRAFT_BENCH_ONLY. `cpus` is the live
+session's parallelism (`local[N]`, sized in session.py) and `memo` the
+session-memo counters (`caching.memo_counts()`) over the timed passes.
+The bench writes no file.
+
+Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench.py
 """
 
 from __future__ import annotations
@@ -16,201 +32,72 @@ import os
 import re
 import sys
 import time
+from collections import Counter
+from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from mints_wind_data_ingestion_spark.caching import memo_counts  # noqa: E402
 from mints_wind_data_ingestion_spark.plans import PROMOTED_SLOTS  # noqa: E402
 from mints_wind_data_ingestion_spark.plans import REGISTRY  # noqa: E402
 from mints_wind_data_ingestion_spark.plans import driver_registry  # noqa: E402
 from mints_wind_data_ingestion_spark.plans import enable_plan_cache  # noqa: E402
 from mints_wind_data_ingestion_spark.session import get_spark  # noqa: E402
 
+#: full passes over the surface; each query's reading is its minimum
+PASSES = 3
 
-def load_history(hist_path: str) -> dict[str, float]:
-    """BENCH_HISTORY.json's per-query minimums — this harness's own
-    rolling ledger, updated at the end of every run."""
-    try:
-        with open(hist_path) as fh:
-            loaded = json.load(fh)
-        return {
-            k: float(v)
-            for k, v in (loaded.get("queries") or {}).items()
-            if isinstance(v, (int, float))
-        }
-    except (OSError, ValueError, AttributeError, TypeError):
-        return {}  # malformed/absent ledger: rebuild from artifacts
+# the driver records only the LAST ~2000 chars of bench stdout, so the
+# headline must fit inside that window or it loses its head
+_TAIL_CAPTURE_BUDGET = 1900
 
 
-def load_prior_min(here: str, hist: dict[str, float]) -> dict[str, float]:
-    """Cross-round per-query minimums (VERDICT r4 #8): burst-retry
-    targets that separate host drift from regression.
-
-    BENCH_HISTORY.json is AUTHORITATIVE for every name it carries
-    (VERDICT r6 #1): the ledger can be deliberately RESEEDED upward
-    when a measured plan change retires an old minimum (BASELINE.md
-    "Ledger resets, not rolls"), and min-merging the stale BENCH_r*
-    artifacts back in would silently re-pollute the target — making
-    the 1.35× retry trigger fire forever on an unreachable number.
-    Recorded artifacts only seed names the ledger doesn't know yet
-    (just-added/renamed queries)."""
-    prior_min = dict(hist)
-    for fn in sorted(os.listdir(here)):
-        if not (fn.startswith("BENCH_r") and fn.endswith(".json")):
-            continue
-        try:
-            with open(os.path.join(here, fn)) as fh:
-                art = json.load(fh)
-            qs = (art.get("parsed") or {}).get("queries") or art.get("queries") or {}
-            for k, v in qs.items():
-                if k not in hist and isinstance(v, (int, float)):
-                    prior_min[k] = min(prior_min.get(k, float("inf")), float(v))
-        except (OSError, ValueError, AttributeError, TypeError):
-            continue  # malformed artifact: skip, never abort the bench
-    return prior_min
+def sweep(names: list[str], run_once: Callable[[str], float]) -> dict[str, float]:
+    """Per-query minimum of `run_once` over PASSES pass-major passes."""
+    best: dict[str, float] = {}
+    for _ in range(PASSES):
+        for name in names:
+            dt = run_once(name)
+            best[name] = min(best.get(name, dt), dt)
+    return {name: round(best[name], 4) for name in names}
 
 
-def roll_ledger(
-    hist_path: str, hist: dict[str, float], timings: dict[str, float],
-    split: dict | None = None,
-) -> None:
-    """Merge this run's minimums INTO the ledger (a
-    SPARK_GRAFT_BENCH_ONLY subset run must not drop other queries'
-    history). mins are taken against the LEDGER value only — never the
-    recorded artifacts — so a reseed sticks; `plan_cache` marks the
-    measurement regime the entries were taken under (ADVICE r6:
-    cross-round comparisons must stay like-for-like).
-
-    `split`: the most recent SUCCESSFUL plan-cache-off sweep (VERDICT
-    r14 #2) — persisted so that a later run whose own split is priced
-    out by a degraded window still ships an artifact carrying the
-    latest recorded build-vs-execution split (clearly marked as
-    ledger-carried, never as the current run's). None preserves
-    whatever split the ledger already holds."""
-    merged = dict(hist)
-    for k, v in timings.items():
-        merged[k] = round(min(v, hist.get(k, v)), 4)
-    out = {"queries": merged, "plan_cache": True}
-    prev_split = load_ledger_split(hist_path)
-    keep = split if split is not None else prev_split
-    if keep is not None:
-        out["plan_cache_off_last"] = keep
-    with open(hist_path, "w") as fh:
-        json.dump(out, fh, indent=1, sort_keys=True)
+def memo_totals() -> Counter:
+    """hit/miss/bypass counters of every session-memo kind, summed."""
+    total: Counter = Counter()
+    for counts in memo_counts().values():
+        total.update(counts)
+    return total
 
 
-def load_ledger_split(hist_path: str) -> dict | None:
-    """The ledger-persisted most-recent plan-cache-off split, or None."""
-    try:
-        with open(hist_path) as fh:
-            loaded = json.load(fh)
-        sp = loaded.get("plan_cache_off_last")
-        if (
-            isinstance(sp, dict)
-            and isinstance(sp.get("total"), (int, float))
-        ):
-            return sp
-    except (OSError, ValueError, AttributeError, TypeError):
-        pass
-    return None
-
-
-def window_factors(
-    timings: dict[str, float], prior_min: dict[str, float]
-) -> dict[str, float]:
-    """Per-query window factor: this sweep's reading over the ledger's
-    cross-round minimum (VERDICT r13 #1). A calm window reads ~1.0-1.25
-    uniformly; a degraded host window elevates untouched suites in
-    lockstep (median >1.5 observed in the r13 collapse). Emitting the
-    table makes a degraded recording machine-auditable from the
-    artifact alone — no cross-referencing sweep series in BASELINE.md."""
-    return {
-        n: round(timings[n] / prior_min[n], 3)
-        for n in timings
-        if n in prior_min and prior_min[n] > 0
-    }
-
-
-def wf_median(factors: dict[str, float]) -> float | None:
-    vals = sorted(factors.values())
-    if not vals:
-        return None
-    mid = len(vals) // 2
-    med = vals[mid] if len(vals) % 2 else (vals[mid - 1] + vals[mid]) / 2
-    return round(med, 3)
-
-
-def worst_first(
-    names: list[str],
-    timings: dict[str, float],
-    prior_min: dict[str, float],
-) -> list[str]:
-    """Re-sweep order: descending window factor (observed / ledger
-    min), unledgered names first (their recorded min is most likely
-    burst-poisoned). Every recovery loop below iterates in this order
-    so that when the budget runs out MID-LOOP — the defining property
-    of a collapsed window — the budget went to the queries whose
-    recordings are most inflated. The r14 observation that forced
-    this: a 229 s first pass (ledger 44.8 s) exhausted the budget
-    before ANY recovery machinery ran, leaving x_dsir_sample recorded
-    at 34.5× its ledger min when a single later re-run read 1.4×;
-    in-name-order loops would spend the first 40 s of salvage budget
-    re-timing a3_o1_suite..f_filter at wf≈1.2."""
-    return sorted(
-        names,
-        key=lambda n: -(
-            timings[n] / prior_min[n] if prior_min.get(n) else float("inf")
-        ),
+def headline_line(result: dict) -> str:
+    """The one stdout line: compact JSON, per-query seconds to 3 dp. A
+    surface too wide for the tail-capture window drops its per-query
+    dict rather than ship a line whose head is cut off."""
+    headline = dict(
+        result,
+        queries={k: round(v, 3) for k, v in sorted(result["queries"].items())},
+        n_queries=len(result["queries"]),
     )
-
-
-def read_load1() -> float | None:
-    try:
-        with open("/proc/loadavg") as fh:
-            return float(fh.read().split()[0])
-    except (OSError, ValueError):
-        return None
-
-
-def settle_host(max_wait: float, target_load1: float = 3.0) -> float:
-    """Load-coupled drift defense (BASELINE.md r12, measured): a sweep
-    that starts right after sustained 32-core work inherits a ~10%
-    hot-machine penalty — identical code read 47.2 s after a 9-minute
-    idle gap vs 51.8-53.1 s when started under hours of continuous
-    load. The recorded artifact should measure the engine, not the
-    scheduler's digestion of whatever ran before it, so wait (bounded)
-    for the 1-minute load average to decay below `target_load1` before
-    the first timed pass. This never changes WHAT is measured — only
-    when timing starts — and the wait actually taken is recorded in
-    the metric line (`settle_sec`). Disable or retune via
-    SPARK_GRAFT_BENCH_SETTLE_SEC (0 = off)."""
-    t0 = time.time()
-    try:
-        while time.time() - t0 < max_wait:
-            with open("/proc/loadavg") as fh:
-                load1 = float(fh.read().split()[0])
-            if load1 <= target_load1:
-                break
-            time.sleep(10)
-    except (OSError, ValueError):
-        pass  # no /proc (non-Linux): skip, never abort the bench
-    return round(time.time() - t0, 1)
+    line = json.dumps(headline, separators=(",", ":"))
+    if len(line) > _TAIL_CAPTURE_BUDGET:
+        headline["queries"] = {}
+        line = json.dumps(headline, separators=(",", ":"))
+    return line
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
-
-    settle_budget = float(
-        os.environ.get("SPARK_GRAFT_BENCH_SETTLE_SEC", "240")
-    )
-    settle_sec = settle_host(settle_budget) if settle_budget > 0 else 0.0
 
     spark = get_spark("windflow-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # JVM/codegen warmup (not timed) + one tiny Arrow round-trip so the
-    # first pandas-UDF query doesn't pay Python-worker pool spawn
+    # untimed warm-up: JVM/codegen on the flagship, and one tiny Arrow
+    # round-trip so the first pandas-UDF query doesn't pay the Python
+    # worker spawn
     REGISTRY["flagship_latest_by_bucket"].build(spark, sf_dir).write.format(
         "noop"
     ).mode("overwrite").save()
@@ -218,46 +105,20 @@ def main() -> None:
         lambda it: it, schema="id long"
     ).write.format("noop").mode("overwrite").save()
 
-    # prepared-plan reuse (plans.registry.enable_plan_cache): this
-    # bench re-runs each query several times in one session, so plan
-    # CONSTRUCTION (py4j-bound driver latency, up to ~1 s for the
-    # widest suites) is paid once and execution is measured warm —
-    # the steady-state behavior of a serving engine. Execution itself
-    # is never cached, and builds that do real cluster work (iterative
-    # CC, BPE training, IVF fitting) self-exclude via job detection,
-    # so their per-run cost stays fully inside the timer. Enabled
-    # AFTER the warmup: the warmup's first build runs the one-time
-    # table-load job, which the job detector would otherwise read as
-    # an eager build and permanently exclude that query
-    # (tests/test_plan_cache.py pins both behaviors).
+    # prepared-plan reuse (plans.registry.enable_plan_cache), enabled
+    # AFTER the warm-up: the warm-up's first build runs the one-time
+    # table-load job, which the cache's eager-build detector would
+    # otherwise read as an eager build of the flagship
     enable_plan_cache()
 
-    # bench the driver-facing surface (composites subsume their folded
-    # components — timing both would double-count the same work). The
-    # same subsumption applies to PROMOTED slots (VERDICT r8 #3): a
-    # promotion is a correctness row whose plan a composite already
-    # builds and times, so the headline sweep skips them — the engine
-    # is measured once per distinct plan. An explicit BENCH_ONLY list
-    # still times whatever it names (promotions included), for A/Bs.
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     names = (
         sorted(only.split(",")) if only
         else sorted(n for n in driver_registry() if n not in PROMOTED_SLOTS)
     )
 
-    # cross-round per-query minimums: BENCH_HISTORY.json authoritative,
-    # BENCH_r* artifacts seed only ledger-unknown names (see
-    # load_prior_min — VERDICT r6 #1)
-    here = os.path.dirname(os.path.abspath(__file__))
-    hist_path = os.path.join(here, "BENCH_HISTORY.json")
-    hist = load_history(hist_path)
-    prior_min = load_prior_min(here, hist)
-
     def run_once(name: str) -> float:
-        # build() INSIDE the timer: for most queries it is millisecond
-        # plan construction, but iterative operators (connected
-        # components' eager rounds) do real cluster work during build —
-        # timing only the final noop write would hide it
+        # build() INSIDE the timer: iterative operators (connected
+        # components' eager rounds) do real cluster work while building
         t0 = time.perf_counter()
         REGISTRY[name].build(spark, sf_dir).write.format("noop").mode(
             "overwrite"
@@ -268,364 +129,21 @@ def main() -> None:
         spark.catalog.clearCache()
         return dt
 
-    # best-of-N absorbs Janino codegen + JIT warmup AND host-side CPU
-    # bursts (±50%, 30 s+ windows, observed): the recorded value is the
-    # SUM OF MINS, so extra runs cost wall-clock but never inflate the
-    # metric. Retry depth is driven by the historical minimum when one
-    # exists — a best-of-pass still 1.35× above the cross-round best is
-    # exactly the burst signature — and by absolute size otherwise.
-    # wall-clock budget: under SUSTAINED host degradation every query
-    # looks burst-poisoned and unbounded retrying would triple the
-    # sweep; cap total bench wall time so noise defense degrades
-    # gracefully instead of hanging the harness
-    # 480 s: the r6 rebalance spends budget on spaced full passes, and
-    # 360 s exhausted after two of them under sustained degradation —
-    # the extra two minutes buy 2-3 more differently-windowed passes
-    # while staying well inside the driver's per-step patience
-    budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "480"))
-    sweep_t0 = time.perf_counter()
-
-    def elapsed() -> float:
-        return time.perf_counter() - sweep_t0
-
-    # ADJACENT retries are weak noise defense: a burst window spans
-    # minutes, i.e. usually the whole per-query retry block. Cap them
-    # at one extra run and spend the freed budget on additional FULL
-    # passes below (spaced minutes apart, so each query samples a
-    # different host window — the allocation that actually converges
-    # under sustained degradation; observed r6: a degraded window ate
-    # 5×27 adjacent retries and still left every suite ~1.4× elevated).
-    timings: dict[str, float] = {}
-    load1_start = read_load1()
-    for name in names:
-        runs = [run_once(name), run_once(name)]
-        target = prior_min.get(name)
-        best = min(runs)
-        if elapsed() < 0.4 * budget and (
-            (target is not None and best > max(1.35 * target, target + 0.15))
-            or (target is None and best > 0.5)
-        ):
-            runs.append(run_once(name))
-        timings[name] = round(min(runs), 4)
-
-    # budget scaled to the OBSERVED first-pass cost (VERDICT r13 #1):
-    # the fixed 480 s was exhausted by two adjacent passes when a
-    # degraded window priced a single pass at ~126 s, so the recovery
-    # loop and the plan-cache split — the machinery that exists for
-    # exactly that window — never ran. Headroom math: one more full
-    # sweep (1×) + the uncached split (~2× guard) + two recovery
-    # passes (2×) ≈ 5× the per-pass cost on top of what's spent.
-    # Capped (default 900 s, SPARK_GRAFT_BENCH_BUDGET_MAX_SEC) to stay
-    # inside the driver's per-step patience; a calm window never
-    # scales (elapsed + 5×sum < 480 for a healthy ~45 s pass).
-    budget_cap = float(
-        os.environ.get("SPARK_GRAFT_BENCH_BUDGET_MAX_SEC", "900")
-    )
-    budget = max(
-        budget,
-        min(budget_cap, elapsed() + 5.0 * sum(timings.values())),
-    )
-
-    # plan_cache=off A/B sweep (VERDICT r6 #3 / r14 #2): one full
-    # uncached pass pins the build-vs-execution split per round. The
-    # split is the audit guard for the plan-cache/memoization regime,
-    # so it must actually RECORD: r13 and r14 both shipped artifacts
-    # with the split null because it ran last and degraded windows
-    # priced it out. It now runs EARLY (right after the first pass)
-    # whenever that pass was calm — a calm window is exactly when the
-    # split is cheap AND meaningful — and falls back to the old late
-    # slot otherwise. Per-query predictive budget gate (ADVICE r14):
-    # stop BEFORE an over-budget run, using the observed cached time
-    # scaled by the ~1.7× uncached/cached ratio (BASELINE.md); a
-    # partial sweep is discarded — a partial sum would read as a
-    # (wrong) full-surface split.
-    def run_split() -> dict[str, float] | None:
-        if elapsed() + 1.7 * sum(timings.values()) >= budget:
-            return None
-        enable_plan_cache(False)
-        nc: dict[str, float] = {}
-        try:
-            for name in names:
-                if elapsed() + 1.7 * timings[name] > budget:
-                    break
-                nc[name] = round(run_once(name), 4)
-        except Exception:  # noqa: BLE001 — the A/B is advisory
-            pass
-        finally:
-            enable_plan_cache(True)
-        return nc if len(nc) == len(names) else None
-
-    # calm gate default 1.6, not the 1.3 first proposed: a 32-core
-    # first pass HEATS THE HOST over its own duration, so even sweeps
-    # started at load1 < 0.1 read wf_first ≈ 1.5 on this machine
-    # (measured twice this round) — at 1.3 the early slot never fires
-    # and the split keeps getting priced out late, which is exactly
-    # the two-round failure this exists to end. True collapses read
-    # 2.3-2.5 (r13/r14) and still skip to the late slot.
-    first_pass_wf = wf_median(window_factors(timings, prior_min))
-    split_calm_at = float(
-        os.environ.get("SPARK_GRAFT_BENCH_SPLIT_CALM_FACTOR", "1.6")
-    )
-    nocache: dict[str, float] | None = None
-    if first_pass_wf is None or first_pass_wf <= split_calm_at:
-        nocache = run_split()
-
-    # degraded-first-pass early retry (VERDICT r13 #1): when the first
-    # pass's MEDIAN window factor exceeds the degraded threshold, the
-    # whole pass — including every adjacent retry — sampled a collapsed
-    # host window (r13: median 2.51×, untouched pure-codegen suites at
-    # 1.6-1.9× in lockstep). Load average alone does not catch this:
-    # the r13 close measured loadavg decayed while the hot-machine
-    # penalty persisted. So: one fixed cool-down + a stricter load
-    # settle, then a full re-sweep min-merged into the timings. The
-    # metric is sum-of-mins, so this only sheds noise.
-    degraded_at = float(
-        os.environ.get("SPARK_GRAFT_BENCH_DEGRADED_FACTOR", "1.5")
-    )
-    resettle_sec = 0.0
-    if (
-        first_pass_wf is not None
-        and first_pass_wf > degraded_at
-        # entry only needs room for the cool-down plus SOME re-runs
-        # (worst-first order + the per-query budget check spend
-        # whatever is left where it sheds the most inflation); the
-        # old full-sweep entry gate priced recovery out of exactly
-        # the collapsed windows it exists for (r13; r14: a 229 s
-        # first pass recorded with recovery_passes 0). Priced at the
-        # true worst-case cool-down cost — sleep 60 + settle up to
-        # 120 — not the 90 s the r14 branch assumed (ADVICE r14).
-        and elapsed() + 180 + min(timings.values()) < budget
-    ):
-        t_rs = time.time()
-        time.sleep(60)  # cooling recovers ~10% even after load decays
-        settle_host(120, target_load1=2.0)
-        resettle_sec = round(time.time() - t_rs, 1)
-        for name in worst_first(names, timings, prior_min):
-            # predictive per-query gate (ADVICE r14): skip a re-run the
-            # remaining budget cannot cover and CONTINUE to cheaper
-            # names, instead of discovering the overshoot after paying
-            # for it — the old break-after-over-budget pattern overran
-            # the cap by up to one worst-query runtime
-            if elapsed() + timings[name] > budget:
-                continue
-            timings[name] = round(min(timings[name], run_once(name)), 4)
-
-    # second full sweep, unconditional (r5 verdict #5): a query's
-    # initial runs are ADJACENT in time, so one multi-minute burst
-    # poisons every retry of the queries that land inside it. A full
-    # second pass minutes later samples a different host window for
-    # every query; min-over-two-sweeps is the cheapest estimator that
-    # defeats window-correlated noise (the r5 recording's 6.7 s
-    # recorded-vs-ledger gap was exactly this failure mode).
-    if elapsed() + min(timings.values()) < budget:
-        for name in worst_first(names, timings, prior_min):
-            if elapsed() + timings[name] > budget:
-                continue
-            timings[name] = round(min(timings[name], run_once(name)), 4)
-
-    # burst recovery: host-side CPU bursts last minutes and can poison
-    # EVERY per-query retry inside one pass (observed: an 86 s sweep
-    # bracketed by 46 s and 42 s ones, identical code). While the pass
-    # total looks burst-inflated and budget remains, run up to FIVE
-    # more full passes keeping per-query minimums — the metric is
-    # defined as sum-of-mins, so this only sheds noise, never hides
-    # real cost.
-    # Trigger: 12% over the ledger's cross-round capability for these
-    # names (a calm host lands within a few percent of it) — the fixed
-    # 48s→41s constants of earlier rounds drifted stale every time the
-    # surface or the code got faster. A name with no ledger history yet
-    # (just added/renamed) contributes its observed time capped at 2 s
-    # — taking it verbatim would make the trigger inert for exactly the
-    # queries most likely to record a burst-poisoned first min. The
-    # absolute floor keeps a tiny BENCH_ONLY subset from recovering
-    # over ±0.2 s jitter.
-    covered = [n for n in names if n in prior_min]
-    trigger = max(
-        2.0,
-        1.12 * sum(prior_min[n] for n in covered)
-        + sum(min(timings[n], 2.0) for n in names if n not in prior_min),
-    )
-
-    # late split slot: when the first pass was degraded the early call
-    # above was skipped (its numbers would be window garbage anyway);
-    # retry here — after the resettle and second sweep the window may
-    # have recovered — and still BEFORE the burst-recovery passes
-    # (VERDICT r10 #5), which can legitimately eat the rest of the
-    # budget.
-    if nocache is None:
-        nocache = run_split()
-
-    # at least one recovery pass whenever budget remains (VERDICT r14
-    # #1: recorded artifacts shipped recovery_passes 0 two rounds
-    # running): the metric is sum-of-mins, so an extra worst-first
-    # pass only ever sheds noise, and the per-query predictive gate
-    # bounds its cost. Beyond the first pass, entry still requires the
-    # 12%-over-ledger burst signature.
-    recovery = 0
-    while (
-        (sum(timings.values()) > trigger or recovery == 0)
-        and recovery < 5
-        and elapsed() + min(timings.values()) < budget
-    ):
-        recovery += 1
-        for name in worst_first(names, timings, prior_min):
-            if elapsed() + timings[name] > budget:
-                continue
-            timings[name] = round(min(timings[name], run_once(name)), 4)
-
-    total = round(sum(timings.values()), 4)
-    # the split that rolls into the ledger: only a full-surface sf0.1
-    # success (a subset split is not a full-surface total). The ledger
-    # fallback below is what keeps the artifact carrying a split even
-    # when THIS run's window priced the uncached sweep out.
-    split_rec = None
-    if nocache is not None and not only:
-        split_rec = {
-            "total": round(sum(nocache.values()), 4),
-            "recorded_unix": int(time.time()),
-            "wf_median": wf_median(window_factors(timings, prior_min)),
-            "queries": nocache,
-        }
-    ledger_split = load_ledger_split(hist_path) if nocache is None else None
-    # roll the min ledger forward so the NEXT run (same session's
-    # re-bench or the driver's recorded pass) has burst-retry targets
-    # for every current query name. sf-gated: the ledger is an sf0.1
-    # artifact — a dev-time sf0.001 run would roll in minimums an order
-    # of magnitude below anything an sf0.1 sweep can reach, making the
-    # 1.35× burst-retry trigger fire forever on unreachable targets.
-    # core-gated too (r15): the ledger's regime is the machine's full
-    # core count — a reduced-core leg (the driver's scaling run, the
-    # interleaved scaling script) must not reseed minimums for the
-    # suites that run FASTER on fewer cores at sf0.1 (the r14 scaling
-    # table showed 29/41 such ratios), or the wf audit starts comparing
-    # cross-regime.
-    try:
-        run_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (
-            os.cpu_count() or 0
-        )
-    except ValueError:
-        run_cpus = os.cpu_count() or 0
-    if sf == 0.1 and run_cpus == (os.cpu_count() or 0):
-        try:
-            roll_ledger(hist_path, hist, timings, split=split_rec)
-        except Exception:  # noqa: BLE001 — the ledger must never eat the metric line
-            pass
-
-    # final per-query window-factor table (VERDICT r13 #1): the
-    # artifact carries its own audit — a recording whose wf_median
-    # exceeds ~1.25 on suites untouched since their mins is a host
-    # window, not a regression, and the table proves it in place.
-    wfs = window_factors(timings, prior_min)
-    result = {
+    memo_before = memo_totals()
+    timings = sweep(names, run_once)
+    memo_after = memo_totals()
+    print(headline_line({
         "metric": "total_query_sec",
-        # staleness marker (r8 review): BENCH_LAST.json is only
-        # rewritten by full-surface sf0.1 sweeps, so a consumer after
-        # a gated (subset/toy) run would otherwise read the PRIOR
-        # sweep's numbers with nothing marking them as old
-        "recorded_unix": int(time.time()),
-        "value": total,
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
-        "window_factors": wfs,
-        "wf_median": wf_median(wfs),
-        "wf_max": max(wfs.values()) if wfs else None,
-        "wf_first_pass_median": first_pass_wf,
-        "resettle_sec": resettle_sec,
-        "budget_sec": round(budget, 1),
-        "load1_start": load1_start,
-        "load1_end": read_load1(),
-        "prior_min": {
-            k: round(v, 4) for k, v in sorted(prior_min.items())
-            if k in timings
+        "passes": PASSES,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "memo": {
+            k: memo_after[k] - memo_before[k] for k in ("hit", "miss", "bypass")
         },
-        "recovery_passes": recovery,
-        "settle_sec": settle_sec,
-        "plan_cache": True,
-        "queries_plan_cache_off": nocache,
-        "total_plan_cache_off": (
-            round(sum(nocache.values()), 4) if nocache else None
-        ),
-        # ledger-carried fallback (VERDICT r14 #2): when THIS run's
-        # split was priced out, the artifact still carries the most
-        # recent successful one — clearly marked with its own
-        # timestamp, never substituted into total_plan_cache_off
-        "total_plan_cache_off_ledger": (
-            ledger_split.get("total") if ledger_split else None
-        ),
-        "plan_cache_off_ledger_unix": (
-            ledger_split.get("recorded_unix") if ledger_split else None
-        ),
-        # promoted correctness slots excluded from the timed sweep —
-        # each one's plan is built and timed inside the composite named
-        # here (VERDICT r8 #3: re-timing them double-counted ~5-8 s)
-        "promotions": dict(PROMOTED_SLOTS) if not only else None,
         "sf": sf,
-    }
-    # standalone artifact (VERDICT r7 #1): the stdout line alone proved
-    # fragile — BENCH_r07.json recorded "parsed": null after the
-    # (38-query-wide) line outgrew the driver's tail-capture window
-    # behind Spark console-progress output. Console progress is now off
-    # (session.py) AND the full result object lands in its own file, so
-    # the recorded numbers never depend on stdout capture mechanics.
-    # gated like the ledger roll: a dev-time toy-scale run (sf != 0.1)
-    # or a SPARK_GRAFT_BENCH_ONLY subset must not clobber the committed
-    # full-surface sf0.1 artifact with partial/toy numbers.
-    if sf == 0.1 and not only:
-        try:
-            with open(os.path.join(here, "BENCH_LAST.json"), "w") as fh:
-                json.dump(result, fh, indent=1, sort_keys=True)
-        except Exception:  # noqa: BLE001 — the metric line must still print
-            pass
-    print(headline_line(result))
-
-
-# the driver records only the LAST ~2000 chars of bench stdout;
-# BENCH_r07/r08 both landed "parsed": null because the full result
-# line (queries + prior_min + plan-cache-off dicts, 3×47 entries)
-# outgrew that window and lost its head. The stdout HEADLINE therefore
-# carries the contract keys (metric/value/unit/queries/sf) plus the
-# split totals ONLY — per-query 3dp, compact separators — and drops
-# the auxiliary dicts, which live in BENCH_LAST.json. If the surface
-# ever grows the line past the window again, the queries dict is
-# dropped too rather than shipping an unparseable line.
-_TAIL_CAPTURE_BUDGET = 1900
-
-
-def headline_line(result: dict) -> str:
-    headline = {
-        "metric": result["metric"],
-        "value": result["value"],
-        "unit": result["unit"],
-        "queries": {
-            k: round(v, 3) for k, v in sorted(result["queries"].items())
-        },
-        "n_queries": len(result["queries"]),
-        "recovery_passes": result["recovery_passes"],
-        "settle_sec": result.get("settle_sec", 0.0),
-        # window audit scalars (full per-query table in BENCH_LAST.json)
-        "wf_median": result.get("wf_median"),
-        "wf_max": result.get("wf_max"),
-        "wf_first_pass_median": result.get("wf_first_pass_median"),
-        "resettle_sec": result.get("resettle_sec", 0.0),
-        "load1_start": result.get("load1_start"),
-        "load1_end": result.get("load1_end"),
-        "plan_cache": result["plan_cache"],
-        "total_plan_cache_off": result["total_plan_cache_off"],
-        "total_plan_cache_off_ledger": result.get(
-            "total_plan_cache_off_ledger"
-        ),
-        "plan_cache_off_ledger_unix": result.get(
-            "plan_cache_off_ledger_unix"
-        ),
-        "n_promoted_excluded": len(result.get("promotions") or {}),
-        "sf": result["sf"],
-    }
-    line = json.dumps(headline, separators=(",", ":"))
-    if len(line) > _TAIL_CAPTURE_BUDGET:
-        headline["queries"] = {}
-        headline["queries_in"] = "BENCH_LAST.json"
-        line = json.dumps(headline, separators=(",", ":"))
-    return line
+    }))
 
 
 if __name__ == "__main__":

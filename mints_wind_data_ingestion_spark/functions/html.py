@@ -90,12 +90,24 @@ class _Extractor(HTMLParser):
             self.parts.append(data)
 
 
+def _feed(parser: HTMLParser, html: str) -> None:
+    """Feed and close `parser`, keeping what it parsed before a fault.
+    CPython's html.parser raises AssertionError on a malformed marked
+    section (`<!['`, `<![x[`), the only exception type fuzzed str input
+    has drawn from it. The rest of the document is lost and what came
+    before is kept (extraction is lossy-tolerant)."""
+    try:
+        parser.feed(html)
+        parser.close()
+    except AssertionError:
+        pass
+
+
 def html_to_text(html: str) -> str:
     """Extract readable text: dropped subtrees, block newlines,
     verbatim `<pre>`, collapsed whitespace elsewhere."""
     ex = _Extractor()
-    ex.feed(html)
-    ex.close()
+    _feed(ex, html)
     out: list[str] = []
     pending_space = False
     pending_break = 0
@@ -347,11 +359,7 @@ def extract_links(html: str, page_url: str | None = None) -> list[str]:
     from urllib.parse import urljoin
 
     ex = _LinkExtractor()
-    try:
-        ex.feed(html)
-        ex.close()
-    except Exception:  # html.parser is resilient; belt-and-braces
-        pass
+    _feed(ex, html)
     root = ex.base or page_url
     if root and page_url:
         root = urljoin(page_url, root)  # relative <base> resolves too

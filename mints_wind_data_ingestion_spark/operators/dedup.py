@@ -935,8 +935,8 @@ def minhash_index(
     corpus text again. Band parameters are part of the artifact's
     identity — a batch checked with different (num_hashes, bands,
     rows_per_band) than the stored index produces garbage buckets, so
-    persist them alongside (scripts/scaling_incremental.py shows the
-    layout)."""
+    persist them alongside (e.g. `<index>/posting`, `<index>/buckets`
+    and a small params file next to them)."""
     assert bands * rows_per_band <= num_hashes
     return _minhash_band_buckets(
         docs, id_col, shingle_col, num_hashes, bands, rows_per_band

@@ -1,133 +1,46 @@
-"""Bench ledger semantics (bench.load_prior_min / roll_ledger).
-
-VERDICT r6 #1: the old prior_min min-merged over ALL historical
-BENCH_r*.json artifacts, so a deliberate ledger RESEED (BASELINE.md
-"Ledger resets, not rolls" — a plan change retires an old minimum)
-was re-polluted on every run and the 1.35× burst-retry trigger fired
-forever on an unreachable target. These tests pin the fixed
-authority order: BENCH_HISTORY.json wins for names it carries;
-recorded artifacts only seed ledger-unknown names; the end-of-run
-roll mins against the ledger only, never the artifacts."""
+"""bench.py, the query-sweep benchmark: its estimator, its one-line
+stdout contract, its timed surface, and the guarantee that a run — at
+any core count — writes nothing into the checkout (there is no ledger
+for one regime's numbers to leak into)."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import json
 import os
+import subprocess
+import sys
 
-from bench import load_history, load_prior_min, roll_ledger
+import pytest
 
-
-def _write(d, name, obj):
-    p = os.path.join(d, name)
-    with open(p, "w") as fh:
-        json.dump(obj, fh)
-    return p
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF01 = "/root/testdata/sf0.1"
 
 
-def test_history_is_authoritative_over_artifacts(tmp_path):
-    """A reseeded (raised) ledger value sticks even though an older
-    recorded artifact carries a lower min for the same name."""
-    d = str(tmp_path)
-    _write(d, "BENCH_r05.json", {"queries": {"q": 1.0, "only_art": 3.0}})
-    _write(d, "BENCH_r06.json", {"parsed": {"queries": {"q": 1.2}}})
-    hist_path = _write(d, "BENCH_HISTORY.json",
-                       {"queries": {"q": 2.0}, "plan_cache": True})
-    hist = load_history(hist_path)
-    pm = load_prior_min(d, hist)
-    assert pm["q"] == 2.0  # reseed sticks — artifacts ignored
-    assert pm["only_art"] == 3.0  # ledger-unknown name seeds from artifacts
+def test_sweep_is_pass_major_min_over_passes():
+    """Every query once per pass, passes in sequence (so one query's
+    samples are a full pass apart), and each reading is its minimum."""
+    from bench import PASSES, sweep
 
+    readings = {"a": [3.0, 1.0, 2.0], "b": [0.5, 0.7, 0.6], "c": [9.0, 9.0, 8.0]}
+    calls: list[str] = []
 
-def test_artifact_min_taken_across_rounds_for_new_names(tmp_path):
-    d = str(tmp_path)
-    _write(d, "BENCH_r01.json", {"queries": {"new_q": 5.0}})
-    _write(d, "BENCH_r02.json", {"queries": {"new_q": 4.0}})
-    pm = load_prior_min(d, {})
-    assert pm["new_q"] == 4.0
+    def run_once(name: str) -> float:
+        calls.append(name)
+        return readings[name][sum(c == name for c in calls) - 1]
 
-
-def test_malformed_artifacts_and_ledger_skipped(tmp_path):
-    d = str(tmp_path)
-    with open(os.path.join(d, "BENCH_r03.json"), "w") as fh:
-        fh.write("{not json")
-    _write(d, "BENCH_r04.json", {"queries": {"q": "fast"}})  # non-numeric
-    hist = load_history(os.path.join(d, "BENCH_HISTORY.json"))  # absent
-    assert hist == {}
-    assert load_prior_min(d, hist) == {}
-
-
-def test_roll_ledger_mins_against_ledger_only(tmp_path):
-    """The end-of-run roll must not re-min against artifact values:
-    a slower-than-reseed run leaves the reseed; a genuinely faster run
-    rolls it down; names outside this run's subset survive; the
-    plan_cache regime marker is recorded (ADVICE r6)."""
-    d = str(tmp_path)
-    hist_path = os.path.join(d, "BENCH_HISTORY.json")
-    hist = {"q": 2.0, "untouched": 1.5}
-    roll_ledger(hist_path, hist, {"q": 2.3})
-    saved = json.load(open(hist_path))
-    assert saved["queries"]["q"] == 2.0  # slower run: reseed holds
-    assert saved["queries"]["untouched"] == 1.5  # subset run keeps rest
-    assert saved["plan_cache"] is True
-    roll_ledger(hist_path, load_history(hist_path), {"q": 1.8})
-    assert json.load(open(hist_path))["queries"]["q"] == 1.8  # real gain rolls
-
-
-def test_roll_ledger_persists_and_preserves_split(tmp_path):
-    """VERDICT r14 #2: the most recent SUCCESSFUL plan-cache-off split
-    persists in the ledger; a later run without one preserves it, and
-    a newer success replaces it."""
-    from bench import load_ledger_split
-
-    d = str(tmp_path)
-    hist_path = os.path.join(d, "BENCH_HISTORY.json")
-    assert load_ledger_split(hist_path) is None  # absent file
-    sp = {"total": 80.5, "recorded_unix": 123, "wf_median": 1.1,
-          "queries": {"q": 80.5}}
-    roll_ledger(hist_path, {}, {"q": 2.0}, split=sp)
-    assert load_ledger_split(hist_path)["total"] == 80.5
-    # split=None (this run's split priced out): stored split survives,
-    # while query minimums still roll
-    roll_ledger(hist_path, load_history(hist_path), {"q": 1.8})
-    assert load_ledger_split(hist_path)["recorded_unix"] == 123
-    assert load_history(hist_path)["q"] == 1.8
-    # a newer success replaces it
-    roll_ledger(hist_path, load_history(hist_path), {"q": 1.9},
-                split={"total": 77.0, "recorded_unix": 456,
-                       "wf_median": 1.0, "queries": {"q": 77.0}})
-    assert load_ledger_split(hist_path)["total"] == 77.0
-    # malformed stored split reads as absent, never raises
-    _write(d, "BENCH_HISTORY.json",
-           {"queries": {"q": 1.0}, "plan_cache_off_last": {"total": "x"}})
-    assert load_ledger_split(hist_path) is None
-
-
-def test_headline_carries_ledger_split_fallback():
-    """When this run's split is null, the headline still carries the
-    ledger's most recent split under its own clearly-marked keys."""
-    from bench import headline_line
-
-    result = {
-        "metric": "total_query_sec", "value": 50.0, "unit": "sec",
-        "queries": {"q": 1.0}, "recovery_passes": 1, "plan_cache": True,
-        "total_plan_cache_off": None,
-        "total_plan_cache_off_ledger": 81.2,
-        "plan_cache_off_ledger_unix": 1755400000,
-        "sf": 0.1,
-    }
-    parsed = json.loads(headline_line(result))
-    assert parsed["total_plan_cache_off"] is None
-    assert parsed["total_plan_cache_off_ledger"] == 81.2
-    assert parsed["plan_cache_off_ledger_unix"] == 1755400000
+    assert PASSES == 3
+    assert sweep(["a", "b", "c"], run_once) == {"a": 1.0, "b": 0.5, "c": 8.0}
+    assert calls == ["a", "b", "c"] * PASSES
 
 
 def test_headline_line_fits_driver_tail_capture():
-    """VERDICT r8 #2: the driver records only the last ~2000 chars of
-    bench stdout; r7 AND r8 shipped lines that outgrew it (parsed:
-    null two rounds running). The headline must stay inside the budget
-    with the current surface, stay parseable, and degrade by dropping
-    the per-query dict rather than shipping a truncated head."""
-    from bench import _TAIL_CAPTURE_BUDGET, headline_line
+    """The driver records only the last ~2000 chars of bench stdout.
+    The headline must stay inside the budget with the current surface,
+    carry the contract keys, and degrade by dropping the per-query dict
+    rather than shipping a truncated head."""
+    from bench import PASSES, _TAIL_CAPTURE_BUDGET, headline_line
 
     from mints_wind_data_ingestion_spark.plans import (
         PROMOTED_SLOTS,
@@ -140,19 +53,17 @@ def test_headline_line_fits_driver_tail_capture():
         "value": 123.4567,
         "unit": "sec",
         "queries": {n: 1.2345 for n in names},
-        "recovery_passes": 2,
-        "plan_cache": True,
-        "total_plan_cache_off": 99.8877,
-        "total_plan_cache_off_ledger": 101.2345,
-        "plan_cache_off_ledger_unix": 1755400000,
-        "promotions": dict(PROMOTED_SLOTS),
+        "passes": PASSES,
+        "cpus": 32,
+        "memo": {"hit": 12345, "miss": 678, "bypass": 9},
         "sf": 0.1,
     }
     line = headline_line(result)
     assert len(line) <= _TAIL_CAPTURE_BUDGET
     parsed = json.loads(line)
     assert parsed["queries"] and parsed["n_queries"] == len(names)
-    assert parsed["total_plan_cache_off"] == 99.8877
+    for key in ("metric", "value", "unit", "sf", "cpus", "memo"):
+        assert parsed[key] == result[key]
 
     # pathological surface: the fallback drops queries, never truncates
     wide = dict(result)
@@ -161,52 +72,6 @@ def test_headline_line_fits_driver_tail_capture():
     line = headline_line(wide)
     assert len(line) <= _TAIL_CAPTURE_BUDGET
     assert json.loads(line)["queries"] == {}
-
-
-def test_window_factors_and_median():
-    """VERDICT r13 #1: the artifact must carry its own degraded-window
-    audit — per-query factor vs the ledger min, median/max scalars."""
-    from bench import wf_median, window_factors
-
-    pm = {"a": 1.0, "b": 2.0, "zero": 0.0}
-    t = {"a": 1.5, "b": 2.2, "zero": 5.0, "new_name": 3.0}
-    wfs = window_factors(t, pm)
-    # zero-ledger and ledger-unknown names are excluded, never divide
-    assert wfs == {"a": 1.5, "b": 1.1}
-    assert wf_median(wfs) == 1.3  # even count: mean of middle two
-    assert wf_median({"a": 1.0, "b": 2.0, "c": 9.0}) == 2.0
-    assert wf_median({}) is None
-
-
-def test_headline_carries_window_audit_scalars():
-    """The compact headline must include the wf audit scalars so a
-    degraded recording is machine-auditable from the driver-captured
-    stdout alone (the full table lives in BENCH_LAST.json)."""
-    from bench import _TAIL_CAPTURE_BUDGET, headline_line
-
-    result = {
-        "metric": "total_query_sec",
-        "value": 50.0,
-        "unit": "sec",
-        "queries": {"q": 1.0},
-        "recovery_passes": 0,
-        "plan_cache": True,
-        "total_plan_cache_off": None,
-        "sf": 0.1,
-        "wf_median": 1.21,
-        "wf_max": 1.9,
-        "wf_first_pass_median": 1.6,
-        "resettle_sec": 182.0,
-        "load1_start": 0.5,
-        "load1_end": 30.2,
-    }
-    line = headline_line(result)
-    assert len(line) <= _TAIL_CAPTURE_BUDGET
-    parsed = json.loads(line)
-    assert parsed["wf_median"] == 1.21
-    assert parsed["wf_first_pass_median"] == 1.6
-    assert parsed["resettle_sec"] == 182.0
-    assert parsed["load1_end"] == 30.2
 
 
 def test_promoted_slots_are_driver_rows_backed_by_driver_composites():
@@ -228,12 +93,57 @@ def test_promoted_slots_are_driver_rows_backed_by_driver_composites():
         )
 
 
-def test_worst_first_orders_by_window_factor():
-    import bench
+def test_bench_reads_two_env_knobs_and_one_scaling_script():
+    """bench.py is steered by the data dir and the query subset only,
+    and scripts/ holds one scaling script."""
+    with open(os.path.join(REPO, "bench.py")) as fh:
+        tree = ast.parse(fh.read())
+    reads, uses = [], 0
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr in ("environ", "getenv"):
+            uses += 1
+        if isinstance(node, ast.Call) and ast.unparse(node.func) in (
+            "os.environ.get", "os.getenv",
+        ):
+            reads.append(node.args[0].value)
+        if isinstance(node, ast.Subscript) and ast.unparse(node.value) == "os.environ":
+            reads.append(node.slice.value)
+    assert set(reads) == {"SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_ONLY"}
+    # every environ/getenv use is one of those literal-key reads
+    assert uses == len(reads)
+    scaling = glob.glob(os.path.join(REPO, "scripts", "scaling*.py"))
+    assert [os.path.basename(p) for p in scaling] == ["scaling.py"]
 
-    timings = {"a": 1.0, "b": 4.0, "c": 0.5, "new": 2.0}
-    prior = {"a": 1.0, "b": 1.0, "c": 1.0}  # wf: a=1, b=4, c=0.5
-    order = bench.worst_first(sorted(timings), timings, prior)
-    # unledgered names first (most likely burst-poisoned), then by
-    # descending observed/ledger factor
-    assert order == ["new", "b", "a", "c"]
+
+@pytest.mark.skipif(not os.path.isdir(SF01), reason="sf0.1 testdata absent")
+def test_reduced_core_bench_run_prints_contract_and_writes_nothing():
+    """A 2-core subset run at sf0.1 prints one parseable contract line
+    and leaves the checkout exactly as it found it."""
+
+    def status() -> str:
+        return subprocess.run(
+            ["git", "status", "--porcelain"], cwd=REPO,
+            capture_output=True, text=True, check=True,
+        ).stdout
+
+    before = status()
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR=SF01,
+        SPARK_GRAFT_BENCH_ONLY="flagship_latest_by_bucket",
+        SPARK_GRAFT_CPUS="2",
+    )
+    out = subprocess.run(
+        [sys.executable, os.path.join(REPO, "bench.py")], cwd=REPO,
+        capture_output=True, text=True, env=env, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    lines = out.stdout.strip().splitlines()
+    assert len(lines) == 1, out.stdout[-2000:]
+    parsed = json.loads(lines[0])
+    assert parsed["metric"] == "total_query_sec" and parsed["unit"] == "sec"
+    assert list(parsed["queries"]) == ["flagship_latest_by_bucket"]
+    assert abs(parsed["value"] - parsed["queries"]["flagship_latest_by_bucket"]) < 1e-3
+    assert parsed["sf"] == 0.1 and parsed["cpus"] == 2
+    assert set(parsed["memo"]) == {"hit", "miss", "bypass"}
+    assert status() == before

@@ -116,6 +116,29 @@ def test_response_record_extracts_html_through_scan():
     assert rows[0]["error"] is None and rows[0]["text"] is None
 
 
+def test_response_record_with_malformed_marked_section_scans():
+    """html.parser raises AssertionError on a malformed `<![` marked
+    section; the scan must still yield one non-error row with its
+    metadata and the text parsed before the fault (the lossy-tolerant
+    contract of sources/warc.py), not raise for the whole file."""
+    http = (
+        "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+        "<html><p>hi</p><!['x</html>"
+    )
+    rec = {
+        "target_uri": "https://example.org/marked",
+        "text": http,
+        "warc_type": "response",
+        "content_type": "application/http; msgtype=response",
+    }
+    rows = scan_warc_bytes("f.warc.gz", encode_wet([rec]))
+    assert len(rows) == 1
+    assert rows[0]["error"] is None
+    assert rows[0]["warc_type"] == "response"
+    assert rows[0]["target_uri"] == "https://example.org/marked"
+    assert rows[0]["text"] == "hi"
+
+
 def test_wet_documents_includes_response_records(spark, tmp_path):
     from mints_wind_data_ingestion_spark.sources.warc import (
         scan_wet_df,
@@ -151,6 +174,11 @@ def test_extraction_fuzz_never_raises():
         "<html><body><div><p>text &amp; <b>stuff</b></p>"
         "<pre>verbatim</pre><script>x<y</script></div></body></html>"
     )
+    # malformed `<![` marked sections: html.parser raises
+    # AssertionError on these, which extraction must absorb
+    pinned = ["<!['", "<![x[", base.replace("<pre>", "<![x[<pre>")]
+    for doc in pinned:
+        assert isinstance(html_to_text(doc), str)
     for _ in range(800):
         s = list(base)
         for _ in range(rng.randint(1, 6)):
@@ -354,6 +382,8 @@ def test_extract_links_rules():
     assert isinstance(
         extract_links("<a href='x" + "\x00<" * 20, "http://h/"), list
     )
+    # a malformed marked section keeps the links parsed before it
+    assert extract_links('<a href="a">1</a><![x[<a href="b">2</a>') == ["a"]
 
 
 def test_meta_charset_sniffing():
