@@ -18,7 +18,6 @@ __all__ = [
     "char_shingles",
     "shingle_docs_pandas",
     "punct_ratio",
-    "digit_ratio",
     "whitespace_ratio",
     "avg_word_len",
     "stopword_ratio",
@@ -87,12 +86,6 @@ def _ratio(matched_len: Column, total: Column) -> Column:
 def punct_ratio(text: Column | str) -> Column:
     col = F.col(text) if isinstance(text, str) else text
     kept = F.length(F.regexp_replace(col, r"[^\p{Punct}]", ""))
-    return _ratio(kept, F.length(col))
-
-
-def digit_ratio(text: Column | str) -> Column:
-    col = F.col(text) if isinstance(text, str) else text
-    kept = F.length(F.regexp_replace(col, r"[^0-9]", ""))
     return _ratio(kept, F.length(col))
 
 

@@ -24,7 +24,6 @@ __all__ = [
     "bucket_6h",
     "hour_delta",
     "fmt_recorded_time",
-    "retention_cutoff",
 ]
 
 
@@ -65,12 +64,3 @@ def fmt_recorded_time(ts: Column | str) -> Column:
     'YYYY-MM-DD HH:00:00+00' (C4, converter.py:67)."""
     col = F.col(ts) if isinstance(ts, str) else ts
     return F.concat(F.date_format(col, "yyyy-MM-dd HH:00:00"), F.lit("+00"))
-
-
-def retention_cutoff(anchor: Column, days: int = 7) -> Column:
-    """`anchor - INTERVAL N DAYS` (F5/C7, deleteOld.py:9).
-
-    The reference anchors on now(); for deterministic tests callers pass
-    an explicit anchor (e.g. max(ts) of the table).
-    """
-    return anchor - F.expr(f"INTERVAL {int(days)} DAYS")

@@ -64,7 +64,7 @@ def gaussian_cell_latlon(
     3.4 bit 0x40): True for scan −j (rows N→S, la1 = northernmost —
     scanMode 0, what NCEP emits), False for +j (rows S→N, la1 =
     southernmost); the decoder validates la1 against exactly this
-    (grib2codec._decode_message)."""
+    (grib2codec._decode_field)."""
     from ..sources.grib2codec import gaussian_latitudes
 
     ordered = gaussian_latitudes(n)

@@ -244,7 +244,7 @@ def train_linear_probe(
 def score_linear_probe(feats: DataFrame, model: dict) -> DataFrame:
     """(doc_id, y, margin_e6, pred): the probe's margin per document —
     w·[1, z] as one left-associated codegen expression (the
-    dot_explicit convention), quantized to e6; pred = margin ≥ 0.5
+    similarity._dot_sql convention), quantized to e6; pred = margin ≥ 0.5
     (the {0,1}-target midpoint)."""
     zs = [F.lit(1.0), *_z_exprs(model["mu"], model["sigma"])]
     w = model["w"]

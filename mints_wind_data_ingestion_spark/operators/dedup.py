@@ -36,7 +36,6 @@ from ..functions.text import char_shingles, word_shingles  # noqa: F401
 
 __all__ = [
     "exact_dedup",
-    "minhash_signature",
     "minhash_signatures",
     "lsh_candidate_pairs",
     "jaccard_similarity_join",
@@ -82,35 +81,6 @@ def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
     )
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 128) -> Column:
-    """MinHash signature (array<bigint> of length `num_hashes`) of a
-    shingle-set column — per-row expression form.
-
-    One `aggregate` pass over the shingle array; per shingle, the k
-    hash family is `xxhash64(i, shingle)` for i in 0..k-1, folded into
-    the running signature with element-wise `least`. Distinct-ness of
-    the input shingle set does not change the min, so callers may skip
-    `array_distinct`.
-
-    NOTE: allocates two k-element arrays per shingle — fine embedded in
-    a projection, but for bulk signature computation use
-    `minhash_signatures` (explode + hash-aggregate: one string hash per
-    shingle, k fixed-width hashes, map-side partial agg, no per-element
-    allocation — ~10× faster at corpus scale).
-    """
-    ks = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    init = F.array_repeat(F.lit(_LONG_MAX).cast("bigint"), num_hashes)
-    return F.aggregate(
-        shingles,
-        init,
-        lambda acc, s: F.zip_with(
-            acc,
-            F.transform(ks, lambda i: F.xxhash64(i, s)),
-            lambda a, b: F.least(a, b),
-        ),
-    )
-
-
 def minhash_signatures(
     docs: DataFrame,
     id_col: str,
@@ -124,9 +94,9 @@ def minhash_signatures(
     (`xxhash64(h, i)` — fixed-width input, nanoseconds each). The k
     `min` aggregates combine map-side, so the shuffle carries one
     partial signature per (partition, doc), never the shingles.
-    Equivalent quality to `minhash_signature` (independent uniform
-    family), different hash values — callers must not mix the two
-    within one index.
+    The family is independent and uniform; its hash values are this
+    plan's own, so an index must not mix signatures built any other
+    way.
     """
     posting = docs.select(
         F.col(id_col), F.explode(F.array_distinct(F.col(shingle_col))).alias("__s")

@@ -14,9 +14,9 @@ One call ≙ one cron tick:
 4. fetch the winner's body only (converter.py:172-177), decode through
    the WMO codec UDTF (sources.grib.decode_binary_df), enrich the
    observation bucket (converter.py:63-69);
-5. latest-wins merge into the wind table with the same crash-safe
-   temp-write + atomic-swap publish the streaming path uses
-   (streaming.pipeline._merge_publish_epoch).
+5. latest-wins merge into the wind table (operators.upsert), published
+   by the same crash-safe temp-write + rename swap the streaming path
+   uses (sinks.publish).
 
 Deliberate divergences, same as the discovery operator's: real
 calendar arithmetic (no century-leap-year bug), per-candidate forecast
@@ -37,11 +37,19 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..sinks import publish, read_stored
 from ..sources.grib import decode_binary_df
+from ..sources.wind_json import wind_rows
 from .discovery import MAX_ATTEMPTS, candidates
 from .fetch import fetch_binary, probe_binary
+from .upsert import merge_latest_wins
 
 __all__ = ["ingest_once"]
+
+#: the `.idx` inventory records `use_idx=True` fetches: the wind
+#: extract's U and V components, at every level the file carries
+IDX_VARIABLES = ("UGRD", "VGRD")
+IDX_LEVEL = None
 
 
 def ingest_once(
@@ -50,10 +58,7 @@ def ingest_once(
     table_path: str,
     now_ts: str,
     attempts: int = MAX_ATTEMPTS,
-    decoder=None,
     use_idx: bool = False,
-    idx_variables=("UGRD", "VGRD"),
-    idx_level: str | None = None,
 ) -> dict:
     """Run one reference cron tick against `base_url` (file:// tree or
     http(s) endpoint laid out like the NOAA GFS server). Returns a
@@ -61,19 +66,13 @@ def ingest_once(
     "run_ts", "obs_ts", "records"}.
 
     `use_idx=True` (r10) fetches via the winner's `.idx` inventory —
-    ONLY the `idx_variables`/`idx_level` records' byte ranges transfer
+    ONLY the `IDX_VARIABLES`/`IDX_LEVEL` records' byte ranges transfer
     (operators.fetch.fetch_grib_ranges; ~2 of ~700 records for the
     wind extract), each fragment a standalone message into the same
     decoder. A missing/unparseable sidecar falls back to the full-file
     fetch, so idx mode is always at least as available as the
     reference's whole-file shape; the merged table is identical either
     way (the decoder's selector keeps the same records)."""
-    from ..streaming.pipeline import (
-        _merge_publish_epoch,
-        _read_if_exists,
-        _recover_table,
-    )
-
     cands = candidates(spark, now_ts, attempts)
     urls = cands.withColumn(
         "url", F.concat(F.lit(base_url.rstrip("/") + "/"), F.col("url_path"))
@@ -89,8 +88,7 @@ def ingest_once(
     # usually 1 distinct bucket) BEFORE aggregating — at cluster scale
     # that is a partition-prunable probe of the stored table, never a
     # full-table max.
-    _recover_table(spark, table_path)
-    stored = _read_if_exists(spark, table_path)
+    stored = read_stored(spark, table_path)
     if stored is not None:
         buckets = urls.select(
             F.col("obs_ts").alias("recorded_time")
@@ -124,7 +122,7 @@ def ingest_once(
         from .fetch import fetch_grib_ranges
 
         ranged = fetch_grib_ranges(
-            one, variables=idx_variables, level=idx_level
+            one, variables=IDX_VARIABLES, level=IDX_LEVEL
         ).persist()  # ≤ a handful of rows: one winner × selected records
         # ALL-OR-NOTHING: the strict staleness gate (stored_ref >=
         # run_ts → skip_current) would permanently freeze a bucket
@@ -144,22 +142,17 @@ def ingest_once(
     try:
         if fetched is None:
             fetched = fetch_binary(one, "url")
-        decoded = decode_binary_df(
-            fetched.filter("ok").select(
-                F.col("url").alias("path"), "content"
-            ),
-            decoder,
+        body = fetched.filter("ok").select(F.col("url").alias("path"), "content")
+        batch = wind_rows(
+            decode_binary_df(body), F.lit(w.obs_ts).cast("timestamp")
         )
-        batch = decoded.select(
-            F.col("header.parameterNumber").alias("param"),
-            F.to_timestamp(
-                F.col("header.refTime"), "yyyy-MM-dd'T'HH:mm:ss.SSSX"
-            ).alias("ref_time"),
-            F.col("header.forecastTime").alias("forecast_hours"),
-            "header",
-            "data",
-        ).withColumn("recorded_time", F.lit(w.obs_ts).cast("timestamp"))
-        _merge_publish_epoch(batch, table_path, epoch_id=0)
+        publish(
+            merge_latest_wins(
+                batch.limit(0) if stored is None else stored, batch,
+                keys=["recorded_time", "param"], version="ref_time",
+            ),
+            table_path,
+        )
     finally:
         if ranged is not None:  # a cron loop must not leak one cache/tick
             ranged.unpersist()

@@ -38,7 +38,6 @@ from ..caching import data_version, memo, plan_hash
 
 __all__ = [
     "dot",
-    "dot_explicit",
     "l2_norm",
     "cosine",
     "cosine_pairs_blockwise",
@@ -66,28 +65,11 @@ def dot(a: Column, b: Column) -> Column:
     elementwise float→double products folded in array order.
 
     NOTE: higher-order functions are CodegenFallback (interpreted per
-    element); in hot pair-loops use `dot_explicit` — same bit-exact
-    result, but fully inside whole-stage codegen.
+    element); in hot pair-loops use `cosine_explicit` / `_dot_sql` —
+    the same bit-exact fold, but fully inside whole-stage codegen.
     """
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
     return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def dot_explicit(a: Column, b: Column, dim: int) -> Column:
-    """Dot product as an explicit left-associated 64-term sum — bitwise
-    equal to `dot` (0.0 + t₀ + t₁ + … and t₀ + t₁ + … agree in IEEE
-    arithmetic), but a plain codegen'd expression tree: measured ~50×
-    faster than the interpreted fold on all-pairs similarity joins.
-    Requires the dimension statically (testdata embeddings: 64).
-    """
-    terms = [
-        F.element_at(a, i + 1).cast("double") * F.element_at(b, i + 1).cast("double")
-        for i in range(dim)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
 
 
 def l2_norm(a: Column) -> Column:
@@ -104,12 +86,6 @@ def _dot_sql(a: str, b: str, dim: int) -> str:
         f" * CAST(element_at(`{b}`, {i + 1}) AS DOUBLE)"
         for i in range(dim)
     )
-
-
-def _rerank_cosine(a: str, b: str, dim: int | None) -> Column:
-    """Explicit codegen'd cosine when the dimension is known (the hot
-    candidate-pair path), interpreted HOF fold otherwise — bit-equal."""
-    return cosine_explicit(a, b, dim) if dim else cosine(F.col(a), F.col(b))
 
 
 def _norm_col(v: str, dim: int | None) -> Column:
@@ -129,16 +105,17 @@ def _rerank_cosine_prenorm(
     a: str, b: str, na: str, nb: str, dim: int | None
 ) -> Column:
     """Cosine from precomputed side norms (`_norm_col`): dot(a,b) /
-    (na * nb). Bit-equal to `_rerank_cosine` — identical dot fold,
-    identical sqrt/multiply/divide order."""
+    (na * nb). Bit-equal to `cosine_explicit` (or `cosine` without a
+    static dim) — identical dot fold, identical sqrt/multiply/divide
+    order."""
     d = F.expr(f"({_dot_sql(a, b, dim)})") if dim else dot(F.col(a), F.col(b))
     return d / (F.col(na) * F.col(nb))
 
 
 def cosine_explicit(a: str, b: str, dim: int) -> Column:
     """Cosine of two vector COLUMNS (by name) as one SQL-text explicit
-    expression — bitwise equal to `cosine` (dot_explicit's
-    left-association argument applies to all three folds), but fully
+    expression — bitwise equal to `cosine` (0.0 + t₀ + t₁ + … and
+    t₀ + t₁ + … agree in IEEE arithmetic, for all three folds), but fully
     codegen'd AND built in a single JVM parse instead of ~1000 py4j
     round-trips. The rerank kernel for every candidate-pair loop."""
     return F.expr(

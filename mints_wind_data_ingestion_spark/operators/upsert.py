@@ -12,18 +12,19 @@ ties (the reference's strict `<` staleness test). Replayable and
 idempotent — applying the same batch twice is a no-op, which is what
 makes the streaming foreachBatch sink exactly-once per epoch.
 
-At scale: the union is shuffle-partitioned once on the merge keys; with
-the table date-partitioned on the key's time component, dynamic
-partition overwrite rewrites only touched partitions
-(`write_merged`).
+Epoch contract: the wind streams and the batch tick read the stored
+table with `sinks.read_stored`, merge each batch into it with ONE
+`merge_latest_wins` (into the batch's empty self on the first write,
+which dedups the batch), and replace the table with `sinks.publish`.
+The union is shuffle-partitioned once on the merge keys.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["merge_latest_wins", "write_merged"]
+__all__ = ["merge_latest_wins"]
 
 
 def merge_latest_wins(
@@ -31,14 +32,12 @@ def merge_latest_wins(
     batch: DataFrame,
     keys: list[str],
     version: str,
-    tiebreak: str | None = None,
 ) -> DataFrame:
     """Return the merged state of `stored` after applying `batch`.
 
     Per `keys`: absent → insert; batch.version > stored.version →
     replace; else keep stored (converter.py:160-171 semantics, ties to
-    stored). `tiebreak` optionally breaks intra-side version ties
-    deterministically.
+    stored). Version ties inside one side keep an arbitrary row.
     """
     if set(stored.columns) != set(batch.columns):
         raise ValueError(
@@ -47,29 +46,10 @@ def merge_latest_wins(
     tagged = stored.withColumn("__pri", F.lit(1)).unionByName(
         batch.withColumn("__pri", F.lit(0))
     )
-    ord_cols: list[Column] = [F.col(version), F.col("__pri")]
-    if tiebreak:
-        ord_cols.append(F.col(tiebreak))
-    payload = F.struct(*[c for c in stored.columns])
-    merged = (
+    payload = F.struct(*stored.columns)
+    order = F.struct(F.col(version), F.col("__pri"))
+    return (
         tagged.groupBy(*keys)
-        .agg(F.max_by(payload, F.struct(*ord_cols)).alias("__w"))
+        .agg(F.max_by(payload, order).alias("__w"))
         .select(*[F.col(f"__w.{c}").alias(c) for c in stored.columns])
     )
-    return merged
-
-
-def write_merged(
-    merged: DataFrame,
-    path: str,
-    partition_col: str | None = None,
-) -> None:
-    """Persist merged state. With a partition column, dynamic partition
-    overwrite rewrites only the partitions present in `merged` — the
-    scalable replacement for the reference's DELETE+INSERT pair."""
-    spark = merged.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    writer = merged.write.mode("overwrite")
-    if partition_col:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(path)

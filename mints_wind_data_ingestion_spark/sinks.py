@@ -15,6 +15,16 @@ every sink is set-oriented:
   ships in this environment, so it is exercised only when a DSN is
   supplied (`SPARK_GRAFT_JDBC_URL`).
 - `create_wind_table_sql`: S8's DDL, expressed for Spark SQL.
+- `publish` / `read_stored`: the one whole-table commit. `publish`
+  writes a table fully to a temp path, then swaps it in with two
+  renames; `read_stored` first restores a table a crashed swap left at
+  its backup path, then reads it. Every whole-table writer goes
+  through this pair — the wind merge and the rollup of
+  `streaming.pipeline`, `operators.ingest.ingest_once` and
+  `compact_table` — and the epoch streams read their stored corpus
+  through `read_stored`. A `foreachBatch` epoch is exactly-once only
+  when its sink is idempotent (a replay rewrites the same table), and
+  this pair is that sink's storage half.
 """
 
 from __future__ import annotations
@@ -32,6 +42,8 @@ __all__ = [
     "write_bucketed",
     "write_format_roundtrip",
     "compact_table",
+    "publish",
+    "read_stored",
 ]
 
 
@@ -187,11 +199,69 @@ def write_format_roundtrip(
     return reader.load(path)
 
 
+def _hadoop_fs(spark: SparkSession, path: str):
+    """The Hadoop FileSystem that holds `path`, and the JVM Path class."""
+    P = spark._jvm.org.apache.hadoop.fs.Path
+    return P(path).getFileSystem(spark._jsc.hadoopConfiguration()), P
+
+
+def publish(df: DataFrame, table_path: str) -> None:
+    """Replace the table at `table_path` with `df`, crash-safe.
+
+    `df` is written in full to `<table>__publish.tmp` first (an
+    overwrite, so a temp dir a crash left behind is replaced, never
+    published), and only then swapped in by two renames: live → backup,
+    temp → live. `df` may read `table_path` itself — the table is
+    durable on disk before the live path is touched, so no plan ever
+    chases deleted source files. A crash at any point leaves either
+    the old table (live, or at `<table>__prev.bak` until `read_stored`
+    restores it) or the new one — never neither."""
+    table_path = table_path.rstrip("/")
+    tmp_path = table_path + "__publish.tmp"
+    df.write.mode("overwrite").parquet(tmp_path)
+    fs, P = _hadoop_fs(df.sparkSession, table_path)
+    live, bak = P(table_path), P(table_path + "__prev.bak")
+    if fs.exists(bak):
+        fs.delete(bak, True)
+    if fs.exists(live):
+        fs.rename(live, bak)
+    fs.rename(P(tmp_path), live)
+    fs.delete(bak, True)
+
+
+def read_stored(spark: SparkSession, table_path: str) -> DataFrame | None:
+    """The stored table at `table_path`, or None when there is none yet.
+
+    A swap that crashed between its two renames left the live path
+    missing and the backup intact: that backup is restored first.
+    A missing path is None (legitimately the first epoch), and so is a
+    path with no readable parquet footer (a first write crashed
+    between mkdir and data), which is provably "no committed data".
+    ANY OTHER read failure propagates and fails the epoch, so the
+    checkpoint retries it — reading a transiently unreadable or corrupt
+    table as "no table yet" would silently skip a merge or a
+    cross-batch dedup."""
+    from pyspark.errors.exceptions.captured import AnalysisException
+
+    table_path = table_path.rstrip("/")
+    fs, P = _hadoop_fs(spark, table_path)
+    live, bak = P(table_path), P(table_path + "__prev.bak")
+    if not fs.exists(live):
+        if not fs.exists(bak):
+            return None
+        fs.rename(bak, live)
+    try:
+        return spark.read.parquet(table_path)
+    except AnalysisException as e:
+        if "UNABLE_TO_INFER_SCHEMA" in str(e):
+            return None  # dir exists, zero parquet footers → empty
+        raise
+
+
 def compact_table(spark: SparkSession, path: str, target_files: int) -> int:
     """Small-file compaction: rewrite the parquet table at `path` into
-    `target_files` files via a crash-safe temp-write + rename swap (the
-    streaming merge's publish contract — a reader never sees a partial
-    table, and the pre-compaction table survives any crash).
+    `target_files` files through `publish` (a reader never sees a
+    partial table, and the pre-compaction table survives any crash).
 
     The small-files problem is THE operational failure mode of
     micro-batch ingestion at scale (every epoch lands a file per
@@ -200,15 +270,10 @@ def compact_table(spark: SparkSession, path: str, target_files: int) -> int:
     compaction. Partitioned tables should compact per partition —
     pass the partition directory as `path`.
     """
-    from .streaming.pipeline import _swap_in
-
     before = [
         f for f in os.listdir(path)
         if f.endswith(".parquet") and not f.startswith(".")
     ]
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compact.tmp"
     # coalesce, not repartition: no shuffle — compaction is pure IO
-    df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-    _swap_in(spark, tmp, path)
+    publish(spark.read.parquet(path).coalesce(target_files), path)
     return len(before)

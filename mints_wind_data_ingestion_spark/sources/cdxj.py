@@ -38,7 +38,6 @@ __all__ = [
     "SITEMAP_SCAN_SCHEMA",
     "scan_cdxj_bytes",
     "scan_cdxj_df",
-    "read_cdxj_dir",
     "scan_sitemap_bytes",
     "scan_sitemap_df",
     "encode_cdxj",
@@ -156,11 +155,6 @@ def scan_cdxj_df(
     return binary.select("path", "content").mapInPandas(
         scan_batches, schema=CDX_SCAN_SCHEMA
     )
-
-
-def read_cdxj_dir(spark: SparkSession, index_dir: str) -> DataFrame:
-    """binaryFile scan + CDXJ line walk over an index dir."""
-    return scan_cdxj_df(spark.read.format("binaryFile").load(index_dir))
 
 
 def encode_cdxj(captures: list[dict], compress: bool = True) -> bytes:

@@ -967,24 +967,6 @@ def _split_message_fields(msg: bytes) -> list[dict[int, tuple[int, int]]]:
     return snapshots
 
 
-def _decode_message(msg: bytes) -> dict:
-    """Decode a SINGLE-field framed message (the overwhelmingly common
-    shape); multi-field messages must go through
-    `_decode_message_fields` — this strict form raises rather than
-    pick one field."""
-    fields = _decode_message_fields(msg)
-    if len(fields) != 1:
-        raise ValueError(
-            f"message carries {len(fields)} fields; caller expected one"
-        )
-    return fields[0]
-
-
-def _decode_message_fields(msg: bytes) -> list[dict]:
-    """Decode every field (submessage) of one framed GRIB2 message."""
-    return [_decode_field(msg, s) for s in _split_message_fields(msg)]
-
-
 def _decode_field(msg: bytes, sec: dict[int, tuple[int, int]]) -> dict:
     """Decode one field of a framed GRIB2 message from its section
     snapshot; raises ValueError on templates outside the supported

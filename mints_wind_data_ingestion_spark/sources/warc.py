@@ -52,7 +52,6 @@ __all__ = [
     "iter_gzip_members",
     "parse_warc_stream",
     "read_jsonl_dir",
-    "read_wet_dir",
     "jsonl_records",
     "scan_jsonl_df",
     "scan_wet_df",
@@ -426,12 +425,6 @@ def scan_wet_df(
     return binary.select("path", "content").mapInPandas(
         scan_batches, schema=WARC_SCAN_SCHEMA
     )
-
-
-def read_wet_dir(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """binaryFile scan + WARC record walk over a WET/WARC landing dir
-    (`*.warc`, `*.wet`, `.gz`/`.zst` compressed or plain)."""
-    return scan_wet_df(spark.read.format("binaryFile").load(landing_dir))
 
 
 def wet_conversion_texts(scanned: DataFrame) -> DataFrame:

@@ -10,12 +10,12 @@ passes over the file.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import WIND_RECORD
+from ..schemas import WIND_RECORD, WIND_TABLE
 
-__all__ = ["read_wind_json", "to_wind_table"]
+__all__ = ["read_wind_json", "to_wind_table", "wind_rows"]
 
 
 def read_wind_json(spark: SparkSession, path: str) -> DataFrame:
@@ -30,20 +30,35 @@ def read_wind_json(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.json(path, schema=WIND_RECORD, multiLine=True)
 
 
-def to_wind_table(records: DataFrame) -> DataFrame:
-    """Normalize raw records into the engine's typed wind-table layout
-    (FIXTURES.md §A2): parse the reference's two timestamp encodings,
-    lift the filter/join keys out of the header.
+def wind_rows(records: DataFrame, recorded_time: Column) -> DataFrame:
+    """The decoded-record → wind-row projection every wind write path
+    shares (FIXTURES.md §A2): lift the filter/join keys `param`,
+    `ref_time` and `forecast_hours` out of the header, then emit
+    `schemas.WIND_TABLE`'s columns in its order.
 
-    recordedTime '2020-08-12 12:00:00+00' (converter.py:67) and
-    header.refTime '2020-08-12T06:00:00.000Z' both parse with
-    to_timestamp under the UTC session.
-    """
-    return records.select(
-        F.to_timestamp(F.col("recordedTime"), "yyyy-MM-dd HH:mm:ssx").alias("recorded_time"),
-        F.col("header.parameterNumber").alias("param"),
-        F.to_timestamp(F.col("header.refTime"), "yyyy-MM-dd'T'HH:mm:ss.SSSX").alias("ref_time"),
-        F.col("header.forecastTime").alias("forecast_hours"),
-        F.col("header").alias("header"),
-        F.col("data").alias("data"),
+    `recorded_time` is the path's observation time, and may refer to
+    the lifted `ref_time` and `forecast_hours`: the JSON path parses
+    `recordedTime`, the GRIB stream adds the forecast hours to the run,
+    and the batch tick stamps its bucket. header.refTime
+    '2020-08-12T06:00:00.000Z' parses with to_timestamp under the UTC
+    session."""
+    lifted = records.withColumns({
+        "param": F.col("header.parameterNumber"),
+        "ref_time": F.to_timestamp(
+            F.col("header.refTime"), "yyyy-MM-dd'T'HH:mm:ss.SSSX"
+        ),
+        "forecast_hours": F.col("header.forecastTime"),
+    })
+    return lifted.withColumn("recorded_time", recorded_time).select(
+        *WIND_TABLE.names
+    )
+
+
+def to_wind_table(records: DataFrame) -> DataFrame:
+    """Normalize raw JSON records into the engine's typed wind-table
+    layout (`wind_rows`); recordedTime '2020-08-12 12:00:00+00'
+    (converter.py:67) parses with to_timestamp under the UTC session."""
+    return wind_rows(
+        records,
+        F.to_timestamp(F.col("recordedTime"), "yyyy-MM-dd HH:mm:ssx"),
     )

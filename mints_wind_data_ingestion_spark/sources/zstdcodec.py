@@ -373,18 +373,6 @@ def _np_code_tables():
 _LL_BASE = _LL_BITS = _ML_BASE = _ML_BITS = None
 
 
-def _ll_value(code: int) -> tuple[int, int]:
-    if code >= len(_LL_CODE):
-        raise ZstdError(f"zstd: literals-length code {code} out of range")
-    return _LL_CODE[code]
-
-
-def _ml_value(code: int) -> tuple[int, int]:
-    if code >= len(_ML_CODE):
-        raise ZstdError(f"zstd: match-length code {code} out of range")
-    return _ML_CODE[code]
-
-
 # ---------------------------------------------------------------------------
 # Huffman
 # ---------------------------------------------------------------------------

@@ -15,8 +15,9 @@ Here the same semantics are declared:
   retention).
 
 Epoch contract. Every `run_*` stream is one skeleton: a checkpointed
-file source (`_landing`), one `foreachBatch` epoch function, one
-availableNow run (`_start`). The checkpoint replays a crashed epoch
+file source (`_landing`, one file per epoch; the two wind streams read
+their whole backlog as one epoch), one `foreachBatch` epoch function,
+one availableNow run (`_start`). The checkpoint replays a crashed epoch
 with the same `epoch_id` and the same input files, and three rules
 make that replay a no-op:
 
@@ -26,14 +27,16 @@ make that replay a no-op:
 - cross-epoch reads see only strictly-older epochs (`_older_epochs`):
   a replay must not see its own earlier output, or it would anti-join
   its documents away and write an empty subdirectory;
-- an unreadable stored table fails the epoch (`_read_if_exists`) and
-  the checkpoint retries it. Only a missing table (or one with no
-  committed parquet footer) reads as "no table yet"; anything else
-  would silently skip cross-epoch dedup and re-admit duplicates.
+- every stored table is read through `sinks.read_stored`: an
+  unreadable one fails the epoch and the checkpoint retries it. Only
+  a missing table (or one with no committed parquet footer) reads as
+  "no table yet"; anything else would silently skip cross-epoch dedup
+  and re-admit duplicates.
 
 The wind table and the rollup publish a whole new table per epoch
-instead (temp write + rename swap, `_swap_in`): the latest-wins merge
-is idempotent by itself, the additive rollup by its epoch fence.
+instead, through `sinks.publish` (temp write + rename swap): the
+latest-wins merge is idempotent by itself, the additive rollup by its
+epoch fence.
 """
 
 from __future__ import annotations
@@ -43,10 +46,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
-from ..schemas import WIND_RECORD
-from ..sources.grib import decode_binary_df
-from ..sources.wind_json import to_wind_table
 from ..operators.upsert import merge_latest_wins
+from ..schemas import WIND_RECORD
+from ..sinks import publish, read_stored
+from ..sources.grib import decode_binary_df
+from ..sources.wind_json import to_wind_table, wind_rows
 
 __all__ = [
     "run_ingest_stream",
@@ -75,51 +79,11 @@ _BINARY_FILE_SCHEMA = (
 )
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
-
-def _recover_table(spark: SparkSession, table_path: str) -> None:
-    """If a previous swap crashed between `live → bak` and `tmp → live`,
-    the live path is missing but the backup is intact — restore it.
-    Every epoch (and any reader using this helper) self-heals first."""
-    fs, jvm = _hadoop_fs(spark, table_path)
-    P = jvm.org.apache.hadoop.fs.Path
-    live, bak = P(table_path), P(table_path + "__prev.bak")
-    if not fs.exists(live) and fs.exists(bak):
-        fs.rename(bak, live)
-
-
-def _read_if_exists(spark: SparkSession, path: str):
-    """Read a stored table for a cross-epoch merge/anti-join, or None.
-
-    Missing path → None (legitimately the first epoch). A path that
-    exists but holds no readable parquet footer (a first epoch crashed
-    between mkdir and data write) → None as well: that narrow state is
-    provably equivalent to "no committed data". ANY OTHER read failure
-    propagates and FAILS THE EPOCH so the checkpoint retries it —
-    treating a transiently-unreadable or corrupt corpus as "no corpus
-    yet" would silently skip cross-batch dedup and append duplicates."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    fs, jvm = _hadoop_fs(spark, path)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
-        return None
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if "UNABLE_TO_INFER_SCHEMA" in str(e):
-            return None  # dir exists, zero parquet footers → empty
-        raise
-
-
 def _older_epochs(spark: SparkSession, path: str, epoch_id: int):
     """The rows of the epoch-partitioned table at `path` written by
     epochs strictly older than `epoch_id` (partition pruning on the
     `epoch` directory column), or None before the first write."""
-    stored = _read_if_exists(spark, path)
+    stored = read_stored(spark, path)
     return None if stored is None else stored.filter(F.col("epoch") < epoch_id)
 
 
@@ -222,23 +186,6 @@ def _best(
     )
 
 
-def _swap_in(spark: SparkSession, tmp_path: str, table_path: str) -> None:
-    """Publish a fully-written temp table at `table_path` via two
-    renames. The merged output is durable on disk BEFORE the live path
-    is touched, so no reader-recomputation can ever chase deleted
-    source files, and a crash at any point leaves either the old table
-    (live or at __prev.bak) or the new one — never neither."""
-    fs, jvm = _hadoop_fs(spark, table_path)
-    P = jvm.org.apache.hadoop.fs.Path
-    live, bak, tmp = P(table_path), P(table_path + "__prev.bak"), P(tmp_path)
-    if fs.exists(bak):
-        fs.delete(bak, True)
-    if fs.exists(live):
-        fs.rename(live, bak)
-    fs.rename(tmp, live)
-    fs.delete(bak, True)
-
-
 def run_ingest_stream(
     spark: SparkSession,
     landing_dir: str,
@@ -266,32 +213,24 @@ def run_ingest_stream(
 
 
 def _merge_publish_epoch(batch: DataFrame, table_path: str, epoch_id: int) -> None:
-    """One micro-batch of the latest-wins wind merge, crash-safe.
+    """One micro-batch of the latest-wins wind merge, crash-safe: read
+    the stored table (`sinks.read_stored` — None on the first epoch, an
+    unreadable table fails the epoch), merge the batch into it in ONE
+    latest-wins aggregation, and publish the result (`sinks.publish`).
 
-    Self-heal a crashed prior swap, dedup the batch itself, merge with
-    the stored table (a missing table ⇔ first epoch; an UNREADABLE one
-    fails the epoch — _read_if_exists), then publish via temp-write +
-    atomic rename swap: the merge (which READS table_path) is fully
-    materialized to a temp dir first — never overwrite the path a plan
-    is reading (a cache eviction mid-overwrite would recompute against
-    deleted files), and never a window where no complete table exists.
-    At warehouse scale the same contract comes from dynamic partition
-    overwrite on date partitions (sinks.write_merged)."""
-    s = batch.sparkSession
-    _recover_table(s, table_path)
-    stored = _read_if_exists(s, table_path)
-    incoming = merge_latest_wins(  # dedup within the batch itself first
-        batch.limit(0), batch, keys=["recorded_time", "param"], version="ref_time"
+    One merge is enough: the winner over stored ∪ batch is the winner
+    over stored ∪ (the batch's own winners), with stored still taking
+    version ties. The first epoch merges into the batch's empty self,
+    which dedups the batch. `epoch_id` is unused — the publish replaces
+    the whole table, so a replayed epoch writes the same table."""
+    stored = read_stored(batch.sparkSession, table_path)
+    publish(
+        merge_latest_wins(
+            batch.limit(0) if stored is None else stored, batch,
+            keys=["recorded_time", "param"], version="ref_time",
+        ),
+        table_path,
     )
-    if stored is not None:
-        merged = merge_latest_wins(
-            stored, incoming, keys=["recorded_time", "param"], version="ref_time"
-        )
-    else:
-        merged = incoming
-    tmp_path = f"{table_path}__epoch{epoch_id}.tmp"
-    merged.write.mode("overwrite").parquet(tmp_path)
-    _swap_in(s, tmp_path, table_path)
 
 
 def run_grib_ingest_stream(
@@ -299,36 +238,27 @@ def run_grib_ingest_stream(
     landing_dir: str,
     table_path: str,
     checkpoint_dir: str,
-    decoder=None,
 ) -> StreamingQuery:
     """The reference pipeline end-to-end from BINARY GRIB2, streaming:
     binaryFile stream source over the landing dir → Arrow-batched WMO
-    decode (sources.grib.decode_binary_df — the real codec) →
-    recorded_time derived as ref_time + forecast_hours (the physics the
-    reference approximates from its cron tick, converter.py:63-69) →
-    the same crash-safe latest-wins merge the JSON path uses. Closes
-    the S2→T1-T6 loop with no JSON intermediary: a new forecast run
-    landing as a .grib2 file supersedes older runs for the same
-    observation hour exactly like converter.py:96-104. Every landed
-    file of a tick is one epoch, so a backlog decodes in parallel."""
+    decode (sources.grib.decode_binary_df — the real codec) → the
+    shared wind-row projection with recorded_time = ref_time +
+    forecast_hours (the physics the reference approximates from its
+    cron tick, converter.py:63-69) → the same crash-safe latest-wins
+    merge the JSON path uses. Closes the S2→T1-T6 loop with no JSON
+    intermediary: a new forecast run landing as a .grib2 file
+    supersedes older runs for the same observation hour exactly like
+    converter.py:96-104. The source sets no maxFilesPerTrigger, so one
+    availableNow run is ONE epoch over every file landed since the
+    last run: a backlog decodes in parallel and merges once."""
     raw = (
         spark.readStream.format("binaryFile")
         .schema(_BINARY_FILE_SCHEMA)
         .load(landing_dir)
     )
-    decoded = decode_binary_df(raw, decoder)
-    records = decoded.select(
-        F.col("header.parameterNumber").alias("param"),
-        F.to_timestamp(
-            F.col("header.refTime"), "yyyy-MM-dd'T'HH:mm:ss.SSSX"
-        ).alias("ref_time"),
-        F.col("header.forecastTime").alias("forecast_hours"),
-        F.col("header").alias("header"),
-        F.col("data").alias("data"),
-    ).withColumn(
-        "recorded_time",
-        F.col("ref_time")
-        + F.make_interval(hours=F.col("forecast_hours")),
+    records = wind_rows(
+        decode_binary_df(raw),
+        F.col("ref_time") + F.make_interval(hours=F.col("forecast_hours")),
     )
     return _start(
         records, checkpoint_dir,
@@ -493,9 +423,7 @@ def run_continuous_rollup(
                 "event_cnt", "value_sum",
             )
         )
-        s = batch.sparkSession
-        _recover_table(s, table_path)
-        stored = _read_if_exists(s, table_path)
+        stored = read_stored(batch.sparkSession, table_path)
         inc = batch.withColumn("src_epoch", F.lit(epoch_id).cast("long"))
         if stored is not None:
             # epoch fence: a replayed epoch must not double-count
@@ -513,9 +441,7 @@ def run_continuous_rollup(
             )
         else:
             merged = inc
-        tmp_path = f"{table_path}__epoch{epoch_id}.tmp"
-        merged.write.mode("overwrite").parquet(tmp_path)
-        _swap_in(s, tmp_path, table_path)
+        publish(merged, table_path)
 
     return _start(_landing(spark, landing_dir, schema), checkpoint_dir, merge_rollup)
 

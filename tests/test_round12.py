@@ -177,14 +177,30 @@ def test_repeated_composite_builds_do_not_grow_cache(spark):
             time.sleep(0.25)
         return prev
 
-    counts = []
+    from mints_wind_data_ingestion_spark import caching
+
+    app_id = spark.sparkContext.applicationId
+
+    def cache_keys() -> set:
+        return {
+            k for k in caching._store if k[0] == app_id and k[1] == "cache"
+        }
+
+    # the persistent-RDD count is session-wide: let entries that earlier
+    # tests released settle BEFORE the first build, or their late
+    # releases read as this composite's live set shrinking
+    n_persistent()
+    counts, keys = [], []
     for _ in range(3):
         REGISTRY["x_layout_mm_suite"].build(spark, sf_dir).count()
         counts.append(n_persistent())
+        keys.append(cache_keys())
     # first build establishes the steady state; rebuilds must not GROW
     # the live set (equality modulo the async-unpersist settle)
     assert counts[1] <= counts[0] and counts[2] <= counts[1], counts
     assert counts[0] - counts[2] <= 1, counts
+    # and the composite's own entries are replaced, never stacked
+    assert keys[0] == keys[1] == keys[2], keys
 
 
 def test_ivfpq_matches_exact_ivf_and_prunes(spark):

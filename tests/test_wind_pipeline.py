@@ -115,6 +115,8 @@ def test_merge_latest_wins_semantics(spark):
             ("t1", 2, 12, "new-u"),  # newer → replace
             ("t1", 3, 6, "dup-v"),  # equal → stored wins
             ("t2", 2, 0, "ins-u"),  # absent key → insert
+            ("t3", 2, 6, "new-t3"),  # two batch versions of one key:
+            ("t3", 2, 0, "old-t3"),  # the newer wins
         ],
     )
     out = {
@@ -127,6 +129,7 @@ def test_merge_latest_wins_semantics(spark):
         ("t1", 2): "new-u",
         ("t1", 3): "old-v",
         ("t2", 2): "ins-u",
+        ("t3", 2): "new-t3",
     }
 
 
@@ -186,13 +189,10 @@ def test_streaming_merge_is_crash_safe(spark, tmp_path):
     merged table is fully written to a temp dir, then published by
     renames (live → __prev.bak, tmp → live, drop bak). A crash between
     the two renames leaves the old table at the backup path — the next
-    epoch (or any reader calling _recover_table) restores it."""
+    epoch (or any reader calling read_stored) restores it."""
     import os
 
-    from mints_wind_data_ingestion_spark.streaming.pipeline import (
-        _recover_table,
-        _swap_in,
-    )
+    from mints_wind_data_ingestion_spark.sinks import publish, read_stored
 
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -211,16 +211,16 @@ def test_streaming_merge_is_crash_safe(spark, tmp_path):
 
     # simulate the worst crash point: live renamed away, tmp not yet in
     os.rename(table, table + "__prev.bak")
-    _recover_table(spark, table)
+    assert sorted(map(tuple, read_stored(spark, table).collect())) == before
     assert sorted(map(tuple, spark.read.parquet(table).collect())) == before
 
     # publishing a new table via the swap keeps old state until the new
-    # one is durable
+    # one is durable — even when the new table is a plan over the old
     newer = spark.read.parquet(table).withColumn("param", F.col("param") + 100)
-    newer.write.parquet(str(tmp_path / "next.tmp"))
-    _swap_in(spark, str(tmp_path / "next.tmp"), table)
+    publish(newer, table)
     assert {r.param for r in spark.read.parquet(table).collect()} == {102}
     assert not os.path.exists(table + "__prev.bak")
+    assert not [p for p in os.listdir(tmp_path) if p.endswith(".tmp")]
 
 
 def test_grid_explode_and_vector_math(spark, batch1):
