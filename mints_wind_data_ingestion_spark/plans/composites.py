@@ -1398,16 +1398,6 @@ def _lmm_oracle(sf_dir: str) -> str:
     """
 
 
-#: prepared-plan memo for the fused signature pass — the composite
-#: itself can never enter the registry plan cache (it registers
-#: mid-plan caches), but its most expensive subtree CAN: returning the
-#: same DataFrame object per (session, sf) keeps managed_cache's
-#: materialization warm across bench re-builds exactly as the
-#: plan-cached child queries used to. Honors the plan-cache toggle so
-#: tests (cache off) always build fresh.
-_FUSED_SIGS: dict = {}
-
-
 def _mm_fused_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(mod, doc_id, frame_idx, fhash): ALL THREE modalities' signature
     tables in ONE Arrow pass over ONE documents scan (r12, VERDICT r11
@@ -1444,20 +1434,8 @@ def _mm_fused_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_video_frames,
     )
 
-    from . import registry as _registry
-
     def enc_tiff_lzw(px):
         return encode_tiff(px, compression="lzw", predictor=True)
-
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    # sweep other applications' memo entries (dead sessions) so a
-    # long-lived process cycling sessions never pins stale handles
-    for dead in [k for k in _FUSED_SIGS if k[0] != memo_key[0]]:
-        del _FUSED_SIGS[dead]
-    if _registry._plan_cache_on:
-        hit = _FUSED_SIGS.get(memo_key)
-        if hit is not None:
-            return hit
 
     # spread the bare ids wide first (the _spread high-work_factor
     # case): the scan is ONE split at test scale, and per id this pass
@@ -1484,8 +1462,10 @@ def _mm_fused_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 i = int(i)
                 for sib in (0, 1) if i % 20 == 0 else (0,):
                     # every 4th image ships as PNG, every 4th+2 as
-                    # GIF, every 8th+1 as LZW+predictor TIFF —
-                    # mirrors _image_corpus exactly (all lossless)
+                    # GIF, every 8th+1 as LZW+predictor TIFF, the rest
+                    # as BMP — _image_corpus ships WebP for ids ≡ 3, 7
+                    # (mod 8) where this pass ships BMP; every
+                    # container is lossless, so the hashes agree
                     enc_i = (encode_png if i % 4 == 0
                              else encode_gif if i % 4 == 2
                              else enc_tiff_lzw if i % 8 == 1
@@ -1533,12 +1513,9 @@ def _mm_fused_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "fhash": pd.array(fh, dtype="Int64"),
             })
 
-    df = ids.mapInPandas(
+    return ids.mapInPandas(
         gen, "mod string, doc_id long, frame_idx int, fhash long"
     )
-    if _registry._plan_cache_on:
-        _FUSED_SIGS[memo_key] = df
-    return df
 
 
 @query("x_layout_mm_suite", oracle=_lmm_oracle, tags=("ext", "composite"))

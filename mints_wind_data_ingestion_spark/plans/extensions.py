@@ -153,27 +153,24 @@ def _spread(
     """
     sc = df.sparkSession.sparkContext
     par = sc.defaultParallelism
-    try:
-        files = df.inputFiles()
-        if not files:
-            return df  # in-memory lineage: partitioning already chosen
-        if not by and len(files) >= par:
-            return df  # enough native splits
-        total = _local_input_bytes(files)
-        if total is None:
-            # remote store: spread
-            return df.repartition(par, *by) if by else df.repartition(par)
-        if total * work_factor < _SPREAD_MIN_BYTES:
-            return df
-    except Exception:  # noqa: BLE001 — sizing is advisory, never fatal
-        pass
+    files = df.inputFiles()
+    if not files:
+        return df  # in-memory lineage: partitioning already chosen
+    if not by and len(files) >= par:
+        return df  # enough native splits
+    total = _local_input_bytes(files)
+    # unknown size (remote store, vanished file): spread
+    if total is not None and total * work_factor < _SPREAD_MIN_BYTES:
+        return df
     return df.repartition(par, *by) if by else df.repartition(par)
 
 
 def _local_input_bytes(files: list[str]) -> int | None:
     """Total on-disk bytes of a scan's input files, or None when any
     file is on a remote store (s3/hdfs — sizes aren't one os.stat
-    away, and callers must take the conservative at-scale branch)."""
+    away) or is gone since the scan was planned: either way callers
+    must take the conservative at-scale branch. Sizing is advisory,
+    so a vanished file is the scan's error to raise, not this one's."""
     from urllib.parse import unquote, urlparse
 
     total = 0
@@ -181,7 +178,10 @@ def _local_input_bytes(files: list[str]) -> int | None:
         u = urlparse(f)
         if u.scheme not in ("file", ""):
             return None
-        total += os.path.getsize(unquote(u.path))
+        try:
+            total += os.path.getsize(unquote(u.path))
+        except OSError:
+            return None
     return total
 
 
@@ -907,10 +907,7 @@ def _bm25_salt_buckets(raw) -> int:
     two-phase path is mandatory: Window.partitionBy(query_id) alone
     would funnel every matching document of a query through one
     task."""
-    try:
-        nbytes = _local_input_bytes(raw.inputFiles())
-    except Exception:  # noqa: BLE001 — sizing is advisory
-        nbytes = None
+    nbytes = _local_input_bytes(raw.inputFiles())
     return 1 if nbytes is not None and nbytes < (256 << 20) else 32
 
 
@@ -1530,6 +1527,7 @@ def x_grib_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datetime import datetime, timezone
 
     from ..functions.wind import cell_lat
+    from ..sources.grib import decode_binary_df
     from ..sources.grib2codec import decode_grib2_bytes, encode_grib2_message
 
     nx, ny = _GRIB_NX, _GRIB_NY
@@ -1544,14 +1542,14 @@ def x_grib_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             # values — and the oracle — are unchanged while the PNG
             # decode path joins the driver hash
             blobs.append(
-                (t, p, encode_grib2_message(
+                (str(t), encode_grib2_message(
                     vals, parameter_number=p, ref_time=ref, nx=nx, ny=ny,
                     packing="complex_diff" if p == 2 else "png",
                 ))
             )
         accum = [((i * 11 + t * 17) % 5500) / 100.0 for i in range(nx * ny)]
         blobs.append(
-            (t, 8, encode_grib2_message(
+            (str(t), encode_grib2_message(
                 accum, parameter_number=8, parameter_category=1,
                 ref_time=ref, forecast_hours=0, nx=nx, ny=ny,
                 interval_hours=6, statistical_process=1, packing="ieee",
@@ -1564,7 +1562,7 @@ def x_grib_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         # prob/prob_lo discriminate its groups from the 4.8 record's
         pop = [((i * 5 + t * 23) % 10100) / 100.0 for i in range(nx * ny)]
         blobs.append(
-            (t, 8, encode_grib2_message(
+            (str(t), encode_grib2_message(
                 pop, parameter_number=8, parameter_category=1,
                 ref_time=ref, forecast_hours=0, nx=nx, ny=ny,
                 interval_hours=6, statistical_process=1,
@@ -1573,41 +1571,24 @@ def x_grib_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  lower=1.27, upper=None),
             ))
         )
-    bdf = spark.createDataFrame(blobs, "t int, p int, blob binary")
-
-    def decode(it):
-        for pdf in it:
-            rows = []
-            for b in pdf["blob"]:
-                for rec in decode_grib2_bytes(bytes(b)):
-                    h = rec["header"]
-                    lo = h["probabilityLowerLimit"]
-                    rows.append((h["refTime"], h["parameterNumber"],
-                                 h["statisticalProcess"], h["intervalEnd"],
-                                 h["probabilityType"],
-                                 None if lo is None else round(lo * 100),
-                                 rec["data"]))
-            yield pd.DataFrame(
-                rows,
-                columns=["ref_time", "param", "stat", "interval_end",
-                         "prob", "prob_lo_e2", "data"],
-            )
-
-    import pandas as pd  # noqa: F811
-
-    decoded = bdf.mapInPandas(
-        decode,
-        schema="ref_time string, param int, stat int, "
-               "interval_end string, prob int, prob_lo_e2 bigint, "
-               "data array<double>",
+    decoded = decode_binary_df(
+        spark.createDataFrame(blobs, "path string, content binary"),
+        decoder=decode_grib2_bytes,
     )
+    h = F.col("header")
     cells = decoded.select(
-        "ref_time", "param", "stat", "interval_end", "prob", "prob_lo_e2",
+        h.refTime.alias("ref_time"),
+        h.parameterNumber.alias("param"),
+        h.statisticalProcess.alias("stat"),
+        h.intervalEnd.alias("interval_end"),
+        h.probabilityType.alias("prob"),
+        F.round(h.probabilityLowerLimit * 100).cast("bigint")
+        .alias("prob_lo_e2"),
         F.posexplode("data").alias("idx", "v"),
     ).select(
         "ref_time", "param", "stat", "interval_end", "prob", "prob_lo_e2",
         cell_lat(F.col("idx"), nx=nx).alias("lat"),
-        F.round(F.col("v") * 100).cast("bigint").alias("v_e2"),
+        F.round(F.col("v").cast("double") * 100).cast("bigint").alias("v_e2"),
     )
     return cells.groupBy(
         "ref_time", "param", "stat", "interval_end", "prob", "prob_lo_e2",
@@ -2042,9 +2023,8 @@ def x_grib_lambert(spark: SparkSession, sf_dir: str) -> DataFrame:
         mercator_cell_latlon,
         polar_cell_latlon,
     )
+    from ..sources.grib import decode_binary_df
     from ..sources.grib2codec import decode_grib2_bytes, encode_grib2_message
-
-    import pandas as pd  # noqa: F811
 
     ref = datetime(2020, 8, 12, 6, tzinfo=timezone.utc)
     blobs = []
@@ -2064,7 +2044,7 @@ def x_grib_lambert(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             proj = dict(polar={k: spec[k] for k in
                                ("laD", "loV", "dx", "dy")})
-        blobs.append((spec["g"], encode_grib2_message(
+        blobs.append((str(spec["g"]), encode_grib2_message(
             vals, parameter_number=2, ref_time=ref,
             nx=spec["nx"], ny=spec["ny"],
             la1=spec["la1"] if spec["la1"] is not None else 90.0,
@@ -2076,25 +2056,14 @@ def x_grib_lambert(spark: SparkSession, sf_dir: str) -> DataFrame:
             scan_mode=0 if spec["kind"] == "gaussian" else 64,
             packing=spec["packing"], **proj,
         )))
-    bdf = spark.createDataFrame(blobs, "g int, blob binary")
-
-    def decode(it):
-        for pdf in it:
-            rows = []
-            for g, b in zip(pdf["g"], pdf["blob"]):
-                for rec in decode_grib2_bytes(bytes(b)):
-                    h = rec["header"]
-                    rows.append((int(g), h["laD"], h["loV"], h["latin1"],
-                                 h["latin2"], h["dx"], rec["data"]))
-            yield pd.DataFrame(
-                rows,
-                columns=["g", "la_d", "lo_v", "lat1", "lat2", "dx_m", "data"],
-            )
-
-    decoded = bdf.mapInPandas(
-        decode,
-        schema="g int, la_d double, lo_v double, lat1 double, "
-               "lat2 double, dx_m double, data array<double>",
+    h = F.col("header")
+    decoded = decode_binary_df(
+        spark.createDataFrame(blobs, "path string, content binary"),
+        decoder=decode_grib2_bytes,
+    ).select(
+        F.col("source_path").cast("int").alias("g"),
+        h.laD.alias("la_d"), h.loV.alias("lo_v"), h.latin1.alias("lat1"),
+        h.latin2.alias("lat2"), h.dx.alias("dx_m"), "data",
     )
     # ONE decode pass for all grids: the per-grid inverse projections
     # are constant-parameterized expressions over idx, so a CASE on g
@@ -2137,7 +2106,8 @@ def x_grib_lambert(spark: SparkSession, sf_dir: str) -> DataFrame:
             "g", "idx", "la_d", "lo_v", "lat1", "lat2", "dx_m",
             F.round(lat_case * 10000).cast("bigint").alias("lat_e4"),
             F.round(lon_case * 10000).cast("bigint").alias("lon_e4"),
-            F.round(F.col("v") * 100).cast("bigint").alias("v_e2"),
+            F.round(F.col("v").cast("double") * 100).cast("bigint")
+            .alias("v_e2"),
         )
     )
 
@@ -2231,13 +2201,12 @@ def x_grib_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivot, and the header identity are all hash-load-bearing."""
     from datetime import datetime, timezone
 
+    from ..sources.grib import decode_binary_df
     from ..sources.grib2codec import (
         decode_grib2_bytes,
         encode_grib2_file,
         encode_grib2_message,
     )
-
-    import pandas as pd  # noqa: F811
 
     nx, ny = _ENS_NX, _ENS_NY
     blobs = []
@@ -2258,35 +2227,23 @@ def x_grib_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for m in range(_ENS_M)
         ]
-        blobs.append((t, encode_grib2_file(msgs)))
-    bdf = spark.createDataFrame(blobs, "t int, blob binary")
-
-    def decode(it):
-        for pdf in it:
-            rows = []
-            for t, b in zip(pdf["t"], pdf["blob"]):
-                for rec in decode_grib2_bytes(bytes(b)):
-                    h = rec["header"]
-                    rows.append((int(t), h["perturbationNumber"],
-                                 h["ensembleType"], h["ensembleSize"],
-                                 h["productDefinitionTemplate"],
-                                 h["intervalHours"], rec["data"]))
-            yield pd.DataFrame(
-                rows, columns=["t", "m", "ens_type", "ens_size", "pdt",
-                               "ivl", "data"]
-            )
-
-    decoded = bdf.mapInPandas(
-        decode,
-        schema="t int, m int, ens_type int, ens_size int, pdt int, "
-               "ivl int, data array<double>",
+        blobs.append((str(t), encode_grib2_file(msgs)))
+    decoded = decode_binary_df(
+        spark.createDataFrame(blobs, "path string, content binary"),
+        decoder=decode_grib2_bytes,
     )
+    h = F.col("header")
     cells = decoded.select(
-        "t", "m", "ens_type", "ens_size", "pdt", "ivl",
+        F.col("source_path").cast("int").alias("t"),
+        h.perturbationNumber.alias("m"),
+        h.ensembleType.alias("ens_type"),
+        h.ensembleSize.alias("ens_size"),
+        h.productDefinitionTemplate.alias("pdt"),
+        h.intervalHours.alias("ivl"),
         F.posexplode("data").alias("idx", "v"),
     ).select(
         "t", "m", "ens_type", "ens_size", "pdt", "ivl", "idx",
-        F.round(F.col("v") * 100).cast("bigint").alias("v_e2"),
+        F.round(F.col("v").cast("double") * 100).cast("bigint").alias("v_e2"),
     )
     # member pivot per (run, cell): 5 rows → 1; the cross-member
     # spread exists only at cell grain, so this level is inherent —
@@ -2370,7 +2327,13 @@ def x_grib_reduced(spark: SparkSession, sf_dir: str) -> DataFrame:
     value sums, and the row's min/max longitude (the per-row 360/Ni
     spacing). The oracle replays rows from a VALUES literal carrying
     the exact-repr quadrature doubles, so header parse, list parse,
-    value layout, AND the lat/lon mapping are all hash-load-bearing."""
+    value layout, AND the lat/lon mapping are all hash-load-bearing.
+
+    The one x_grib_* query with its own UDTF rather than
+    `sources.grib.decode_binary_df`: it emits per-POINT rows with the
+    reduced-grid (lat, lon) attached in the decode pass, which a
+    per-record decode node followed by column expressions cannot do
+    without a per-row width search."""
     from datetime import datetime, timezone
 
     import numpy as np

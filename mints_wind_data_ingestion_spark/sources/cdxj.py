@@ -31,6 +31,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from . import _file_rows_df
 from .warc import _MAX_MEMBER_BYTES, iter_gzip_members
 
 __all__ = [
@@ -141,19 +142,10 @@ def scan_cdxj_df(
     """Quarantine-not-corrupt CDXJ scan over a (path, content) binary
     DataFrame — one row per capture, error rows for malformed lines;
     `df.filter("error IS NOT NULL")` IS the quarantine table."""
-    import pandas as pd
-
-    def scan_batches(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rows.extend(
-                    scan_cdxj_bytes(path, bytes(content), max_member_bytes)
-                )
-            yield pd.DataFrame(rows, columns=_COLUMNS)
-
-    return binary.select("path", "content").mapInPandas(
-        scan_batches, schema=CDX_SCAN_SCHEMA
+    return _file_rows_df(
+        binary,
+        lambda path, content: scan_cdxj_bytes(path, content, max_member_bytes),
+        CDX_SCAN_SCHEMA,
     )
 
 
@@ -261,18 +253,7 @@ def _sm_err(path: str, err: str, entry_no: int = -1) -> dict:
 
 def scan_sitemap_df(binary: DataFrame) -> DataFrame:
     """Quarantine-not-corrupt sitemap scan over (path, content)."""
-    import pandas as pd
-
-    def scan_batches(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rows.extend(scan_sitemap_bytes(path, bytes(content)))
-            yield pd.DataFrame(rows, columns=_SM_COLUMNS)
-
-    return binary.select("path", "content").mapInPandas(
-        scan_batches, schema=SITEMAP_SCAN_SCHEMA
-    )
+    return _file_rows_df(binary, scan_sitemap_bytes, SITEMAP_SCAN_SCHEMA)
 
 
 def encode_sitemap(

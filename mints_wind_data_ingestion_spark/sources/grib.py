@@ -1,35 +1,41 @@
 """GRIB2 binary source → decoded wind records (SURVEY.md §2.10 X1).
 
 The reference shells out to a vendored JVM tool per file
-(converter.py:49-53: os.system grib2json). The Spark-native shape is:
+(converter.py:49-53: os.system grib2json). The Spark-native shape is
+ONE decode node, `decode_binary_df`:
 
     spark.read.format("binaryFile").load(landing_dir)   # (path, content)
-      .mapInPandas(decode_batch, schema=WIND_RECORD+path)
+      → sources._file_rows_df(binary, rows_of_file, DECODED_SCHEMA)
 
 — one row in (a GRIB2 file), many rows out (one per selected GRIB
 record), decoded executor-side in Arrow batches, with the record filter
 (parameterNumber/surface) applied inside the decoder exactly like the
-reference's --fp/--fs/--fv pushdown.
+reference's --fp/--fs/--fv pushdown. The batch scan (`read_grib_dir`),
+the streaming source, `operators.ingest` and the x_grib_* driver
+queries all decode through it; `scan_binary_df` (the quarantine
+variant) is the same file-to-rows node over `scan_grib2_bytes`.
 
 The GRIB2 bit-unpacking is real: `grib2codec` implements the WMO
 spec's sections 0-8 for the template family real NOAA pgrb2 files use
 (lat/lon grid 3.0, point-in-time product 4.0 and interval-statistics
 product 4.8, packings 5.0/5.2/5.3/5.4, optional bitmap),
 numpy-vectorized, round-tripped in tests against the reference's own
-golden field (data/u_comp.json, 65 160 points).
+golden field (data/u_comp.json, 65 160 points). Decode and scan share
+the codec's one message/field walk: `decode_grib2_bytes` raises the
+first field error that `scan_grib2_bytes` would report as a row.
 `fake_decoder` remains as a unit-test helper for plumbing tests that
 don't want to construct binary fixtures.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..schemas import WIND_RECORD
+from . import _file_rows_df
 
 __all__ = [
     "DECODED_SCHEMA",
@@ -46,10 +52,6 @@ __all__ = [
 DECODED_SCHEMA = StructType(
     [StructField("source_path", StringType()), *WIND_RECORD.fields]
 )
-
-#: record-selection predicate of converter.py:49-53 (10 m U/V wind)
-SELECT_PARAMS = {"parameterNumbers": (2, 3), "surface1Type": 103, "surface1Value": 10.0}
-
 
 def make_selector(
     fp: tuple[int, ...] | None = (2, 3),
@@ -145,32 +147,21 @@ def decode_binary_df(
     decoder: Callable[[bytes], list[dict]] | None = None,
 ) -> DataFrame:
     """Vectorized decode UDTF over a (path, content) binary DataFrame —
-    shared by the batch scan (`read_grib_dir`) and the streaming source
-    (`streaming.pipeline.run_grib_ingest_stream`): one GRIB2 file in,
-    one row per selected record out, decoded executor-side in Arrow
-    batches."""
+    shared by the batch scan (`read_grib_dir`), the streaming source
+    (`streaming.pipeline.run_grib_ingest_stream`) and the x_grib_*
+    driver queries (which pass `decoder=decode_grib2_bytes` to keep
+    every record): one GRIB2 file in, one row per selected record out,
+    decoded executor-side in Arrow batches."""
     decode = decoder or decode_grib2
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for rec in decode(bytes(content)):
-                    rows.append(
-                        {
-                            "source_path": path,
-                            "header": rec["header"],
-                            "recordedTime": rec.get("recordedTime"),
-                            "data": rec["data"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["source_path", "header", "recordedTime", "data"]
-            )
+    def rows_of_file(path: str, content: bytes) -> list[dict]:
+        return [
+            {"source_path": path, "header": rec["header"],
+             "recordedTime": rec.get("recordedTime"), "data": rec["data"]}
+            for rec in decode(content)
+        ]
 
-    return binary.select("path", "content").mapInPandas(
-        decode_batches, schema=DECODED_SCHEMA
-    )
+    return _file_rows_df(binary, rows_of_file, DECODED_SCHEMA)
 
 
 def read_grib_dir(
@@ -218,32 +209,22 @@ def scan_binary_df(
 
     select = selector or make_selector()
 
-    def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for m in scan_grib2_bytes(bytes(content)):
-                    rec = m["record"]
-                    if rec is not None and not select(rec["header"]):
-                        continue
-                    rows.append(
-                        {
-                            "source_path": path,
-                            "msg_offset": m["offset"],
-                            "error": m["error"],
-                            "header": rec["header"] if rec else None,
-                            "recordedTime": None,
-                            "data": rec["data"] if rec else None,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "source_path", "msg_offset", "error",
-                    "header", "recordedTime", "data",
-                ],
+    def rows_of_file(path: str, content: bytes) -> list[dict]:
+        rows = []
+        for m in scan_grib2_bytes(content):
+            rec = m["record"]
+            if rec is not None and not select(rec["header"]):
+                continue
+            rows.append(
+                {
+                    "source_path": path,
+                    "msg_offset": m["offset"],
+                    "error": m["error"],
+                    "header": rec["header"] if rec else None,
+                    "recordedTime": None,
+                    "data": rec["data"] if rec else None,
+                }
             )
+        return rows
 
-    return binary.select("path", "content").mapInPandas(
-        scan_batches, schema=SCAN_SCHEMA
-    )
+    return _file_rows_df(binary, rows_of_file, SCAN_SCHEMA)

@@ -90,7 +90,7 @@ import numpy as np
 #: exception classes a CORRUPT (framed-valid, garbage-body) message can
 #: surface from decode: explicit structural ValueErrors, out-of-range
 #: octet reads, short struct/zlib buffers, numpy size mismatches (also
-#: ValueError). The scan/skip quarantine surface converts exactly these
+#: ValueError). The scan quarantine surface converts exactly these
 #: into error rows; anything else is a codec BUG and stays loud.
 DECODE_ERRORS = (ValueError, IndexError, KeyError, struct.error, zlib.error)
 
@@ -843,69 +843,62 @@ def iter_grib2_messages(content: bytes):
         pos += msg_len
 
 
-def decode_grib2_bytes(
-    content: bytes, on_unsupported: str = "raise"
-) -> list[dict]:
+def _walk_fields(content: bytes):
+    """The one message/field walk behind decode and scan: yields
+    (offset, record, exception) per FIELD, exactly one of record /
+    exception set (a multi-field NCEP submessage yields several entries
+    sharing the message offset; r10). A message whose sections cannot
+    be split yields one exception entry; a bad submessage never hides
+    its decodable siblings. Framing errors raise from
+    `iter_grib2_messages` — they are file-level corruption."""
+    for pos, msg in iter_grib2_messages(content):
+        try:
+            snaps = _split_message_fields(msg)
+        except DECODE_ERRORS as exc:
+            yield pos, None, exc
+            continue
+        for snap in snaps:
+            try:
+                rec = _decode_field(msg, snap)
+            except DECODE_ERRORS as exc:
+                yield pos, None, exc
+                continue
+            yield pos, rec, None
+
+
+def decode_grib2_bytes(content: bytes) -> list[dict]:
     """Decode every message in a GRIB2 file into grib2json-shaped
     records: {"header": {...}, "data": [float32 values...]}.
 
     Header keys mirror the reference's golden fixture
     (data/u_comp.json) — numeric codes plus the human-readable *Name
     fields grib2json adds. Raises ValueError on a non-GRIB2 payload.
-    For a framed-valid message using a template outside the supported
+    A framed-valid message using a template outside the supported
     family (grid 3.0/3.10/3.20/3.30/3.40 / product
     4.0/4.1/4.2/4.5/4.6/4.8/4.9/4.10/4.11/4.12 / packing
     5.0/5.2/5.3/5.4/5.41, plus 5.40 when an OpenJPEG binding is
-    importable — without one 5.40 messages take the unsupported path
-    below):
-    `on_unsupported='raise'` (default) fails the whole file loud;
-    `'skip'` drops that message and decodes the rest — the
-    quarantine-not-corrupt mode (see scan_grib2_bytes for the variant
-    that reports what was dropped)."""
-    if on_unsupported not in ("raise", "skip"):
-        raise ValueError(f"on_unsupported={on_unsupported!r}")
+    importable) fails the whole file loud with the first field's
+    error; `scan_grib2_bytes` is the quarantine-not-corrupt variant
+    that reports each rejected field and keeps the rest."""
     records: list[dict] = []
-    for _pos, msg in iter_grib2_messages(content):
-        try:
-            snaps = _split_message_fields(msg)
-        except DECODE_ERRORS:
-            if on_unsupported == "raise":
-                raise
-            continue
-        for snap in snaps:  # field granularity: one bad submessage
-            try:  # never drops its siblings in 'skip' mode
-                records.append(_decode_field(msg, snap))
-            except DECODE_ERRORS:
-                if on_unsupported == "raise":
-                    raise
+    for _pos, rec, exc in _walk_fields(content):
+        if exc is not None:
+            raise exc
+        records.append(rec)
     return records
 
 
 def scan_grib2_bytes(content: bytes) -> list[dict]:
     """Per-field scan report: [{"offset", "record", "error"}] with
-    exactly one of record/error set, one entry per FIELD (a multi-
-    field NCEP submessage yields several entries sharing the message
-    offset; r10). Supported fields decode bit-identically to
+    exactly one of record/error set, one entry per field of
+    `_walk_fields`. Supported fields decode bit-identically to
     `decode_grib2_bytes`; unsupported-template or corrupt fields carry
-    their rejection text instead of poisoning the file — and a bad
-    submessage never drops its decodable siblings."""
-    out: list[dict] = []
-    for pos, msg in iter_grib2_messages(content):
-        try:
-            snaps = _split_message_fields(msg)
-        except DECODE_ERRORS as exc:
-            out.append({"offset": pos, "record": None,
-                        "error": _scan_error_text(exc)})
-            continue
-        for snap in snaps:
-            try:
-                out.append({"offset": pos,
-                            "record": _decode_field(msg, snap),
-                            "error": None})
-            except DECODE_ERRORS as exc:
-                out.append({"offset": pos, "record": None,
-                            "error": _scan_error_text(exc)})
-    return out
+    their rejection text instead of poisoning the file."""
+    return [
+        {"offset": pos, "record": rec,
+         "error": None if exc is None else _scan_error_text(exc)}
+        for pos, rec, exc in _walk_fields(content)
+    ]
 
 
 def _scan_error_text(exc: BaseException) -> str:

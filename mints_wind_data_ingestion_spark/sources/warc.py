@@ -14,9 +14,10 @@ Written from public specifications only:
   `.warc.gz` / `.wet.gz` files, which is what makes byte-range record
   access possible — the fixture encoder reproduces it.
 
-Spark shape: `binaryFile` scan → Arrow `mapInPandas` record iterator
-→ one row per WARC record, with the engine's standard typed-quarantine
-contract (sources/grib.py `scan_binary_df` is the template): a
+Spark shape: `binaryFile` scan → the package's one file-to-rows
+Arrow UDTF (`sources._file_rows_df`) → one row per WARC record, with
+the engine's standard typed-quarantine contract (sources/grib.py
+`scan_binary_df` is the template): a
 truncated gzip member, a trailer CRC mismatch, an oversized
 (decompression-bomb) member, or malformed WARC framing becomes an
 `error` row carrying the offending file/offset — never an exception
@@ -46,6 +47,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from . import _file_rows_df
 
 __all__ = [
     "encode_wet",
@@ -411,19 +414,10 @@ def scan_wet_df(
     binary DataFrame — one row per record, error rows for corrupt
     members/framing; `df.filter("error IS NOT NULL")` IS the
     quarantine table (the grib scan_binary_df contract)."""
-    import pandas as pd
-
-    def scan_batches(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rows.extend(
-                    scan_warc_bytes(path, bytes(content), max_member_bytes)
-                )
-            yield pd.DataFrame(rows, columns=_COLUMNS)
-
-    return binary.select("path", "content").mapInPandas(
-        scan_batches, schema=WARC_SCAN_SCHEMA
+    return _file_rows_df(
+        binary,
+        lambda path, content: scan_warc_bytes(path, content, max_member_bytes),
+        WARC_SCAN_SCHEMA,
     )
 
 
@@ -536,8 +530,6 @@ JSONL_SCAN_SCHEMA = StructType(
     ]
 )
 
-_JSONL_COLUMNS = [f.name for f in JSONL_SCAN_SCHEMA.fields]
-
 
 def scan_jsonl_bytes(
     path: str,
@@ -586,19 +578,10 @@ def scan_jsonl_df(
     the typed-quarantine contract. Parse the `line` column with
     `F.from_json` downstream — schema-on-read stays explicit, exactly
     like `read_wind_json` (SURVEY S3)."""
-    import pandas as pd
-
-    def scan_batches(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rows.extend(
-                    scan_jsonl_bytes(path, bytes(content), max_member_bytes)
-                )
-            yield pd.DataFrame(rows, columns=_JSONL_COLUMNS)
-
-    return binary.select("path", "content").mapInPandas(
-        scan_batches, schema=JSONL_SCAN_SCHEMA
+    return _file_rows_df(
+        binary,
+        lambda path, content: scan_jsonl_bytes(path, content, max_member_bytes),
+        JSONL_SCAN_SCHEMA,
     )
 
 

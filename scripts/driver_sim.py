@@ -5,6 +5,8 @@ owns the session), then:
   t1: entry(spark) smoke → rows >= 0, stable schema
   t2: each queries()[name](spark, sf0.01) vs oracle_sql()[name] in DuckDB
       (row count + sorted-column schema + order-insensitive value hash)
+  then the session-memo hit/miss/bypass counters per kind
+  (caching.memo_counts()) over the whole run
 
 Usage: python scripts/driver_sim.py [sf_dir]
 """
@@ -23,6 +25,7 @@ import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+from mints_wind_data_ingestion_spark import caching  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -78,6 +81,8 @@ def main() -> int:
         )
         if not ok:
             failures.append(name)
+    for kind, c in sorted(caching.memo_counts().items()):
+        print(f"memo {kind}: " + ", ".join(f"{k}={v}" for k, v in sorted(c.items())))
     print(f"RESULT: {len(qs) - len(failures)}/{len(qs)} queries match at {SF_DIR}")
     if failures:
         print("FAILED:", failures)

@@ -97,11 +97,9 @@ def _module_level_containers(tree: ast.Module):
 #: module-level containers in session-aware modules that are not session
 #: memos of the kind `caching.py` owns: the query registry itself, and
 #: the prepared-plan cache (an opt-in bench regime with its own switch)
-#: with the fused-signature memo it gates
 _NOT_SESSION_MEMOS = {
     ("plans/registry.py", "REGISTRY"),
     ("plans/registry.py", "_plan_cache"),
-    ("plans/composites.py", "_FUSED_SIGS"),
 }
 
 

@@ -21,6 +21,8 @@ import time
 from datetime import datetime, timezone
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from mints_wind_data_ingestion_spark.sources.grib2codec import (
     DECODE_ERRORS,
@@ -207,3 +209,65 @@ def test_bitmap_guard():
     out = scan_grib2_bytes(bytes(base))
     assert out[0]["record"] is None
     assert "bitmap" in out[0]["error"]
+
+
+def _complex_corpus():
+    """test_grib_complex.py's messages: the three complex packings of
+    its smooth field, and its NCEP submessage (two fields, one frame)."""
+    from tests.test_grib_complex import (
+        _mk,
+        _smooth_field,
+        _splice_submessage,
+    )
+
+    field = list(_smooth_field(60, 40))
+    msgs = [
+        encode_grib2_message(field, parameter_number=2, ref_time=RT,
+                             nx=60, ny=40, packing=p)
+        for p in ("complex", "complex_diff", "complex_diff1")
+    ]
+    _, m1 = _mk(2, 1)
+    _, m2 = _mk(3, 2, packing="complex")
+    return msgs + [_splice_submessage(m1, m2)]
+
+
+_BOTH_CORPORA = _corpus() + _complex_corpus()
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.data())
+def test_decode_is_the_scan_of_one_walk(data):
+    """Decode and scan share one field walk: on a file of one to three
+    corpus messages with up to six flipped body octets, a scan with no
+    error rows means decode returns exactly the scan's records (same
+    values, same order); otherwise decode raises the first scan
+    error's class and text. A framing error raises the same from
+    both."""
+    from mints_wind_data_ingestion_spark.sources.grib2codec import (
+        _scan_error_text,
+    )
+
+    parts = []
+    for _ in range(data.draw(st.integers(1, 3))):
+        b = bytearray(data.draw(st.sampled_from(_BOTH_CORPORA)))
+        for _ in range(data.draw(st.integers(0, 6))):
+            b[data.draw(st.integers(16, len(b) - 5))] = data.draw(
+                st.integers(0, 255))
+        parts.append(bytes(b))
+    blob = b"".join(parts)
+    try:
+        out = scan_grib2_bytes(blob)
+    except ValueError as framing:
+        with pytest.raises(ValueError) as ei:
+            decode_grib2_bytes(blob)
+        assert type(ei.value) is type(framing)
+        assert str(ei.value) == str(framing)
+        return
+    errors = [m["error"] for m in out if m["error"] is not None]
+    if not errors:
+        assert repr(decode_grib2_bytes(blob)) == repr(
+            [m["record"] for m in out])
+        return
+    with pytest.raises(DECODE_ERRORS) as ei:
+        decode_grib2_bytes(blob)
+    assert _scan_error_text(ei.value) == errors[0]

@@ -357,9 +357,9 @@ def test_submessage_decodes_every_field():
 
 def test_bad_submessage_never_drops_siblings():
     """Corrupting the SECOND field's packing template quarantines that
-    field alone; the first still decodes (scan) / survives skip mode."""
+    field alone; the first still decodes (the scan's error-free
+    records)."""
     from mints_wind_data_ingestion_spark.sources.grib2codec import (
-        decode_grib2_bytes,
         scan_grib2_bytes,
     )
 
@@ -376,7 +376,7 @@ def test_bad_submessage_never_drops_siblings():
     assert out[0]["error"] is None
     assert out[0]["record"]["header"]["parameterNumber"] == 2
     assert "5.99 unsupported" in out[1]["error"]
-    kept = decode_grib2_bytes(bytes(blob), on_unsupported="skip")
+    kept = [m["record"] for m in out if m["error"] is None]
     assert len(kept) == 1
     assert kept[0]["header"]["parameterNumber"] == 2
 

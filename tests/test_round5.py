@@ -13,6 +13,7 @@
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timezone
 
 import numpy as np
@@ -35,6 +36,7 @@ from mints_wind_data_ingestion_spark.sources.grib2codec import (
     decode_grib2_bytes,
     encode_grib2_file,
     encode_grib2_message,
+    scan_grib2_bytes,
 )
 
 NX, NY = 8, 4
@@ -436,8 +438,8 @@ def test_mixed_template_corpus_quarantine(spark, tmp_path):
     # 1. strict codec: the file fails loud
     with pytest.raises(ValueError, match=r"template 4\.32 unsupported"):
         decode_grib2_bytes(blob)
-    # 2. skip mode decodes the three valid messages
-    assert len(decode_grib2_bytes(blob, on_unsupported="skip")) == 3
+    # 2. the scan decodes the three valid messages
+    assert len([m for m in scan_grib2_bytes(blob) if m["error"] is None]) == 3
 
     binary = spark.read.format("binaryFile").load(str(landing))
     # 3. the reference's own selection (--fp 2/3 --fs 103 --fv 10.0)
@@ -542,6 +544,32 @@ def test_spread_work_factor_engages_on_amplified_work(spark, sf_dir):
     assert "Exchange" in plan
     par = spark.sparkContext.defaultParallelism
     assert big.rdd.getNumPartitions() == par
+
+
+def test_sizing_treats_a_vanished_input_file_as_unknown(spark, tmp_path):
+    """An input file deleted after the scan is planned makes the size
+    unknown (None), never an exception: `_spread` then spreads and the
+    BM25 gate takes its 32 salt buckets — the same branches a remote
+    store takes."""
+    from urllib.parse import urlparse
+
+    from mints_wind_data_ingestion_spark.plans.extensions import (
+        _bm25_salt_buckets,
+        _local_input_bytes,
+        _spread,
+    )
+
+    out = str(tmp_path / "t")
+    spark.range(100).coalesce(1).write.parquet(out)
+    df = spark.read.parquet(out)
+    [part] = df.inputFiles()
+    assert _local_input_bytes([part]) > 0
+    os.remove(urlparse(part).path)
+    assert _local_input_bytes(df.inputFiles()) is None
+    plan = _spread(df)._jdf.queryExecution().executedPlan().toString()
+    par = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({par})" in plan
+    assert _bm25_salt_buckets(df) == 32
 
 
 def test_spread_noop_on_in_memory_lineage(spark):

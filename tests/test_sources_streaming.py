@@ -960,3 +960,34 @@ def test_pipeline_streams_share_one_skeleton():
     from mints_wind_data_ingestion_spark.streaming import pipeline
 
     assert inspect.getsource(pipeline).count(".writeStream") == 1
+
+
+def test_binary_sources_share_one_decode_node():
+    """Every (path, content) reader in `sources/` is the one
+    file-to-rows UDTF (`sources._file_rows_df`), and the x_grib_*
+    queries decode through `decode_binary_df` — only `x_grib_reduced`,
+    which attaches per-point lat/lon in its decode pass, calls the
+    codec itself. A copied per-reader or per-query UDTF cannot grow
+    back."""
+    import ast
+    import pathlib
+
+    import mints_wind_data_ingestion_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    loop = 'zip(pdf["path"], pdf["content"])'
+    hits = {p.name: p.read_text().count(loop)
+            for p in sorted((root / "sources").glob("*.py"))}
+    assert {k: v for k, v in hits.items() if v} == {"__init__.py": 1}
+
+    callers = set()
+    for path in sorted((root / "plans").glob("*.py")):
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Name)
+                        and node.func.id == "decode_grib2_bytes"):
+                    callers.add(fn.name)
+    assert callers == {"x_grib_reduced"}
