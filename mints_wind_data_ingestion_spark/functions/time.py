@@ -22,7 +22,6 @@ __all__ = [
     "bucket",
     "bucket_3h",
     "bucket_6h",
-    "hour_delta",
     "fmt_recorded_time",
 ]
 
@@ -46,17 +45,6 @@ def bucket_3h(ts: Column | str) -> Column:
 def bucket_6h(ts: Column | str) -> Column:
     """6 h GFS run-cycle bucket (C1, converter.py:126)."""
     return bucket(ts, 6 * 3600)
-
-
-def hour_delta(a: Column | str, b: Column | str) -> Column:
-    """Whole-hour delta between two timestamps (C3, converter.py:132).
-
-    Done on epochs, not `hour()` fields — the reference's hour-field
-    subtraction breaks across midnight; this doesn't.
-    """
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    return F.abs(F.unix_timestamp(ca) - F.unix_timestamp(cb)) / F.lit(3600)
 
 
 def fmt_recorded_time(ts: Column | str) -> Column:

@@ -14,62 +14,46 @@ sampled away.
 Components stay registered (driver=False): they remain the public
 library API and the per-query pytest differential mirror still checks
 each one individually (tests/test_correctness.py runs the FULL
-registry). The composite oracles below reuse the component oracle SQL
-as subqueries wherever granularities differ, so Spark-vs-DuckDB parity
-is preserved through the fold.
+registry).
 
-Padding conventions (both engines, so schemas match exactly):
-- numeric slots are CAST to BIGINT / DOUBLE explicitly;
-- absent slots are typed NULLs;
-- key slots that mix types across parts are CAST to VARCHAR only when
-  every value is string-stable in both engines (ids, whole-second
-  timestamps); raw-timestamp columns keep TIMESTAMP type.
+Slot specs — one rule for both engines, so schemas match exactly. A
+tagged union is written ONCE, as a slot declaration
+(`"k1 bigint, s1/s2 string, d1 double"`) plus one
+`(tag, component, {slot: sql_expr})` entry per piece. Each piece
+projects to `'<tag>' AS part` (a nested composite's piece maps `part`
+through instead), then every declared slot as
+`CAST(<expr> AS <type>) AS <slot>`: every slot is cast to its declared
+type in both engines, and a slot the piece does not map is a typed
+NULL. The Spark plan runs that select list through one `selectExpr`
+per component frame (`unionByName`); the DuckDB oracle runs the same
+list over the component's oracle SQL (`UNION ALL`) — the two sides
+cannot drift. A slot mixes types across parts as `string` only when
+every value is string-stable in both engines (ids, whole-second
+timestamps); raw-timestamp columns keep `timestamp`.
+
+Pure composites register through `tagged_union`. Fused composites
+build their own frames (shared scans, `managed_cache`, fused passes)
+and project them through their spec with `_project`, one frame per
+component; their oracles are the same spec's `_union_sql`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from functools import reduce, wraps
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import punct_ratio, tokens, whitespace_ratio
-from .registry import REGISTRY, managed_cache, query, tables
+from .registry import REGISTRY, managed_cache, query, resolve_oracle, tables
 
 
-def _b(c: Column | str) -> Column:
-    return (F.col(c) if isinstance(c, str) else c).cast("bigint")
-
-
-def _d(c: Column | str) -> Column:
-    return (F.col(c) if isinstance(c, str) else c).cast("double")
-
-
-def _s(c: Column | str) -> Column:
-    return (F.col(c) if isinstance(c, str) else c).cast("string")
-
-
-def _nb() -> Column:
-    return F.lit(None).cast("bigint")
-
-
-def _nd() -> Column:
-    return F.lit(None).cast("double")
-
-
-def _ns() -> Column:
-    return F.lit(None).cast("string")
-
-
-def _nt() -> Column:
-    return F.lit(None).cast("timestamp")
-
-
-def _nbool() -> Column:
-    return F.lit(None).cast("boolean")
-
-
-def _oracle(name: str) -> str:
-    """Component oracle SQL, wrapped for use as a subquery."""
-    sql = REGISTRY[name].oracle
+def _oracle(name: str, sf_dir: str | None = None) -> str:
+    """Component oracle SQL, wrapped for use as a subquery. Lazy
+    oracles resolve at `sf_dir`; without one, only fixed oracles fold
+    (a composite oracle built at import time cannot call through)."""
+    q = REGISTRY[name]
+    sql = q.oracle if sf_dir is None else resolve_oracle(q, sf_dir)
     assert isinstance(sql, str) and sql, (
         f"component {name} has no fixed oracle (lazy oracles cannot be "
         "folded into composite SQL built at import time)"
@@ -77,13 +61,67 @@ def _oracle(name: str) -> str:
     return f"({sql})"
 
 
-def _part(df: DataFrame, tag: str, **slots: Column) -> DataFrame:
-    """Project a component result into a composite's superset schema."""
-    return df.select(F.lit(tag).alias("part"), *[c.alias(n) for n, c in slots.items()])
+def _same(names: str) -> dict[str, str]:
+    """Slots that take the component's same-named column."""
+    return {n: n for n in names.split()}
+
+
+def _pieces(slots: str, parts: list) -> list[tuple[str, list[str]]]:
+    """(component, select list) per piece of a spec: the part tag, then
+    every declared slot cast to its type, NULL where the piece has no
+    expression for it."""
+    decl = [(n, t) for item in slots.split(",")
+            for names, t in [item.split()] for n in names.split("/")]
+    out = []
+    for tag, comp, exprs in parts:
+        assert set(exprs) <= {n for n, _ in decl} | {"part"}, (comp, exprs)
+        part = exprs.get("part", f"'{tag}'")
+        out.append((comp, [f"{part} AS part"] + [
+            f"CAST({exprs.get(n, 'NULL')} AS {t}) AS {n}" for n, t in decl
+        ]))
+    return out
+
+
+def _project(slots: str, parts: list, frames: dict[str, DataFrame]) -> DataFrame:
+    """The Spark side of a spec: each component's frame through its
+    select list (one parse per piece), unioned by name."""
+    return reduce(DataFrame.unionByName, [
+        frames[comp].selectExpr(*exprs) for comp, exprs in _pieces(slots, parts)
+    ])
+
+
+def _union_sql(slots: str, parts: list, sf_dir: str | None = None) -> str:
+    """The DuckDB side of a spec: the same select lists over each
+    component's oracle."""
+    return "\nUNION ALL\n".join(
+        f"SELECT {', '.join(exprs)} FROM {_oracle(comp, sf_dir)}"
+        for comp, exprs in _pieces(slots, parts)
+    )
+
+
+def tagged_union(slots: str, parts: list, tags: tuple[str, ...], driver: bool = True):
+    """Register a pure composite — the tagged union of registered
+    components — with its plan and its oracle both derived from one
+    spec. Decorates a docstring-only stub: the stub's name and
+    docstring become the query's name and doc; the module attribute
+    becomes the plan builder."""
+    oracle = _union_sql(slots, parts)
+
+    def deco(stub):
+        @wraps(stub)
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return _project(slots, parts, {
+                comp: REGISTRY[comp].build(spark, sf_dir) for _, comp, _ in parts
+            })
+
+        return query(stub.__name__, oracle=oracle, tags=tags, driver=driver)(build)
+
+    return deco
 
 
 # ---------------------------------------------------------------------------
 # w_window_suite — w1 + w2 + w3 + w4 + w6 as ONE wide pass
+# (hand-written: one wide window pass, not a tagged union)
 # ---------------------------------------------------------------------------
 
 
@@ -155,36 +193,23 @@ def w_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a_multi_grouping — rollup + cube + grouping sets + pivot/unpivot + JSON agg
 # ---------------------------------------------------------------------------
 
-_MG_SLOTS = "k1 string, k2 string, n1/n2/n3 bigint, d1 double, g1/g2 bigint"
-
-
-def _mg_oracle() -> str:
-    def proj(tag: str, src: str, k1: str, k2: str, n1: str, n2: str, n3: str,
-             d1: str, g1: str, g2: str) -> str:
-        return (
-            f"SELECT '{tag}' AS part, CAST({k1} AS VARCHAR) AS k1, "
-            f"CAST({k2} AS VARCHAR) AS k2, CAST({n1} AS BIGINT) AS n1, "
-            f"CAST({n2} AS BIGINT) AS n2, CAST({n3} AS BIGINT) AS n3, "
-            f"CAST({d1} AS DOUBLE) AS d1, CAST({g1} AS BIGINT) AS g1, "
-            f"CAST({g2} AS BIGINT) AS g2 FROM {src}"
-        )
-
-    return "\nUNION ALL\n".join([
-        proj("rollup", _oracle("a_rollup"), "region_name", "nation_name",
-             "customer_cnt", "NULL", "NULL", "NULL", "grouping_id", "NULL"),
-        proj("cube", _oracle("a_cube"), "l_returnflag", "l_linestatus",
-             "cnt", "NULL", "NULL", "sum_qty", "NULL", "NULL"),
-        proj("gsets", _oracle("a_grouping_sets"), "event_type", "day",
-             "n", "NULL", "NULL", "NULL", "g_type", "g_day"),
-        proj("unpivot", _oracle("a_unpivot_types"), "bucket_ts", "event_type",
-             "event_cnt", "NULL", "NULL", "NULL", "NULL", "NULL"),
-        proj("json", _oracle("c11_json_extract"), "event_type", "NULL",
-             "cnt", "min_k", "max_k", "sum_k", "NULL", "NULL"),
-    ])
-
-
-@query("a_multi_grouping", oracle=_mg_oracle(), tags=("A2", "composite"))
-def a_multi_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
+@tagged_union(
+    "k1/k2 string, n1/n2/n3 bigint, d1 double, g1/g2 bigint",
+    [
+        ("rollup", "a_rollup", dict(k1="region_name", k2="nation_name",
+                                    n1="customer_cnt", g1="grouping_id")),
+        ("cube", "a_cube", dict(k1="l_returnflag", k2="l_linestatus", n1="cnt",
+                                d1="sum_qty")),
+        ("gsets", "a_grouping_sets", dict(k1="event_type", k2="day", n1="n",
+                                          g1="g_type", g2="g_day")),
+        ("unpivot", "a_unpivot_types", dict(k1="bucket_ts", k2="event_type",
+                                            n1="event_cnt")),
+        ("json", "c11_json_extract", dict(k1="event_type", n1="cnt", n2="min_k",
+                                          n3="max_k", d1="sum_k")),
+    ],
+    tags=("A2", "composite"),
+)
+def a_multi_grouping():
     """Multi-shape aggregation suite: ROLLUP (a_rollup), CUBE (a_cube),
     explicit GROUPING SETS (a_grouping_sets), the pivot→unpivot round
     trip (a_unpivot_types — whose input IS a_pivot_types' result, so
@@ -194,29 +219,6 @@ def a_multi_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
     every key that mixes types across parts rides a VARCHAR slot (ids
     and whole-second bucket timestamps only — string-stable in both
     engines)."""
-    r = {n: REGISTRY[n].build(spark, sf_dir) for n in (
-        "a_rollup", "a_cube", "a_grouping_sets", "a_unpivot_types",
-        "c11_json_extract")}
-    parts = [
-        _part(r["a_rollup"], "rollup", k1=_s("region_name"), k2=_s("nation_name"),
-              n1=_b("customer_cnt"), n2=_nb(), n3=_nb(), d1=_nd(),
-              g1=_b("grouping_id"), g2=_nb()),
-        _part(r["a_cube"], "cube", k1=_s("l_returnflag"), k2=_s("l_linestatus"),
-              n1=_b("cnt"), n2=_nb(), n3=_nb(), d1=_d("sum_qty"),
-              g1=_nb(), g2=_nb()),
-        _part(r["a_grouping_sets"], "gsets", k1=_s("event_type"), k2=_s("day"),
-              n1=_b("n"), n2=_nb(), n3=_nb(), d1=_nd(),
-              g1=_b("g_type"), g2=_b("g_day")),
-        _part(r["a_unpivot_types"], "unpivot", k1=_s("bucket_ts"), k2=_s("event_type"),
-              n1=_b("event_cnt"), n2=_nb(), n3=_nb(), d1=_nd(), g1=_nb(), g2=_nb()),
-        _part(r["c11_json_extract"], "json", k1=_s("event_type"), k2=_ns(),
-              n1=_b("cnt"), n2=_b("min_k"), n3=_b("max_k"), d1=_d("sum_k"),
-              g1=_nb(), g2=_nb()),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -224,31 +226,21 @@ def a_multi_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _dist_oracle() -> str:
-    return f"""
-    SELECT 'histogram' AS part, CAST(bin_id AS VARCHAR) AS k1,
-           CAST(bin_lo AS DOUBLE) AS d1, CAST(NULL AS DOUBLE) AS d2,
-           CAST(NULL AS DOUBLE) AS d3, CAST(n_orders AS BIGINT) AS n1
-    FROM {_oracle("a_histogram")}
-    UNION ALL
-    SELECT 'percentiles', event_type, CAST(p50 AS DOUBLE), CAST(p90 AS DOUBLE),
-           CAST(p99 AS DOUBLE), CAST(NULL AS BIGINT)
-    FROM {_oracle("a_percentiles_disc")}
-    UNION ALL
-    SELECT 'sketch_quantiles', event_type, CAST(p50_e6 AS DOUBLE),
-           CAST(p90_e6 AS DOUBLE), CAST(p99_e6 AS DOUBLE),
-           CAST(sketch_within_rank_err AS BIGINT)
-    FROM {_oracle("x_approx_quantiles")}
-    UNION ALL
-    SELECT 'hll', event_type, CAST(approx_within_5pct AS DOUBLE),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(exact_users AS BIGINT)
-    FROM {_oracle("x_approx_distinct")}
-    """
-
-
-@query("a_distribution_suite", oracle=_dist_oracle(), tags=("agg", "composite"))
-def a_distribution_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+@tagged_union(
+    "k1 string, d1/d2/d3 double, n1 bigint",
+    [
+        ("histogram", "a_histogram", dict(k1="bin_id", d1="bin_lo", n1="n_orders")),
+        ("percentiles", "a_percentiles_disc", dict(k1="event_type", d1="p50",
+                                                   d2="p90", d3="p99")),
+        ("sketch_quantiles", "x_approx_quantiles", dict(
+            k1="event_type", d1="p50_e6", d2="p90_e6", d3="p99_e6",
+            n1="sketch_within_rank_err")),
+        ("hll", "x_approx_distinct", dict(k1="event_type", d1="approx_within_5pct",
+                                          n1="exact_users")),
+    ],
+    tags=("agg", "composite"),
+)
+def a_distribution_suite():
     """Distribution/cardinality-statistics suite: the equal-width
     histogram over order totals (a_histogram), exact discrete
     percentiles of event values (a_percentiles_disc), the
@@ -257,25 +249,6 @@ def a_distribution_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     HyperLogLog++ distinct-count contract check next to the exact
     counts (x_approx_distinct), tagged into one superset. Every
     component's full row set and values flow through unchanged."""
-    hist = REGISTRY["a_histogram"].build(spark, sf_dir)
-    perc = REGISTRY["a_percentiles_disc"].build(spark, sf_dir)
-    sk = REGISTRY["x_approx_quantiles"].build(spark, sf_dir)
-    hll = REGISTRY["x_approx_distinct"].build(spark, sf_dir)
-    return _part(
-        hist, "histogram", k1=_s("bin_id"), d1=_d("bin_lo"), d2=_nd(), d3=_nd(),
-        n1=_b("n_orders"),
-    ).unionByName(
-        _part(perc, "percentiles", k1=_s("event_type"), d1=_d("p50"),
-              d2=_d("p90"), d3=_d("p99"), n1=_nb())
-    ).unionByName(
-        _part(sk, "sketch_quantiles", k1=_s("event_type"), d1=_d("p50_e6"),
-              d2=_d("p90_e6"), d3=_d("p99_e6"),
-              n1=F.col("sketch_within_rank_err").cast("bigint"))
-    ).unionByName(
-        _part(hll, "hll", k1=_s("event_type"),
-              d1=F.col("approx_within_5pct").cast("double"), d2=_nd(),
-              d3=_nd(), n1=_b("exact_users"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -283,36 +256,21 @@ def a_distribution_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _jt_oracle() -> str:
-    return f"""
-    SELECT 'asof' AS part, CAST(event_id AS BIGINT) AS event_id,
-           CAST(user_id AS BIGINT) AS user_id, ts AS ts1,
-           CAST(NULL AS TIMESTAMP) AS ts2,
-           CAST(last_click_value AS DOUBLE) AS d1, CAST(NULL AS BIGINT) AS n1
-    FROM {_oracle("j_asof_last_click")}
-    UNION ALL
-    SELECT 'range_windows', CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           w_start, w_end, CAST(value_sum AS DOUBLE), CAST(event_cnt AS BIGINT)
-    FROM {_oracle("j_range_windows")}
-    """
-
-
-@query("j_temporal", oracle=_jt_oracle(), tags=("join", "composite"))
-def j_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
+@tagged_union(
+    "event_id/user_id bigint, ts1/ts2 timestamp, d1 double, n1 bigint",
+    [
+        ("asof", "j_asof_last_click", dict(event_id="event_id", user_id="user_id",
+                                           ts1="ts", d1="last_click_value")),
+        ("range_windows", "j_range_windows", dict(ts1="w_start", ts2="w_end",
+                                                  d1="value_sum", n1="event_cnt")),
+    ],
+    tags=("join", "composite"),
+)
+def j_temporal():
     """Temporal-join suite: the as-of join (each error event picks the
     most recent click value — j_asof_last_click) and sliding-window
     aggregation as a broadcast range join (j_range_windows), tagged
     into one superset with native TIMESTAMP slots."""
-    asof = REGISTRY["j_asof_last_click"].build(spark, sf_dir)
-    rng = REGISTRY["j_range_windows"].build(spark, sf_dir)
-    return _part(
-        asof, "asof", event_id=_b("event_id"), user_id=_b("user_id"),
-        ts1=F.col("ts"), ts2=_nt(), d1=_d("last_click_value"), n1=_nb(),
-    ).unionByName(
-        _part(rng, "range_windows", event_id=_nb(), user_id=_nb(),
-              ts1=F.col("w_start"), ts2=F.col("w_end"), d1=_d("value_sum"),
-              n1=_b("event_cnt"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -320,47 +278,24 @@ def j_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ff_oracle() -> str:
-    return f"""
-    SELECT 'conjunctive' AS part, CAST(l_orderkey AS BIGINT) AS k1,
-           CAST(l_linenumber AS BIGINT) AS k2, CAST(NULL AS TIMESTAMP) AS ts,
-           CAST(NULL AS VARCHAR) AS s1, CAST(l_quantity AS DOUBLE) AS d1,
-           CAST(l_extendedprice AS DOUBLE) AS d2, CAST(l_discount AS DOUBLE) AS d3,
-           CAST(revenue AS DOUBLE) AS d4
-    FROM {_oracle("f1_conjunctive_filter")}
-    UNION ALL
-    SELECT 'exact_ts', CAST(event_id AS BIGINT), CAST(user_id AS BIGINT), ts,
-           event_type, CAST(value AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM {_oracle("f4_exact_timestamp")}
-    UNION ALL
-    SELECT 'retention', CAST(event_id AS BIGINT), CAST(NULL AS BIGINT), ts,
-           event_type, CAST(value AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM {_oracle("f5_retention_window")}
-    """
-
-
-@query("f_filter_suite", oracle=_ff_oracle(), tags=("F1", "F4", "F5", "composite"))
-def f_filter_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+@tagged_union(
+    "k1/k2 bigint, ts timestamp, s1 string, d1/d2/d3/d4 double",
+    [
+        ("conjunctive", "f1_conjunctive_filter", dict(
+            k1="l_orderkey", k2="l_linenumber", d1="l_quantity",
+            d2="l_extendedprice", d3="l_discount", d4="revenue")),
+        ("exact_ts", "f4_exact_timestamp", dict(k1="event_id", k2="user_id", ts="ts",
+                                                s1="event_type", d1="value")),
+        ("retention", "f5_retention_window", dict(k1="event_id", ts="ts",
+                                                  s1="event_type", d1="value")),
+    ],
+    tags=("F1", "F4", "F5", "composite"),
+)
+def f_filter_suite():
     """Filter suite: conjunctive pushdown predicate (f1), exact-
     timestamp point lookup on a scalar-subquery anchor (f4), and the
     7-day retention window (f5), tagged into one superset. Pushdown
     plan shapes stay pinned per-component in tests/test_plans.py."""
-    f1 = REGISTRY["f1_conjunctive_filter"].build(spark, sf_dir)
-    f4 = REGISTRY["f4_exact_timestamp"].build(spark, sf_dir)
-    f5 = REGISTRY["f5_retention_window"].build(spark, sf_dir)
-    return (
-        _part(f1, "conjunctive", k1=_b("l_orderkey"), k2=_b("l_linenumber"),
-              ts=_nt(), s1=_ns(), d1=_d("l_quantity"), d2=_d("l_extendedprice"),
-              d3=_d("l_discount"), d4=_d("revenue"))
-        .unionByName(_part(f4, "exact_ts", k1=_b("event_id"), k2=_b("user_id"),
-                           ts=F.col("ts"), s1=_s("event_type"), d1=_d("value"),
-                           d2=_nd(), d3=_nd(), d4=_nd()))
-        .unionByName(_part(f5, "retention", k1=_b("event_id"), k2=_nb(),
-                           ts=F.col("ts"), s1=_s("event_type"), d1=_d("value"),
-                           d2=_nd(), d3=_nd(), d4=_nd()))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -369,30 +304,21 @@ def f_filter_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _a3o1_oracle() -> str:
-    return f"""
-    SELECT 'argmax_per_key' AS part, CAST(o_custkey AS BIGINT) AS k1,
-           CAST(o_orderkey AS BIGINT) AS k2,
-           CAST(o_totalprice AS DOUBLE) AS d1, o_orderdate AS ts1,
-           CAST(NULL AS VARCHAR) AS s1
-    FROM {_oracle("a3_argmax_per_key")}
-    UNION ALL
-    SELECT 'topk', CAST(o_custkey AS BIGINT), CAST(o_orderkey AS BIGINT),
-           CAST(o_totalprice AS DOUBLE), o_orderdate, CAST(NULL AS VARCHAR)
-    FROM {_oracle("o1_topk_orders")}
-    UNION ALL
-    SELECT 'candidates', CAST(rank AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS DOUBLE), run_ts, url_path
-    FROM {_oracle("a3_discovery_candidates")}
-    UNION ALL
-    SELECT 'top1', CAST(rank AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS DOUBLE), run_ts, CAST(NULL AS VARCHAR)
-    FROM {_oracle("o1_discovery_top1")}
-    """
+_ORDER_SLOTS = dict(k1="o_custkey", k2="o_orderkey", d1="o_totalprice", ts1="o_orderdate")
 
 
-@query("a3_o1_suite", oracle=_a3o1_oracle(), tags=("A3", "O1", "composite"))
-def a3_o1_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+@tagged_union(
+    "k1/k2 bigint, d1 double, ts1 timestamp, s1 string",
+    [
+        ("argmax_per_key", "a3_argmax_per_key", _ORDER_SLOTS),
+        ("topk", "o1_topk_orders", _ORDER_SLOTS),
+        ("candidates", "a3_discovery_candidates", dict(k1="rank", ts1="run_ts",
+                                                       s1="url_path")),
+        ("top1", "o1_discovery_top1", dict(k1="rank", ts1="run_ts")),
+    ],
+    tags=("A3", "O1", "composite"),
+)
+def a3_o1_suite():
     """Selection suite — the four A3/O1 argmax-and-top-k shapes in one
     slot: per-customer argmax via one max_by hash aggregate
     (a3_argmax_per_key — the reference's newest-file-wins), global
@@ -400,20 +326,6 @@ def a3_o1_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     40-candidate GFS discovery generator with its URL paths
     (a3_discovery_candidates, converter.py:134-227 declaratively),
     and the single-scan first-available selection (o1_discovery_top1)."""
-    am = REGISTRY["a3_argmax_per_key"].build(spark, sf_dir)
-    tk = REGISTRY["o1_topk_orders"].build(spark, sf_dir)
-    c = REGISTRY["a3_discovery_candidates"].build(spark, sf_dir)
-    t1 = REGISTRY["o1_discovery_top1"].build(spark, sf_dir)
-    order = dict(k1=_b("o_custkey"), k2=_b("o_orderkey"),
-                 d1=_d("o_totalprice"), ts1=F.col("o_orderdate"), s1=_ns())
-    return (
-        _part(am, "argmax_per_key", **order)
-        .unionByName(_part(tk, "topk", **order))
-        .unionByName(_part(c, "candidates", k1=_b("rank"), k2=_nb(),
-                           d1=_nd(), ts1=F.col("run_ts"), s1=_s("url_path")))
-        .unionByName(_part(t1, "top1", k1=_b("rank"), k2=_nb(), d1=_nd(),
-                           ts1=F.col("run_ts"), s1=_ns()))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -421,50 +333,25 @@ def a3_o1_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _profsamp_oracle() -> str:
-    return f"""
-    SELECT 'mixture' AS part, CAST(doc_id AS BIGINT) AS k1, lang AS s1,
-           source AS s2, CAST(NULL AS VARCHAR) AS s3,
-           CAST(NULL AS BIGINT) AS n1, CAST(NULL AS BIGINT) AS n2
-    FROM {_oracle("x_sample_mixture")}
-    UNION ALL
-    SELECT 'stratified', CAST(doc_id AS BIGINT), source, CAST(NULL AS VARCHAR),
-           CAST(NULL AS VARCHAR), CAST(sample_rank AS BIGINT),
-           CAST(NULL AS BIGINT)
-    FROM {_oracle("x_sample_stratified")}
-    UNION ALL
-    SELECT 'split', CAST(doc_id AS BIGINT), split, CAST(NULL AS VARCHAR),
-           CAST(NULL AS VARCHAR), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-    FROM {_oracle("x_split_assign")}
-    UNION ALL
-    SELECT 'oversample', CAST(doc_id AS BIGINT), lang, CAST(NULL AS VARCHAR),
-           CAST(NULL AS VARCHAR), CAST(copy_no AS BIGINT),
-           CAST(NULL AS BIGINT)
-    FROM {_oracle("x_oversample")}
-    UNION ALL
-    SELECT 'negatives', CAST(anchor_id AS BIGINT), CAST(NULL AS VARCHAR),
-           CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           CAST(neg_no AS BIGINT), CAST(negative_id AS BIGINT)
-    FROM {_oracle("x_negative_pairs")}
-    UNION ALL
-    SELECT 'profile', CAST(NULL AS BIGINT), col_name, min_val, max_val,
-           CAST(n_null AS BIGINT), CAST(n_distinct AS BIGINT)
-    FROM {_oracle("x_profile_columns")}
-    UNION ALL
-    SELECT 'dq', CAST(NULL AS BIGINT), check_name, CAST(NULL AS VARCHAR),
-           CAST(NULL AS VARCHAR), CAST(n_violations AS BIGINT),
-           CAST(NULL AS BIGINT)
-    FROM {_oracle("x_dq_checks")}
-    UNION ALL
-    SELECT 'corr', CAST(NULL AS BIGINT), pair, CAST(NULL AS VARCHAR),
-           CAST(NULL AS VARCHAR), CAST(corr_e6 AS BIGINT),
-           CAST(NULL AS BIGINT)
-    FROM {_oracle("x_column_corr")}
-    """
-
-
-@query("x_profile_sample_suite", oracle=_profsamp_oracle(), tags=("ext", "sampling", "profile", "composite"))
-def x_profile_sample_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+@tagged_union(
+    "k1 bigint, s1/s2/s3 string, n1/n2 bigint",
+    [
+        ("mixture", "x_sample_mixture", dict(k1="doc_id", s1="lang", s2="source")),
+        ("stratified", "x_sample_stratified", dict(k1="doc_id", s1="source",
+                                                   n1="sample_rank")),
+        ("split", "x_split_assign", dict(k1="doc_id", s1="split")),
+        ("oversample", "x_oversample", dict(k1="doc_id", s1="lang", n1="copy_no")),
+        ("negatives", "x_negative_pairs", dict(k1="anchor_id", n1="neg_no",
+                                               n2="negative_id")),
+        ("profile", "x_profile_columns", dict(s1="col_name", s2="min_val",
+                                              s3="max_val", n1="n_null",
+                                              n2="n_distinct")),
+        ("dq", "x_dq_checks", dict(s1="check_name", n1="n_violations")),
+        ("corr", "x_column_corr", dict(s1="pair", n1="corr_e6")),
+    ],
+    tags=("ext", "sampling", "profile", "composite"),
+)
+def x_profile_sample_suite():
     """Dataset-audit + sampling suite (r5 fold), one driver slot for
     the eight dataset-management shapes: the single-scan column
     profile of `documents` (x_profile_columns), declarative
@@ -475,35 +362,6 @@ def x_profile_sample_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     minority-class oversampling, and contrastive negative-pair
     generation (operators.sampling). Every component's exact
     membership/rank/copy/pair/profile values ride the driver hash."""
-    names = ("x_sample_mixture", "x_sample_stratified", "x_split_assign",
-             "x_oversample", "x_negative_pairs", "x_profile_columns",
-             "x_dq_checks", "x_column_corr")
-    r = {n: REGISTRY[n].build(spark, sf_dir) for n in names}
-    parts = [
-        _part(r["x_sample_mixture"], "mixture", k1=_b("doc_id"),
-              s1=_s("lang"), s2=_s("source"), s3=_ns(), n1=_nb(), n2=_nb()),
-        _part(r["x_sample_stratified"], "stratified", k1=_b("doc_id"),
-              s1=_s("source"), s2=_ns(), s3=_ns(), n1=_b("sample_rank"),
-              n2=_nb()),
-        _part(r["x_split_assign"], "split", k1=_b("doc_id"),
-              s1=_s("split"), s2=_ns(), s3=_ns(), n1=_nb(), n2=_nb()),
-        _part(r["x_oversample"], "oversample", k1=_b("doc_id"),
-              s1=_s("lang"), s2=_ns(), s3=_ns(), n1=_b("copy_no"), n2=_nb()),
-        _part(r["x_negative_pairs"], "negatives", k1=_b("anchor_id"),
-              s1=_ns(), s2=_ns(), s3=_ns(), n1=_b("neg_no"),
-              n2=_b("negative_id")),
-        _part(r["x_profile_columns"], "profile", k1=_nb(),
-              s1=_s("col_name"), s2=_s("min_val"), s3=_s("max_val"),
-              n1=_b("n_null"), n2=_b("n_distinct")),
-        _part(r["x_dq_checks"], "dq", k1=_nb(), s1=_s("check_name"),
-              s2=_ns(), s3=_ns(), n1=_b("n_violations"), n2=_nb()),
-        _part(r["x_column_corr"], "corr", k1=_nb(), s1=_s("pair"),
-              s2=_ns(), s3=_ns(), n1=_b("corr_e6"), n2=_nb()),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -511,38 +369,21 @@ def x_profile_sample_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _tok_oracle() -> str:
-    return f"""
-    SELECT 'topk' AS part, CAST(NULL AS BIGINT) AS doc_id, token,
-           CAST(cnt AS BIGINT) AS n1, CAST(NULL AS BIGINT) AS n2
-    FROM {_oracle("x_token_topk")}
-    UNION ALL
-    SELECT 'zipf', CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR),
-           CAST(zipf_slope_e6 AS BIGINT), CAST(n_tokens AS BIGINT)
-    FROM {_oracle("x_token_zipf")}
-    UNION ALL
-    SELECT 'bpe', CAST(doc_id AS BIGINT), CAST(NULL AS VARCHAR),
-           CAST(bpe_cnt AS BIGINT), CAST(ws_cnt AS BIGINT)
-    FROM {_oracle("x_token_bpe")}
-    """
-
-
-@query("x_token_stats", oracle=_tok_oracle(), tags=("ext", "text", "composite"), driver=False)
-def x_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+@tagged_union(
+    "doc_id bigint, token string, n1/n2 bigint",
+    [
+        ("topk", "x_token_topk", dict(token="token", n1="cnt")),
+        ("zipf", "x_token_zipf", dict(n1="zipf_slope_e6", n2="n_tokens")),
+        ("bpe", "x_token_bpe", dict(doc_id="doc_id", n1="bpe_cnt", n2="ws_cnt")),
+    ],
+    tags=("ext", "text", "composite"),
+    driver=False,
+)
+def x_token_stats():
     """Token-statistics suite: corpus token-frequency top-20
     (x_token_topk), the Zipf-law slope fit over the top-100
     frequencies (x_token_zipf), and per-document whitespace + BPE-ish
     token counts (x_token_bpe), tagged into one superset."""
-    tk = REGISTRY["x_token_topk"].build(spark, sf_dir)
-    zf = REGISTRY["x_token_zipf"].build(spark, sf_dir)
-    bp = REGISTRY["x_token_bpe"].build(spark, sf_dir)
-    return (
-        _part(tk, "topk", doc_id=_nb(), token=_s("token"), n1=_b("cnt"), n2=_nb())
-        .unionByName(_part(zf, "zipf", doc_id=_nb(), token=_ns(),
-                           n1=_b("zipf_slope_e6"), n2=_b("n_tokens")))
-        .unionByName(_part(bp, "bpe", doc_id=_b("doc_id"), token=_ns(),
-                           n1=_b("bpe_cnt"), n2=_b("ws_cnt")))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -550,23 +391,19 @@ def x_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _clf_oracle() -> str:
-    return f"""
-    SELECT 'lang_confusion' AS part, lang AS k1, lang_pred AS k2,
-           CAST(n AS BIGINT) AS n1, CAST(NULL AS BIGINT) AS n2
-    FROM {_oracle("x_lang_confusion")}
-    UNION ALL
-    SELECT 'nearest_centroid', true_label, pred_label, CAST(n AS BIGINT),
-           CAST(NULL AS BIGINT)
-    FROM {_oracle("x_nearest_centroid")}
-    UNION ALL
-    SELECT 'centroids', label, CAST(pos AS VARCHAR), CAST(centroid_e6 AS BIGINT),
-           CAST(n_vecs AS BIGINT)
-    FROM {_oracle("x_label_centroids")}
-    """
+_CLF_SPEC = (
+    "k1/k2 string, n1/n2 bigint",
+    [
+        ("lang_confusion", "x_lang_confusion", dict(k1="lang", k2="lang_pred", n1="n")),
+        ("nearest_centroid", "x_nearest_centroid", dict(k1="true_label",
+                                                        k2="pred_label", n1="n")),
+        ("centroids", "x_label_centroids", dict(k1="label", k2="pos",
+                                                n1="centroid_e6", n2="n_vecs")),
+    ],
+)
 
 
-@query("x_classifier_eval", oracle=_clf_oracle(), tags=("ext", "composite"))
+@query("x_classifier_eval", oracle=_union_sql(*_CLF_SPEC), tags=("ext", "composite"))
 def x_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier-evaluation suite: the stopword language-ID confusion
     matrix (x_lang_confusion), the nearest-centroid classification
@@ -598,18 +435,14 @@ def x_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "label long, pos int, centroid_e6 long, n_vecs long",
     )
-    return (
-        _part(lc, "lang_confusion", k1=_s("lang"), k2=_s("lang_pred"),
-              n1=_b("n"), n2=_nb())
-        .unionByName(_part(nc, "nearest_centroid", k1=_s("true_label"),
-                           k2=_s("pred_label"), n1=_b("n"), n2=_nb()))
-        .unionByName(_part(ct, "centroids", k1=_s("label"), k2=_s("pos"),
-                           n1=_b("centroid_e6"), n2=_b("n_vecs")))
-    )
+    return _project(*_CLF_SPEC, {
+        "x_lang_confusion": lc, "x_nearest_centroid": nc, "x_label_centroids": ct,
+    })
 
 
 # ---------------------------------------------------------------------------
 # x_text_features — per-doc quality + lang-ID + fingerprint + quantile gate
+# (hand-written: a wide per-document join, not a tagged union)
 # ---------------------------------------------------------------------------
 
 _D_TOKS = r"list_filter(string_split_regex(text, '\s+'), x -> x <> '')"
@@ -731,46 +564,21 @@ def x_text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _text_suite_oracle() -> str:
-    return f"""
-    SELECT 'features' AS part, CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(NULL AS VARCHAR) AS token, CAST(NULL AS BIGINT) AS n1,
-           CAST(NULL AS BIGINT) AS n2,
-           CAST(n_chars AS BIGINT) AS n_chars,
-           CAST(token_cnt AS BIGINT) AS token_cnt,
-           CAST(avg_word_len AS DOUBLE) AS avg_word_len,
-           CAST(punct_ratio AS DOUBLE) AS punct_ratio,
-           CAST(ws_ratio AS DOUBLE) AS ws_ratio,
-           CAST(stopword_en AS DOUBLE) AS stopword_en,
-           lang, lang_pred, CAST(score AS DOUBLE) AS score,
-           CAST(fingerprint AS BIGINT) AS fingerprint,
-           CAST(type_token_ratio AS DOUBLE) AS type_token_ratio,
-           kept_q25
-    FROM {_oracle("x_text_features")}
-    UNION ALL
-    SELECT part, doc_id, token, n1, n2,
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           CAST(NULL AS DOUBLE), CAST(NULL AS BIGINT),
-           CAST(NULL AS DOUBLE), CAST(NULL AS BOOLEAN)
-    FROM {_oracle("x_token_stats")}
-    UNION ALL
-    SELECT 'bm25', CAST(doc_id AS BIGINT), CAST(NULL AS VARCHAR),
-           CAST(query_id AS BIGINT), CAST(rnk AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           CAST(NULL AS DOUBLE), CAST(score_e6 AS BIGINT),
-           CAST(NULL AS DOUBLE), CAST(NULL AS BOOLEAN)
-    FROM {_oracle("x_bm25_topk")}
-    """
-
-
-@query("x_text_suite", oracle=_text_suite_oracle(), tags=("ext", "text", "composite"))
-def x_text_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+@tagged_union(
+    "doc_id bigint, token string, n1/n2/n_chars/token_cnt bigint, "
+    "avg_word_len/punct_ratio/ws_ratio/stopword_en double, lang/lang_pred string, "
+    "score double, fingerprint bigint, type_token_ratio double, kept_q25 boolean",
+    [
+        ("features", "x_text_features", _same(
+            "doc_id n_chars token_cnt avg_word_len punct_ratio ws_ratio stopword_en "
+            "lang lang_pred score fingerprint type_token_ratio kept_q25")),
+        (None, "x_token_stats", _same("part doc_id token n1 n2")),
+        ("bm25", "x_bm25_topk", dict(doc_id="doc_id", n1="query_id", n2="rnk",
+                                     fingerprint="score_e6")),
+    ],
+    tags=("ext", "text", "composite"),
+)
+def x_text_suite():
     """Text-analysis suite (r5 fold): the wide per-document feature
     pass (x_text_features — quality metrics, language-ID, fingerprint,
     type-token ratio, quality-gate flag) plus the corpus token
@@ -784,66 +592,31 @@ def x_text_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     for coverage the pytest differential mirror already provides
     (identical DuckDB oracle, row-for-row equality vs x_bm25_topk
     pinned in tests/test_retrieval.py)."""
-    tf = REGISTRY["x_text_features"].build(spark, sf_dir)
-    tk = REGISTRY["x_token_stats"].build(spark, sf_dir)
-    bm = REGISTRY["x_bm25_topk"].build(spark, sf_dir)
-    feat = tf.select(
-        F.lit("features").alias("part"), _b("doc_id").alias("doc_id"),
-        _ns().alias("token"), _nb().alias("n1"), _nb().alias("n2"),
-        _b("n_chars").alias("n_chars"), _b("token_cnt").alias("token_cnt"),
-        _d("avg_word_len").alias("avg_word_len"),
-        _d("punct_ratio").alias("punct_ratio"),
-        _d("ws_ratio").alias("ws_ratio"),
-        _d("stopword_en").alias("stopword_en"),
-        _s("lang").alias("lang"), _s("lang_pred").alias("lang_pred"),
-        _d("score").alias("score"), _b("fingerprint").alias("fingerprint"),
-        _d("type_token_ratio").alias("type_token_ratio"),
-        F.col("kept_q25"),
-    )
-    toks = tk.select(
-        "part", "doc_id", "token", "n1", "n2",
-        _nb().alias("n_chars"), _nb().alias("token_cnt"),
-        _nd().alias("avg_word_len"), _nd().alias("punct_ratio"),
-        _nd().alias("ws_ratio"), _nd().alias("stopword_en"),
-        _ns().alias("lang"), _ns().alias("lang_pred"), _nd().alias("score"),
-        _nb().alias("fingerprint"), _nd().alias("type_token_ratio"),
-        _nbool().alias("kept_q25"),
-    )
-    def _bm_part(df, tag):
-        return df.select(
-            F.lit(tag).alias("part"), _b("doc_id").alias("doc_id"),
-            _ns().alias("token"), _b("query_id").alias("n1"),
-            _b("rnk").alias("n2"),
-            _nb().alias("n_chars"), _nb().alias("token_cnt"),
-            _nd().alias("avg_word_len"), _nd().alias("punct_ratio"),
-            _nd().alias("ws_ratio"), _nd().alias("stopword_en"),
-            _ns().alias("lang"), _ns().alias("lang_pred"), _nd().alias("score"),
-            _b("score_e6").alias("fingerprint"),
-            _nd().alias("type_token_ratio"), _nbool().alias("kept_q25"),
-        )
-
-    return feat.unionByName(toks).unionByName(_bm_part(bm, "bm25"))
 
 
 # ---------------------------------------------------------------------------
 # x_doc_transform — PII redaction + context-window chunking
+# (pii and chunk come from the spec; the pack part is hand-written)
 # ---------------------------------------------------------------------------
 
 
 #: packing geometry: 16 shards (hash of doc id), 512-token bins
 _PACK_SHARDS, _PACK_CAP = 16, 512
+#: the slots of both document unions (x_doc_transform, x_doc_pipeline_suite)
+_DOC_SLOTS = "doc_id/n1/n2/n3 bigint, txt string"
+_DT_PARTS = [
+    ("pii", "x_pii_redact", dict(doc_id="doc_id", n1="n_emails", n2="n_phones",
+                                 n3="n_ips", txt="redacted")),
+    ("chunk", "x_doc_chunks", dict(doc_id="doc_id", n1="chunk_id", n2="chunk_start",
+                                   n3="chunk_len", txt="chunk_text")),
+]
 
 
 def _dt_oracle() -> str:
-    return f"""
-    SELECT 'pii' AS part, CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(n_emails AS BIGINT) AS n1, CAST(n_phones AS BIGINT) AS n2,
-           CAST(n_ips AS BIGINT) AS n3, redacted AS txt
-    FROM {_oracle("x_pii_redact")}
-    UNION ALL
-    SELECT 'chunk', CAST(doc_id AS BIGINT), CAST(chunk_id AS BIGINT),
-           CAST(chunk_start AS BIGINT), CAST(chunk_len AS BIGINT), chunk_text
-    FROM {_oracle("x_doc_chunks")}
+    # pii and chunk come from the spec; pack stays written out on both
+    # sides: it is a window over chunks, and its bin arithmetic is
+    # spelled per dialect (DuckDB `//`, Spark floor of a double quotient)
+    return _union_sql(_DOC_SLOTS, _DT_PARTS) + f"""
     UNION ALL
     SELECT 'pack', CAST(doc_id AS BIGINT), CAST(chunk_id AS BIGINT),
            CAST(doc_id % {_PACK_SHARDS} AS BIGINT) * 1000000000000
@@ -890,25 +663,18 @@ def x_doc_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     start = F.sum("chunk_len").over(w) - F.col("chunk_len")
     pack = ch.select(
         F.lit("pack").alias("part"),
-        _b("doc_id").alias("doc_id"),
-        _b("chunk_id").alias("n1"),
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        F.col("chunk_id").cast("bigint").alias("n1"),
         # shard·10¹² + bin: 10¹² bins/shard ≈ 5·10¹⁴ tokens per shard
         # before the encoding could collide — beyond the 100 TB design
         # point (10⁶ overflowed at ~8.4·10⁹ corpus tokens)
         (shard.cast("bigint") * 1_000_000_000_000
          + F.floor(start / _PACK_CAP).cast("bigint")).alias("n2"),
         (start % _PACK_CAP).cast("bigint").alias("n3"),
-        _ns().alias("txt"),
+        F.lit(None).cast("string").alias("txt"),
     )
-    return (
-        _part(pii, "pii", doc_id=_b("doc_id"), n1=_b("n_emails"),
-              n2=_b("n_phones"), n3=_b("n_ips"), txt=_s("redacted"))
-        .unionByName(
-            _part(ch, "chunk", doc_id=_b("doc_id"), n1=_b("chunk_id"),
-                  n2=_b("chunk_start"), n3=_b("chunk_len"), txt=_s("chunk_text"))
-        )
-        .unionByName(pack)
-    )
+    frames = {"x_pii_redact": pii, "x_doc_chunks": ch}
+    return _project(_DOC_SLOTS, _DT_PARTS, frames).unionByName(pack)
 
 
 # ---------------------------------------------------------------------------
@@ -917,24 +683,18 @@ def x_doc_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _docpipe_oracle() -> str:
-    return f"""
-    SELECT part, doc_id, n1, n2, n3, txt FROM ({_dt_oracle()})
-    UNION ALL
-    SELECT 'curation', CAST(doc_id AS BIGINT), CAST(chunk_id AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), chunk_text
-    FROM {_oracle("x_curation_pipeline")}
-    UNION ALL
-    SELECT part, doc_id, n1, n2, n3, txt
-    FROM {_oracle("x_warc_ingest")}
-    UNION ALL
-    SELECT part, doc_id, n1, n2, n3, txt
-    FROM ({_oracle("x_cdx_select")})
-    """
-
-
-@query("x_doc_pipeline_suite", oracle=_docpipe_oracle(), tags=("ext", "text", "pipeline", "composite"))
-def x_doc_pipeline_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+@tagged_union(
+    _DOC_SLOTS,
+    [
+        (None, "x_doc_transform", _same("part doc_id n1 n2 n3 txt")),
+        ("curation", "x_curation_pipeline", dict(doc_id="doc_id", n1="chunk_id",
+                                                 txt="chunk_text")),
+        (None, "x_warc_ingest", _same("part doc_id n1 n2 n3 txt")),
+        (None, "x_cdx_select", _same("part doc_id n1 n2 n3 txt")),
+    ],
+    tags=("ext", "text", "pipeline", "composite"),
+)
+def x_doc_pipeline_suite():
     """Document-pipeline suite (r5 fold): the transformation trio —
     PII scrubbing, context-window chunking, and 512-token sequence
     packing (x_doc_transform) — plus the end-to-end corpus-curation
@@ -949,18 +709,11 @@ def x_doc_pipeline_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest-capture-per-SURT-urlkey with the key recomputed by the
     codegen'd surt_col, malformed lines as 'cdx_err' rows). A
     regression in any stage or composition flips the driver hash."""
-    dt = REGISTRY["x_doc_transform"].build(spark, sf_dir)
-    cu = REGISTRY["x_curation_pipeline"].build(spark, sf_dir)
-    wa = REGISTRY["x_warc_ingest"].build(spark, sf_dir)
-    cdx = REGISTRY["x_cdx_select"].build(spark, sf_dir)
-    return dt.unionByName(
-        _part(cu, "curation", doc_id=_b("doc_id"), n1=_b("chunk_id"),
-              n2=_nb(), n3=_nb(), txt=_s("chunk_text"))
-    ).unionByName(wa).unionByName(cdx)
 
 
 # ---------------------------------------------------------------------------
 # x_grouped_models — EWMA + OLS trend fit, joined wide per (user, event)
+# (hand-written: the models oracle is a join of two component oracles)
 # ---------------------------------------------------------------------------
 
 
@@ -1013,15 +766,18 @@ def x_grouped_models(spark: SparkSession, sf_dir: str) -> DataFrame:
         tables(spark, sf_dir)["lineitem"],
         "l_partkey", "l_extendedprice", "l_quantity",
     )
-    return (
-        _part(models, "models", k1=_b("user_id"), k2=_b("event_id"),
-              n1=_b("ewma_e6"), n2=_b("slope_e9"), n3=_b("resid_e6"))
-        .unionByName(
-            _part(wm, "wmedian", k1=_b("l_partkey"), k2=_nb(),
-                  n1=F.floor(F.col("wmedian") * 100 + F.lit(0.5))
-                  .cast("bigint"), n2=_nb(), n3=_nb())
-        )
-    )
+    # written out on both sides: the models oracle is a join of two
+    # component oracles, and both frames come from fused kernels
+    return models.selectExpr(
+        "'models' AS part", "CAST(user_id AS bigint) AS k1",
+        "CAST(event_id AS bigint) AS k2", "CAST(ewma_e6 AS bigint) AS n1",
+        "CAST(slope_e9 AS bigint) AS n2", "CAST(resid_e6 AS bigint) AS n3",
+    ).unionByName(wm.selectExpr(
+        "'wmedian' AS part", "CAST(l_partkey AS bigint) AS k1",
+        "CAST(NULL AS bigint) AS k2",
+        "CAST(floor(wmedian * 100 + 0.5) AS bigint) AS n1",
+        "CAST(NULL AS bigint) AS n2", "CAST(NULL AS bigint) AS n3",
+    ))
 
 
 # ---------------------------------------------------------------------------
@@ -1029,55 +785,38 @@ def x_grouped_models(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _et_oracle() -> str:
-    return f"""
-    SELECT 'quant' AS part, CAST(vec_id AS BIGINT) AS vec_id,
-           CAST(scale_e9 AS BIGINT) AS n1, CAST(q_l1 AS BIGINT) AS n2,
-           CAST(err_e12 AS BIGINT) AS n3
-    FROM {_oracle("x_embed_quantize")}
-    UNION ALL
-    SELECT 'standardize', CAST(vec_id AS BIGINT), CAST(znorm2_e6 AS BIGINT),
-           CAST(zmax_e6 AS BIGINT), CAST(NULL AS BIGINT)
-    FROM {_oracle("x_embed_standardize")}
-    """
-
-
-@query("x_embed_transform", oracle=_et_oracle(), tags=("ext", "similarity", "composite"), driver=False)
-def x_embed_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
+@tagged_union(
+    "vec_id/n1/n2/n3 bigint",
+    [
+        ("quant", "x_embed_quantize", dict(vec_id="vec_id", n1="scale_e9", n2="q_l1",
+                                           n3="err_e12")),
+        ("standardize", "x_embed_standardize", dict(vec_id="vec_id", n1="znorm2_e6",
+                                                    n2="zmax_e6")),
+    ],
+    tags=("ext", "similarity", "composite"),
+    driver=False,
+)
+def x_embed_transform():
     """Embedding-transformation suite: int8 symmetric quantization with
     exact reconstruction error (x_embed_quantize — the storage/serving
     compression step) and per-dimension corpus standardization
     (x_embed_standardize — the whitening-prep step), tagged into one
     superset; both components' full quantized outputs ride the hash."""
-    q = REGISTRY["x_embed_quantize"].build(spark, sf_dir)
-    st = REGISTRY["x_embed_standardize"].build(spark, sf_dir)
-    return _part(
-        q, "quant", vec_id=_b("vec_id"), n1=_b("scale_e9"), n2=_b("q_l1"),
-        n3=_b("err_e12"),
-    ).unionByName(
-        _part(st, "standardize", vec_id=_b("vec_id"), n1=_b("znorm2_e6"),
-              n2=_b("zmax_e6"), n3=_nb())
-    )
 
 
-def _embed_suite_oracle() -> str:
-    return f"""
-    SELECT part, vec_id, n1, n2, n3, CAST(NULL AS DOUBLE) AS d1
-    FROM {_oracle("x_embed_transform")}
-    UNION ALL
-    SELECT 'cluster', CAST(vec_id AS BIGINT), CAST(cluster_id AS BIGINT),
-           CAST(is_representative AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS DOUBLE)
-    FROM {_oracle("x_embed_cluster")}
-    UNION ALL
-    SELECT 'neardup', CAST(id_a AS BIGINT), CAST(id_b AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(cosine_sim AS DOUBLE)
-    FROM {_oracle("x_dedup_embedding")}
-    """
+_EMB_SPEC = (
+    "vec_id/n1/n2/n3 bigint, d1 double",
+    [
+        (None, "x_embed_transform", _same("part vec_id n1 n2 n3")),
+        ("cluster", "x_embed_cluster", dict(vec_id="vec_id", n1="cluster_id",
+                                            n2="is_representative")),
+        ("neardup", "x_dedup_embedding", dict(vec_id="id_a", n1="id_b",
+                                              d1="cosine_sim")),
+    ],
+)
 
 
-@query("x_embedding_suite", oracle=_embed_suite_oracle(), tags=("ext", "similarity", "composite"))
+@query("x_embedding_suite", oracle=_union_sql(*_EMB_SPEC), tags=("ext", "similarity", "composite"))
 def x_embedding_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-workload suite (r5 fold): the transformation parts
     (int8 quantization + corpus standardization, x_embed_transform),
@@ -1106,18 +845,9 @@ def x_embedding_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select("vec_id"), nd.select("id_a", "id_b"), id_col="vec_id"
     )
     tr = REGISTRY["x_embed_transform"].build(spark, sf_dir)
-    return (
-        tr.withColumn("d1", _nd())
-        .unionByName(
-            _part(cl, "cluster", vec_id=_b("vec_id"), n1=_b("cluster_id"),
-                  n2=F.col("is_representative").cast("bigint"), n3=_nb(),
-                  d1=_nd())
-        )
-        .unionByName(
-            _part(nd, "neardup", vec_id=_b("id_a"), n1=_b("id_b"),
-                  n2=_nb(), n3=_nb(), d1=_d("cosine_sim"))
-        )
-    )
+    return _project(*_EMB_SPEC, {
+        "x_embed_transform": tr, "x_embed_cluster": cl, "x_dedup_embedding": nd,
+    })
 
 
 # ---------------------------------------------------------------------------
@@ -1126,52 +856,24 @@ def x_embedding_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _qtpch_oracle() -> str:
-    return f"""
-    SELECT 'q10' AS part, CAST(c_custkey AS BIGINT) AS k1,
-           CAST(NULL AS BIGINT) AS k2, c_name AS s1, n_name AS s2,
-           CAST(NULL AS TIMESTAMP) AS ts1, CAST(NULL AS BIGINT) AS n1,
-           CAST(revenue AS DOUBLE) AS d1, CAST(c_acctbal AS DOUBLE) AS d2
-    FROM {_oracle("q10_returned_items")}
-    UNION ALL
-    SELECT 'q18', CAST(c_custkey AS BIGINT), CAST(o_orderkey AS BIGINT),
-           c_name, CAST(NULL AS VARCHAR), o_orderdate, CAST(NULL AS BIGINT),
-           CAST(o_totalprice AS DOUBLE), CAST(total_qty AS DOUBLE)
-    FROM {_oracle("q18_large_volume_customers")}
-    UNION ALL
-    SELECT 'q5', CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), n_name,
-           CAST(NULL AS VARCHAR), CAST(NULL AS TIMESTAMP),
-           CAST(NULL AS BIGINT), CAST(revenue AS DOUBLE),
-           CAST(NULL AS DOUBLE)
-    FROM {_oracle("q5_local_supplier_volume")}
-    UNION ALL
-    SELECT 'q7', CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), supp_nation,
-           cust_nation, CAST(NULL AS TIMESTAMP), CAST(l_year AS BIGINT),
-           CAST(revenue AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM {_oracle("q7_volume_shipping")}
-    UNION ALL
-    SELECT 'q6', CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           CAST(NULL AS TIMESTAMP), CAST(NULL AS BIGINT),
-           CAST(revenue AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM {_oracle("q6_forecast_revenue")}
-    UNION ALL
-    SELECT 'q14', CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           CAST(NULL AS TIMESTAMP), CAST(NULL AS BIGINT),
-           CAST(promo_pct AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM {_oracle("q14_promo_revenue")}
-    UNION ALL
-    SELECT 'q17', CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           CAST(NULL AS TIMESTAMP), CAST(NULL AS BIGINT),
-           CAST(avg_yearly AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM {_oracle("q17_small_qty_revenue")}
-    """
-
-
-@query("q_tpch_suite", oracle=_qtpch_oracle(), tags=("J5", "A2", "O1", "bench", "composite"))
-def q_tpch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+@tagged_union(
+    "k1/k2 bigint, s1/s2 string, ts1 timestamp, n1 bigint, d1/d2 double",
+    [
+        ("q10", "q10_returned_items", dict(k1="c_custkey", s1="c_name", s2="n_name",
+                                           d1="revenue", d2="c_acctbal")),
+        ("q18", "q18_large_volume_customers", dict(
+            k1="c_custkey", k2="o_orderkey", s1="c_name", ts1="o_orderdate",
+            d1="o_totalprice", d2="total_qty")),
+        ("q5", "q5_local_supplier_volume", dict(s1="n_name", d1="revenue")),
+        ("q7", "q7_volume_shipping", dict(s1="supp_nation", s2="cust_nation",
+                                          n1="l_year", d1="revenue")),
+        ("q6", "q6_forecast_revenue", dict(d1="revenue")),
+        ("q14", "q14_promo_revenue", dict(d1="promo_pct")),
+        ("q17", "q17_small_qty_revenue", dict(d1="avg_yearly")),
+    ],
+    tags=("J5", "A2", "O1", "bench", "composite"),
+)
+def q_tpch_suite():
     """TPC-H bench suite — the seven classic query shapes outside the
     lineitem pair, tagged into one superset: returned-items top-20
     (Q10, dual-fact pushdown + 4-way join), large-volume customers
@@ -1182,35 +884,6 @@ def q_tpch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery). Every component's exact row set rides the driver hash;
     each keeps its standalone registry entry, plan pins, and pytest
     differential."""
-    parts = [
-        ("q10", "q10_returned_items",
-         dict(k1=_b("c_custkey"), k2=_nb(), s1=_s("c_name"), s2=_s("n_name"),
-              ts1=_nt(), n1=_nb(), d1=_d("revenue"), d2=_d("c_acctbal"))),
-        ("q18", "q18_large_volume_customers",
-         dict(k1=_b("c_custkey"), k2=_b("o_orderkey"), s1=_s("c_name"),
-              s2=_ns(), ts1=F.col("o_orderdate"), n1=_nb(),
-              d1=_d("o_totalprice"), d2=_d("total_qty"))),
-        ("q5", "q5_local_supplier_volume",
-         dict(k1=_nb(), k2=_nb(), s1=_s("n_name"), s2=_ns(), ts1=_nt(),
-              n1=_nb(), d1=_d("revenue"), d2=_nd())),
-        ("q7", "q7_volume_shipping",
-         dict(k1=_nb(), k2=_nb(), s1=_s("supp_nation"), s2=_s("cust_nation"),
-              ts1=_nt(), n1=_b("l_year"), d1=_d("revenue"), d2=_nd())),
-        ("q6", "q6_forecast_revenue",
-         dict(k1=_nb(), k2=_nb(), s1=_ns(), s2=_ns(), ts1=_nt(), n1=_nb(),
-              d1=_d("revenue"), d2=_nd())),
-        ("q14", "q14_promo_revenue",
-         dict(k1=_nb(), k2=_nb(), s1=_ns(), s2=_ns(), ts1=_nt(), n1=_nb(),
-              d1=_d("promo_pct"), d2=_nd())),
-        ("q17", "q17_small_qty_revenue",
-         dict(k1=_nb(), k2=_nb(), s1=_ns(), s2=_ns(), ts1=_nt(), n1=_nb(),
-              d1=_d("avg_yearly"), d2=_nd())),
-    ]
-    out = None
-    for tag, name, slots in parts:
-        piece = _part(REGISTRY[name].build(spark, sf_dir), tag, **slots)
-        out = piece if out is None else out.unionByName(piece)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1218,28 +891,20 @@ def q_tpch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _jlw_oracle() -> str:
-    return f"""
-    SELECT 'uv_join' AS part, bucket_ts, CAST(user_id AS BIGINT) AS k1,
-           CAST(NULL AS VARCHAR) AS s1, CAST(NULL AS VARCHAR) AS s2,
-           CAST(NULL AS TIMESTAMP) AS ts2, CAST(u_value AS DOUBLE) AS d1,
-           CAST(v_value AS DOUBLE) AS d2, CAST(magnitude AS DOUBLE) AS d3
-    FROM {_oracle("j1_uv_component_join")}
-    UNION ALL
-    SELECT 'merge', bucket_ts, CAST(event_id AS BIGINT), event_type,
-           CAST(NULL AS VARCHAR), ts, CAST(value AS DOUBLE),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM {_oracle("j4_upsert_merge")}
-    UNION ALL
-    SELECT 'staleness', bucket_ts, CAST(NULL AS BIGINT), event_type, action,
-           CAST(NULL AS TIMESTAMP), CAST(NULL AS DOUBLE),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM {_oracle("f7_staleness_decision")}
-    """
-
-
-@query("j_latest_wins_suite", oracle=_jlw_oracle(), tags=("J1", "J4", "F7", "composite"))
-def j_latest_wins_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+@tagged_union(
+    "bucket_ts timestamp, k1 bigint, s1/s2 string, ts2 timestamp, d1/d2/d3 double",
+    [
+        ("uv_join", "j1_uv_component_join", dict(
+            bucket_ts="bucket_ts", k1="user_id", d1="u_value", d2="v_value",
+            d3="magnitude")),
+        ("merge", "j4_upsert_merge", dict(bucket_ts="bucket_ts", k1="event_id",
+                                          s1="event_type", ts2="ts", d1="value")),
+        ("staleness", "f7_staleness_decision", dict(bucket_ts="bucket_ts",
+                                                    s1="event_type", s2="action")),
+    ],
+    tags=("J1", "J4", "F7", "composite"),
+)
+def j_latest_wins_suite():
     """Latest-wins suite — the reference pipeline's three conditional
     max_by shapes over events, tagged into one superset: U⋈V component
     alignment without a self-join (j1_uv_component_join), the
@@ -1247,24 +912,6 @@ def j_latest_wins_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     insert/replace/skip staleness decision (f7_staleness_decision).
     Each component stays a single-scan single-shuffle aggregation;
     the union preserves every component row bit-for-bit."""
-    j1 = REGISTRY["j1_uv_component_join"].build(spark, sf_dir)
-    j4 = REGISTRY["j4_upsert_merge"].build(spark, sf_dir)
-    f7 = REGISTRY["f7_staleness_decision"].build(spark, sf_dir)
-    return (
-        _part(j1, "uv_join", bucket_ts=F.col("bucket_ts"), k1=_b("user_id"),
-              s1=_ns(), s2=_ns(), ts2=_nt(), d1=_d("u_value"),
-              d2=_d("v_value"), d3=_d("magnitude"))
-        .unionByName(
-            _part(j4, "merge", bucket_ts=F.col("bucket_ts"),
-                  k1=_b("event_id"), s1=_s("event_type"), s2=_ns(),
-                  ts2=F.col("ts"), d1=_d("value"), d2=_nd(), d3=_nd())
-        )
-        .unionByName(
-            _part(f7, "staleness", bucket_ts=F.col("bucket_ts"), k1=_nb(),
-                  s1=_s("event_type"), s2=_s("action"), ts2=_nt(),
-                  d1=_nd(), d2=_nd(), d3=_nd())
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1272,39 +919,22 @@ def j_latest_wins_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _qli_oracle() -> str:
-    return f"""
-    SELECT 'q1' AS part, l_returnflag AS s1, l_linestatus AS s2,
-           CAST(sum_qty AS DOUBLE) AS d1, CAST(sum_base_price AS DOUBLE) AS d2,
-           CAST(sum_disc_price AS DOUBLE) AS d3, CAST(count_order AS BIGINT) AS n1,
-           CAST(NULL AS BIGINT) AS k1, CAST(NULL AS TIMESTAMP) AS ts1
-    FROM {_oracle("q1_pricing_summary")}
-    UNION ALL
-    SELECT 'q3', o_orderpriority, CAST(NULL AS VARCHAR),
-           CAST(revenue AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(NULL AS DOUBLE), CAST(NULL AS BIGINT),
-           CAST(l_orderkey AS BIGINT), o_orderdate
-    FROM {_oracle("q3_shipping_priority")}
-    """
-
-
-@query("q_lineitem_suite", oracle=_qli_oracle(), tags=("A2", "O1", "bench", "composite"))
-def q_lineitem_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+@tagged_union(
+    "s1/s2 string, d1/d2/d3 double, n1/k1 bigint, ts1 timestamp",
+    [
+        ("q1", "q1_pricing_summary", dict(
+            s1="l_returnflag", s2="l_linestatus", d1="sum_qty",
+            d2="sum_base_price", d3="sum_disc_price", n1="count_order")),
+        ("q3", "q3_shipping_priority", dict(s1="o_orderpriority", d1="revenue",
+                                            k1="l_orderkey", ts1="o_orderdate")),
+    ],
+    tags=("A2", "O1", "bench", "composite"),
+)
+def q_lineitem_suite():
     """Lineitem bench suite: the wide scan → tiny-key hash aggregate
     (TPC-H Q1 shape) and the selective multi-join → aggregate → top-10
     (TPC-H Q3 shape), tagged into one superset — the two canonical
     lineitem access patterns in one driver slot."""
-    q1 = REGISTRY["q1_pricing_summary"].build(spark, sf_dir)
-    q3 = REGISTRY["q3_shipping_priority"].build(spark, sf_dir)
-    return _part(
-        q1, "q1", s1=_s("l_returnflag"), s2=_s("l_linestatus"),
-        d1=_d("sum_qty"), d2=_d("sum_base_price"), d3=_d("sum_disc_price"),
-        n1=_b("count_order"), k1=_nb(), ts1=_nt(),
-    ).unionByName(
-        _part(q3, "q3", s1=_s("o_orderpriority"), s2=_ns(), d1=_d("revenue"),
-              d2=_nd(), d3=_nd(), n1=_nb(), k1=_b("l_orderkey"),
-              ts1=F.col("o_orderdate"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1313,89 +943,33 @@ def q_lineitem_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _lmm_oracle(sf_dir: str) -> str:
-    # LAZY composite oracle (the only one): the two image parts embed
-    # replica-derived literals, so the whole union resolves per sf_dir
-    # (resolve_oracle calls through; fixed component SQL is unchanged)
-    from .registry import resolve_oracle
+_LMM_SPEC = (
+    "k1/k2/n1/n2/n3/n4/n5 bigint, d1/d2/d3 double",
+    [
+        ("grid", "x_grid_stats", dict(k1="label", k2="lat_band", n1="cell_cnt",
+                                      d1="vmin", d2="vmax", d3="vavg_q")),
+        ("zorder", "x_zorder_stats", dict(k1="z_bucket", n1="n", n2="qu_min",
+                                          n3="qu_max", n4="qv_min", n5="qv_max")),
+        ("mm_decode", "x_mm_decode", dict(k1="doc_id", n1="n_bytes", n2="first_byte",
+                                          n3="checksum", n4="width", n5="height")),
+        ("mm_transform", "x_mm_transform", dict(
+            k1="doc_id", n1="out_width", n2="out_height", n3="mean_r_e6",
+            n4="px_sum", n5="px_sumsq")),
+        ("image_dhash", "x_image_dhash", dict(k1="doc_id", n1="dhash")),
+        ("image_pairs", "x_image_dedup", dict(k1="id_a", k2="id_b", n1="hamming")),
+        ("video_sig", "x_video_sig", dict(k1="doc_id", k2="frame_idx", n1="fhash")),
+        ("video_pairs", "x_video_dedup", dict(k1="id_a", k2="id_b", d1="jaccard")),
+        ("audio_sig", "x_audio_sig", dict(k1="doc_id", k2="frame_idx", n1="fhash")),
+        ("audio_pairs", "x_audio_dedup", dict(k1="id_a", k2="id_b", d1="jaccard")),
+    ],
+)
 
-    img_h = resolve_oracle(REGISTRY["x_image_dhash"], sf_dir)
-    img_p = resolve_oracle(REGISTRY["x_image_dedup"], sf_dir)
-    vid_s = resolve_oracle(REGISTRY["x_video_sig"], sf_dir)
-    vid_p = resolve_oracle(REGISTRY["x_video_dedup"], sf_dir)
-    aud_s = resolve_oracle(REGISTRY["x_audio_sig"], sf_dir)
-    aud_p = resolve_oracle(REGISTRY["x_audio_dedup"], sf_dir)
-    return f"""
-    SELECT 'grid' AS part, CAST(label AS BIGINT) AS k1,
-           CAST(lat_band AS BIGINT) AS k2, CAST(cell_cnt AS BIGINT) AS n1,
-           CAST(NULL AS BIGINT) AS n2, CAST(NULL AS BIGINT) AS n3,
-           CAST(NULL AS BIGINT) AS n4, CAST(NULL AS BIGINT) AS n5,
-           CAST(vmin AS DOUBLE) AS d1, CAST(vmax AS DOUBLE) AS d2,
-           CAST(vavg_q AS DOUBLE) AS d3
-    FROM {_oracle("x_grid_stats")}
-    UNION ALL
-    SELECT 'zorder', CAST(z_bucket AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(n AS BIGINT), CAST(qu_min AS BIGINT), CAST(qu_max AS BIGINT),
-           CAST(qv_min AS BIGINT), CAST(qv_max AS BIGINT),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM {_oracle("x_zorder_stats")}
-    UNION ALL
-    SELECT 'mm_decode', CAST(doc_id AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(n_bytes AS BIGINT), CAST(first_byte AS BIGINT),
-           CAST(checksum AS BIGINT), CAST(width AS BIGINT),
-           CAST(height AS BIGINT),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM {_oracle("x_mm_decode")}
-    UNION ALL
-    SELECT 'mm_transform', CAST(doc_id AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(out_width AS BIGINT), CAST(out_height AS BIGINT),
-           CAST(mean_r_e6 AS BIGINT), CAST(px_sum AS BIGINT),
-           CAST(px_sumsq AS BIGINT),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM {_oracle("x_mm_transform")}
-    UNION ALL
-    SELECT 'image_dhash', CAST(doc_id AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(dhash AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM ({img_h})
-    UNION ALL
-    SELECT 'image_pairs', CAST(id_a AS BIGINT), CAST(id_b AS BIGINT),
-           CAST(hamming AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM ({img_p})
-    UNION ALL
-    SELECT 'video_sig', CAST(doc_id AS BIGINT), CAST(frame_idx AS BIGINT),
-           CAST(fhash AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM ({vid_s})
-    UNION ALL
-    SELECT 'video_pairs', CAST(id_a AS BIGINT), CAST(id_b AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT),
-           CAST(jaccard AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM ({vid_p})
-    UNION ALL
-    SELECT 'audio_sig', CAST(doc_id AS BIGINT), CAST(frame_idx AS BIGINT),
-           CAST(fhash AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM ({aud_s})
-    UNION ALL
-    SELECT 'audio_pairs', CAST(id_a AS BIGINT), CAST(id_b AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT),
-           CAST(jaccard AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM ({aud_p})
-    """
+
+def _lmm_oracle(sf_dir: str) -> str:
+    # LAZY: the image/video/audio parts embed replica-derived literals,
+    # so the whole union resolves per sf_dir (fixed component SQL
+    # passes through resolve_oracle unchanged)
+    return _union_sql(*_LMM_SPEC, sf_dir)
 
 
 def _mm_fused_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1577,48 +1151,12 @@ def x_layout_mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ap = video_neardup_pairs(
         asg, threshold=_AUD_JACCARD_T, method="uniform", cache=False
     )
-    return _part(
-        g, "grid", k1=_b("label"), k2=_b("lat_band"), n1=_b("cell_cnt"),
-        n2=_nb(), n3=_nb(), n4=_nb(), n5=_nb(),
-        d1=_d("vmin"), d2=_d("vmax"), d3=_d("vavg_q"),
-    ).unionByName(
-        _part(z, "zorder", k1=_b("z_bucket"), k2=_nb(), n1=_b("n"),
-              n2=_b("qu_min"), n3=_b("qu_max"), n4=_b("qv_min"),
-              n5=_b("qv_max"), d1=_nd(), d2=_nd(), d3=_nd())
-    ).unionByName(
-        _part(m, "mm_decode", k1=_b("doc_id"), k2=_nb(), n1=_b("n_bytes"),
-              n2=_b("first_byte"), n3=_b("checksum"), n4=_b("width"),
-              n5=_b("height"), d1=_nd(), d2=_nd(), d3=_nd())
-    ).unionByName(
-        _part(t, "mm_transform", k1=_b("doc_id"), k2=_nb(),
-              n1=_b("out_width"), n2=_b("out_height"), n3=_b("mean_r_e6"),
-              n4=_b("px_sum"), n5=_b("px_sumsq"),
-              d1=_nd(), d2=_nd(), d3=_nd())
-    ).unionByName(
-        _part(ih, "image_dhash", k1=_b("doc_id"), k2=_nb(),
-              n1=_b("dhash"), n2=_nb(), n3=_nb(), n4=_nb(), n5=_nb(),
-              d1=_nd(), d2=_nd(), d3=_nd())
-    ).unionByName(
-        _part(ip, "image_pairs", k1=_b("id_a"), k2=_b("id_b"),
-              n1=_b("hamming"), n2=_nb(), n3=_nb(), n4=_nb(), n5=_nb(),
-              d1=_nd(), d2=_nd(), d3=_nd())
-    ).unionByName(
-        _part(vs, "video_sig", k1=_b("doc_id"), k2=_b("frame_idx"),
-              n1=_b("fhash"), n2=_nb(), n3=_nb(), n4=_nb(), n5=_nb(),
-              d1=_nd(), d2=_nd(), d3=_nd())
-    ).unionByName(
-        _part(vp, "video_pairs", k1=_b("id_a"), k2=_b("id_b"),
-              n1=_nb(), n2=_nb(), n3=_nb(), n4=_nb(), n5=_nb(),
-              d1=_d("jaccard"), d2=_nd(), d3=_nd())
-    ).unionByName(
-        _part(asg, "audio_sig", k1=_b("doc_id"), k2=_b("frame_idx"),
-              n1=_b("fhash"), n2=_nb(), n3=_nb(), n4=_nb(), n5=_nb(),
-              d1=_nd(), d2=_nd(), d3=_nd())
-    ).unionByName(
-        _part(ap, "audio_pairs", k1=_b("id_a"), k2=_b("id_b"),
-              n1=_nb(), n2=_nb(), n3=_nb(), n4=_nb(), n5=_nb(),
-              d1=_d("jaccard"), d2=_nd(), d3=_nd())
-    )
+    return _project(*_LMM_SPEC, {
+        "x_grid_stats": g, "x_zorder_stats": z, "x_mm_decode": m,
+        "x_mm_transform": t, "x_image_dhash": ih, "x_image_dedup": ip,
+        "x_video_sig": vs, "x_video_dedup": vp, "x_audio_sig": asg,
+        "x_audio_dedup": ap,
+    })
 
 
 # ---------------------------------------------------------------------------
@@ -1628,62 +1166,27 @@ def x_layout_mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _rel_oracle() -> str:
-    return f"""
-    SELECT 'f3' AS part, CAST(event_id AS BIGINT) AS id,
-           ts AS ts1, bucket_3h AS ts2, bucket_6h AS ts3,
-           recorded_time_text AS s1, CAST(NULL AS VARCHAR) AS s2,
-           CAST(NULL AS BIGINT) AS n1, CAST(NULL AS BIGINT) AS n2,
-           CAST(NULL AS DOUBLE) AS d1
-    FROM {_oracle("f3_computed_columns")}
-    UNION ALL
-    SELECT 'j5', CAST(NULL AS BIGINT), CAST(NULL AS TIMESTAMP),
-           CAST(NULL AS TIMESTAMP), CAST(NULL AS TIMESTAMP),
-           region_name, nation_name,
-           CAST(customer_cnt AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(total_acctbal AS DOUBLE)
-    FROM {_oracle("j5_dim_enrichment")}
-    UNION ALL
-    SELECT 'semi_anti', CAST(c_custkey AS BIGINT), CAST(NULL AS TIMESTAMP),
-           CAST(NULL AS TIMESTAMP), CAST(NULL AS TIMESTAMP),
-           c_name, status, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS DOUBLE)
-    FROM {_oracle("j_semi_anti")}
-    UNION ALL
-    SELECT 'a2', CAST(NULL AS BIGINT), bucket_ts, CAST(NULL AS TIMESTAMP),
-           CAST(NULL AS TIMESTAMP), CAST(NULL AS VARCHAR),
-           CAST(NULL AS VARCHAR), CAST(event_cnt AS BIGINT),
-           CAST(user_cnt AS BIGINT), CAST(NULL AS DOUBLE)
-    FROM {_oracle("a2_bucket_counts")}
-    UNION ALL
-    SELECT 'w5', CAST(user_id AS BIGINT), s_start, s_end,
-           CAST(NULL AS TIMESTAMP), CAST(NULL AS VARCHAR),
-           CAST(NULL AS VARCHAR), CAST(event_cnt AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE)
-    FROM {_oracle("w5_session_windows")}
-    UNION ALL
-    SELECT 'union', CAST(event_id AS BIGINT), bucket_ts,
-           CAST(NULL AS TIMESTAMP), CAST(NULL AS TIMESTAMP),
-           event_type, CAST(NULL AS VARCHAR), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(value AS DOUBLE)
-    FROM {_oracle("u1_union_components")}
-    UNION ALL
-    SELECT 'intersect_except', CAST(user_id AS BIGINT),
-           CAST(NULL AS TIMESTAMP), CAST(NULL AS TIMESTAMP),
-           CAST(NULL AS TIMESTAMP), membership, CAST(NULL AS VARCHAR),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE)
-    FROM {_oracle("set_intersect_except")}
-    UNION ALL
-    SELECT 'distinct', CAST(user_id AS BIGINT), CAST(NULL AS TIMESTAMP),
-           CAST(NULL AS TIMESTAMP), CAST(NULL AS TIMESTAMP), event_type,
-           CAST(NULL AS VARCHAR), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE)
-    FROM {_oracle("a_distinct_pairs")}
-    """
-
-
-@query("rel_suite", oracle=_rel_oracle(), tags=("F3", "J5", "A2", "T2", "U1", "set", "composite"))
-def rel_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+@tagged_union(
+    "id bigint, ts1/ts2/ts3 timestamp, s1/s2 string, n1/n2 bigint, d1 double",
+    [
+        ("f3", "f3_computed_columns", dict(id="event_id", ts1="ts", ts2="bucket_3h",
+                                           ts3="bucket_6h", s1="recorded_time_text")),
+        ("j5", "j5_dim_enrichment", dict(s1="region_name", s2="nation_name",
+                                         n1="customer_cnt", d1="total_acctbal")),
+        ("semi_anti", "j_semi_anti", dict(id="c_custkey", s1="c_name", s2="status")),
+        ("a2", "a2_bucket_counts", dict(ts1="bucket_ts", n1="event_cnt",
+                                        n2="user_cnt")),
+        ("w5", "w5_session_windows", dict(id="user_id", ts1="s_start", ts2="s_end",
+                                          n1="event_cnt")),
+        ("union", "u1_union_components", dict(id="event_id", ts1="bucket_ts",
+                                              s1="event_type", d1="value")),
+        ("intersect_except", "set_intersect_except", dict(id="user_id",
+                                                          s1="membership")),
+        ("distinct", "a_distinct_pairs", dict(id="user_id", s1="event_type")),
+    ],
+    tags=("F3", "J5", "A2", "T2", "U1", "set", "composite"),
+)
+def rel_suite():
     """Small-relational suite folding eight single-concept queries into
     one driver slot: computed-column enrichment (f3), broadcast dim
     enrichment (j5), semi/anti existence joins (j_semi_anti), bucket
@@ -1693,55 +1196,6 @@ def rel_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERSECT/EXCEPT membership labels (set_intersect_except), and
     exact DISTINCT (a_distinct_pairs). Each component's FULL row set
     rides through tagged — nothing is sampled away."""
-    f3 = REGISTRY["f3_computed_columns"].build(spark, sf_dir)
-    j5 = REGISTRY["j5_dim_enrichment"].build(spark, sf_dir)
-    sa = REGISTRY["j_semi_anti"].build(spark, sf_dir)
-    a2 = REGISTRY["a2_bucket_counts"].build(spark, sf_dir)
-    w5 = REGISTRY["w5_session_windows"].build(spark, sf_dir)
-    u1 = REGISTRY["u1_union_components"].build(spark, sf_dir)
-    se = REGISTRY["set_intersect_except"].build(spark, sf_dir)
-    dp = REGISTRY["a_distinct_pairs"].build(spark, sf_dir)
-    return (
-        _part(f3, "f3", id=_b("event_id"), ts1=F.col("ts"),
-              ts2=F.col("bucket_3h"), ts3=F.col("bucket_6h"),
-              s1=_s("recorded_time_text"), s2=_ns(), n1=_nb(), n2=_nb(),
-              d1=_nd())
-        .unionByName(
-            _part(j5, "j5", id=_nb(), ts1=_nt(), ts2=_nt(), ts3=_nt(),
-                  s1=_s("region_name"), s2=_s("nation_name"),
-                  n1=_b("customer_cnt"), n2=_nb(), d1=_d("total_acctbal"))
-        )
-        .unionByName(
-            _part(sa, "semi_anti", id=_b("c_custkey"), ts1=_nt(), ts2=_nt(),
-                  ts3=_nt(), s1=_s("c_name"), s2=_s("status"), n1=_nb(),
-                  n2=_nb(), d1=_nd())
-        )
-        .unionByName(
-            _part(a2, "a2", id=_nb(), ts1=F.col("bucket_ts"), ts2=_nt(),
-                  ts3=_nt(), s1=_ns(), s2=_ns(), n1=_b("event_cnt"),
-                  n2=_b("user_cnt"), d1=_nd())
-        )
-        .unionByName(
-            _part(w5, "w5", id=_b("user_id"), ts1=F.col("s_start"),
-                  ts2=F.col("s_end"), ts3=_nt(), s1=_ns(), s2=_ns(),
-                  n1=_b("event_cnt"), n2=_nb(), d1=_nd())
-        )
-        .unionByName(
-            _part(u1, "union", id=_b("event_id"), ts1=F.col("bucket_ts"),
-                  ts2=_nt(), ts3=_nt(), s1=_s("event_type"), s2=_ns(),
-                  n1=_nb(), n2=_nb(), d1=_d("value"))
-        )
-        .unionByName(
-            _part(se, "intersect_except", id=_b("user_id"), ts1=_nt(),
-                  ts2=_nt(), ts3=_nt(), s1=_s("membership"), s2=_ns(),
-                  n1=_nb(), n2=_nb(), d1=_nd())
-        )
-        .unionByName(
-            _part(dp, "distinct", id=_b("user_id"), ts1=_nt(), ts2=_nt(),
-                  ts3=_nt(), s1=_s("event_type"), s2=_ns(), n1=_nb(),
-                  n2=_nb(), d1=_nd())
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1750,35 +1204,23 @@ def rel_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ivf_suite_oracle(sf_dir: str) -> str:
-    from .registry import resolve_oracle
+_TOPK = _same("query_id neighbor_id cosine_sim rank")
+_IVF_SPEC = (
+    "query_id/neighbor_id bigint, cosine_sim double, rank bigint",
+    [
+        ("session", "x_sim_topk_ivf", _TOPK),
+        ("indexed", "x_sim_topk_ivf_index", _TOPK),
+        ("brute", "x_sim_topk_bruteforce", _TOPK),
+        ("pq", "x_pq_topk", _TOPK),
+        ("ivfpq", "x_ivfpq_topk", _TOPK),
+        ("pq_codes", "x_pq_codes", dict(query_id="vec_id", neighbor_id="sub",
+                                        rank="code")),
+    ],
+)
 
-    sess = resolve_oracle(REGISTRY["x_sim_topk_ivf"], sf_dir)
-    idx = resolve_oracle(REGISTRY["x_sim_topk_ivf_index"], sf_dir)
-    brute = resolve_oracle(REGISTRY["x_sim_topk_bruteforce"], sf_dir)
-    pq_t = resolve_oracle(REGISTRY["x_pq_topk"], sf_dir)
-    pq_c = resolve_oracle(REGISTRY["x_pq_codes"], sf_dir)
-    ivfpq = resolve_oracle(REGISTRY["x_ivfpq_topk"], sf_dir)
-    return f"""
-    SELECT 'session' AS part, query_id, neighbor_id, cosine_sim, rank
-    FROM ({sess})
-    UNION ALL
-    SELECT 'indexed', query_id, neighbor_id, cosine_sim, rank
-    FROM ({idx})
-    UNION ALL
-    SELECT 'brute', query_id, neighbor_id, cosine_sim, rank
-    FROM ({brute})
-    UNION ALL
-    SELECT 'pq', query_id, neighbor_id, cosine_sim, rank
-    FROM ({pq_t})
-    UNION ALL
-    SELECT 'ivfpq', query_id, neighbor_id, cosine_sim, rank
-    FROM ({ivfpq})
-    UNION ALL
-    SELECT 'pq_codes', CAST(vec_id AS BIGINT), CAST(sub AS BIGINT),
-           CAST(NULL AS DOUBLE), CAST(code AS BIGINT)
-    FROM ({pq_c})
-    """
+
+def _ivf_suite_oracle(sf_dir: str) -> str:
+    return _union_sql(*_IVF_SPEC, sf_dir)
 
 
 @query("x_sim_ivf_suite", oracle=_ivf_suite_oracle, tags=("ext", "similarity", "composite"))
@@ -1911,8 +1353,6 @@ def x_sim_ivf_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq_c = pq_codes.select(
         "vec_id", F.posexplode("codes").alias("sub", "code")
     )
-    cols = dict(query_id=_b("query_id"), neighbor_id=_b("neighbor_id"),
-                cosine_sim=_d("cosine_sim"), rank=_b("rank"))
     # IVFPQ (r12): the composed shape — reuses the index THIS suite
     # already built and the same codebooks; only build_ivfpq_codes'
     # one-time cell-partitioned write (marker-idempotent) is new.
@@ -1937,18 +1377,11 @@ def x_sim_ivf_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pq_t = rr.filter(F.col("__t") == "pq").drop("__t")
     ivfpq = rr.filter(F.col("__t") == "iv").drop("__t")
-    return (
-        _part(sess, "session", **cols)
-        .unionByName(_part(indexed, "indexed", **cols))
-        .unionByName(_part(brute, "brute", **cols))
-        .unionByName(_part(pq_t, "pq", **cols))
-        .unionByName(_part(ivfpq, "ivfpq", **cols))
-        .unionByName(
-            _part(pq_c, "pq_codes", query_id=_b("vec_id"),
-                  neighbor_id=_b("sub"), cosine_sim=_nd(),
-                  rank=_b("code"))
-        )
-    )
+    return _project(*_IVF_SPEC, {
+        "x_sim_topk_ivf": sess, "x_sim_topk_ivf_index": indexed,
+        "x_sim_topk_bruteforce": brute, "x_pq_topk": pq_t, "x_ivfpq_topk": ivfpq,
+        "x_pq_codes": pq_c,
+    })
 
 
 # ---------------------------------------------------------------------------
@@ -1958,31 +1391,18 @@ def x_sim_ivf_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _dedup_pairs_oracle() -> str:
-    return f"""
-    SELECT 'exact' AS part, CAST(doc_id AS BIGINT) AS k1,
-           CAST(NULL AS BIGINT) AS k2, text AS s1,
-           CAST(copies AS BIGINT) AS n1, CAST(NULL AS DOUBLE) AS d1
-    FROM {_oracle("x_dedup_exact")}
-    UNION ALL
-    SELECT 'jaccard', CAST(id_a AS BIGINT), CAST(id_b AS BIGINT),
-           CAST(NULL AS VARCHAR), CAST(NULL AS BIGINT),
-           CAST(jaccard AS DOUBLE)
-    FROM {_oracle("x_dedup_jaccard")}
-    UNION ALL
-    SELECT 'simhash', CAST(id_a AS BIGINT), CAST(id_b AS BIGINT),
-           CAST(NULL AS VARCHAR), CAST(hamming AS BIGINT),
-           CAST(NULL AS DOUBLE)
-    FROM {_oracle("x_dedup_simhash")}
-    UNION ALL
-    SELECT 'editdist', CAST(id_a AS BIGINT), CAST(id_b AS BIGINT),
-           CAST(NULL AS VARCHAR), CAST(dist AS BIGINT),
-           CAST(NULL AS DOUBLE)
-    FROM {_oracle("x_dedup_editdist")}
-    """
+_DEDUP_SPEC = (
+    "k1/k2 bigint, s1 string, n1 bigint, d1 double",
+    [
+        ("exact", "x_dedup_exact", dict(k1="doc_id", s1="text", n1="copies")),
+        ("jaccard", "x_dedup_jaccard", dict(k1="id_a", k2="id_b", d1="jaccard")),
+        ("simhash", "x_dedup_simhash", dict(k1="id_a", k2="id_b", n1="hamming")),
+        ("editdist", "x_dedup_editdist", dict(k1="id_a", k2="id_b", n1="dist")),
+    ],
+)
 
 
-@query("x_dedup_pairs_suite", oracle=_dedup_pairs_oracle(), tags=("ext", "dedup", "composite"))
+@query("x_dedup_pairs_suite", oracle=_union_sql(*_DEDUP_SPEC), tags=("ext", "dedup", "composite"))
 def x_dedup_pairs_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-pairs suite: exact dedup representatives (x_dedup_exact),
     inverted-index Jaccard pairs (x_dedup_jaccard), banded SimHash
@@ -2012,22 +1432,10 @@ def x_dedup_pairs_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ja = jaccard_join_adaptive(with_sh, "doc_id", "sh0", threshold=0.5)
     si = simhash_pairs_from_shingles(with_sh, shingle_col="sh0")
-    return (
-        _part(ex, "exact", k1=_b("doc_id"), k2=_nb(), s1=_s("text"),
-              n1=_b("copies"), d1=_nd())
-        .unionByName(
-            _part(ja, "jaccard", k1=_b("id_a"), k2=_b("id_b"), s1=_ns(),
-                  n1=_nb(), d1=_d("jaccard"))
-        )
-        .unionByName(
-            _part(si, "simhash", k1=_b("id_a"), k2=_b("id_b"), s1=_ns(),
-                  n1=_b("hamming"), d1=_nd())
-        )
-        .unionByName(
-            _part(ed, "editdist", k1=_b("id_a"), k2=_b("id_b"), s1=_ns(),
-                  n1=_b("dist"), d1=_nd())
-        )
-    )
+    return _project(*_DEDUP_SPEC, {
+        "x_dedup_exact": ex, "x_dedup_jaccard": ja, "x_dedup_simhash": si,
+        "x_dedup_editdist": ed,
+    })
 
 
 # ---------------------------------------------------------------------------

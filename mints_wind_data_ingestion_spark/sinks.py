@@ -159,13 +159,6 @@ def create_wind_table_sql(name: str = "wind_data", location: str | None = None) 
     )
 
 
-def register_wind_table(spark: SparkSession, name: str, location: str) -> None:
-    """Create + register the partitioned wind table in the catalog and
-    discover existing partitions (MSCK)."""
-    spark.sql(create_wind_table_sql(name, location))
-    spark.sql(f"MSCK REPAIR TABLE {name}")
-
-
 def write_format_roundtrip(
     df: DataFrame, path: str, fmt: str, **options: str
 ) -> DataFrame:

@@ -40,7 +40,7 @@ from __future__ import annotations
 import zlib
 from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -54,7 +54,6 @@ __all__ = [
     "encode_wet",
     "iter_gzip_members",
     "parse_warc_stream",
-    "read_jsonl_dir",
     "jsonl_records",
     "scan_jsonl_df",
     "scan_wet_df",
@@ -583,8 +582,3 @@ def scan_jsonl_df(
         lambda path, content: scan_jsonl_bytes(path, content, max_member_bytes),
         JSONL_SCAN_SCHEMA,
     )
-
-
-def read_jsonl_dir(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """binaryFile scan + line walk over a `.jsonl[.gz|.zst]` dir."""
-    return scan_jsonl_df(spark.read.format("binaryFile").load(landing_dir))

@@ -4,7 +4,9 @@ Builds a VANILLA SparkSession (none of the engine's conf — the driver
 owns the session), then:
   t1: entry(spark) smoke → rows >= 0, stable schema
   t2: each queries()[name](spark, sf0.01) vs oracle_sql()[name] in DuckDB
-      (row count + sorted-column schema + order-insensitive value hash)
+      (row count + sorted-column schema + order-insensitive value hash;
+      every t2 line prints the Spark hash, so two trees' runs can be
+      diffed line for line)
   then the session-memo hit/miss/bypass counters per kind
   (caching.memo_counts()) over the whole run
 
@@ -19,7 +21,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
@@ -77,7 +79,7 @@ def main() -> int:
         status = "OK " if ok else "FAIL"
         print(
             f"t2 {name}: {status} spark={len(srows)} duck={len(drows)} "
-            f"hash={'=' if sh == dh else f'{sh}!={dh}'} ({time.time()-t0:.1f}s)"
+            f"hash={sh if sh == dh else f'{sh}!={dh}'} ({time.time()-t0:.1f}s)"
         )
         if not ok:
             failures.append(name)

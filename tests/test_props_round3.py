@@ -1,6 +1,6 @@
 """Property tests for round-3 operators: the portable SimHash against
-an independent pure-Python model, sequence-packing invariants on the
-driver composite's output, and resize index-math properties."""
+an independent pure-Python model and resize index-math properties
+(the sequence-packing invariants live in tests/test_composites.py)."""
 
 from __future__ import annotations
 
@@ -10,8 +10,6 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
-
-from mints_wind_data_ingestion_spark.plans import REGISTRY
 
 
 def _simhash_model(shingles: list[str], nbits: int = 60) -> int:
@@ -47,43 +45,6 @@ def test_simhash_md5_matches_python_model(spark):
     for doc_id, sh in docs:
         want = _simhash_model(sh) if sh else 0
         assert got[doc_id] == want, f"doc {doc_id}"
-
-
-def test_pack_part_invariants(spark, sf_dir):
-    """The x_doc_transform 'pack' part must place every chunk exactly
-    once, keep offsets inside the bin capacity, and lay chunks
-    end-to-end per shard (each chunk's start == previous chunk's start
-    + previous length, in deterministic (doc, chunk) order)."""
-    from mints_wind_data_ingestion_spark.plans.composites import (
-        _PACK_CAP,
-        _PACK_SHARDS,
-    )
-
-    out = REGISTRY["x_doc_transform"].build(spark, sf_dir)
-    chunks = {
-        (r.doc_id, r.n1): r.n3  # chunk_len
-        for r in out.filter(F.col("part") == "chunk").collect()
-    }
-    packs = [
-        (r.doc_id, r.n1, r.n2, r.n3)  # doc, chunk, shard*1e6+bin, offset
-        for r in out.filter(F.col("part") == "pack").collect()
-    ]
-    assert {(d, c) for d, c, _, _ in packs} == set(chunks)
-    assert len(packs) == len(chunks)
-
-    by_shard: dict[int, list] = {}
-    for d, c, bin_enc, off in packs:
-        assert 0 <= off < _PACK_CAP
-        shard, bin_id = divmod(bin_enc, 1_000_000_000_000)
-        assert shard == d % _PACK_SHARDS
-        by_shard.setdefault(shard, []).append((d, c, bin_id, off))
-    for shard, rows in by_shard.items():
-        rows.sort()
-        pos = 0
-        for d, c, bin_id, off in rows:
-            assert bin_id == pos // _PACK_CAP
-            assert off == pos % _PACK_CAP
-            pos += chunks[(d, c)]
 
 
 @settings(deadline=None, max_examples=30)

@@ -147,62 +147,6 @@ def test_rs_duplicate_array_entries_do_not_understate_jaccard(spark):
         assert rows[0]["jaccard"] == pytest.approx(3 / 4)
 
 
-def test_repeated_composite_builds_do_not_grow_cache(spark):
-    """VERDICT r11 #5: rebuilding a mid-plan-caching composite in one
-    session must REPLACE its cache entries, not stack new ones —
-    managed_cache bounds live entries by distinct plan, not by build
-    count."""
-    import os
-
-    from mints_wind_data_ingestion_spark.plans.registry import REGISTRY
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
-    )
-    import time
-
-    jsc = spark.sparkContext._jsc.sc()
-
-    def n_persistent() -> int:
-        # managed_cache replacement unpersists asynchronously; under a
-        # full-suite session the raw count can transiently show both
-        # the old and new entry — poll until it stops moving (r14: the
-        # equality assertion flaked on exactly that race)
-        prev = -1
-        for _ in range(40):
-            cur = jsc.getPersistentRDDs().size()
-            if cur == prev:
-                return cur
-            prev = cur
-            time.sleep(0.25)
-        return prev
-
-    from mints_wind_data_ingestion_spark import caching
-
-    app_id = spark.sparkContext.applicationId
-
-    def cache_keys() -> set:
-        return {
-            k for k in caching._store if k[0] == app_id and k[1] == "cache"
-        }
-
-    # the persistent-RDD count is session-wide: let entries that earlier
-    # tests released settle BEFORE the first build, or their late
-    # releases read as this composite's live set shrinking
-    n_persistent()
-    counts, keys = [], []
-    for _ in range(3):
-        REGISTRY["x_layout_mm_suite"].build(spark, sf_dir).count()
-        counts.append(n_persistent())
-        keys.append(cache_keys())
-    # first build establishes the steady state; rebuilds must not GROW
-    # the live set (equality modulo the async-unpersist settle)
-    assert counts[1] <= counts[0] and counts[2] <= counts[1], counts
-    assert counts[0] - counts[2] <= 1, counts
-    # and the composite's own entries are replaced, never stacked
-    assert keys[0] == keys[1] == keys[2], keys
-
-
 def test_ivfpq_matches_exact_ivf_and_prunes(spark):
     """IVFPQ (VERDICT r11 #3): the composed probe→ADC→rerank pipeline
     must (a) partition-prune its codes scan to the probed cells, and
