@@ -18,20 +18,35 @@ def _file_rows_df(
     """The one file-to-rows UDTF of the binary sources: a (path,
     content) DataFrame — a `binaryFile` scan or any frame with those
     two columns — becomes `rows_of_file(path, content)`'s rows, decoded
-    executor-side in Arrow batches, with columns in `schema` order.
-    Every `*_df` reader in this package (GRIB decode and scan, CDXJ,
-    sitemap, WARC/WET, JSONL) is this node with its own per-file
-    function."""
-    import pandas as pd
+    executor-side in a `mapInArrow` node, with columns in `schema`
+    order. Every `*_df` reader in this package (GRIB decode and scan,
+    CDXJ, sitemap, WARC/WET, JSONL) is this node with its own per-file
+    function.
 
-    columns = schema.names
+    Each output column is built straight from the row values as one
+    Arrow array of its field's type (a float32 ndarray becomes a
+    `list<float>` element without a Python float per point); a key a
+    row lacks is NULL. `from_pandas=True` keeps the pandas converter's
+    rule that a float NaN, also inside an array, arrives as NULL."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
 
     def batches(it):
-        for pdf in it:
+        for batch in it:
             rows: list[dict] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rows.extend(rows_of_file(path, bytes(content)))
-            yield pd.DataFrame(rows, columns=columns)
+            paths = batch.column(0).to_pylist()
+            contents = batch.column(1).to_pylist()
+            for path, content in zip(paths, contents):
+                rows.extend(rows_of_file(path, content))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([r.get(f.name) for r in rows], type=f.type,
+                             from_pandas=True)
+                    for f in arrow_schema
+                ],
+                schema=arrow_schema,
+            )
 
-    return binary.select("path", "content").mapInPandas(batches, schema=schema)
-
+    return binary.select("path", "content").mapInArrow(batches, schema=schema)

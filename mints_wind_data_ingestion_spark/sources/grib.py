@@ -8,7 +8,8 @@ ONE decode node, `decode_binary_df`:
       → sources._file_rows_df(binary, rows_of_file, DECODED_SCHEMA)
 
 — one row in (a GRIB2 file), many rows out (one per selected GRIB
-record), decoded executor-side in Arrow batches, with the record filter
+record), decoded executor-side in one `mapInArrow` node whose float32
+`data` arrays go to Arrow without a pandas frame, with the record filter
 (parameterNumber/surface) applied inside the decoder exactly like the
 reference's --fp/--fs/--fv pushdown. The batch scan (`read_grib_dir`),
 the streaming source, `operators.ingest` and the x_grib_* driver
@@ -173,7 +174,7 @@ def read_grib_dir(
 
     Partitioning: binaryFile assigns whole files to tasks; with many
     ~80 KB GRIB files per batch (BASELINE.md) the scan parallelizes per
-    file. Decoding happens in Arrow-batched pandas iterators — the
+    file. Decoding happens in the `mapInArrow` file-to-rows node — the
     canonical 'shell-out tool becomes a UDTF' move (SURVEY.md §2.10 X1).
     """
     return decode_binary_df(

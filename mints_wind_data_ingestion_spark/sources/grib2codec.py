@@ -62,10 +62,15 @@ Implemented from the public WMO GRIB2 specification (FM 92, sections
   posture — r7)
 - section 6 bitmap indicator 255 (no bitmap) or 0 (bitmap present)
 
-Decoding is numpy-vectorized (unpackbits + matmul — no per-point
-Python loop), so a 65 k-point GFS field unpacks in ~1 ms and the
-executor-side cost inside the mapInPandas UDTF stays negligible
-against the I/O. The encoder exists so tests can build REAL binary
+Decoding is numpy-vectorized with one bit reader: every packed field
+(simple-packing values, complex-packing group descriptors and all
+group values at once) is one fancy-indexed 64-bit window read per
+value, then a shift and a mask (`_gather_uints`, exact for widths
+≤ 57). Wider fields and reads past the payload go through the
+unpackbits+matmul reader `_unpack_uints`, which keeps their values
+and error texts. A decoded field's `data` is the float32 ndarray
+itself, which the `mapInArrow` decode node hands to Arrow without a
+Python float per point. The encoder exists so tests can build REAL binary
 fixtures (and round-trip the reference's golden field) without
 network access; it doubles as a GRIB2 writer for the sink surface.
 
@@ -326,12 +331,7 @@ def _scales(msg: bytes, o5: int) -> tuple[int, int]:
 def _unpack_values(
     packed: bytes, n: int, nbits: int, ref: float, e: int, d: int
 ) -> np.ndarray:
-    if nbits == 0:  # constant field: every value is the reference
-        x = np.zeros(n, dtype=np.int64)
-    else:
-        bits = np.unpackbits(np.frombuffer(packed, dtype=np.uint8))
-        bits = bits[: n * nbits].reshape(n, nbits).astype(np.int64)
-        x = bits @ (1 << np.arange(nbits - 1, -1, -1, dtype=np.int64))
+    x, _ = _read_uints(packed, 0, n, nbits)  # nbits 0: constant field
     return ((ref + x * math.ldexp(1.0, e)) / 10.0**d).astype(np.float32)
 
 
@@ -369,12 +369,93 @@ def _pack_uints(arr: np.ndarray, w: int) -> bytes:
 
 def _unpack_uints(bits: np.ndarray, off: int, n: int, w: int):
     """Read `n` consecutive `w`-bit unsigned fields from a 0/1 bit
-    array starting at bit `off`; returns (values, next bit offset)."""
+    array starting at bit `off`; returns (values, next bit offset).
+    The reference reader: `_read_uints` and `_group_values` fall back
+    to it wherever the window gather is not exact (a width above
+    `_WINDOW_BITS`, a read past the payload), so those inputs keep its
+    results and its errors."""
     if w == 0:
         return np.zeros(n, dtype=np.int64), off
     sl = bits[off : off + n * w].reshape(n, w).astype(np.int64)
     vals = sl @ (1 << np.arange(w - 1, -1, -1, dtype=np.int64))
     return vals, off + n * w
+
+
+#: widest field `_gather_uints` reads exactly: a field starts up to 7
+#: bits into its first octet, and 7 + 57 bits fill the 64-bit window
+_WINDOW_BITS = 57
+
+
+def _bit_array(buf: bytes) -> np.ndarray:
+    return np.unpackbits(np.frombuffer(buf, dtype=np.uint8))
+
+
+def _gather_uints(
+    buf: bytes, starts: np.ndarray, widths: np.ndarray
+) -> np.ndarray:
+    """Big-endian unsigned fields of `buf`: value i is the `widths[i]`
+    bits from bit `starts[i]` on. One fancy-indexed 8-byte read per
+    value from an overlapping `>u8` view, then a shift and a mask —
+    exact for widths ≤ `_WINDOW_BITS` whose bits lie inside `buf`."""
+    padded = buf + bytes(8)  # the last windows run past the payload
+    windows = np.ndarray(
+        (len(buf) + 1,), dtype=">u8", buffer=padded, strides=(1,)
+    )
+    w = widths.astype(np.uint64)
+    word = windows[starts >> 3].astype(np.uint64)
+    shift = np.uint64(64) - (starts & 7).astype(np.uint64) - w
+    mask = (np.uint64(1) << w) - np.uint64(1)
+    return ((word >> shift) & mask).astype(np.int64)
+
+
+def _read_uints(buf: bytes, off: int, n: int, w: int):
+    """`_unpack_uints` over the bits of `buf`: the window gather where
+    it is exact, `_unpack_uints` itself otherwise."""
+    if w == 0:
+        return np.zeros(n, dtype=np.int64), off
+    if w > _WINDOW_BITS or off + n * w > 8 * len(buf):
+        return _unpack_uints(_bit_array(buf), off, n, w)
+    starts = off + w * np.arange(n, dtype=np.int64)
+    widths = np.full(n, w, dtype=np.int64)
+    return _gather_uints(buf, starts, widths), off + n * w
+
+
+def _group_values_loop(
+    buf: bytes, off: int, grefs: np.ndarray, widths: np.ndarray,
+    lengths: np.ndarray, n: int,
+) -> np.ndarray:
+    """Complex-packing group values, one `_unpack_uints` per group:
+    the reference model of `_group_values` and its fallback."""
+    bits = _bit_array(buf)
+    x = np.empty(n, dtype=np.int64)
+    at = 0
+    for g in range(len(lengths)):
+        ln, w = int(lengths[g]), int(widths[g])
+        vals, off = _unpack_uints(bits, off, ln, w)
+        x[at : at + ln] = vals + grefs[g]
+        at += ln
+    return x
+
+
+def _group_values(
+    buf: bytes, off: int, grefs: np.ndarray, widths: np.ndarray,
+    lengths: np.ndarray, n: int,
+) -> np.ndarray:
+    """The `n` values of complex packing's groups (templates 7.2/7.3),
+    read from bit `off` of `buf`: group g holds `lengths[g]` fields of
+    `widths[g]` bits, each plus `grefs[g]`. One window gather over all
+    values — per-value widths by `np.repeat`, starts by a cumsum —
+    where every width is within `_WINDOW_BITS`, every length is
+    non-negative and the groups fit the payload; the per-group loop
+    otherwise, so a corrupt descriptor set raises what it always did."""
+    if len(lengths) and (
+        widths.min() < 0 or widths.max() > _WINDOW_BITS
+        or lengths.min() < 0 or off + int(lengths @ widths) > 8 * len(buf)
+    ):
+        return _group_values_loop(buf, off, grefs, widths, lengths, n)
+    w = np.repeat(widths, lengths)
+    starts = off + np.cumsum(w) - w
+    return _gather_uints(buf, starts, w) + np.repeat(grefs, lengths)
 
 
 def _octet_align(off: int) -> int:
@@ -682,22 +763,22 @@ def _unpack_complex(msg: bytes, o5: int, o7: int, slen7: int) -> np.ndarray:
         minsd = _s(payload, pos, ba)
         pos += ba
 
-    bits = np.unpackbits(np.frombuffer(payload[pos:], dtype=np.uint8))
+    body = payload[pos:]
     # cheap pre-allocation budget check: the three per-group field
     # arrays need ng·(widths) bits — a corrupt ng with nonzero widths
     # rejects here in microseconds instead of after ng-sized transients
-    if ng * (nbits_ref + wbits + lbits) > bits.size + 32:
+    if ng * (nbits_ref + wbits + lbits) > 8 * len(body) + 32:
         raise ValueError(
             f"{ng} groups need {ng * (nbits_ref + wbits + lbits)} "
-            f"descriptor bits, payload has {bits.size}"
+            f"descriptor bits, payload has {8 * len(body)}"
         )
     off = 0
-    grefs, off = _unpack_uints(bits, off, ng, nbits_ref)
+    grefs, off = _read_uints(body, off, ng, nbits_ref)
     off = _octet_align(off)
-    winc, off = _unpack_uints(bits, off, ng, wbits)
+    winc, off = _read_uints(body, off, ng, wbits)
     widths = winc + width_ref
     off = _octet_align(off)
-    linc, off = _unpack_uints(bits, off, ng, lbits)
+    linc, off = _read_uints(body, off, ng, lbits)
     lengths = linc * len_inc + len_ref
     if ng > 0:
         lengths[-1] = last_len
@@ -707,13 +788,7 @@ def _unpack_complex(msg: bytes, o5: int, o7: int, slen7: int) -> np.ndarray:
             f"group lengths sum to {int(lengths.sum())}, expected {n}"
         )
 
-    x = np.empty(n, dtype=np.int64)
-    at = 0
-    for g in range(ng):
-        ln, w = int(lengths[g]), int(widths[g])
-        vals, off = _unpack_uints(bits, off, ln, w)
-        x[at : at + ln] = vals + grefs[g]
-        at += ln
+    x = _group_values(body, off, grefs, widths, lengths, n)
 
     if drt == 3:
         x[order:] += minsd
@@ -868,7 +943,8 @@ def _walk_fields(content: bytes):
 
 def decode_grib2_bytes(content: bytes) -> list[dict]:
     """Decode every message in a GRIB2 file into grib2json-shaped
-    records: {"header": {...}, "data": [float32 values...]}.
+    records: {"header": {...}, "data": <float32 ndarray>}, with NaN at
+    the points a bitmap marks missing.
 
     Header keys mirror the reference's golden fixture
     (data/u_comp.json) — numeric codes plus the human-readable *Name
@@ -1480,7 +1556,7 @@ def _decode_field(msg: bytes, sec: dict[int, tuple[int, int]]) -> dict:
         # vs the grid axes — grib2json's `winds` field
         "winds": "true" if not grid["resolution"] & 0x08 else "grid",
     }
-    return {"header": header, "data": [float(v) for v in vals]}
+    return {"header": header, "data": vals}
 
 
 def encode_grib2_message(

@@ -10,7 +10,7 @@ reference's own 65k-point GFS field through templates 5.0 and 5.3
 (skipped without the reference checkout; a synthetic 360×181 field
 keeps its header and shape checks running), and the
 e2e test in test_grib_e2e.py feeds a mixed-packing corpus through the
-binaryFile + mapInPandas source.
+binaryFile + mapInArrow source.
 """
 
 from __future__ import annotations
@@ -420,3 +420,152 @@ def test_local_use_section_is_tolerated():
     h1 = {k: v for k, v in rec["header"].items() if k != "gribLength"}
     h0 = {k: v for k, v in base["header"].items() if k != "gribLength"}
     assert h1 == h0
+
+
+def _with_bitmap(grid_msg: bytes, packed_msg: bytes, present) -> bytes:
+    """`grid_msg`'s sections 1/3/4 (the full grid) around `packed_msg`'s
+    sections 5/7 (only the present points packed), joined by a section
+    6 whose bitmap (indicator 0) marks `present`."""
+    g, p = _sections(grid_msg), _sections(packed_msg)
+    bitmap = np.packbits(np.asarray(present, dtype=np.uint8)).tobytes()
+    sec6 = (6 + len(bitmap)).to_bytes(4, "big") + bytes([6, 0]) + bitmap
+
+    def cut(msg, secs, n):
+        return msg[secs[n][0] : secs[n][0] + secs[n][1]]
+
+    body = (grid_msg[:16] + cut(grid_msg, g, 1) + cut(grid_msg, g, 3)
+            + cut(grid_msg, g, 4) + cut(packed_msg, p, 5) + sec6
+            + cut(packed_msg, p, 7) + b"7777")
+    return body[:8] + len(body).to_bytes(8, "big") + body[16:]
+
+
+def test_bitmap_masked_points_arrive_as_null(spark, tmp_path):
+    """A field with a bitmap (section 6 indicator 0) through both Spark
+    decode nodes: every point the bitmap marks missing is a NULL element
+    of `data` (never NaN), and every present point equals
+    `decode_grib2_bytes`'s value bit for bit."""
+    from mints_wind_data_ingestion_spark.sources.grib import (
+        decode_binary_df,
+        scan_binary_df,
+    )
+
+    nx, ny = 6, 4
+    present = (np.arange(nx * ny) % 5 != 2) & (np.arange(nx * ny) != 0)
+    msgs = []
+    for param, packing in ((2, "simple"), (3, "complex_diff")):
+        vals = _smooth_field(nx, ny, seed=param)[present].round(2)
+        packed = encode_grib2_message(
+            list(vals), parameter_number=param, ref_time=RT,
+            nx=int(present.sum()), ny=1, packing=packing,
+        )
+        grid = encode_grib2_message(
+            [0.0] * (nx * ny), parameter_number=param, ref_time=RT,
+            nx=nx, ny=ny, packing=packing,
+        )
+        msgs.append(_with_bitmap(grid, packed, present))
+    content = encode_grib2_file(msgs)
+    want = {r["header"]["parameterNumber"]: np.float32(r["data"])
+            for r in decode_grib2_bytes(content)}
+    assert sorted(want) == [2, 3]
+    for data in want.values():
+        assert data.size == nx * ny
+        assert np.isnan(data[~present]).all()
+        assert not np.isnan(data[present]).any()
+
+    (tmp_path / "masked.grb2").write_bytes(content)
+    binary = spark.read.format("binaryFile").load(str(tmp_path))
+    for df in (decode_binary_df(binary), scan_binary_df(binary)):
+        rows = df.collect()
+        assert sorted(r.header.parameterNumber for r in rows) == [2, 3]
+        for r in rows:
+            got = r.data
+            assert len(got) == nx * ny
+            assert [i for i, v in enumerate(got) if v is None] == list(
+                np.flatnonzero(~present)
+            )
+            kept = np.array([got[i] for i in np.flatnonzero(present)],
+                            dtype=np.float32)
+            param = r.header.parameterNumber
+            assert kept.tobytes() == want[param][present].tobytes()
+
+
+_GATHER_WIDTHS = st.one_of(st.integers(0, 64), st.sampled_from([0, 57, 58]))
+
+
+def _same_outcome(fast, reference):
+    """`fast()` returns what `reference()` returns, or raises the same
+    exception class with the same text."""
+    try:
+        want = reference()
+    except Exception as exc:  # noqa: BLE001 — the error IS the result
+        with pytest.raises(type(exc)) as got:
+            fast()
+        assert str(got.value) == str(exc)
+        return None
+    got = fast()
+    assert got.dtype == want.dtype == np.int64
+    assert np.array_equal(got, want)
+    return got
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.data())
+def test_group_gather_equals_the_group_loop(data):
+    """The complex-packing group gather (`_group_values`) against its
+    reference model, the per-group `_unpack_uints` loop
+    (`_group_values_loop`): group widths 0-64 (across the 57/58 window
+    boundary, zero widths included), group lengths that include 0, an
+    unaligned leading bit offset and payloads cut short of the groups.
+    Same int64 values, or the same exception class and text."""
+    from mints_wind_data_ingestion_spark.sources.grib2codec import (
+        _group_values,
+        _group_values_loop,
+    )
+
+    ng = data.draw(st.integers(0, 10))
+    narrow = data.draw(st.booleans())
+    widths = np.array(
+        data.draw(st.lists(st.integers(0, 57) if narrow else _GATHER_WIDTHS,
+                           min_size=ng, max_size=ng)), dtype=np.int64)
+    lengths = np.array(
+        data.draw(st.lists(st.sampled_from([0, 1, 2, 3, 7, 33]),
+                           min_size=ng, max_size=ng)), dtype=np.int64)
+    grefs = np.array(
+        data.draw(st.lists(st.integers(0, 2**62), min_size=ng, max_size=ng)),
+        dtype=np.int64)
+    off = data.draw(st.integers(0, 23))
+    need = (off + int(lengths @ widths) + 7) // 8
+    size = max(0, need - data.draw(st.sampled_from([0, 0, 0, 1, 5])))
+    buf = data.draw(st.binary(min_size=size, max_size=size))
+    n = int(lengths.sum())
+    _same_outcome(
+        lambda: _group_values(buf, off, grefs, widths, lengths, n),
+        lambda: _group_values_loop(buf, off, grefs, widths, lengths, n),
+    )
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.integers(0, 40), _GATHER_WIDTHS, st.integers(0, 23), st.data())
+def test_uint_reads_equal_the_matmul_reader(n, w, off, data):
+    """The descriptor and template 5.0 reads (`_read_uints`) against
+    the unpackbits+matmul reader `_unpack_uints`: the same values and
+    next offset, or — for a read past the payload — the same error."""
+    from mints_wind_data_ingestion_spark.sources.grib2codec import (
+        _read_uints,
+        _unpack_uints,
+    )
+
+    need = (off + n * w + 7) // 8
+    size = max(0, need - data.draw(st.sampled_from([0, 0, 1, 4])))
+    buf = data.draw(st.binary(min_size=size, max_size=size))
+    bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8))
+    ends = []
+
+    def run(read):
+        vals, end = read()
+        ends.append(end)
+        return vals
+
+    _same_outcome(lambda: run(lambda: _read_uints(buf, off, n, w)),
+                  lambda: run(lambda: _unpack_uints(bits, off, n, w)))
+    assert len(set(ends)) <= 1

@@ -2,7 +2,7 @@
 (VERDICT r2 "Next round" #8): encoder-built multi-record binary
 fixtures (3 run timestamps × U/V + one decoy record the reference's
 --fp/--fs/--fv selection must drop) are decoded by the REAL WMO codec
-through the binaryFile + mapInPandas source (sources.grib.read_grib_dir)
+through the binaryFile + mapInArrow source (sources.grib.read_grib_dir)
 and aggregated to per-(refTime, param, lat) statistics — the
 x_grid_stats-class consumer query (SURVEY.md §2.4) — which must equal
 the same aggregation computed from the original in-memory fields.

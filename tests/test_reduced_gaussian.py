@@ -238,4 +238,4 @@ def test_narrow_list_entry_widths_decode(width):
     rec = decode_grib2_bytes(_with_entry_width(msg, width))[0]
     assert rec["header"]["reducedPoints"] == COUNTS
     assert rec["header"]["nx"] is None
-    assert rec["data"] == rec4["data"]
+    assert np.array_equal(rec["data"], rec4["data"])

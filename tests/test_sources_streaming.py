@@ -106,7 +106,8 @@ def test_grib2_codec_edge_cases():
     )
     recs = decode_grib2_bytes(encode_grib2_file([const, neg]))
     assert [r["header"]["parameterNumber"] for r in recs] == [2, 3]
-    assert recs[0]["data"] == [pytest.approx(7.25)] * 6
+    assert all(r["data"].dtype == np.float32 for r in recs)
+    assert np.array_equal(recs[0]["data"], np.float32([7.25] * 6))
     assert np.allclose(
         recs[1]["data"], [-40.5, -0.25, 0.0, 12.75, 99.99, -99.99], atol=1e-5
     )
@@ -967,18 +968,26 @@ def test_binary_sources_share_one_decode_node():
     file-to-rows UDTF (`sources._file_rows_df`), and the x_grib_*
     queries decode through `decode_binary_df` — only `x_grib_reduced`,
     which attaches per-point lat/lon in its decode pass, calls the
-    codec itself. A copied per-reader or per-query UDTF cannot grow
-    back."""
+    codec itself. The node is `mapInArrow`: no binary reader in
+    `sources/` goes through pandas. A copied per-reader or per-query
+    UDTF cannot grow back."""
     import ast
     import pathlib
 
     import mints_wind_data_ingestion_spark as pkg
 
     root = pathlib.Path(pkg.__file__).parent
-    loop = 'zip(pdf["path"], pdf["content"])'
-    hits = {p.name: p.read_text().count(loop)
-            for p in sorted((root / "sources").glob("*.py"))}
+    texts = {p.name: p.read_text()
+             for p in sorted((root / "sources").glob("*.py"))}
+    loop = "zip(paths, contents)"
+    hits = {name: text.count(loop) for name, text in texts.items()}
     assert {k: v for k, v in hits.items() if v} == {"__init__.py": 1}
+    assert texts["__init__.py"].count(".mapInArrow(") == 1
+    # multimodal.py's (id, payload) image/video/audio mappers are not
+    # file-to-rows readers; every other module has no pandas node
+    pandas_nodes = {name for name, text in texts.items()
+                    if "mapInPandas(" in text}
+    assert pandas_nodes <= {"multimodal.py"}
 
     callers = set()
     for path in sorted((root / "plans").glob("*.py")):
