@@ -24,9 +24,10 @@ tests/test_props_round3.py.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..sources import arrow_rows
 
 __all__ = ["word_frequencies", "train_bpe_merges", "train_bpe_merges_auto",
            "bpe_merges_local", "apply_merges_py", "encode_corpus"]
@@ -125,16 +126,13 @@ def train_bpe_merges(
         a, b = top[0].a, top[0].b
         merges.append((a, b))
 
-        def apply_batch(it, pair=(a, b)):
-            for pdf in it:
-                pdf = pdf.copy()
-                pdf["symbols"] = [
-                    apply_merges_py(list(s), [pair]) for s in pdf["symbols"]
-                ]
-                yield pdf
+        def apply_batch(words, freqs, symbols, pair=(a, b)):
+            return {"word": words, "freq": freqs, "symbols": [
+                apply_merges_py(s, [pair]) for s in symbols
+            ]}
 
-        vocab = vocab.mapInPandas(
-            apply_batch, schema="word string, freq long, symbols array<string>"
+        vocab = arrow_rows(
+            vocab, apply_batch, "word string, freq long, symbols array<string>"
         ).localCheckpoint()
     return merges
 
@@ -225,7 +223,7 @@ def encode_corpus(
     """Tokenize a corpus with a learned merge sequence — the encoder
     half of the tokenizer: per document, whitespace-split, lowercase,
     symbolize each word (chars + EOW) and apply the merges in training
-    order. One Arrow-batched mapInPandas pass; the merge list is tiny
+    order. One Arrow-batched row-node pass; the merge list is tiny
     and ships in the closure (at vocab sizes it would broadcast the
     same way). Output: (id, array<string> of BPE tokens, token count).
 
@@ -238,8 +236,6 @@ def encode_corpus(
     corpora containing Unicode whitespace (e.g. U+00A0)."""
     import re
 
-    import pandas as pd  # noqa: F811  (executor-side import)
-
     ms = list(merges)
     split = re.compile(r"\s+", flags=re.ASCII).split
     #: per-partition memoization cap — Zipf means a small cache catches
@@ -247,31 +243,24 @@ def encode_corpus(
     cache_cap = 65_536
     id_type = docs.schema[id_col].dataType.simpleString()
 
-    def batches(it):
-        cache: dict[str, list[str]] = {}
+    cache: dict[str, list[str]] = {}
 
-        def enc_word(w: str) -> list[str]:
-            got = cache.get(w)
-            if got is None:
-                got = apply_merges_py(list(w) + [EOW], ms)
-                if len(cache) < cache_cap:
-                    cache[w] = got
-            return got
+    def enc_word(w: str) -> list[str]:
+        got = cache.get(w)
+        if got is None:
+            got = apply_merges_py(list(w) + [EOW], ms)
+            if len(cache) < cache_cap:
+                cache[w] = got
+        return got
 
-        for pdf in it:
-            toks = [
-                [t for w in split(str(s).lower()) if w for t in enc_word(w)]
-                for s in pdf[text_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    out: toks,
-                    "n_bpe_tokens": [len(t) for t in toks],
-                }
-            )
+    def columns_of(ids, texts):
+        toks = [
+            [t for w in split(str(s).lower()) if w for t in enc_word(w)]
+            for s in texts
+        ]
+        return {id_col: ids, out: toks, "n_bpe_tokens": [len(t) for t in toks]}
 
-    return docs.select(id_col, text_col).mapInPandas(
-        batches,
-        schema=f"{id_col} {id_type}, {out} array<string>, n_bpe_tokens long",
+    return arrow_rows(
+        docs.select(id_col, text_col), columns_of,
+        f"{id_col} {id_type}, {out} array<string>, n_bpe_tokens long",
     )

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..sources import arrow_rows
+
 __all__ = [
     "tokens",
     "token_count",
@@ -129,8 +131,9 @@ def shingle_docs_pandas(
     n: int = 3,
     out: str = "shingles",
 ):
-    """Bulk word-n-gram shingling via Arrow-batched `mapInPandas` —
-    the measured fast path for corpus-scale dedup pipelines.
+    """Bulk word-n-gram shingling through the Arrow row node
+    (`sources.arrow_rows`) — the measured fast path for corpus-scale
+    dedup pipelines.
 
     Rationale (bench, sf0.1, local[32]): Spark's higher-order array
     functions (`transform`/`filter`/`aggregate`) are CodegenFallback —
@@ -145,24 +148,22 @@ def shingle_docs_pandas(
     order = text order) — identical semantics to `word_shingles`;
     callers needing set semantics apply `array_distinct`.
     """
-    import pandas as pd
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
     out_schema = StructType(
         [df.schema[id_col], StructField(out, ArrayType(StringType()))]
     )
 
-    def batches(it):
-        for pdf in it:
-            shingles = []
-            for t in pdf[text_col]:
-                toks = t.split()
-                shingles.append(
-                    [" ".join(toks[i : i + n]) for i in range(max(len(toks) - n + 1, 0))]
-                )
-            yield pd.DataFrame({id_col: pdf[id_col].values, out: shingles})
+    def columns_of(ids, texts):
+        shingles = []
+        for t in texts:
+            toks = t.split()
+            shingles.append(
+                [" ".join(toks[i : i + n]) for i in range(max(len(toks) - n + 1, 0))]
+            )
+        return {id_col: ids, out: shingles}
 
-    return df.select(id_col, text_col).mapInPandas(batches, schema=out_schema)
+    return arrow_rows(df.select(id_col, text_col), columns_of, out_schema)
 
 
 def fingerprint64(text: Column | str) -> Column:

@@ -182,7 +182,7 @@ def jaccard_similarity_join(
     posting = _jaccard_posting(docs, id_col, shingle_col)
     # cache: the posting list is consumed by BOTH sides of the self-join;
     # without a materialization point the shingling upstream (often a
-    # mapInPandas) executes twice. (id, n, hash) rows are ~16 B each.
+    # Python row node) executes twice. (id, n, hash) rows are ~16 B each.
     # `cache=False` for callers whose input is already materialized
     # (e.g. a streaming gate's localCheckpoint) — an internal .cache()
     # there would leak one CacheManager entry per epoch.
@@ -255,7 +255,7 @@ def jaccard_join_prefix_filtered(
     ).withColumn("__n", F.size("__sh"))
     # `sets` feeds the df-count, both prefix sides AND the verify —
     # four consumers; without a materialization point an expensive
-    # upstream (shingling / frame-hash mapInPandas) runs four times.
+    # upstream (shingling / frame-hash row node) runs four times.
     # cache=False for callers whose input is already materialized
     # (streaming gates over a localCheckpoint).
     if cache:
@@ -582,7 +582,7 @@ def _minhash_band_buckets(
     signature array is never materialized and the expensive agg runs
     exactly ONCE per corpus. `posting` is cached: it feeds the
     signature aggregate AND the count-based verify, so the shingling
-    (mapInPandas) runs once. The k min-aggregates and the band hashes
+    (the Arrow row node) runs once. The k min-aggregates and the band hashes
     are SQL strings parsed JVM-side in one call each — Column-operator
     construction costs a py4j round-trip per node (~1 s of driver time
     per build at k=144)."""

@@ -5,7 +5,8 @@ The reference's download step is an imperative driver-side loop:
 next candidate, then `open(dataPath,"wb").write(body)`
 (converter.py:142, 172-177). Here the fetch itself is an OPERATOR over
 the candidate-URL DataFrame (`operators.discovery.candidates`): an
-Arrow-batched `mapInPandas` pass fetches each row's URL executor-side
+Arrow-batched pass through the package's one Python row node
+(`sources.arrow_rows`) fetches each row's URL executor-side
 and appends (ok, error, content) columns — absence becomes a FALSE row
 instead of a control-flow exception, so `freshest_available` semantics
 compose as a plain filter + limit(1) instead of a retry loop.
@@ -29,11 +30,9 @@ dir IS the integration point (streaming ingest).
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 from urllib.parse import urlparse
 from urllib.request import url2pathname
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -42,6 +41,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..sources import arrow_rows
 
 __all__ = [
     "fetch_binary",
@@ -118,21 +119,15 @@ def probe_binary(
             StructField("error", StringType()),
         ]
     )
-    in_cols = [f.name for f in df.schema.fields]
+    in_cols = df.columns
 
-    def probe_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            oks, errs = [], []
-            for url in pdf[url_col]:
-                ok, err = _probe_one(str(url), timeout)
-                oks.append(ok)
-                errs.append(err)
-            pdf = pdf[in_cols].copy()
-            pdf["ok"] = oks
-            pdf["error"] = errs
-            yield pdf
+    def columns_of(*cols):
+        passed = dict(zip(in_cols, cols))
+        probes = [_probe_one(str(url), timeout) for url in passed[url_col]]
+        return {**passed, "ok": [ok for ok, _ in probes],
+                "error": [err for _, err in probes]}
 
-    return df.mapInPandas(probe_batches, schema=out_schema)
+    return arrow_rows(df, columns_of, out_schema)
 
 
 def fetch_binary(
@@ -158,23 +153,17 @@ def fetch_binary(
             StructField("content", BinaryType()),
         ]
     )
-    in_cols = [f.name for f in df.schema.fields]
+    in_cols = df.columns
 
-    def fetch_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            oks, errs, bodies = [], [], []
-            for url in pdf[url_col]:
-                body, err = _fetch_one(str(url), timeout, retries)
-                oks.append(body is not None)
-                errs.append(err)
-                bodies.append(body)
-            pdf = pdf[in_cols].copy()
-            pdf["ok"] = oks
-            pdf["error"] = errs
-            pdf["content"] = bodies
-            yield pdf
+    def columns_of(*cols):
+        passed = dict(zip(in_cols, cols))
+        got = [_fetch_one(str(url), timeout, retries)
+               for url in passed[url_col]]
+        return {**passed, "ok": [body is not None for body, _ in got],
+                "error": [err for _, err in got],
+                "content": [body for body, _ in got]}
 
-    return df.mapInPandas(fetch_batches, schema=out_schema)
+    return arrow_rows(df, columns_of, out_schema)
 
 
 def stage_to_dir(
@@ -193,17 +182,16 @@ def stage_to_dir(
     os.makedirs(landing_dir, exist_ok=True)
     rows = fetched.filter("ok").select(name_col, "content")
 
-    def write_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for name, body in zip(pdf[name_col], pdf["content"]):
-                base = os.path.basename(urlparse(str(name)).path)
-                with open(os.path.join(landing_dir, base), "wb") as fh:
-                    fh.write(bytes(body))
-            yield pd.DataFrame({"n": [len(pdf)]})
+    def columns_of(names, bodies):
+        for name, body in zip(names, bodies):
+            base = os.path.basename(urlparse(str(name)).path)
+            with open(os.path.join(landing_dir, base), "wb") as fh:
+                fh.write(bytes(body))
+        return {"n": [len(names)]}
 
     from pyspark.sql import functions as F
 
-    n = rows.mapInPandas(write_batches, "n long").agg(F.sum("n")).first()[0]
+    n = arrow_rows(rows, columns_of, "n long").agg(F.sum("n")).first()[0]
     return int(n or 0)
 
 
@@ -387,60 +375,59 @@ def fetch_grib_ranges(
             StructField("content", BinaryType()),
         ]
     )
-    in_cols = [f.name for f in df.schema.fields]
+    in_cols = df.columns
     extra = ["msg", "variable", "level", "forecast", "range_start",
              "range_end", "ok", "error", "content"]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                url = str(row[url_col])
-                base = {c: row[c] for c in in_cols}
+    def columns_of(*cols):
+        rows = []
+        for values in zip(*cols):
+            base = dict(zip(in_cols, values))
+            url = str(base[url_col])
 
-                def emit(**kw):
-                    rows.append({**base, **dict.fromkeys(extra), **kw})
+            def emit(**kw):
+                rows.append({**base, **dict.fromkeys(extra), **kw})
 
-                idx_body, err = _fetch_one(url + idx_suffix, timeout,
-                                           retries)
-                if idx_body is None:
-                    emit(ok=False, error=f"idx: {err}")
-                    continue
-                try:
-                    recs = parse_grib_idx(idx_body.decode("utf-8",
-                                                          "replace"))
-                except Exception as exc:  # noqa: BLE001 — absence is data
-                    emit(ok=False, error=f"idx parse: {exc}")
-                    continue
-                picked = select_idx_records(recs, variables, level,
-                                            forecast)
-                if not picked:
-                    emit(ok=False, error="idx: no matching records")
-                    continue
-                # submessages of one GRIB message share its byte
-                # offset — fetch each distinct range ONCE (decode
-                # yields every field in the message), joining the
-                # selected field labels with '+'
-                by_start: dict[int, dict] = {}
-                for r in picked:
-                    g = by_start.get(r["start"])
-                    if g is None:
-                        by_start[r["start"]] = dict(r)
-                    else:
-                        for k in ("var", "level", "forecast"):
-                            if r[k] not in g[k].split("+"):
-                                g[k] = g[k] + "+" + r[k]
-                for r in sorted(by_start.values(),
-                                key=lambda x: x["start"]):
-                    body, ferr = _fetch_range_one(
-                        url, r["start"], r["end"], timeout, retries
-                    )
-                    emit(
-                        msg=r["msg"], variable=r["var"],
-                        level=r["level"], forecast=r["forecast"],
-                        range_start=r["start"], range_end=r["end"],
-                        ok=body is not None, error=ferr, content=body,
-                    )
-            yield pd.DataFrame(rows, columns=in_cols + extra)
+            idx_body, err = _fetch_one(url + idx_suffix, timeout,
+                                       retries)
+            if idx_body is None:
+                emit(ok=False, error=f"idx: {err}")
+                continue
+            try:
+                recs = parse_grib_idx(idx_body.decode("utf-8",
+                                                      "replace"))
+            except Exception as exc:  # noqa: BLE001 — absence is data
+                emit(ok=False, error=f"idx parse: {exc}")
+                continue
+            picked = select_idx_records(recs, variables, level,
+                                        forecast)
+            if not picked:
+                emit(ok=False, error="idx: no matching records")
+                continue
+            # submessages of one GRIB message share its byte
+            # offset — fetch each distinct range ONCE (decode
+            # yields every field in the message), joining the
+            # selected field labels with '+'
+            by_start: dict[int, dict] = {}
+            for r in picked:
+                g = by_start.get(r["start"])
+                if g is None:
+                    by_start[r["start"]] = dict(r)
+                else:
+                    for k in ("var", "level", "forecast"):
+                        if r[k] not in g[k].split("+"):
+                            g[k] = g[k] + "+" + r[k]
+            for r in sorted(by_start.values(),
+                            key=lambda x: x["start"]):
+                body, ferr = _fetch_range_one(
+                    url, r["start"], r["end"], timeout, retries
+                )
+                emit(
+                    msg=r["msg"], variable=r["var"],
+                    level=r["level"], forecast=r["forecast"],
+                    range_start=r["start"], range_end=r["end"],
+                    ok=body is not None, error=ferr, content=body,
+                )
+        return {c: [r[c] for r in rows] for c in in_cols + extra}
 
-    return df.mapInPandas(batches, schema=out_schema)
+    return arrow_rows(df, columns_of, out_schema)

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import managed_cache
+from ..sources import arrow_rows
 
 __all__ = [
     "train_bigram_counts",
@@ -86,32 +87,28 @@ def _tagged_grams(
     are CodegenFallback, interpreted per element, ~7× slower at
     sf0.1), widened to tag every gram order so a trainer never
     re-tokenizes the corpus for the vocabulary."""
-    import pandas as pd
 
-    def batches(it):
-        for pdf in it:
-            kinds: list[int] = []
-            grams: list[str] = []
-            for t in pdf[text_col]:
-                toks = (t or "").split()
-                kinds.extend([1] * len(toks))
-                grams.extend(toks)
-                if max_order >= 2 and len(toks) > 1:
-                    kinds.extend([2] * (len(toks) - 1))
-                    grams.extend(
-                        a + " " + b for a, b in zip(toks, toks[1:])
-                    )
-                if max_order >= 3 and len(toks) > 2:
-                    kinds.extend([3] * (len(toks) - 2))
-                    grams.extend(
-                        a + " " + b + " " + c
-                        for a, b, c in zip(toks, toks[1:], toks[2:])
-                    )
-            yield pd.DataFrame({"kind": kinds, "gram": grams})
+    def columns_of(texts):
+        kinds: list[int] = []
+        grams: list[str] = []
+        for t in texts:
+            toks = (t or "").split()
+            kinds.extend([1] * len(toks))
+            grams.extend(toks)
+            if max_order >= 2 and len(toks) > 1:
+                kinds.extend([2] * (len(toks) - 1))
+                grams.extend(
+                    a + " " + b for a, b in zip(toks, toks[1:])
+                )
+            if max_order >= 3 and len(toks) > 2:
+                kinds.extend([3] * (len(toks) - 2))
+                grams.extend(
+                    a + " " + b + " " + c
+                    for a, b, c in zip(toks, toks[1:], toks[2:])
+                )
+        return {"kind": kinds, "gram": grams}
 
-    return docs.select(text_col).mapInPandas(
-        batches, schema="kind int, gram string"
-    )
+    return arrow_rows(docs.select(text_col), columns_of, "kind int, gram string")
 
 
 def train_bigram_counts(
@@ -348,38 +345,35 @@ def score_stupid_backoff(
     and pass, as in `score_perplexity`. Document ids must be unique:
     the output has one row per DISTINCT doc_id, so documents sharing an
     id score as one document."""
-    import pandas as pd
-
     alpha = float(alpha)
     add_k = float(add_k)
 
-    def trigrams(it):
+    def trigrams(doc_ids, texts):
         # docs with < 3 tokens emit ONE all-null sentinel row (the
         # explode_outer pattern score_perplexity already uses): null
         # gram keys match nothing in the left joins and score a null
         # nll, so the per-doc aggregate alone covers every document —
         # no join back to the docs table (r15: that final join was the
         # plan's only SortMergeJoin AND a second full scan of docs)
-        for pdf in it:
-            ids, tgs, ctxs, sufs, w2s, w3s = [], [], [], [], [], []
-            for d, t in zip(pdf[id_col], pdf[text_col]):
-                toks = (t or "").split()
-                if len(toks) < 3:
-                    ids.append(d)
-                    for col in (tgs, ctxs, sufs, w2s, w3s):
-                        col.append(None)
-                    continue
-                for a, b, c in zip(toks, toks[1:], toks[2:]):
-                    ids.append(d)
-                    tgs.append(a + " " + b + " " + c)
-                    ctxs.append(a + " " + b)
-                    sufs.append(b + " " + c)
-                    w2s.append(b)
-                    w3s.append(c)
-            yield pd.DataFrame({
-                "doc_id": ids, "tg": tgs, "ctx": ctxs, "suf": sufs,
-                "w2": w2s, "w3": w3s,
-            })
+        ids, tgs, ctxs, sufs, w2s, w3s = [], [], [], [], [], []
+        for d, t in zip(doc_ids, texts):
+            toks = (t or "").split()
+            if len(toks) < 3:
+                ids.append(d)
+                for col in (tgs, ctxs, sufs, w2s, w3s):
+                    col.append(None)
+                continue
+            for a, b, c in zip(toks, toks[1:], toks[2:]):
+                ids.append(d)
+                tgs.append(a + " " + b + " " + c)
+                ctxs.append(a + " " + b)
+                sufs.append(b + " " + c)
+                w2s.append(b)
+                w3s.append(c)
+        return {
+            "doc_id": ids, "tg": tgs, "ctx": ctxs, "suf": sufs,
+            "w2": w2s, "w3": w3s,
+        }
 
     # preserve the caller's id TYPE (string ids are as valid as longs
     # — shingle_docs_pandas sets the precedent; r8 review): the output
@@ -392,7 +386,7 @@ def score_stupid_backoff(
         + [StructField(c, StringType(), True)
            for c in ("tg", "ctx", "suf", "w2", "w3")]
     )
-    dtg = _nn(docs, id_col, text_col).mapInPandas(trigrams, out_schema)
+    dtg = arrow_rows(_nn(docs, id_col, text_col), trigrams, out_schema)
     j = (
         dtg.join(tri, "tg", "left")
         .join(bi.select(F.col("bg").alias("ctx"),
@@ -551,33 +545,28 @@ def _doc_grams(
     sentinel row, so every input doc reaches the downstream
     groupBy(doc_id) and scorers never need a join back to the doc
     table just to resurrect empty documents."""
-    import pandas as pd
-
     nn = _nn(docs, id_col, text_col)
 
-    def batches(it):
-        for pdf in it:
-            ids: list = []
-            grams: list[str | None] = []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                toks = (t or "").split()
-                if not toks:
-                    ids.append(i)
-                    grams.append(None)
-                    continue
-                ids.extend([i] * len(toks))
-                grams.extend(toks)
-                if max_order >= 2 and len(toks) > 1:
-                    ids.extend([i] * (len(toks) - 1))
-                    grams.extend(
-                        a + " " + b for a, b in zip(toks, toks[1:])
-                    )
-            yield pd.DataFrame({"doc_id": ids, "gram": grams})
+    def columns_of(doc_ids, texts):
+        ids: list = []
+        grams: list[str | None] = []
+        for i, t in zip(doc_ids, texts):
+            toks = (t or "").split()
+            if not toks:
+                ids.append(i)
+                grams.append(None)
+                continue
+            ids.extend([i] * len(toks))
+            grams.extend(toks)
+            if max_order >= 2 and len(toks) > 1:
+                ids.extend([i] * (len(toks) - 1))
+                grams.extend(
+                    a + " " + b for a, b in zip(toks, toks[1:])
+                )
+        return {"doc_id": ids, "gram": grams}
 
     id_type = nn.schema[id_col].dataType.simpleString()
-    return nn.mapInPandas(
-        batches, schema=f"doc_id {id_type}, gram string"
-    )
+    return arrow_rows(nn, columns_of, f"doc_id {id_type}, gram string")
 
 
 def dsir_bucket_logweights(

@@ -47,6 +47,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources import arrow_rows
+
 __all__ = ["repetition_features", "GOPHER_THRESHOLDS_E6"]
 
 #: published Gopher gates in micro-units (appendix A1): most-common
@@ -90,7 +92,7 @@ def repetition_features(
     pinned by tests/test_extensions.py, incl. a hypothesis whitespace
     fuzz — the split/trim edge semantics are the divergence risk):
 
-    - ``arrow`` (default): ONE mapInPandas pass — per-doc gram
+    - ``arrow`` (default): ONE Arrow row-node pass — per-doc gram
       counting in a Counter, exact ints out, the e6 ratio arithmetic
       done by the SAME Spark expressions as the expr path. No explode,
       no gram-grain shuffle, no HOF interpretation: the r9 sf1 stage
@@ -267,8 +269,6 @@ def _repetition_rows(ids, texts):
 def _repetition_arrow(
     docs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
-    import pandas as pd
-
     id_type = docs.schema[id_col].dataType.simpleString()
     fields = ["n_chars long", "n_words long", "n_distinct long"]
     fields += [f"t{n}_c long" for n in TOP_NS]
@@ -278,15 +278,9 @@ def _repetition_arrow(
 
     cols = [f.split()[0] for f in ["doc_id x", *fields]]
 
-    def count_batches(it):
-        for pdf in it:
-            # explicit columns: an empty Arrow batch must still yield a
-            # schema-shaped frame, not a zero-column DataFrame
-            yield pd.DataFrame(
-                _repetition_rows(pdf[id_col], pdf[text_col]), columns=cols
-            )
+    def columns_of(ids, texts):
+        rows = _repetition_rows(ids, texts)
+        return {c: [r[c] for r in rows] for c in cols}
 
-    per = docs.select(id_col, text_col).mapInPandas(
-        count_batches, schema=schema
-    )
+    per = arrow_rows(docs.select(id_col, text_col), columns_of, schema)
     return _finish(per)

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..caching import data_version, memo, plan_hash
+from ..sinks import _hadoop_fs
 
 __all__ = [
     "dot",
@@ -871,16 +872,6 @@ def build_ivf_index(
     _hadoop_write_text(spark, marker, json.dumps(meta))
 
 
-def _hadoop_fs(spark: SparkSession, path_str: str):
-    """(FileSystem, Path) for `path_str` resolved through the session's
-    Hadoop conf — the same resolution `df.write.parquet` uses, so the
-    marker always lands on the same store as the index it guards."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path_str)
-    conf = spark._jsc.hadoopConfiguration()
-    return jpath.getFileSystem(conf), jpath
-
-
 def _marker_stamp(spark: SparkSession, path_str: str) -> str | None:
     """mtime:length of a marker file — the per-build nonce: a
     same-content rebuild (delete + rebuild from the same
@@ -889,18 +880,18 @@ def _marker_stamp(spark: SparkSession, path_str: str) -> str | None:
     part files. The modification time changes on every rewrite. None
     when the stat fails: without a nonce there is no safe memo key."""
     try:
-        fs, jpath = _hadoop_fs(spark, path_str)
-        st = fs.getFileStatus(jpath)
+        fs, P = _hadoop_fs(spark, path_str)
+        st = fs.getFileStatus(P(path_str))
         return f"{st.getModificationTime()}:{st.getLen()}"
     except Exception:  # noqa: BLE001 — the caller skips the memo
         return None
 
 
 def _hadoop_read_text(spark: SparkSession, path_str: str) -> str | None:
-    fs, jpath = _hadoop_fs(spark, path_str)
-    if not fs.exists(jpath):
+    fs, P = _hadoop_fs(spark, path_str)
+    if not fs.exists(P(path_str)):
         return None
-    stream = fs.open(jpath)
+    stream = fs.open(P(path_str))
     try:
         # readAllBytes (Java 11+) — one Py4J round-trip for the whole
         # (tiny) marker rather than one per byte
@@ -910,8 +901,8 @@ def _hadoop_read_text(spark: SparkSession, path_str: str) -> str | None:
 
 
 def _hadoop_write_text(spark: SparkSession, path_str: str, text: str) -> None:
-    fs, jpath = _hadoop_fs(spark, path_str)
-    stream = fs.create(jpath, True)
+    fs, P = _hadoop_fs(spark, path_str)
+    stream = fs.create(P(path_str), True)
     try:
         stream.write(bytearray(text.encode("utf-8")))
     finally:

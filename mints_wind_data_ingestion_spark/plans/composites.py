@@ -983,8 +983,8 @@ def _mm_fused_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice is bit-identical to x_image_dhash / x_video_sig /
     x_audio_sig (the lazy replica oracles pin it)."""
     import numpy as np
-    import pandas as pd
 
+    from ..sources import arrow_rows
     from ..sources.flaccodec import encode_flac
     from ..sources.gifcodec import encode_gif, encode_gif_frames
     from ..sources.tiffcodec import encode_tiff
@@ -1022,73 +1022,66 @@ def _mm_fused_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
         work_factor=256,
     )
 
-    def gen(it):
-        for pdf in it:
-            mods, oids, fidx, fh = [], [], [], []
+    def gen(doc_ids):
+        mods, oids, fidx, fh = [], [], [], []
 
-            def emit(m, i, x, h):
-                mods.append(m)
-                oids.append(i)
-                fidx.append(x)
-                fh.append(h)
+        def emit(m, i, x, h):
+            mods.append(m)
+            oids.append(i)
+            fidx.append(x)
+            fh.append(h)
 
-            for i in pdf["doc_id"]:
-                i = int(i)
-                for sib in (0, 1) if i % 20 == 0 else (0,):
-                    # every 4th image ships as PNG, every 4th+2 as
-                    # GIF, every 8th+1 as LZW+predictor TIFF, the rest
-                    # as BMP — _image_corpus ships WebP for ids ≡ 3, 7
-                    # (mod 8) where this pass ships BMP; every
-                    # container is lossless, so the hashes agree
-                    enc_i = (encode_png if i % 4 == 0
-                             else encode_gif if i % 4 == 2
-                             else enc_tiff_lzw if i % 8 == 1
-                             else encode_bmp)
-                    h = dhash64(
-                        decode_image(enc_i(synth_image_pixels(i, sib)))[
-                            "pixels"
-                        ]
+        for i in doc_ids:
+            for sib in (0, 1) if i % 20 == 0 else (0,):
+                # every 4th image ships as PNG, every 4th+2 as
+                # GIF, every 8th+1 as LZW+predictor TIFF, the rest
+                # as BMP — _image_corpus ships WebP for ids ≡ 3, 7
+                # (mod 8) where this pass ships BMP; every
+                # container is lossless, so the hashes agree
+                enc_i = (encode_png if i % 4 == 0
+                         else encode_gif if i % 4 == 2
+                         else enc_tiff_lzw if i % 8 == 1
+                         else encode_bmp)
+                h = dhash64(
+                    decode_image(enc_i(synth_image_pixels(i, sib)))[
+                        "pixels"
+                    ]
+                )
+                emit("i", i + sib * _IMG_SIB_OFFSET, None,
+                     int(np.int64(np.uint64(h))))
+            if i % 10 == 0:
+                for sib in (0, 1) if i % 40 == 0 else (0,):
+                    # every 4th clip ships as ANIMATED GIF —
+                    # mirrors _video_corpus exactly (gray frames
+                    # palette-encode losslessly)
+                    enc_v = (encode_gif_frames if i % 40 == 10
+                             else encode_y4m_gray)
+                    frames = sample_video_frames(
+                        enc_v(synth_video_frames(i, sib)), 1
                     )
-                    emit("i", i + sib * _IMG_SIB_OFFSET, None,
-                         int(np.int64(np.uint64(h))))
-                if i % 10 == 0:
-                    for sib in (0, 1) if i % 40 == 0 else (0,):
-                        # every 4th clip ships as ANIMATED GIF —
-                        # mirrors _video_corpus exactly (gray frames
-                        # palette-encode losslessly)
-                        enc_v = (encode_gif_frames if i % 40 == 10
-                                 else encode_y4m_gray)
-                        frames = sample_video_frames(
-                            enc_v(synth_video_frames(i, sib)), 1
-                        )
-                        for idx, y in frames:
-                            emit("v", i + sib * _VID_SIB_OFFSET, idx,
-                                 int(np.int64(np.uint64(dhash64(y)))))
-                if i % 10 == 5:
-                    for sib in (0, 1) if i % 40 == 5 else (0,):
-                        # every 4th clip ships as FLAC — mirrors
-                        # _audio_corpus exactly (lossless, so the
-                        # fingerprints and oracles are unchanged)
-                        enc = (
-                            encode_flac if (i // 10) % 4 == 0
-                            else encode_wav_pcm16
-                        )
-                        fps = audio_fingerprint(
-                            decode_audio(
-                                enc(synth_audio_segments(i, sib))
-                            )["waveform"]
-                        )
-                        for idx, fp in fps:
-                            emit("a", i + sib * _AUD_SIB_OFFSET, idx, fp)
-            yield pd.DataFrame({
-                "mod": mods,
-                "doc_id": oids,
-                "frame_idx": pd.array(fidx, dtype="Int32"),
-                "fhash": pd.array(fh, dtype="Int64"),
-            })
+                    for idx, y in frames:
+                        emit("v", i + sib * _VID_SIB_OFFSET, idx,
+                             int(np.int64(np.uint64(dhash64(y)))))
+            if i % 10 == 5:
+                for sib in (0, 1) if i % 40 == 5 else (0,):
+                    # every 4th clip ships as FLAC — mirrors
+                    # _audio_corpus exactly (lossless, so the
+                    # fingerprints and oracles are unchanged)
+                    enc = (
+                        encode_flac if (i // 10) % 4 == 0
+                        else encode_wav_pcm16
+                    )
+                    fps = audio_fingerprint(
+                        decode_audio(
+                            enc(synth_audio_segments(i, sib))
+                        )["waveform"]
+                    )
+                    for idx, fp in fps:
+                        emit("a", i + sib * _AUD_SIB_OFFSET, idx, fp)
+        return {"mod": mods, "doc_id": oids, "frame_idx": fidx, "fhash": fh}
 
-    return ids.mapInPandas(
-        gen, "mod string, doc_id long, frame_idx int, fhash long"
+    return arrow_rows(
+        ids, gen, "mod string, doc_id long, frame_idx int, fhash long"
     )
 
 

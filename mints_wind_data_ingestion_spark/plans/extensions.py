@@ -248,7 +248,7 @@ def x_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_dedup_pairs_against
 
     docs = _spread(tables(spark, sf_dir)["documents"], work_factor=1)
-    # split BEFORE the shingle UDTF: a filter above mapInPandas can't
+    # split BEFORE the shingle UDTF: a filter above the row node can't
     # push through it, and each side shingles only its own rows anyway
     incoming = shingle_docs_pandas(
         docs.filter(F.col("doc_id") % 3 == 0), "doc_id", "text", 3,
@@ -990,7 +990,7 @@ def x_mm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     riding x_layout_mm_suite's composite.
 
     Multimodal metadata extraction: binary payload column →
-    Arrow-batched mapInPandas 'decode' → typed metadata struct
+    the Arrow row node's 'decode' → typed metadata struct
     (sources.multimodal). The decode here is the deterministic
     byte-stats fake (real image/audio decoders are stubbed — not in
     this container), but the plumbing (binary column, Arrow batch
@@ -1069,7 +1069,7 @@ def x_mm_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure function of doc_id, the oracle recomputes the resized moments
     in closed form — any bit wrong anywhere in the two codec passes,
     the half-pixel-center resize grid, or the feature means breaks the
-    hash. Three chained Arrow mapInPandas passes, narrow end-to-end:
+    hash. Three chained Arrow row-node passes, narrow end-to-end:
     the 100 TB shape is a binaryFile scan in place of the synth."""
     from ..sources.multimodal import (
         resized_pixel_moments,
@@ -1178,7 +1178,7 @@ def x_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vocab-sized iteration state collapses to one bounded pull
     under the size gate, the CC local-solve posture; at 100 TB vocabs
     the distributed per-round loop runs instead), then encode EVERY
-    document with the learned merges in one Arrow-batched mapInPandas
+    document with the learned merges in one Arrow row-node
     pass (functions.bpe.encode_corpus). Emits per doc the BPE token
     count and the full space-joined token string, so the driver hash
     pins every merge application bit-for-bit. The oracle re-derives
@@ -1829,7 +1829,7 @@ def x_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round-robin spread (r10, reverting r9's by=("doc_id",) per ADVICE):
     the keyed spread's rationale — eliding the expr engine's gram-grain
     exchanges — died when repetition_features defaulted to the ARROW
-    engine (one mapInPandas pass, no downstream groupBy: there is
+    engine (one Arrow row-node pass, no downstream groupBy: there is
     nothing to elide), while the keyed path skips _spread's
     enough-native-splits early-out and would force a pointless exchange
     on well-split scans at cluster scale. Interleaved same-window A/B
@@ -2337,8 +2337,8 @@ def x_grib_reduced(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datetime import datetime, timezone
 
     import numpy as np
-    import pandas as pd  # noqa: F811
 
+    from ..sources import arrow_rows
     from ..sources.grib2codec import (
         decode_grib2_bytes,
         encode_grib2_message,
@@ -2356,24 +2356,24 @@ def x_grib_reduced(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bdf = spark.createDataFrame([(0, msg)], "g int, blob binary")
 
-    def decode(it):
-        for pdf in it:
-            for b in pdf["blob"]:
-                for rec in decode_grib2_bytes(bytes(b)):
-                    h = rec["header"]
-                    lat, lon = reduced_gaussian_latlon(
-                        h["reducedPoints"], lo1=h["lo1"]
-                    )
-                    yield pd.DataFrame({
-                        "n_gauss": np.full(lat.size, h["gaussianN"],
-                                           dtype=np.int32),
-                        "lat": lat,
-                        "lon": lon,
-                        "v": np.asarray(rec["data"], dtype=np.float64),
-                    })
+    def decode(blobs):
+        cols = {"n_gauss": [], "lat": [], "lon": [], "v": []}
+        for b in blobs:
+            for rec in decode_grib2_bytes(bytes(b)):
+                h = rec["header"]
+                lat, lon = reduced_gaussian_latlon(
+                    h["reducedPoints"], lo1=h["lo1"]
+                )
+                cols["n_gauss"].append(
+                    np.full(lat.size, h["gaussianN"], dtype=np.int32))
+                cols["lat"].append(lat)
+                cols["lon"].append(lon)
+                cols["v"].append(np.asarray(rec["data"], dtype=np.float64))
+        return {k: np.concatenate(v) if v else v for k, v in cols.items()}
 
-    pts = bdf.mapInPandas(
-        decode, schema="n_gauss int, lat double, lon double, v double"
+    pts = arrow_rows(
+        bdf.select("blob"), decode,
+        "n_gauss int, lat double, lon double, v double",
     )
     return pts.groupBy(
         F.round(F.col("lat") * 10000).cast("bigint").alias("lat_e4")
@@ -3492,7 +3492,7 @@ def x_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE shingle pass over the whole corpus: the split flag is a pure
     # function of doc_id, so both sides ride one posting list instead
     # of shingling the corpus once per branch (the Arrow shingler is
-    # the dominant cost; mapInPandas can't column-prune, so every
+    # the dominant cost; the row node can't column-prune, so every
     # extra consumer of the shingled lineage re-runs it in full).
     with_sh = shingle_docs_pandas(docs, "doc_id", "text", 8, out="sh0").select(
         "doc_id", F.array_distinct("sh0").alias("sh"),
@@ -4661,9 +4661,11 @@ def _image_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     id plus the perturbed sibling for every 20th id, generated
     executor-side in one Arrow pass (no driver materialization; at
     corpus scale the payload column would simply BE the input)."""
-    import pandas as pd
-
-    from ..sources.multimodal import encode_bmp
+    from ..sources import arrow_rows
+    from ..sources.gifcodec import encode_gif
+    from ..sources.multimodal import encode_bmp, encode_png
+    from ..sources.tiffcodec import encode_tiff
+    from ..sources.webpcodec import encode_webp
 
     # spread the bare ids wide first: the parquet scan arrives as ONE
     # split, and the per-id synth+encode+decode work is ~KBs per
@@ -4673,50 +4675,43 @@ def _image_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         work_factor=256,
     )
 
-    def gen(it):
-        from ..sources.gifcodec import encode_gif
-        from ..sources.multimodal import encode_png
-        from ..sources.tiffcodec import encode_tiff
-        from ..sources.webpcodec import encode_webp
+    def enc_tiff_lzw(px):
+        return encode_tiff(px, compression="lzw", predictor=True)
 
-        def enc_tiff_lzw(px):
-            return encode_tiff(px, compression="lzw", predictor=True)
+    def enc_webp_pal(px):
+        # grayscale textures always fit the 256-entry palette —
+        # exercises the color-indexing + bundling decode path
+        return encode_webp(px, use_palette=True)
 
-        def enc_webp_pal(px):
-            # grayscale textures always fit the 256-entry palette —
-            # exercises the color-indexing + bundling decode path
-            return encode_webp(px, use_palette=True)
+    def enc_webp_sg(px):
+        return encode_webp(px, subtract_green=True, cache_bits=6)
 
-        def enc_webp_sg(px):
-            return encode_webp(px, subtract_green=True, cache_bits=6)
+    def gen(doc_ids):
+        out_ids, payloads = [], []
+        for i in doc_ids:
+            for sib in (0, 1) if i % 20 == 0 else (0,):
+                out_ids.append(i + sib * _IMG_SIB_OFFSET)
+                # every 4th image ships as PNG (r12), every 4th+2
+                # as GIF (r13, grayscale texture → lossless
+                # palette), every 8th+1 as LZW+predictor TIFF
+                # (r13), and — r14 — every 8th+3 as palette-coded
+                # lossless WebP with every 8th+7 as
+                # subtract-green + color-cache WebP: all the
+                # containers are exact, so the decode-skipping
+                # replica oracle stays container-blind and the
+                # RFC 2083 + GIF89a + TIFF 6.0 + VP8L decode
+                # paths are driver-hash-load-bearing (the FLAC
+                # move)
+                enc = (encode_png if i % 4 == 0
+                       else encode_gif if i % 4 == 2
+                       else enc_tiff_lzw if i % 8 == 1
+                       else enc_webp_pal if i % 8 == 3
+                       else enc_webp_sg if i % 8 == 7
+                       else encode_bmp)
+                payloads.append(enc(synth_image_pixels(i, sib)))
+        return {"doc_id": out_ids, "payload": payloads}
 
-        for pdf in it:
-            out_ids, payloads = [], []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                for sib in (0, 1) if i % 20 == 0 else (0,):
-                    out_ids.append(i + sib * _IMG_SIB_OFFSET)
-                    # every 4th image ships as PNG (r12), every 4th+2
-                    # as GIF (r13, grayscale texture → lossless
-                    # palette), every 8th+1 as LZW+predictor TIFF
-                    # (r13), and — r14 — every 8th+3 as palette-coded
-                    # lossless WebP with every 8th+7 as
-                    # subtract-green + color-cache WebP: all the
-                    # containers are exact, so the decode-skipping
-                    # replica oracle stays container-blind and the
-                    # RFC 2083 + GIF89a + TIFF 6.0 + VP8L decode
-                    # paths are driver-hash-load-bearing (the FLAC
-                    # move)
-                    enc = (encode_png if i % 4 == 0
-                           else encode_gif if i % 4 == 2
-                           else enc_tiff_lzw if i % 8 == 1
-                           else enc_webp_pal if i % 8 == 3
-                           else enc_webp_sg if i % 8 == 7
-                           else encode_bmp)
-                    payloads.append(enc(synth_image_pixels(i, sib)))
-            yield pd.DataFrame({"doc_id": out_ids, "payload": payloads})
-
-    return ids.mapInPandas(gen, "doc_id long, payload binary")
+    return arrow_rows(ids, gen, "doc_id long, payload binary")
 
 
 @query("x_image_dhash", oracle=_image_dhash_oracle,
@@ -4810,8 +4805,8 @@ def _video_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     id plus the edited sibling for every 40th, generated executor-side
     in one Arrow pass (at corpus scale the payload column would simply
     BE the input, e.g. a binaryFile scan)."""
-    import pandas as pd
-
+    from ..sources import arrow_rows
+    from ..sources.gifcodec import encode_gif_frames
     from ..sources.multimodal import encode_y4m_gray
 
     ids = _spread(
@@ -4821,27 +4816,23 @@ def _video_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         work_factor=256,
     )
 
-    def gen(it):
-        from ..sources.gifcodec import encode_gif_frames
+    def gen(doc_ids):
+        out_ids, payloads = [], []
+        for i in doc_ids:
+            for sib in (0, 1) if i % 40 == 0 else (0,):
+                out_ids.append(i + sib * _VID_SIB_OFFSET)
+                # every 4th clip ships as ANIMATED GIF (r13):
+                # gray frames palette-encode losslessly, so the
+                # decode-skipping replica stays container-blind
+                # and the GIF89a animation walk becomes
+                # driver-hash-load-bearing (the PNG/FLAC move;
+                # MJPEG-AVI is lossy and stays test-pinned only)
+                enc = (encode_gif_frames if i % 40 == 10
+                       else encode_y4m_gray)
+                payloads.append(enc(synth_video_frames(i, sib)))
+        return {"doc_id": out_ids, "payload": payloads}
 
-        for pdf in it:
-            out_ids, payloads = [], []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                for sib in (0, 1) if i % 40 == 0 else (0,):
-                    out_ids.append(i + sib * _VID_SIB_OFFSET)
-                    # every 4th clip ships as ANIMATED GIF (r13):
-                    # gray frames palette-encode losslessly, so the
-                    # decode-skipping replica stays container-blind
-                    # and the GIF89a animation walk becomes
-                    # driver-hash-load-bearing (the PNG/FLAC move;
-                    # MJPEG-AVI is lossy and stays test-pinned only)
-                    enc = (encode_gif_frames if i % 40 == 10
-                           else encode_y4m_gray)
-                    payloads.append(enc(synth_video_frames(i, sib)))
-            yield pd.DataFrame({"doc_id": out_ids, "payload": payloads})
-
-    return ids.mapInPandas(gen, "doc_id long, payload binary")
+    return arrow_rows(ids, gen, "doc_id long, payload binary")
 
 
 def _dhash_replica_gray(px) -> int:
@@ -5017,8 +5008,7 @@ def _audio_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, payload) — one deterministic WAV clip per matching
     document id plus the edited sibling, generated executor-side in
     one Arrow pass."""
-    import pandas as pd
-
+    from ..sources import arrow_rows
     from ..sources.flaccodec import encode_flac
     from ..sources.multimodal import encode_wav_pcm16
 
@@ -5029,26 +5019,24 @@ def _audio_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         work_factor=256,
     )
 
-    def gen(it):
-        for pdf in it:
-            out_ids, payloads = [], []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                for sib in (0, 1) if i % 40 == 5 else (0,):
-                    out_ids.append(i + sib * _AUD_SIB_OFFSET)
-                    # every 4th clip ships as FLAC (r12): the codec is
-                    # LOSSLESS, so the replica oracle (which derives
-                    # fingerprints from the synth samples directly) is
-                    # container-blind — the swap makes the native FLAC
-                    # decode path driver-hash-load-bearing for free
-                    enc = (
-                        encode_flac if (i // 10) % 4 == 0
-                        else encode_wav_pcm16
-                    )
-                    payloads.append(enc(synth_audio_segments(i, sib)))
-            yield pd.DataFrame({"doc_id": out_ids, "payload": payloads})
+    def gen(doc_ids):
+        out_ids, payloads = [], []
+        for i in doc_ids:
+            for sib in (0, 1) if i % 40 == 5 else (0,):
+                out_ids.append(i + sib * _AUD_SIB_OFFSET)
+                # every 4th clip ships as FLAC (r12): the codec is
+                # LOSSLESS, so the replica oracle (which derives
+                # fingerprints from the synth samples directly) is
+                # container-blind — the swap makes the native FLAC
+                # decode path driver-hash-load-bearing for free
+                enc = (
+                    encode_flac if (i // 10) % 4 == 0
+                    else encode_wav_pcm16
+                )
+                payloads.append(enc(synth_audio_segments(i, sib)))
+        return {"doc_id": out_ids, "payload": payloads}
 
-    return ids.mapInPandas(gen, "doc_id long, payload binary")
+    return arrow_rows(ids, gen, "doc_id long, payload binary")
 
 
 def _afp_replica(wave_i16) -> list:
@@ -5963,46 +5951,38 @@ def _link_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the edge-distinct must collapse it), and distractors that must
     NOT become edges: a script-embedded anchor, a fragment-only href,
     a mailto:, and a dropped-subtree (template) anchor."""
-    import pandas as pd
+    from ..sources import arrow_rows
 
     docs = tables(spark, sf_dir)["documents"].select("doc_id")
     cnt = docs.agg(F.count(F.lit(1)).cast("long").alias("nn"))
     base = docs.crossJoin(F.broadcast(cnt))
 
-    def build(batches):
-        for pdf in batches:
-            rows = []
-            for i, nn in zip(pdf["doc_id"], pdf["nn"]):
-                i, nn = int(i), int(nn)
-                hrefs = [
-                    f"/doc/{(i * 7 + j * 13) % nn}"
-                    for j in range(1, (i % 4) + 1)
-                ]
-                if i % 3 == 0:
-                    hrefs.append(f"/doc/{nn // 2}")
-                if i % 5 == 0 and hrefs:
-                    hrefs.append(hrefs[0])  # duplicate: distinct-collapsed
-                body = "".join(
-                    f'<a href="{h}">l</a>' for h in hrefs
-                )
-                page = (
-                    "<html><head><script>var x = '<a href=\"/doc/999\">'"
-                    "</script></head><body>"
-                    '<a href="#top">t</a><a href="mailto:x@y.z">m</a>'
-                    "<template><a href=\"/doc/1\">no</a></template>"
-                    + body
-                    + "</body></html>"
-                )
-                rows.append(
-                    (i, f"https://example.org/doc/{i}", page)
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "url", "page"]
+    def build(doc_ids, nns):
+        pages = []
+        for i, nn in zip(doc_ids, nns):
+            hrefs = [
+                f"/doc/{(i * 7 + j * 13) % nn}"
+                for j in range(1, (i % 4) + 1)
+            ]
+            if i % 3 == 0:
+                hrefs.append(f"/doc/{nn // 2}")
+            if i % 5 == 0 and hrefs:
+                hrefs.append(hrefs[0])  # duplicate: distinct-collapsed
+            body = "".join(
+                f'<a href="{h}">l</a>' for h in hrefs
             )
+            pages.append(
+                "<html><head><script>var x = '<a href=\"/doc/999\">'"
+                "</script></head><body>"
+                '<a href="#top">t</a><a href="mailto:x@y.z">m</a>'
+                "<template><a href=\"/doc/1\">no</a></template>"
+                + body
+                + "</body></html>"
+            )
+        urls = [f"https://example.org/doc/{i}" for i in doc_ids]
+        return {"doc_id": doc_ids, "url": urls, "page": pages}
 
-    return base.mapInPandas(
-        build, "doc_id long, url string, page string"
-    )
+    return arrow_rows(base, build, "doc_id long, url string, page string")
 
 
 @query("x_linkgraph_rank", oracle=_pagerank_oracle(),
@@ -6015,27 +5995,23 @@ def x_linkgraph_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     encodes x_pagerank's exact edge formula, so the unrolled
     exact-integer SQL oracle replays every rank bit-for-bit through
     the extraction chain."""
-    import pandas as pd
-
     from ..functions.html import extract_links
     from ..operators.graph import page_rank
+    from ..sources import arrow_rows
 
     pages = _link_pages(spark, sf_dir)
 
-    def edges_of(batches):
-        for pdf in batches:
-            s, t = [], []
-            for i, url, page in zip(
-                pdf["doc_id"], pdf["url"], pdf["page"]
-            ):
-                for link in extract_links(str(page), str(url)):
-                    if link.startswith("https://example.org/doc/"):
-                        s.append(int(i))
-                        t.append(int(link.rsplit("/", 1)[1]))
-            yield pd.DataFrame({"s": s, "t": t})
+    def edges_of(ids, urls, pages):
+        s, t = [], []
+        for i, url, page in zip(ids, urls, pages):
+            for link in extract_links(str(page), str(url)):
+                if link.startswith("https://example.org/doc/"):
+                    s.append(i)
+                    t.append(int(link.rsplit("/", 1)[1]))
+        return {"s": s, "t": t}
 
     edges = (
-        pages.mapInPandas(edges_of, "s long, t long")
+        arrow_rows(pages, edges_of, "s long, t long")
         .filter(F.col("s") != F.col("t"))
         .distinct()
     )
@@ -6090,37 +6066,30 @@ def x_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized Python object evaluated in one Arrow pass — per
     ~host rulesets at crawl scale ride a broadcast join keyed on
     host."""
-    import pandas as pd
-
     from ..functions.robots import parse_robots, robots_allowed
+    from ..sources import arrow_rows
 
     rules = parse_robots(_ROBOTS_TXT)
     docs = tables(spark, sf_dir)["documents"].select("doc_id")
 
-    def judge(batches):
-        for pdf in batches:
-            ids = [int(x) for x in pdf["doc_id"]]
-            paths = [f"/doc/{i}" for i in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "path": paths,
-                    "allow_windflow": [
-                        robots_allowed(rules, "windflow/1.0", p)
-                        for p in paths
-                    ],
-                    "allow_otherbot": [
-                        robots_allowed(rules, "otherbot", p)
-                        for p in paths
-                    ],
-                    "allow_unknown": [
-                        robots_allowed(rules, "somebody", p)
-                        for p in paths
-                    ],
-                }
-            )
+    def judge(ids):
+        paths = [f"/doc/{i}" for i in ids]
+        return {
+            "doc_id": ids,
+            "path": paths,
+            "allow_windflow": [
+                robots_allowed(rules, "windflow/1.0", p) for p in paths
+            ],
+            "allow_otherbot": [
+                robots_allowed(rules, "otherbot", p) for p in paths
+            ],
+            "allow_unknown": [
+                robots_allowed(rules, "somebody", p) for p in paths
+            ],
+        }
 
-    return docs.mapInPandas(
+    return arrow_rows(
+        docs,
         judge,
         "doc_id long, path string, allow_windflow boolean,"
         " allow_otherbot boolean, allow_unknown boolean",
@@ -6179,32 +6148,16 @@ def _sitemap_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         build, "path string, content binary"
     )
 
-    def extras(batches):
-        from ..sources.cdxj import encode_sitemap as enc
-
-        import pandas as pd  # noqa: F811
-
-        idx = enc(
-            [
-                {"loc": f"https://example.org/sitemap-{k}.xml"}
-                for k in range(3)
-            ],
-            index=True,
-        )
-        yield pd.DataFrame(
-            {
-                "path": [
-                    "mem://sitemaps/index.xml",
-                    "mem://sitemaps/broken.xml",
-                ],
-                "content": [idx, b"<urlset><url><loc>x"],
-            }
-        )
-
-    one = spark.range(1).repartition(1)
-    return children.unionByName(one.mapInPandas(
-        extras, "path string, content binary"
-    ))
+    idx = encode_sitemap(
+        [{"loc": f"https://example.org/sitemap-{k}.xml"} for k in range(3)],
+        index=True,
+    )
+    extras = spark.createDataFrame(
+        [("mem://sitemaps/index.xml", idx),
+         ("mem://sitemaps/broken.xml", b"<urlset><url><loc>x")],
+        "path string, content binary",
+    )
+    return children.unionByName(extras)
 
 
 @query("x_sitemap_frontier", oracle="""

@@ -8,8 +8,6 @@ every sink is set-oriented:
   overwrite — replacing a batch rewrites only the touched partitions
   (the scalable DELETE+INSERT), and readers prune on the partition
   column (retention/as-of predicates never scan aged data).
-- `write_json_fixtures`: the reference's JSON file sink (S4), kept for
-  fixture parity.
 - `write_jdbc`: the Postgres-parity sink — set-oriented JDBC batches,
   one transaction per partition instead of per row. Gated: no database
   ships in this environment, so it is exercised only when a DSN is
@@ -36,7 +34,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "write_wind_table",
-    "write_json_fixtures",
     "write_jdbc",
     "create_wind_table_sql",
     "write_bucketed",
@@ -105,13 +102,6 @@ def write_wind_table(
         .partitionBy("__date")
         .parquet(path)
     )
-
-
-def write_json_fixtures(df: DataFrame, path: str, single_file: bool = True) -> None:
-    """S4 parity: JSON file sink. `single_file` coalesces to one output
-    part (fixture-sized data only — never at scale)."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").json(path)
 
 
 def write_jdbc(
@@ -193,7 +183,9 @@ def write_format_roundtrip(
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
-    """The Hadoop FileSystem that holds `path`, and the JVM Path class."""
+    """The Hadoop FileSystem that holds `path`, and the JVM Path class.
+    The session's Hadoop conf resolves it, as it does for `df.write`, so
+    a file written through it lands on the same store as the data."""
     P = spark._jvm.org.apache.hadoop.fs.Path
     return P(path).getFileSystem(spark._jsc.hadoopConfiguration()), P
 

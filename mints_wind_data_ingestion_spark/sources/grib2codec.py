@@ -373,9 +373,12 @@ def _unpack_uints(bits: np.ndarray, off: int, n: int, w: int):
     The reference reader: `_read_uints` and `_group_values` fall back
     to it wherever the window gather is not exact (a width above
     `_WINDOW_BITS`, a read past the payload), so those inputs keep its
-    results and its errors."""
+    results and its errors. A field of 64 bits or more does not fit an
+    int64 and raises."""
     if w == 0:
         return np.zeros(n, dtype=np.int64), off
+    if w > 63:
+        raise ValueError(f"{w}-bit packed field overflows int64")
     sl = bits[off : off + n * w].reshape(n, w).astype(np.int64)
     vals = sl @ (1 << np.arange(w - 1, -1, -1, dtype=np.int64))
     return vals, off + n * w

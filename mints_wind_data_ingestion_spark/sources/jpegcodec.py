@@ -33,7 +33,7 @@ Scale posture: entropy decode is per-image sequential Python (Huffman
 is inherently bit-serial), everything after the bitstream (dequant,
 de-zigzag, IDCT, upsample, color transform) is vectorized numpy over
 all blocks at once. The parallel unit is the image: decode runs inside
-Arrow-batched `mapInPandas` (multimodal.decode_image), so a 100 TB
+the Arrow row node (`sources.arrow_rows`; multimodal.decode_image), so a 100 TB
 corpus scales by partition count, never by driver work.
 """
 

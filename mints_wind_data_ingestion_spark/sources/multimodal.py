@@ -7,9 +7,10 @@ array, SURVEY.md §1.4). This module supplies the Spark-side plumbing:
 
 - `with_payload`: attach a binary payload column (from a `binaryFile`
   scan in production; synthesized from text in tests).
-- `extract_meta`: Arrow-batched `mapInPandas` feature extraction — the
-  UDTF shape every real decoder (PIL/ffmpeg/librosa) would plug into.
-  One partition in → one iterator of pandas batches out; nothing is
+- `extract_meta`: Arrow-batched feature extraction through the
+  package's one Python row node (`sources.arrow_rows`) — the UDTF
+  shape every real decoder (PIL/ffmpeg/librosa) would plug into. One
+  partition in → one iterator of Arrow batches out; nothing is
   collected to the driver, and the payload column is dropped on output
   so only the (small) metadata survives the shuffle boundary.
 - `decode_image` / `decode_audio` / `sample_video_frames`: REAL
@@ -37,9 +38,7 @@ not task failures.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -50,6 +49,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from . import arrow_rows
 
 #: exception classes a CORRUPT payload can surface from the native
 #: decoders (BMP/PNM/WAV/Y4M): explicit ValueErrors, short struct
@@ -140,29 +141,23 @@ def extract_meta(
 ) -> DataFrame:
     """Arrow-batched metadata extraction over a binary column.
 
-    `mapInPandas` — not a scalar pandas_udf — because real decoders are
-    one-row-in/variable-out (corrupt frames dropped, multi-page TIFFs
-    exploded); the iterator contract supports that for free.
+    A row node (`arrow_rows`) — not a scalar pandas_udf — because real
+    decoders are one-row-in/variable-out (corrupt frames dropped,
+    multi-page TIFFs exploded); the node's contract supports that for
+    free.
     """
     out_schema = StructType(
         [df.schema[id_col], *META_SCHEMA.fields]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            stats = [byte_stats_meta(b) for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "n_bytes": [s[0] for s in stats],
-                    "first_byte": [s[1] for s in stats],
-                    "checksum": [s[2] for s in stats],
-                    "width": [s[3] for s in stats],
-                    "height": [s[4] for s in stats],
-                }
-            )
+    def columns_of(ids, payloads):
+        stats = [byte_stats_meta(b) for b in payloads]
+        return {id_col: ids, **{
+            f.name: [s[k] for s in stats]
+            for k, f in enumerate(META_SCHEMA.fields)
+        }}
 
-    return df.select(id_col, payload_col).mapInPandas(batches, schema=out_schema)
+    return arrow_rows(df.select(id_col, payload_col), columns_of, out_schema)
 
 
 def _decode_bmp(payload: bytes) -> dict:
@@ -836,7 +831,7 @@ def transform_images(
     quality: int = 90,
 ) -> DataFrame:
     """Executor-side image pipeline: decode → nearest-neighbor resize →
-    re-encode + features, as one Arrow-batched mapInPandas pass —
+    re-encode + features, as one Arrow-batched row-node pass —
     binary column in, binary column + typed features out, the
     decode-transform-store shape of an image-training-data job.
     `out_format`: "bmp" (lossless, uncompressed), "png" (lossless,
@@ -871,30 +866,26 @@ def transform_images(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    img = decode_image(bytes(b))
-                    px = img["pixels"]
-                    if px.ndim == 2:  # grayscale → RGB for the encoder
-                        px = np.repeat(px[:, :, None], 3, axis=2)
-                    rs = resize_image(px, out_w, out_h)
-                    feats = image_features(rs)
-                    rows.append(
-                        (i, encode(rs), out_w, out_h,
-                         feats["channel_means"][0], feats["pixel_std"])
-                    )
-                except MM_DECODE_ERRORS:
-                    rows.append((i, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "resized", "out_width", "out_height",
-                         "mean_r", "pixel_std"],
-            )
+    def columns_of(ids, payloads):
+        rows = []
+        for i, b in zip(ids, payloads):
+            try:
+                img = decode_image(bytes(b))
+                px = img["pixels"]
+                if px.ndim == 2:  # grayscale → RGB for the encoder
+                    px = np.repeat(px[:, :, None], 3, axis=2)
+                rs = resize_image(px, out_w, out_h)
+                feats = image_features(rs)
+                rows.append(
+                    (i, encode(rs), out_w, out_h,
+                     feats["channel_means"][0], feats["pixel_std"])
+                )
+            except MM_DECODE_ERRORS:
+                rows.append((i, None, None, None, None, None))
+        return {f.name: [r[k] for r in rows]
+                for k, f in enumerate(out_schema.fields)}
 
-    return df.select(id_col, payload_col).mapInPandas(batches, schema=out_schema)
+    return arrow_rows(df.select(id_col, payload_col), columns_of, out_schema)
 
 
 def synth_bmp_corpus(
@@ -914,23 +905,22 @@ def synth_bmp_corpus(
 
     id_t = df.schema[id_col].dataType.simpleString()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                w, h = 16 + i % 13, 16 + (i * 3) % 11
-                yy, xx, cc = np.meshgrid(
-                    np.arange(h), np.arange(w), np.arange(3), indexing="ij"
-                )
-                px = ((i * 7 + xx * 3 + yy * 5 + cc * 11) % 256).astype(
-                    np.uint8
-                )
-                payloads.append(encode_bmp(px))
-            yield pd.DataFrame({id_col: pdf[id_col], out: payloads})
+    def columns_of(ids):
+        payloads = []
+        for i in ids:
+            i = int(i)
+            w, h = 16 + i % 13, 16 + (i * 3) % 11
+            yy, xx, cc = np.meshgrid(
+                np.arange(h), np.arange(w), np.arange(3), indexing="ij"
+            )
+            px = ((i * 7 + xx * 3 + yy * 5 + cc * 11) % 256).astype(
+                np.uint8
+            )
+            payloads.append(encode_bmp(px))
+        return {id_col: ids, out: payloads}
 
-    return df.select(id_col).mapInPandas(
-        batches, schema=f"{id_col} {id_t}, {out} binary"
+    return arrow_rows(
+        df.select(id_col), columns_of, f"{id_col} {id_t}, {out} binary"
     )
 
 
@@ -944,29 +934,27 @@ def resized_pixel_moments(
     decode → resize → feature → re-encode → decode chain."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            sums, sqs = [], []
-            for b in pdf["resized"]:
-                if b is None:
-                    sums.append(None)
-                    sqs.append(None)
-                    continue
-                px = decode_image(bytes(b))["pixels"].astype(np.int64)
-                sums.append(int(px.sum()))
-                sqs.append(int((px * px).sum()))
-            out = pdf[[id_col, "out_width", "out_height", "mean_r"]].copy()
-            out["px_sum"] = sums
-            out["px_sumsq"] = sqs
-            yield out
+    def columns_of(ids, widths, heights, mean_r, resized):
+        sums, sqs = [], []
+        for b in resized:
+            if b is None:
+                sums.append(None)
+                sqs.append(None)
+                continue
+            px = decode_image(bytes(b))["pixels"].astype(np.int64)
+            sums.append(int(px.sum()))
+            sqs.append(int((px * px).sum()))
+        return {id_col: ids, "out_width": widths, "out_height": heights,
+                "mean_r": mean_r, "px_sum": sums, "px_sumsq": sqs}
 
     id_t = transformed.schema[id_col].dataType.simpleString()
-    return transformed.mapInPandas(
-        batches,
-        schema=(
-            f"{id_col} {id_t}, out_width int, out_height int, "
-            "mean_r double, px_sum long, px_sumsq long"
+    return arrow_rows(
+        transformed.select(
+            id_col, "out_width", "out_height", "mean_r", "resized"
         ),
+        columns_of,
+        f"{id_col} {id_t}, out_width int, out_height int, "
+        "mean_r double, px_sum long, px_sumsq long",
     )
 
 
@@ -1014,25 +1002,22 @@ def image_dhash_df(
     SIGNED bigint (the raw 64 bits reinterpreted) so the banded join
     and bit_count run on JVM longs."""
     import numpy as np
-    import pandas as pd
 
     id_type = df.schema[id_col].dataType.simpleString()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, hashes = [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                ids.append(i)
-                try:
-                    h = dhash64(decode_image(bytes(payload))["pixels"])
-                    hashes.append(np.int64(np.uint64(h)))
-                except MM_DECODE_ERRORS:
-                    hashes.append(None)
-            yield pd.DataFrame({id_col: ids, "dhash": pd.array(
-                hashes, dtype="Int64")})
+    def columns_of(ids, payloads):
+        hashes = []
+        for payload in payloads:
+            try:
+                h = dhash64(decode_image(bytes(payload))["pixels"])
+                hashes.append(np.int64(np.uint64(h)))
+            except MM_DECODE_ERRORS:
+                hashes.append(None)
+        return {id_col: ids, "dhash": hashes}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        batches, schema=f"{id_col} {id_type}, dhash long"
+    return arrow_rows(
+        df.select(id_col, payload_col), columns_of,
+        f"{id_col} {id_type}, dhash long",
     )
 
 
@@ -1165,38 +1150,33 @@ def video_dhash_df(
     A corrupt or codec-gated payload yields one NULL row (the
     transform-UDTF quarantine contract), never a task failure."""
     import numpy as np
-    import pandas as pd
 
     id_type = df.schema[id_col].dataType.simpleString()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, hashes = [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    frames = sample_video_frames(bytes(payload), every_n)
-                    if not frames:
-                        # a headers-only stream (e.g. Y4M with zero
-                        # FRAME sections) must still leave evidence —
-                        # one NULL row, so the ingest gate quarantines
-                        # it instead of the id silently vanishing
-                        raise ValueError("no frames decoded")
-                    for idx, y in frames:
-                        ids.append(i)
-                        idxs.append(idx)
-                        hashes.append(np.int64(np.uint64(dhash64(y))))
-                except MM_DECODE_ERRORS:
+    def columns_of(in_ids, payloads):
+        ids, idxs, hashes = [], [], []
+        for i, payload in zip(in_ids, payloads):
+            try:
+                frames = sample_video_frames(bytes(payload), every_n)
+                if not frames:
+                    # a headers-only stream (e.g. Y4M with zero
+                    # FRAME sections) must still leave evidence —
+                    # one NULL row, so the ingest gate quarantines
+                    # it instead of the id silently vanishing
+                    raise ValueError("no frames decoded")
+                for idx, y in frames:
                     ids.append(i)
-                    idxs.append(None)
-                    hashes.append(None)
-            yield pd.DataFrame({
-                id_col: ids,
-                "frame_idx": pd.array(idxs, dtype="Int32"),
-                "fhash": pd.array(hashes, dtype="Int64"),
-            })
+                    idxs.append(idx)
+                    hashes.append(np.int64(np.uint64(dhash64(y))))
+            except MM_DECODE_ERRORS:
+                ids.append(i)
+                idxs.append(None)
+                hashes.append(None)
+        return {id_col: ids, "frame_idx": idxs, "fhash": hashes}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        batches, schema=f"{id_col} {id_type}, frame_idx int, fhash long"
+    return arrow_rows(
+        df.select(id_col, payload_col), columns_of,
+        f"{id_col} {id_type}, frame_idx int, fhash long",
     )
 
 
@@ -1388,32 +1368,26 @@ def audio_fingerprint_df(
     fingerprint. Emits the same (id, frame_idx, fhash) shape as
     `video_dhash_df`, so the set-Jaccard pair machinery is shared
     verbatim. Corrupt or codec-gated payloads yield one NULL row."""
-    import pandas as pd
-
     id_type = df.schema[id_col].dataType.simpleString()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, hashes = [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    fps = audio_fingerprint(
-                        decode_audio(bytes(payload))["waveform"]
-                    )
-                    for idx, fp in fps:
-                        ids.append(i)
-                        idxs.append(idx)
-                        hashes.append(fp)
-                except MM_DECODE_ERRORS:
+    def columns_of(in_ids, payloads):
+        ids, idxs, hashes = [], [], []
+        for i, payload in zip(in_ids, payloads):
+            try:
+                fps = audio_fingerprint(
+                    decode_audio(bytes(payload))["waveform"]
+                )
+                for idx, fp in fps:
                     ids.append(i)
-                    idxs.append(None)
-                    hashes.append(None)
-            yield pd.DataFrame({
-                id_col: ids,
-                "frame_idx": pd.array(idxs, dtype="Int32"),
-                "fhash": pd.array(hashes, dtype="Int64"),
-            })
+                    idxs.append(idx)
+                    hashes.append(fp)
+            except MM_DECODE_ERRORS:
+                ids.append(i)
+                idxs.append(None)
+                hashes.append(None)
+        return {id_col: ids, "frame_idx": idxs, "fhash": hashes}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        batches, schema=f"{id_col} {id_type}, frame_idx int, fhash long"
+    return arrow_rows(
+        df.select(id_col, payload_col), columns_of,
+        f"{id_col} {id_type}, frame_idx int, fhash long",
     )

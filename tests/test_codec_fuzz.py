@@ -211,6 +211,43 @@ def test_bitmap_guard():
     assert "bitmap" in out[0]["error"]
 
 
+
+def _with_payload(msg: bytes, payload: bytes) -> bytes:
+    """`msg` with section 7's data replaced by `payload` (the section
+    and message lengths follow)."""
+    o7 = _sec_offset(msg, 7)
+    sec7 = (5 + len(payload)).to_bytes(4, "big") + b"\x07" + payload
+    o8 = o7 + int.from_bytes(msg[o7 : o7 + 4], "big")
+    body = msg[:o7] + sec7 + msg[o8:]
+    return body[:8] + len(body).to_bytes(8, "big") + body[16:]
+
+
+def test_fields_of_64_bits_quarantine():
+    """A packed field of 64 bits or more does not fit an int64: a
+    template 5.0 `nbits` of 64 and a template 5.2 group width of 64
+    each give a quarantine error row, never wrapped values. The
+    payloads are all-ones and long enough for every field, so the
+    reader cannot fail on length first."""
+    base = _corpus()[0]  # 6 points, template 5.0
+    o5 = _sec_offset(base, 5)
+    simple = bytearray(base)
+    simple[o5 + 19] = 64  # nbits
+    complex_ = bytearray(encode_grib2_message(
+        [float(i) for i in range(6)], parameter_number=2, ref_time=RT,
+        nx=3, ny=2, packing="complex"))
+    o5c = _sec_offset(bytes(complex_), 5)
+    assert int.from_bytes(complex_[o5c + 9 : o5c + 11], "big") == 2
+    # one group of all 6 points, 64 bits wide; every descriptor 0 bits
+    complex_[o5c + 19] = 0  # group reference width
+    complex_[o5c + 31 : o5c + 35] = (1).to_bytes(4, "big")  # groups
+    complex_[o5c + 35], complex_[o5c + 36] = 64, 0  # width ref, bits
+    complex_[o5c + 42 : o5c + 46] = (6).to_bytes(4, "big")  # last len
+    complex_[o5c + 46] = 0  # length bits
+    for msg in (bytes(simple), bytes(complex_)):
+        (out,) = scan_grib2_bytes(_with_payload(msg, b"\xff" * 48))
+        assert out["record"] is None
+        assert "64" in out["error"]
+
 def _complex_corpus():
     """test_grib_complex.py's messages: the three complex packings of
     its smooth field, and its NCEP submessage (two fields, one frame)."""

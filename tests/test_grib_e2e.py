@@ -73,7 +73,7 @@ def test_grib2_binary_to_lat_band_stats(spark, tmp_path):
     # mixed-packing corpus: one file per section-5 template the codec
     # supports (simple 5.0, complex 5.2, complex+spatial-diff 5.3 —
     # the packing real NOAA pgrb2 files use), all through the same
-    # binaryFile + mapInPandas source
+    # binaryFile + Arrow row-node source
     packings = ("simple", "complex", "complex_diff")
     for t_idx, ref in enumerate(REF_TIMES):
         msgs = []

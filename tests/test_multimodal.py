@@ -1,7 +1,7 @@
 """Real media decoding over Spark (SURVEY.md §2.11 multimodal):
 self-encoded uncompressed fixtures (BMP, PPM, WAV PCM, Y4M) round-trip
 through the native decoders, including end-to-end through the
-mapInPandas UDTF shape; compressed formats stay gated behind
+package's Arrow row node (`sources.arrow_rows`); compressed formats stay gated behind
 import-tries with the contract pinned."""
 
 from __future__ import annotations
@@ -176,9 +176,10 @@ def test_png_corrupt_is_quarantine_class():
 
 def test_real_decode_through_mapinpandas(spark):
     """End-to-end: mixed real binary payloads ride a DataFrame binary
-    column; an Arrow-batched mapInPandas dispatches on magic bytes and
-    extracts REAL metadata (decoded dimensions / sample counts)."""
-    import pandas as pd
+    column; the Arrow row node (`sources.arrow_rows`) dispatches on
+    magic bytes and extracts REAL metadata (decoded dimensions / sample
+    counts)."""
+    from mints_wind_data_ingestion_spark.sources import arrow_rows
 
     px = np.arange(4 * 3 * 3, dtype=np.uint8).reshape(4, 3, 3) % 251
     wav = encode_wav(np.ones((123, 1), dtype=np.int16) * 100, sample_rate=16000)
@@ -190,26 +191,25 @@ def test_real_decode_through_mapinpandas(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
 
-    def meta(it):
-        for pdf in it:
-            recs = []
-            for i, b in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(b)
-                if b[:2] in (b"BM", b"P6", b"P5"):
-                    d = decode_image(b)
-                    recs.append((i, "image", d["width"], d["height"]))
-                elif b[:4] == b"RIFF":
-                    d = decode_audio(b)
-                    recs.append((i, "audio", d["sample_rate"], d["n_samples"]))
-                elif b.startswith(b"YUV4MPEG2"):
-                    fr = sample_video_frames(b, every_n=2)
-                    recs.append((i, "video", len(fr), fr[0][1].shape[1]))
-            yield pd.DataFrame(recs, columns=["doc_id", "kind", "a", "b"])
+    def meta(ids, payloads):
+        recs = []
+        for i, b in zip(ids, payloads):
+            if b[:2] in (b"BM", b"P6", b"P5"):
+                d = decode_image(b)
+                recs.append((i, "image", d["width"], d["height"]))
+            elif b[:4] == b"RIFF":
+                d = decode_audio(b)
+                recs.append((i, "audio", d["sample_rate"], d["n_samples"]))
+            elif b.startswith(b"YUV4MPEG2"):
+                fr = sample_video_frames(b, every_n=2)
+                recs.append((i, "video", len(fr), fr[0][1].shape[1]))
+        return {name: [r[k] for r in recs]
+                for k, name in enumerate(["doc_id", "kind", "a", "b"])}
 
     out = {
         r.doc_id: (r.kind, r.a, r.b)
-        for r in df.mapInPandas(
-            meta, "doc_id long, kind string, a long, b long"
+        for r in arrow_rows(
+            df, meta, "doc_id long, kind string, a long, b long"
         ).collect()
     }
     assert out == {

@@ -10,6 +10,7 @@ import datetime as dt
 import glob
 import os
 
+import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -964,30 +965,46 @@ def test_pipeline_streams_share_one_skeleton():
 
 
 def test_binary_sources_share_one_decode_node():
-    """Every (path, content) reader in `sources/` is the one
-    file-to-rows UDTF (`sources._file_rows_df`), and the x_grib_*
-    queries decode through `decode_binary_df` — only `x_grib_reduced`,
-    which attaches per-point lat/lon in its decode pass, calls the
-    codec itself. The node is `mapInArrow`: no binary reader in
-    `sources/` goes through pandas. A copied per-reader or per-query
-    UDTF cannot grow back."""
+    """Every executor-side Python row mapper in the package is the one
+    Arrow row node (`sources.arrow_rows`): the binary readers of
+    `sources/` through its file-to-rows adapter (`_file_rows_df`), and
+    the multimodal, text, LM, quality, fetch, BPE and plan mappers
+    directly. The node's batch loop exists once, it is the package's
+    only `.mapInArrow(`, and the only `.mapInPandas(` left are the four
+    `list<float>` matrix mappers of `operators/similarity.py`, which
+    read their input through pandas. The x_grib_* queries decode
+    through `decode_binary_df` — only `x_grib_reduced`, which attaches
+    per-point lat/lon in its decode pass, calls the codec itself. A
+    copied per-site batch loop or per-query UDTF cannot grow back."""
     import ast
     import pathlib
 
     import mints_wind_data_ingestion_spark as pkg
 
     root = pathlib.Path(pkg.__file__).parent
-    texts = {p.name: p.read_text()
-             for p in sorted((root / "sources").glob("*.py"))}
-    loop = "zip(paths, contents)"
-    hits = {name: text.count(loop) for name, text in texts.items()}
-    assert {k: v for k, v in hits.items() if v} == {"__init__.py": 1}
-    assert texts["__init__.py"].count(".mapInArrow(") == 1
-    # multimodal.py's (id, payload) image/video/audio mappers are not
-    # file-to-rows readers; every other module has no pandas node
-    pandas_nodes = {name for name, text in texts.items()
-                    if "mapInPandas(" in text}
-    assert pandas_nodes <= {"multimodal.py"}
+    texts = {p.relative_to(root).as_posix(): p.read_text()
+             for p in sorted(root.rglob("*.py"))}
+
+    def hits(needle):
+        return {k: t.count(needle) for k, t in texts.items() if needle in t}
+
+    assert hits("for batch in it") == {"sources/__init__.py": 1}
+    assert hits(".mapInArrow(") == {"sources/__init__.py": 1}
+    assert hits("zip(paths, contents)") == {"sources/__init__.py": 1}
+    pandas_nodes = set()
+    for name, text in texts.items():
+        for fn in ast.parse(text).body:
+            for node in ast.walk(fn):
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "mapInPandas"):
+                    pandas_nodes.add((name, fn.name))
+    assert pandas_nodes == {
+        ("operators/similarity.py", "_assign_cells_pandas"),
+        ("operators/similarity.py", "pq_encode"),
+        ("operators/similarity.py", "topk_pq"),
+        ("operators/similarity.py", "ivfpq_shortlist"),
+    }
 
     callers = set()
     for path in sorted((root / "plans").glob("*.py")):
@@ -1000,3 +1017,70 @@ def test_binary_sources_share_one_decode_node():
                         and node.func.id == "decode_grib2_bytes"):
                     callers.add(fn.name)
     assert callers == {"x_grib_reduced"}
+
+
+def test_arrow_rows_node_contract(spark):
+    """The row node's conversion rules: a float NaN arrives as NULL in
+    a `double` column and inside an `array<float>`; `None` is NULL in
+    a `long`; a string id keeps its type; a timestamp passes through
+    unchanged under a session time zone other than UTC; one input row
+    may emit zero or many output rows; and an empty input batch gives
+    zero rows with the schema."""
+    import math
+
+    from mints_wind_data_ingestion_spark.sources import arrow_rows
+
+    df = spark.createDataFrame(
+        [("a", 0), ("b", 1), ("c", 3)], "id string, n long"
+    ).coalesce(1)
+
+    stamps = spark.createDataFrame(
+        [(dt.datetime(2020, 8, 12, 6, 0, 1, 5),), (None,)], "ts timestamp"
+    )
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Chicago")
+    try:
+        passed = arrow_rows(stamps, lambda ts: {"ts": ts}, "ts timestamp")
+        assert sorted(passed.collect(), key=str) == sorted(
+            stamps.collect(), key=str)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+
+    def columns_of(ids, ns):
+        out = {"id": [], "k": [], "x": [], "v": []}
+        for i, n in zip(ids, ns):
+            for k in range(n):  # n = 0 emits no row
+                out["id"].append(i)
+                out["k"].append(None if k == 1 else k)
+                out["x"].append(math.nan if k == 0 else k + 0.5)
+                out["v"].append(np.array([k, np.nan], dtype=np.float32))
+        return out
+
+    schema = "id string, k long, x double, v array<float>"
+    out = arrow_rows(df, columns_of, schema)
+    assert out.schema.simpleString() == (
+        "struct<id:string,k:bigint,x:double,v:array<float>>"
+    )
+    got = [tuple(r) for r in out.collect()]
+    by_key = {(i, k): (x, v) for i, k, x, v in got}
+    assert len(got) == len(by_key) == 4
+    assert set(by_key) == {("b", 0), ("c", 0), ("c", None), ("c", 2)}
+    assert by_key[("b", 0)] == (None, [0.0, None])
+    assert by_key[("c", 2)] == (2.5, [2.0, None])
+    assert by_key[("c", None)] == (1.5, [1.0, None])
+
+    # the batch function itself, fed one zero-row input batch
+    class Frame:
+        def mapInArrow(self, fn, schema):
+            return fn
+
+    import pyarrow as pa
+
+    node = arrow_rows(Frame(), columns_of, out.schema)
+    empty = pa.RecordBatch.from_pydict(
+        {"id": pa.array([], pa.string()), "n": pa.array([], pa.int64())}
+    )
+    (batch,) = node(iter([empty]))
+    assert batch.num_rows == 0
+    assert batch.schema.names == ["id", "k", "x", "v"]
+    assert str(batch.schema.field("v").type) == "list<element: float>"
