@@ -14,9 +14,10 @@ One call ≙ one cron tick:
 4. fetch the winner's body only (converter.py:172-177), decode through
    the WMO codec UDTF (sources.grib.decode_binary_df), enrich the
    observation bucket (converter.py:63-69);
-5. latest-wins merge into the wind table (operators.upsert), published
-   by the same crash-safe temp-write + rename swap the streaming path
-   uses (sinks.publish).
+5. latest-wins merge into the wind table through the same upsert the
+   streaming path uses (operators.upsert.upsert_wind_table): only the
+   bucket's date partition is read, merged and swapped in. The bucket
+   is known on the driver, so its date needs no job.
 
 Deliberate divergences, same as the discovery operator's: real
 calendar arithmetic (no century-leap-year bug), per-candidate forecast
@@ -37,12 +38,12 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..sinks import publish, read_stored
+from ..sinks import read_stored
 from ..sources.grib import decode_binary_df
 from ..sources.wind_json import wind_rows
 from .discovery import MAX_ATTEMPTS, candidates
 from .fetch import fetch_binary, probe_binary
-from .upsert import merge_latest_wins
+from .upsert import DATE_COL, upsert_wind_table
 
 __all__ = ["ingest_once"]
 
@@ -78,7 +79,10 @@ def ingest_once(
         "url", F.concat(F.lit(base_url.rstrip("/") + "/"), F.col("url_path"))
     )
     probed = probe_binary(urls)
-    win = probed.filter("ok").orderBy("rank").limit(1)
+    win = (
+        probed.filter("ok").orderBy("rank").limit(1)
+        .withColumn("obs_date", F.to_date("obs_ts"))
+    )
 
     # staleness gate (converter.py:160-171) folded into the SAME plan
     # as the probe winner: the stored bucket's max ref_time rides the
@@ -146,18 +150,13 @@ def ingest_once(
         batch = wind_rows(
             decode_binary_df(body), F.lit(w.obs_ts).cast("timestamp")
         )
-        publish(
-            merge_latest_wins(
-                batch.limit(0) if stored is None else stored, batch,
-                keys=["recorded_time", "param"], version="ref_time",
-            ),
-            table_path,
-        )
+        upsert_wind_table(batch, table_path, dates=[w.obs_date])
     finally:
         if ranged is not None:  # a cron loop must not leak one cache/tick
             ranged.unpersist()
     n = spark.read.parquet(table_path).filter(
-        (F.col("recorded_time") == F.lit(w.obs_ts))
+        (F.col(DATE_COL) == F.lit(w.obs_date))
+        & (F.col("recorded_time") == F.lit(w.obs_ts))
         & (F.col("ref_time") == F.lit(w.run_ts))
     ).count()
     return {"status": "merged", "run_ts": w.run_ts, "obs_ts": w.obs_ts,

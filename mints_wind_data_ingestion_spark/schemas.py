@@ -156,7 +156,9 @@ WIND_RECORD = StructType(
 )
 
 #: Native engine layout of the wind table (FIXTURES.md §A2): typed
-#: columns instead of jsonb, parquet partitioned by to_date(recorded_time).
+#: columns instead of jsonb, parquet Hive-partitioned by
+#: `recorded_date` = to_date(recorded_time), which reads back as one more
+#: (last) column (operators.upsert.DATE_COL).
 WIND_TABLE = StructType(
     [
         _f("recorded_time", TimestampType()),

@@ -4,25 +4,25 @@ The reference writes row-at-a-time psycopg2 INSERTs with one commit per
 row and a non-atomic DELETE+INSERT upsert (converter.py:98-117). Here
 every sink is set-oriented:
 
-- `write_wind_table`: date-partitioned parquet with dynamic partition
-  overwrite — replacing a batch rewrites only the touched partitions
-  (the scalable DELETE+INSERT), and readers prune on the partition
-  column (retention/as-of predicates never scan aged data).
 - `write_jdbc`: the Postgres-parity sink — set-oriented JDBC batches,
   one transaction per partition instead of per row. Gated: no database
   ships in this environment, so it is exercised only when a DSN is
   supplied (`SPARK_GRAFT_JDBC_URL`).
-- `create_wind_table_sql`: S8's DDL, expressed for Spark SQL.
-- `publish` / `read_stored`: the one whole-table commit. `publish`
-  writes a table fully to a temp path, then swaps it in with two
-  renames; `read_stored` first restores a table a crashed swap left at
-  its backup path, then reads it. Every whole-table writer goes
-  through this pair — the wind merge and the rollup of
-  `streaming.pipeline`, `operators.ingest.ingest_once` and
-  `compact_table` — and the epoch streams read their stored corpus
-  through `read_stored`. A `foreachBatch` epoch is exactly-once only
-  when its sink is idempotent (a replay rewrites the same table), and
-  this pair is that sink's storage half.
+- `create_wind_table_sql`: S8's DDL, expressed for Spark SQL, with the
+  wind table's `recorded_date` partition column.
+- `publish` / `read_stored`: the one commit. `publish` writes a table
+  (or, with `partition_by`, only the Hive partitions `df` holds) in
+  full to a temp path, then swaps it in with one rollback-journaled
+  swap of a list of directories: the whole table is the one-directory
+  case. `read_stored` first rolls back a swap a crash left
+  half-done, then reads the table. Every writer goes through this pair
+  — the wind upsert (`operators.upsert.upsert_wind_table`, used by both
+  wind streams of `streaming.pipeline` and by
+  `operators.ingest.ingest_once`), the rollup and `compact_table` — and
+  the epoch streams read their stored corpus through `read_stored`. A
+  `foreachBatch` epoch is exactly-once only when its sink is idempotent
+  (a replay rewrites the same partitions), and this pair is that sink's
+  storage half.
 """
 
 from __future__ import annotations
@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
-    "write_wind_table",
     "write_jdbc",
     "create_wind_table_sql",
     "write_bucketed",
@@ -79,31 +78,6 @@ def write_bucketed(
     )
 
 
-def write_wind_table(
-    df: DataFrame,
-    path: str,
-    ts_col: str = "recorded_time",
-    mode: str = "overwrite",
-) -> None:
-    """Date-partitioned parquet sink with dynamic partition overwrite.
-
-    Partitioning by `to_date(ts_col)` keeps partition count bounded
-    (one per day — 7 live partitions under the retention policy) while
-    making both the retention delete (S7) and exact-timestamp lookups
-    (F4) partition-pruned. `overwrite` + dynamic mode only rewrites
-    partitions present in `df` — the atomic replacement for the
-    reference's DELETE-then-INSERT pair.
-    """
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        df.withColumn("__date", F.to_date(F.col(ts_col)))
-        .write.mode(mode)
-        .partitionBy("__date")
-        .parquet(path)
-    )
-
-
 def write_jdbc(
     df: DataFrame,
     table: str,
@@ -144,7 +118,8 @@ def create_wind_table_sql(name: str = "wind_data", location: str | None = None) 
         f"CREATE TABLE IF NOT EXISTS {name} ("
         "recorded_time TIMESTAMP, param INT, ref_time TIMESTAMP, "
         "forecast_hours INT, header STRUCT<parameterNumber: INT, refTime: STRING>, "
-        "data ARRAY<FLOAT>, __date DATE) USING parquet PARTITIONED BY (__date)"
+        "data ARRAY<FLOAT>, recorded_date DATE) USING parquet "
+        "PARTITIONED BY (recorded_date)"
         f"{loc}"
     )
 
@@ -190,51 +165,135 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return P(path).getFileSystem(spark._jsc.hadoopConfiguration()), P
 
 
-def publish(df: DataFrame, table_path: str) -> None:
+def _move(fs, src, dst) -> None:
+    """Rename `src` to `dst`; a rename the store refuses (Hadoop's
+    `rename` returns false instead of raising) fails loud."""
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src} -> {dst} failed")
+
+
+def _dirs(table_path: str, part: str) -> tuple[str, str, str]:
+    """The live, temp and backup directories of `part` ("" is the whole
+    table)."""
+    sub = "/" + part if part else ""
+    return tuple(
+        table_path + suffix + sub for suffix in ("", "__publish.tmp", "__prev.bak")
+    )
+
+
+def _swap(fs, P, table_path: str, parts: list[str]) -> None:
+    """Swap the temp copies of `parts` into the live table.
+
+    The journal (`<table>__publish.journal`) lists every part and
+    whether it existed live before. It is staged inside the temp dir
+    and renamed into place before the first live rename, so it is
+    complete whenever it exists. Per part: live → backup, temp → live.
+    Deleting the journal commits the swap; until then `_recover` can
+    undo it."""
+    live, tmp, bak = _dirs(table_path, "")
+    journal = P(table_path + "__publish.journal")
+    fs.delete(P(bak), True)
+    staged = P(tmp + "/_journal")
+    out = fs.create(staged, True)
+    try:
+        out.writeInt(len(parts))
+        for part in parts:
+            out.writeBoolean(fs.exists(P(_dirs(table_path, part)[0])))
+            out.writeUTF(part)
+    finally:
+        out.close()
+    _move(fs, staged, journal)
+    if parts != [""]:
+        fs.mkdirs(P(bak))
+    for part in parts:
+        p_live, p_tmp, p_bak = (P(d) for d in _dirs(table_path, part))
+        if fs.exists(p_live):
+            _move(fs, p_live, p_bak)
+        _move(fs, p_tmp, p_live)
+    fs.delete(journal, False)
+    fs.delete(P(tmp), True)
+    fs.delete(P(bak), True)
+
+
+def _recover(fs, P, table_path: str) -> None:
+    """Roll back a swap that a crash left behind its journal: restore
+    every backed-up part, delete every part the swap added, then drop
+    the temp and backup copies and the journal. Each step is
+    idempotent, so a crash during recovery is recovered the same way."""
+    journal = P(table_path + "__publish.journal")
+    if not fs.exists(journal):
+        return
+    inp = fs.open(journal)
+    try:
+        entries = [(inp.readBoolean(), inp.readUTF()) for _ in range(inp.readInt())]
+    finally:
+        inp.close()
+    for existed, part in entries:
+        p_live, _, p_bak = (P(d) for d in _dirs(table_path, part))
+        if not existed:
+            fs.delete(p_live, True)
+        elif fs.exists(p_bak):
+            fs.delete(p_live, True)
+            _move(fs, p_bak, p_live)
+    fs.delete(journal, False)
+    _, tmp, bak = _dirs(table_path, "")
+    fs.delete(P(tmp), True)
+    fs.delete(P(bak), True)
+
+
+def publish(df: DataFrame, table_path: str, partition_by: str | None = None) -> None:
     """Replace the table at `table_path` with `df`, crash-safe.
 
-    `df` is written in full to `<table>__publish.tmp` first (an
-    overwrite, so a temp dir a crash left behind is replaced, never
-    published), and only then swapped in by two renames: live → backup,
-    temp → live. `df` may read `table_path` itself — the table is
-    durable on disk before the live path is touched, so no plan ever
-    chases deleted source files. A crash at any point leaves either
-    the old table (live, or at `<table>__prev.bak` until `read_stored`
-    restores it) or the new one — never neither."""
+    `df` is written in full to `<table>__publish.tmp` first (the temp
+    dir is deleted beforehand, so a temp copy a crash left behind is
+    never published), and only then swapped in (`_swap`). With
+    `partition_by`, `df` is written as Hive partitions of that column
+    and only the partitions it holds replace their live namesakes;
+    every other live partition is left as it is. Without it, or when
+    the table does not exist yet, the whole table is the one swapped
+    directory. `df` may read `table_path` itself — its rows are durable
+    on disk before the live path is touched, so no plan ever chases
+    deleted source files. A reader through `read_stored` sees the old
+    table or the new one, never a mix."""
     table_path = table_path.rstrip("/")
-    tmp_path = table_path + "__publish.tmp"
-    df.write.mode("overwrite").parquet(tmp_path)
     fs, P = _hadoop_fs(df.sparkSession, table_path)
-    live, bak = P(table_path), P(table_path + "__prev.bak")
-    if fs.exists(bak):
-        fs.delete(bak, True)
-    if fs.exists(live):
-        fs.rename(live, bak)
-    fs.rename(P(tmp_path), live)
-    fs.delete(bak, True)
+    _recover(fs, P, table_path)
+    _, tmp_path, _ = _dirs(table_path, "")
+    # deleted, not just overwritten: a dynamic partition overwrite would
+    # keep the stale temp partitions that `df` does not hold
+    fs.delete(P(tmp_path), True)
+    writer = df.write.mode("overwrite")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(tmp_path)
+    parts = [""]
+    if partition_by is not None and fs.exists(P(table_path)):
+        parts = sorted(
+            st.getPath().getName()
+            for st in fs.listStatus(P(tmp_path))
+            if st.isDirectory() and st.getPath().getName().startswith(partition_by + "=")
+        )
+    _swap(fs, P, table_path, parts)
 
 
 def read_stored(spark: SparkSession, table_path: str) -> DataFrame | None:
     """The stored table at `table_path`, or None when there is none yet.
 
-    A swap that crashed between its two renames left the live path
-    missing and the backup intact: that backup is restored first.
-    A missing path is None (legitimately the first epoch), and so is a
-    path with no readable parquet footer (a first write crashed
-    between mkdir and data), which is provably "no committed data".
-    ANY OTHER read failure propagates and fails the epoch, so the
-    checkpoint retries it — reading a transiently unreadable or corrupt
-    table as "no table yet" would silently skip a merge or a
-    cross-batch dedup."""
+    A swap that crashed before its commit left its journal behind: it
+    is rolled back first (`_recover`), so the read sees the table as it
+    was before that swap. A missing path is None (legitimately the
+    first epoch), and so is a path with no readable parquet footer,
+    which is provably "no committed data". ANY OTHER read failure
+    propagates and fails the epoch, so the checkpoint retries it —
+    reading a transiently unreadable or corrupt table as "no table yet"
+    would silently skip a merge or a cross-batch dedup."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
     table_path = table_path.rstrip("/")
     fs, P = _hadoop_fs(spark, table_path)
-    live, bak = P(table_path), P(table_path + "__prev.bak")
-    if not fs.exists(live):
-        if not fs.exists(bak):
-            return None
-        fs.rename(bak, live)
+    _recover(fs, P, table_path)
+    if not fs.exists(P(table_path)):
+        return None
     try:
         return spark.read.parquet(table_path)
     except AnalysisException as e:
@@ -252,13 +311,13 @@ def compact_table(spark: SparkSession, path: str, target_files: int) -> int:
     micro-batch ingestion at scale (every epoch lands a file per
     partition; a month of 5-minute epochs is ~10⁵ files whose footer
     reads dominate planning). Returns the file count before
-    compaction. Partitioned tables should compact per partition —
-    pass the partition directory as `path`.
+    compaction. `path` is a flat table: its top-level files are the
+    ones counted, and the table is rewritten unpartitioned.
     """
     before = [
         f for f in os.listdir(path)
         if f.endswith(".parquet") and not f.startswith(".")
     ]
     # coalesce, not repartition: no shuffle — compaction is pure IO
-    publish(spark.read.parquet(path).coalesce(target_files), path)
+    publish(read_stored(spark, path).coalesce(target_files), path)
     return len(before)

@@ -224,6 +224,20 @@ _SHAPE = {6: "Earth spherical with radius of 6,371,229.0 m"}
 #: them in microseconds instead.
 _MAX_POINTS = 1 << 25
 
+#: every integer column of `schemas.WIND_HEADER` (scalars and array
+#: elements) is a 32-bit `int`: a header integer outside this range
+#: cannot be stored, and in the Arrow row node it would fail the whole
+#: batch, so the field is rejected instead
+_HEADER_INT_RANGE = (-(1 << 31), (1 << 31) - 1)
+
+
+def _check_header_ints(header: dict) -> None:
+    lo, hi = _HEADER_INT_RANGE
+    for key, value in header.items():
+        for v in value if isinstance(value, list) else (value,):
+            if type(v) is int and not lo <= v <= hi:
+                raise ValueError(f"header {key} {v} outside the int column range")
+
 
 def _u(b: bytes, o: int, n: int) -> int:
     return int.from_bytes(b[o : o + n], "big")
@@ -1559,6 +1573,7 @@ def _decode_field(msg: bytes, sec: dict[int, tuple[int, int]]) -> dict:
         # vs the grid axes — grib2json's `winds` field
         "winds": "true" if not grid["resolution"] & 0x08 else "grid",
     }
+    _check_header_ints(header)
     return {"header": header, "data": vals}
 
 

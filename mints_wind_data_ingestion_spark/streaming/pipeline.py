@@ -33,10 +33,11 @@ make that replay a no-op:
   "no table yet"; anything else would silently skip cross-epoch dedup
   and re-admit duplicates.
 
-The wind table and the rollup publish a whole new table per epoch
-instead, through `sinks.publish` (temp write + rename swap): the
-latest-wins merge is idempotent by itself, the additive rollup by its
-epoch fence.
+The wind table and the rollup publish through `sinks.publish` instead
+(temp write + journaled rename swap): the wind table replaces only the
+date partitions its epoch touches (`operators.upsert.upsert_wind_table`),
+the rollup the whole table. The latest-wins merge is idempotent by
+itself, the additive rollup by its epoch fence.
 """
 
 from __future__ import annotations
@@ -46,7 +47,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
-from ..operators.upsert import merge_latest_wins
+# merge_latest_wins is re-exported: perfbench/run.py looks it up here
+from ..operators.upsert import merge_latest_wins, upsert_wind_table  # noqa: F401
 from ..schemas import WIND_RECORD
 from ..sinks import publish, read_stored
 from ..sources.grib import decode_binary_df
@@ -213,24 +215,20 @@ def run_ingest_stream(
 
 
 def _merge_publish_epoch(batch: DataFrame, table_path: str, epoch_id: int) -> None:
-    """One micro-batch of the latest-wins wind merge, crash-safe: read
-    the stored table (`sinks.read_stored` — None on the first epoch, an
-    unreadable table fails the epoch), merge the batch into it in ONE
-    latest-wins aggregation, and publish the result (`sinks.publish`).
+    """One micro-batch of the latest-wins wind merge, crash-safe:
+    `operators.upsert.upsert_wind_table` reads the stored partitions the
+    batch touches (through `sinks.read_stored` — none on the first
+    epoch, and an unreadable table fails the epoch), merges the batch
+    into them in ONE latest-wins aggregation, and swaps in only those
+    partitions (`sinks.publish`).
 
     One merge is enough: the winner over stored ∪ batch is the winner
     over stored ∪ (the batch's own winners), with stored still taking
     version ties. The first epoch merges into the batch's empty self,
-    which dedups the batch. `epoch_id` is unused — the publish replaces
-    the whole table, so a replayed epoch writes the same table."""
-    stored = read_stored(batch.sparkSession, table_path)
-    publish(
-        merge_latest_wins(
-            batch.limit(0) if stored is None else stored, batch,
-            keys=["recorded_time", "param"], version="ref_time",
-        ),
-        table_path,
-    )
+    which dedups the batch. `epoch_id` is unused — a replayed epoch
+    merges the same batch into the same partitions and writes the same
+    rows."""
+    upsert_wind_table(batch, table_path)
 
 
 def run_grib_ingest_stream(

@@ -248,6 +248,40 @@ def test_fields_of_64_bits_quarantine():
         assert out["record"] is None
         assert "64" in out["error"]
 
+def test_header_ints_above_int32_quarantine(spark):
+    """A header integer the `int` header column cannot hold is a field
+    error: a template 3.0 `basicAngle` of 0xd7000006 (section 3 octets
+    39-42) scans as one quarantine row, and decode raises. Scanned in
+    one Arrow batch with a good file, the good file's rows survive —
+    a value that reached the row node would fail the whole batch."""
+    good = _corpus()[0]
+    o3 = _sec_offset(good, 3)
+    bad = bytearray(good)
+    bad[o3 + 38 : o3 + 42] = bytes.fromhex("d7000006")
+    bad = bytes(bad)
+    (out,) = scan_grib2_bytes(bad)
+    assert out["record"] is None
+    assert "basicAngle 3607101446" in out["error"]
+    with pytest.raises(ValueError, match="basicAngle"):
+        decode_grib2_bytes(bad)
+
+    from mints_wind_data_ingestion_spark.sources.grib import scan_binary_df
+
+    binary = spark.createDataFrame(
+        [("bad.grib2", bytearray(bad)), ("good.grib2", bytearray(good))],
+        "path string, content binary",
+    ).coalesce(1)
+    rows = scan_binary_df(binary).collect()
+    assert sorted((r.source_path, r.error is None) for r in rows) == [
+        ("bad.grib2", False), ("good.grib2", True)
+    ]
+    (quarantined,) = [r for r in rows if r.error is not None]
+    assert quarantined.header is None and quarantined.data is None
+    (kept,) = [r for r in rows if r.error is None]
+    assert kept.header.basicAngle == 0
+    assert len(kept.data) == 6
+
+
 def _complex_corpus():
     """test_grib_complex.py's messages: the three complex packings of
     its smooth field, and its NCEP submessage (two fields, one frame)."""

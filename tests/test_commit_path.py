@@ -1,7 +1,8 @@
-"""The wind table's one commit path (`sinks.read_stored` +
-`sinks.publish`) and the one wind-row projection (`wind_rows`), seen
-from the three write paths: the JSON stream, the GRIB stream and the
-batch tick `ingest_once`."""
+"""The wind table's one commit path (`operators.upsert.upsert_wind_table`
+over `sinks.read_stored` + `sinks.publish`, a rollback-journaled swap
+of the date partitions an epoch touches) and the one wind-row
+projection (`wind_rows`), seen from the three write paths: the JSON
+stream, the GRIB stream and the batch tick `ingest_once`."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ from pathlib import Path
 import pytest
 
 from mints_wind_data_ingestion_spark import sinks
+from mints_wind_data_ingestion_spark.operators import upsert
 from mints_wind_data_ingestion_spark.schemas import WIND_TABLE
 from mints_wind_data_ingestion_spark.sources.grib2codec import (
     encode_grib2_file,
@@ -44,13 +46,54 @@ def _grib_run(ref: datetime, fc: int, bias: float) -> bytes:
 
 def _litter(d) -> list[str]:
     return sorted(
-        p for p in os.listdir(d) if p.endswith(".tmp") or p.endswith(".bak")
+        p for p in os.listdir(d) if p.endswith((".tmp", ".bak", ".journal"))
     )
+
+
+def _crash_fs(monkeypatch, rename_at=None, delete_suffix=None):
+    """Make `sinks` crash on its `rename_at`-th rename (1-based) or on
+    deleting a path that ends with `delete_suffix`."""
+    real_fs = sinks._hadoop_fs
+    renames = []
+
+    class Crashing:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, src, dst):
+            renames.append(str(dst))
+            if len(renames) == rename_at:
+                raise RuntimeError(f"crash at rename {rename_at}")
+            return self._fs.rename(src, dst)
+
+        def delete(self, path, recursive):
+            if delete_suffix and str(path).endswith(delete_suffix):
+                raise RuntimeError(f"crash deleting {delete_suffix}")
+            return self._fs.delete(path, recursive)
+
+    def crashing_fs(spark_, path):
+        fs, P = real_fs(spark_, path)
+        return Crashing(fs), P
+
+    monkeypatch.setattr(sinks, "_hadoop_fs", crashing_fs)
+    return renames
+
+
+def _rows(spark, table):
+    return sorted(map(tuple, spark.read.parquet(table).collect()))
+
+
+def _partitions(table) -> list[str]:
+    return sorted(p for p in os.listdir(table) if p.startswith("recorded_date="))
 
 
 def test_every_wind_write_path_publishes_wind_table_layout(spark, tmp_path):
     """The JSON stream, the GRIB stream and the batch tick each publish
-    a table with `WIND_TABLE`'s columns, in its order."""
+    a table with `WIND_TABLE`'s columns, in its order, Hive-partitioned
+    by `recorded_date`, which reads back as the last column."""
     from mints_wind_data_ingestion_spark.operators.ingest import ingest_once
 
     json_landing = tmp_path / "json"
@@ -83,10 +126,11 @@ def test_every_wind_write_path_publishes_wind_table_layout(spark, tmp_path):
 
     for table in (json_table, grib_table, tick_table):
         schema = spark.read.parquet(table).schema
-        assert schema.names == WIND_TABLE.names, table
+        assert schema.names == WIND_TABLE.names + ["recorded_date"], table
         assert [f.dataType.simpleString() for f in schema] == [
             f.dataType.simpleString() for f in WIND_TABLE
-        ], table
+        ] + ["date"], table
+        assert _partitions(table) == ["recorded_date=2020-08-12"], table
 
 
 def test_stale_temp_from_a_crash_before_the_swap_is_never_published(
@@ -108,48 +152,150 @@ def test_stale_temp_from_a_crash_before_the_swap_is_never_published(
         ],
     )
     run_ingest_stream(spark, str(landing), table, ckpt).awaitTermination(120)
-    before = sorted(map(tuple, spark.read.parquet(table).collect()))
-
-    class CrashOnRename:
-        def __init__(self, fs):
-            self._fs = fs
-
-        def __getattr__(self, name):
-            return getattr(self._fs, name)
-
-        def rename(self, src, dst):
-            raise RuntimeError("crash before the swap")
-
-    real_fs = sinks._hadoop_fs
-
-    def crashing_fs(spark_, path):
-        fs, P = real_fs(spark_, path)
-        return CrashOnRename(fs), P
+    before = _rows(spark, table)
 
     u2 = [x + 10 for x in U1]
     _write_batch(
         str(landing / "b2.json"),
         [_record(2, "2020-08-12 12:00:00+00", "2020-08-12T12:00:00.000Z", u2)],
     )
-    monkeypatch.setattr(sinks, "_hadoop_fs", crashing_fs)
-    with pytest.raises(Exception, match="crash before the swap"):
+    # the first rename moves the staged journal into place: nothing live
+    # has been touched yet
+    _crash_fs(monkeypatch, rename_at=1)
+    with pytest.raises(Exception, match="crash at rename 1"):
         run_ingest_stream(spark, str(landing), table, ckpt).awaitTermination(120)
     monkeypatch.undo()
 
     # the live table is the old one; the temp dir is the only trace
-    assert sorted(map(tuple, spark.read.parquet(table).collect())) == before
+    assert _rows(spark, table) == before
     stale = _litter(tmp_path)
     assert len(stale) == 1 and stale[0].endswith(".tmp"), stale
+    # junk in the stale temp copy: a changed row in the partition the
+    # replay rewrites, and a partition the replay does not touch
     junk = spark.read.parquet(table).limit(1).selectExpr(
         *[("999 AS param" if c == "param" else c) for c in WIND_TABLE.names]
     )
-    junk.write.mode("overwrite").parquet(str(tmp_path / stale[0]))
+    for day in ("2020-08-12", "2020-08-14"):
+        junk.write.mode("overwrite").parquet(
+            str(tmp_path / stale[0] / f"recorded_date={day}")
+        )
 
     # the checkpoint replays the crashed epoch: newer U wins, V stays
     run_ingest_stream(spark, str(landing), table, ckpt).awaitTermination(120)
     got = {r.param: r for r in spark.read.parquet(table).collect()}
     assert set(got) == {2, 3}
     assert got[2].data == u2 and got[3].data == V1
+    assert _partitions(table) == ["recorded_date=2020-08-12"]
+    assert _litter(tmp_path) == []
+
+
+def _two_day_table(spark, tmp_path):
+    """A wind table holding U on 2020-08-12 and on 2020-08-13, and its
+    JSON stream's landing dir and checkpoint."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    table = str(tmp_path / "wind_table")
+    ckpt = str(tmp_path / "ckpt")
+    _write_batch(
+        str(landing / "b1.json"),
+        [
+            _record(2, "2020-08-12 18:00:00+00", "2020-08-12T06:00:00.000Z", U1),
+            _record(2, "2020-08-13 00:00:00+00", "2020-08-12T06:00:00.000Z", U1),
+        ],
+    )
+    run_ingest_stream(spark, str(landing), table, ckpt).awaitTermination(120)
+    return landing, table, ckpt
+
+
+def test_untouched_partitions_keep_their_files(spark, tmp_path):
+    """An epoch rewrites only the partitions its batch touches: every
+    other partition keeps the same files, names and mtimes."""
+    landing, table, ckpt = _two_day_table(spark, tmp_path)
+
+    def files(day):
+        d = os.path.join(table, f"recorded_date={day}")
+        return {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)}
+
+    kept, replaced = files("2020-08-12"), files("2020-08-13")
+    u2 = [x + 10 for x in U1]
+    _write_batch(
+        str(landing / "b2.json"),
+        [_record(2, "2020-08-13 00:00:00+00", "2020-08-12T12:00:00.000Z", u2)],
+    )
+    run_ingest_stream(spark, str(landing), table, ckpt).awaitTermination(120)
+
+    assert files("2020-08-12") == kept
+    assert not set(files("2020-08-13")) & set(replaced)
+    got = {str(r.recorded_time): r.data for r in spark.read.parquet(table).collect()}
+    assert got == {"2020-08-12 18:00:00": U1, "2020-08-13 00:00:00": u2}
+    assert _litter(tmp_path) == []
+
+
+def test_crash_after_the_first_of_two_partition_swaps_rolls_back(
+    spark, tmp_path, monkeypatch
+):
+    """An epoch that touches two stored partitions dies after swapping
+    the first one in. `read_stored` rolls the swap back, so it returns
+    the old table exactly; the replay then publishes the merged table
+    and leaves no temp, backup or journal behind."""
+    landing, table, ckpt = _two_day_table(spark, tmp_path)
+    before = _rows(spark, table)
+    u2 = [x + 10 for x in U1]
+    _write_batch(
+        str(landing / "b2.json"),
+        [
+            _record(2, "2020-08-12 18:00:00+00", "2020-08-12T12:00:00.000Z", u2),
+            _record(2, "2020-08-13 00:00:00+00", "2020-08-12T12:00:00.000Z", u2),
+        ],
+    )
+    # renames: journal, then live → backup and temp → live per partition;
+    # the 4th moves the second live partition to its backup
+    renames = _crash_fs(monkeypatch, rename_at=4)
+    with pytest.raises(Exception, match="crash at rename 4"):
+        run_ingest_stream(spark, str(landing), table, ckpt).awaitTermination(120)
+    monkeypatch.undo()
+    assert renames[2].endswith("wind_table/recorded_date=2020-08-12")
+    # half swapped on disk: the first partition already holds the new rows
+    half = {str(r.recorded_time): r.data for r in spark.read.parquet(table).collect()}
+    assert half == {"2020-08-12 18:00:00": u2, "2020-08-13 00:00:00": U1}
+
+    assert sorted(map(tuple, sinks.read_stored(spark, table).collect())) == before
+    assert _rows(spark, table) == before
+    assert _litter(tmp_path) == []
+
+    run_ingest_stream(spark, str(landing), table, ckpt).awaitTermination(120)
+    got = {str(r.recorded_time): r.data for r in spark.read.parquet(table).collect()}
+    assert got == {"2020-08-12 18:00:00": u2, "2020-08-13 00:00:00": u2}
+    assert _litter(tmp_path) == []
+
+
+def test_crash_while_adding_a_new_date_partition_rolls_it_back(
+    spark, tmp_path, monkeypatch
+):
+    """A swap that added a partition the table did not have, and died
+    before its commit (deleting the journal), is rolled back: the new
+    partition directory is deleted, and the replay adds it again."""
+    landing, table, ckpt = _two_day_table(spark, tmp_path)
+    before = _rows(spark, table)
+    _write_batch(
+        str(landing / "b2.json"),
+        [_record(3, "2020-08-14 00:00:00+00", "2020-08-13T18:00:00.000Z", V1)],
+    )
+    _crash_fs(monkeypatch, delete_suffix="__publish.journal")
+    with pytest.raises(Exception, match="crash deleting"):
+        run_ingest_stream(spark, str(landing), table, ckpt).awaitTermination(120)
+    monkeypatch.undo()
+    assert "recorded_date=2020-08-14" in _partitions(table)
+
+    assert sorted(map(tuple, sinks.read_stored(spark, table).collect())) == before
+    assert _partitions(table) == [
+        "recorded_date=2020-08-12", "recorded_date=2020-08-13"
+    ]
+    assert _litter(tmp_path) == []
+
+    run_ingest_stream(spark, str(landing), table, ckpt).awaitTermination(120)
+    assert len(_partitions(table)) == 3
+    assert len(_rows(spark, table)) == 3
     assert _litter(tmp_path) == []
 
 
@@ -169,7 +315,7 @@ def test_grib_backlog_of_two_runs_is_one_epoch(spark, tmp_path, monkeypatch):
     (landing / "run06.grib2").write_bytes(_grib_run(ref6, 6, 1.0))
 
     merges = []
-    real_merge = pipeline.merge_latest_wins
+    real_merge = upsert.merge_latest_wins
 
     def counting_merge(*args, **kwargs):
         merges.append(1)
@@ -186,7 +332,7 @@ def test_grib_backlog_of_two_runs_is_one_epoch(spark, tmp_path, monkeypatch):
             want = [round(v + bias, 2) for v in _field(0, r.param)]
             assert [round(float(x), 2) for x in r.data] == want
 
-    monkeypatch.setattr(pipeline, "merge_latest_wins", counting_merge)
+    monkeypatch.setattr(upsert, "merge_latest_wins", counting_merge)
     q = run_grib_ingest_stream(spark, str(landing), table, ckpt)
     q.awaitTermination(120)
     epochs = [p for p in q.recentProgress if p["numInputRows"] > 0]
@@ -207,14 +353,16 @@ def test_grib_backlog_of_two_runs_is_one_epoch(spark, tmp_path, monkeypatch):
 
 
 def test_whole_table_commit_lives_only_in_sinks():
-    """Renames and the backup path are `sinks.py`'s alone, and the
-    batch tick does not reach into the streaming module."""
+    """Renames, the temp, backup and journal paths and the journal's
+    reads and writes are `sinks.py`'s alone, and the batch tick does not
+    reach into the streaming module."""
     for path in sorted(PACKAGE.rglob("*.py")):
         if path.name == "sinks.py" and path.parent == PACKAGE:
             continue
         src = path.read_text()
-        assert ".rename(" not in src, path
-        assert "__prev.bak" not in src, path
+        for token in (".rename(", "__prev.bak", "__publish.tmp",
+                      "__publish.journal", "_journal", "writeUTF", "readUTF"):
+            assert token not in src, (path, token)
 
     tree = ast.parse((PACKAGE / "operators" / "ingest.py").read_text())
     imported = [

@@ -265,7 +265,7 @@ def test_ddl_executes_and_roundtrips(spark, tmp_path):
         assert r.param == 2
         assert r.header.refTime == "2020-08-12T06:00:00.000Z"
         assert list(r.data) == [1.5, -2.25]
-        assert str(r["__date"]) == "2020-08-12"
+        assert str(r["recorded_date"]) == "2020-08-12"
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 

@@ -1,6 +1,7 @@
-"""Sink tests (S4/S6/S7): date-partitioned wind table with dynamic
-partition overwrite — the set-oriented replacement for the reference's
-per-row INSERT + DELETE upsert (converter.py:98-117)."""
+"""Sink tests (S4/S6/S7): the date-partitioned wind table, whose upsert
+rewrites only the partitions a batch touches — the set-oriented
+replacement for the reference's per-row INSERT + DELETE upsert
+(converter.py:98-117)."""
 
 from __future__ import annotations
 
@@ -9,7 +10,9 @@ import os
 
 from pyspark.sql import functions as F
 
-from mints_wind_data_ingestion_spark.sinks import write_jdbc, write_wind_table
+from mints_wind_data_ingestion_spark.operators.upsert import upsert_wind_table
+from mints_wind_data_ingestion_spark.schemas import WIND_TABLE
+from mints_wind_data_ingestion_spark.sinks import write_jdbc
 
 
 def _wind_rows(spark, rows):
@@ -22,45 +25,69 @@ def _wind_rows(spark, rows):
     )
 
 
+def _wind_table_rows(spark, rows):
+    """`WIND_TABLE` rows from (recorded_time, param, ref_time, value)."""
+    return spark.createDataFrame(
+        rows, "recorded_time string, param int, ref_time string, value float"
+    ).select(
+        F.col("recorded_time").cast("timestamp").alias("recorded_time"),
+        "param",
+        F.col("ref_time").cast("timestamp").alias("ref_time"),
+        F.lit(6).alias("forecast_hours"),
+        F.lit(None).cast(WIND_TABLE["header"].dataType).alias("header"),
+        F.array("value").alias("data"),
+    )
+
+
 def test_partitioned_write_and_pruning(spark, tmp_path):
     path = str(tmp_path / "wind")
-    df = _wind_rows(
+    df = _wind_table_rows(
         spark,
         [
-            ("2020-08-12 12:00:00", 2, 1.0),
-            ("2020-08-12 18:00:00", 3, 2.0),
-            ("2020-08-13 00:00:00", 2, 3.0),
+            ("2020-08-12 12:00:00", 2, "2020-08-12 06:00:00", 1.0),
+            ("2020-08-12 18:00:00", 3, "2020-08-12 06:00:00", 2.0),
+            ("2020-08-13 00:00:00", 2, "2020-08-12 06:00:00", 3.0),
         ],
     )
-    write_wind_table(df, path)
-    parts = {os.path.basename(p) for p in glob.glob(path + "/__date=*")}
-    assert parts == {"__date=2020-08-12", "__date=2020-08-13"}
+    upsert_wind_table(df, path)
+    parts = {os.path.basename(p) for p in glob.glob(path + "/recorded_date=*")}
+    assert parts == {"recorded_date=2020-08-12", "recorded_date=2020-08-13"}
 
     back = spark.read.parquet(path)
     # partition-pruned read: the date predicate selects one directory
-    pruned = back.filter(F.col("__date") == "2020-08-12")
+    pruned = back.filter(F.col("recorded_date") == "2020-08-12")
     assert pruned.count() == 2
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [isnotnull(recorded_date" in plan
+    read = {r[0] for r in pruned.select(F.input_file_name()).collect()}
+    assert read and all("/recorded_date=2020-08-12/" in f for f in read)
 
 
 def test_dynamic_overwrite_rewrites_only_touched_partition(spark, tmp_path):
     path = str(tmp_path / "wind")
-    write_wind_table(
-        _wind_rows(
+    upsert_wind_table(
+        _wind_table_rows(
             spark,
-            [("2020-08-12 12:00:00", 2, 1.0), ("2020-08-13 00:00:00", 2, 3.0)],
+            [
+                ("2020-08-12 12:00:00", 2, "2020-08-12 06:00:00", 1.0),
+                ("2020-08-13 00:00:00", 2, "2020-08-12 06:00:00", 3.0),
+            ],
         ),
         path,
     )
-    # overwrite ONLY the 08-13 partition with a corrected value
-    write_wind_table(
-        _wind_rows(spark, [("2020-08-13 00:00:00", 2, 99.0)]), path
+    # a newer run replaces ONLY the 08-13 partition's row
+    upsert_wind_table(
+        _wind_table_rows(
+            spark, [("2020-08-13 00:00:00", 2, "2020-08-12 12:00:00", 99.0)]
+        ),
+        path,
     )
     rows = {
-        str(r.recorded_time): r.value for r in spark.read.parquet(path).collect()
+        str(r.recorded_time): list(r.data) for r in spark.read.parquet(path).collect()
     }
     assert rows == {
-        "2020-08-12 12:00:00": 1.0,  # untouched partition survives
-        "2020-08-13 00:00:00": 99.0,  # replaced
+        "2020-08-12 12:00:00": [1.0],  # untouched partition survives
+        "2020-08-13 00:00:00": [99.0],  # replaced
     }
 
 

@@ -184,14 +184,17 @@ def test_streaming_ingest_latest_wins(spark, tmp_path):
     assert t3 == {2: "2020-08-12 12:00:00", 3: "2020-08-12 06:00:00"}
 
 
-def test_streaming_merge_is_crash_safe(spark, tmp_path):
+def test_streaming_merge_is_crash_safe(spark, tmp_path, monkeypatch):
     """The epoch merge must never overwrite the path it reads: the
-    merged table is fully written to a temp dir, then published by
-    renames (live → __prev.bak, tmp → live, drop bak). A crash between
-    the two renames leaves the old table at the backup path — the next
-    epoch (or any reader calling read_stored) restores it."""
+    merged partitions are fully written to a temp dir, then published
+    by a journaled swap (per partition live → __prev.bak, tmp → live;
+    then drop the journal and the backup). A crash between a
+    partition's two renames leaves the old partition at the backup
+    path and the journal in place — the next epoch (or any reader
+    calling read_stored) restores it."""
     import os
 
+    from mints_wind_data_ingestion_spark import sinks
     from mints_wind_data_ingestion_spark.sinks import publish, read_stored
 
     landing = tmp_path / "landing"
@@ -204,23 +207,63 @@ def test_streaming_merge_is_crash_safe(spark, tmp_path):
     )
     run_ingest_stream(spark, str(landing), table, ckpt).awaitTermination(120)
     before = sorted(map(tuple, spark.read.parquet(table).collect()))
+    part = os.path.join(table, "recorded_date=2020-08-12")
 
-    # no temp/backup litter after a healthy epoch
+    def litter():
+        return [p for p in os.listdir(tmp_path) if p.endswith((".tmp", ".bak", ".journal"))]
+
+    # no temp/backup/journal litter after a healthy epoch
     assert not os.path.exists(table + "__prev.bak")
-    assert not [p for p in os.listdir(tmp_path) if p.endswith(".tmp")]
+    assert litter() == []
 
-    # simulate the worst crash point: live renamed away, tmp not yet in
-    os.rename(table, table + "__prev.bak")
+    # the worst crash point: the live partition renamed away, the new
+    # one not yet in (the third rename, after the journal's and the
+    # partition's live → backup)
+    real_fs, renames = sinks._hadoop_fs, []
+
+    class CrashOnThirdRename:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, src, dst):
+            renames.append(dst)
+            if len(renames) == 3:
+                raise RuntimeError("crash between the renames")
+            return self._fs.rename(src, dst)
+
+    monkeypatch.setattr(
+        sinks, "_hadoop_fs",
+        lambda spark_, path: (CrashOnThirdRename(real_fs(spark_, path)[0]),
+                              real_fs(spark_, path)[1]),
+    )
+    _write_batch(
+        str(landing / "b2.json"),
+        [_record(2, "2020-08-12 12:00:00+00", "2020-08-12T12:00:00.000Z", V1)],
+    )
+    with pytest.raises(Exception, match="crash between the renames"):
+        run_ingest_stream(spark, str(landing), table, ckpt).awaitTermination(120)
+    monkeypatch.undo()
+    assert not os.path.exists(part)
+    assert os.path.exists(table + "__prev.bak/recorded_date=2020-08-12")
     assert sorted(map(tuple, read_stored(spark, table).collect())) == before
     assert sorted(map(tuple, spark.read.parquet(table).collect())) == before
+    assert litter() == []
 
-    # publishing a new table via the swap keeps old state until the new
-    # one is durable — even when the new table is a plan over the old
+    # publishing new partitions via the swap keeps old state until the
+    # new ones are durable — even when they are a plan over the old
     newer = spark.read.parquet(table).withColumn("param", F.col("param") + 100)
-    publish(newer, table)
+    publish(newer, table, partition_by="recorded_date")
     assert {r.param for r in spark.read.parquet(table).collect()} == {102}
-    assert not os.path.exists(table + "__prev.bak")
-    assert not [p for p in os.listdir(tmp_path) if p.endswith(".tmp")]
+    assert litter() == []
+
+    # the replayed epoch merges its batch into the published table
+    run_ingest_stream(spark, str(landing), table, ckpt).awaitTermination(120)
+    got = {r.param: r.data for r in spark.read.parquet(table).collect()}
+    assert got == {102: U1, 2: V1}
+    assert litter() == []
 
 
 def test_grid_explode_and_vector_math(spark, batch1):
